@@ -797,7 +797,7 @@ def compare_prev(out: dict, prev_path: str) -> dict:
     return res
 
 
-def _release_new_persistent_rdds(spark, before_ids: set) -> set:
+def _release_new_persistent_rdds(spark, before_ids: set) -> None:
     """Session hygiene BETWEEN queries (r16, guide §5 / VERDICT r15
     #6): curation operators pin eagerly localCheckpointed model tables
     whose storage blocks the ContextCleaner only reaps after a DRIVER
@@ -805,18 +805,14 @@ def _release_new_persistent_rdds(spark, before_ids: set) -> set:
     releases each query's blocks deterministically instead — after the
     query's LAST timed run completes (never inside a timed window, and
     never an RDD that predates the query: the calibration fixtures and
-    io-warmup blocks persist for the whole session). Returns the new
-    id set so callers can chain. Results are unaffected: every query
-    constructs its frames fresh from the parquet inputs."""
+    io-warmup blocks persist for the whole session). Results are
+    unaffected: every query constructs its frames fresh from the
+    parquet inputs."""
     jsc = spark.sparkContext._jsc
     current = jsc.getPersistentRDDs()
-    kept = set()
     for k in current.keySet().toArray():
-        if int(k) in before_ids:
-            kept.add(int(k))
-            continue
-        current.get(k).unpersist(False)
-    return kept
+        if int(k) not in before_ids:
+            current.get(k).unpersist(False)
 
 
 def main() -> None:

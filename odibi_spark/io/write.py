@@ -2,27 +2,27 @@
 WriteConfig odibi/config.py:4163-4342).
 
 Modes: overwrite / append / error / ignore (native), plus the
-reference's merge modes **upsert** and **append_once**. The reference
-implements those with Delta MERGE (spark_engine.py:1254-1335); this
-environment has no Delta jars, so the parquet path emulates MERGE as
-read-target -> anti-join/union -> overwrite, which preserves the exact
-row semantics. At cluster scale the same call sites switch to
-``DeltaTable.merge`` (whenMatchedUpdateAll + whenNotMatchedInsertAll)
-— a metadata-transactional, partition-pruned operation — via the
-optional delta import below.
+reference's merge modes **upsert** and **append_once**, which the
+reference implements with Delta MERGE (spark_engine.py:1254-1335).
+A parquet target merges through the merge pattern's implementation
+(``patterns.merge.merge_into``, strategies upsert / append_only) and
+commits through ``ParquetTarget``'s staged swap, keeping
+``partition_by``. With delta-spark importable, ``format='delta'`` runs
+``DeltaTable.merge`` instead; other formats raise.
 
 Scale notes:
 - ``partition_by`` drives directory layout -> partition pruning.
 - ``coalesce_partitions`` compacts small outputs (reference :958-969).
-- upsert emulation broadcasts nothing and shuffles once on the keys;
-  with Delta it touches only matched files.
+- a parquet merge is one anti-join plus a union and rewrites the
+  target; with Delta it touches only matched files.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from odibi_spark.patterns.merge import merge_into
+from odibi_spark.patterns.merge_target import ParquetTarget
 
 try:  # Delta is the designed scale path; optional in this environment
     from delta.tables import DeltaTable  # type: ignore
@@ -31,16 +31,6 @@ try:  # Delta is the designed scale path; optional in this environment
 except ImportError:
     DeltaTable = None
     _HAS_DELTA = False
-
-
-def _target_exists(spark: SparkSession, path: str) -> bool:
-    if not os.path.exists(path):
-        return False
-    try:
-        spark.read.parquet(path).schema
-        return True
-    except Exception:
-        return False
 
 
 def add_write_metadata(
@@ -60,41 +50,6 @@ def add_write_metadata(
     if source_table:
         df = df.withColumn("_source_table", F.lit(source_table))
     return df
-
-
-def _merge_parquet(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    keys: list[str],
-    mode: str,
-) -> None:
-    """Parquet emulation of Delta MERGE (semantics of reference
-    spark_engine.py:1254-1335):
-
-    - upsert: target rows whose key matches an incoming row are
-      replaced (whenMatchedUpdateAll), new keys inserted
-      (whenNotMatchedInsertAll).
-    - append_once: only not-matched rows inserted (reference
-      :1299-1302; idempotent replay).
-    """
-    if not _target_exists(spark, path):
-        df.write.mode("overwrite").parquet(path)
-        return
-    target = spark.read.parquet(path)
-    incoming = df.dropDuplicates(keys)
-    if mode == "upsert":
-        kept = target.join(incoming.select(*keys), on=keys, how="left_anti")
-        out = kept.unionByName(incoming, allowMissingColumns=True)
-    elif mode == "append_once":
-        new_rows = incoming.join(target.select(*keys), on=keys, how="left_anti")
-        out = target.unionByName(new_rows, allowMissingColumns=True)
-    else:
-        raise ValueError(mode)
-    # Writing over the path we are reading from needs a materialization
-    # barrier; localCheckpoint cuts the lineage without touching HDFS.
-    out = out.localCheckpoint(eager=True)
-    out.write.mode("overwrite").parquet(path)
 
 
 def write_sink(
@@ -147,6 +102,12 @@ def write_sink(
     table creation (clustering cannot be bolted on after path writes).
     """
     spark = df.sparkSession
+    merge_mode = mode in ("upsert", "append_once")
+    if merge_mode and format != "parquet" and not (format == "delta" and _HAS_DELTA):
+        raise ValueError(
+            f"mode '{mode}' needs format 'parquet' (or 'delta' with "
+            f"delta-spark installed), not '{format}'"
+        )
     if format == "webdataset":
         # training-shard tar sink (llm/webdataset.py) — its layout IS
         # the partitioning, so layout directives conflict by definition
@@ -180,7 +141,7 @@ def write_sink(
             )
         )
     if zorder_by and format != "delta":
-        if mode in ("upsert", "append_once"):
+        if merge_mode:
             raise ValueError(
                 "zorder_by with merge modes needs Delta (the merge "
                 "rewrite discards a parquet layout); write plain then "
@@ -224,12 +185,15 @@ def write_sink(
         writer.format(format).option("path", path).saveAsTable(table)
         return
 
-    if mode in ("upsert", "append_once"):
+    if merge_mode:
         assert keys, f"mode '{mode}' requires merge keys"
-        if _HAS_DELTA and format == "delta":
+        if format == "delta":
             _merge_delta(spark, df, path, keys, mode)
         else:
-            _merge_parquet(spark, df, path, keys, mode)
+            merge_into(
+                ParquetTarget(spark, path, partition_by), df, keys=keys,
+                strategy="upsert" if mode == "upsert" else "append_only",
+            )
         _delta_post_write(
             spark, path, format,
             zorder_by=zorder_by, auto_optimize=auto_optimize,

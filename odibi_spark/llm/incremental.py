@@ -41,6 +41,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -276,17 +277,17 @@ class SignatureStore:
         wall ~= max(sigs, bands) instead of sigs + count + bands."""
         meta_missing = not os.path.exists(self._meta)
         had_prior_sigs = os.path.exists(self._sigs)
-        if meta_missing and os.path.exists(self._bands):
-            # pre-fix store crashed between bands and meta: those
-            # bands' geometry is unknowable — stamping THIS
+        if (meta_missing or not had_prior_sigs) and os.path.exists(self._bands):
+            # bands whose geometry is untrusted: a pre-fix store
+            # crashed between bands and meta, or the concurrent bands
+            # write landed while the sigs write failed (bucketed under
+            # a stamp the replay below may change). Stamping THIS
             # process's meta would retroactively bless them and
             # reintroduce the mixed-geometry pruning bug (review
             # r7). Bands are a derived index over sigs, so rebuild
             # the WHOLE index from the signature table with this
             # process's geometry (dropping alone would orphan
             # earlier batches from every future pruned probe).
-            import shutil
-
             shutil.rmtree(self._bands)
         if meta_missing and had_prior_sigs:
             # crash-replay rebuild (rare): sigs exist with no meta —

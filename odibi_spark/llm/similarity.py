@@ -1959,7 +1959,7 @@ def ivf_pq_topk(
     centroid[cell]). Residuals concentrate each cell's mass near the
     origin so the same codebook budget can quantize finer on
     CLUSTERED corpora; on this repo's weakly-clustered synthetic
-    embeddings it measured NO win (tools/exp_ivfpq_residual.py,
+    embeddings it measured NO win (SCALING.md, IVF-PQ operating grid;
     sf0.1: 0.41 vs 0.53 raw at 16 B/vector, 0.72 vs 0.73 at 32 B) —
     shipped as the standard option with the honest number, default
     off. The plan shape is identical (one extra zip_with subtract on
@@ -1972,7 +1972,7 @@ def ivf_pq_topk(
     encoded corpus against the probe table — never a cross join; ADC
     reads codewords from the inlined codebook literal. At 100 TB the
     encoded corpus is the only shuffled stream, m bytes + cell per
-    vector. Defaults (r15 grid, tools/exp_pq_grid.py): m=16/k=64 —
+    vector. Defaults (r15 grid, SCALING.md IVF-PQ section): m=16/k=64 —
     16 B/vector (16x compression), the measured recall knee.
 
     Output (query_id, nbr_id, adc_dist, rank) — the ``pq_adc_topk``

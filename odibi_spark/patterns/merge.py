@@ -13,11 +13,13 @@ with optional row-level conditions and audit columns.
 
 Conditions reference columns as ``t.col`` (target) / ``s.col``
 (source), same contract as the reference's Delta MERGE conditions.
+Keys match by plain equality, so a NULL key never matches.
+``write_sink``'s parquet upsert / append_once modes run ``merge_into``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from odibi_spark.patterns.merge_target import ParquetTarget
 
@@ -35,6 +37,28 @@ def merge_apply(
     audit_cols: bool = False,
 ) -> DataFrame:
     target = ParquetTarget(spark, target_path)
+    merge_into(
+        target, batch, keys, strategy, update_condition, insert_condition,
+        delete_condition, audit_cols,
+    )
+    if not target.exists():  # delete_match against an absent target
+        return spark.createDataFrame([], batch.schema)
+    return target.read()
+
+
+def merge_into(
+    target: ParquetTarget,
+    batch: DataFrame,
+    keys: list[str],
+    strategy: str = "upsert",
+    update_condition: str | None = None,
+    insert_condition: str | None = None,
+    delete_condition: str | None = None,
+    audit_cols: bool = False,
+) -> None:
+    """``merge_apply`` against a given target, without the read-back."""
+    if strategy not in ("upsert", "append_only", "delete_match"):
+        raise ValueError(f"unknown merge strategy '{strategy}'")
     now = F.current_timestamp()
 
     def with_insert_audit(df: DataFrame) -> DataFrame:
@@ -43,69 +67,56 @@ def merge_apply(
         return df
 
     if strategy == "delete_match":
-        if not target.exists():
-            return spark.createDataFrame([], batch.schema)
-        t, s = target.read().alias("t"), batch.alias("s")
-        cond = F.lit(True)
-        for k in keys:
-            cond = cond & F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-        if delete_condition:
-            cond = cond & F.expr(delete_condition)
-        doomed_keys = t.join(s, cond, "inner").select(*[F.col(f"t.{k}") for k in keys]).distinct()
-        kept = target.read().join(doomed_keys, on=keys, how="left_anti")
-        target.overwrite(kept)
-        return target.read()
+        if target.exists():
+            cond = _keys_match(keys)
+            if delete_condition:
+                cond = cond & F.expr(delete_condition)
+            kept = target.read().alias("t").join(batch.alias("s"), cond, "left_anti")
+            target.overwrite(kept)
+        return
 
     incoming = batch.dropDuplicates(keys)
     if not target.exists():
         if insert_condition:
             incoming = _filter_merge_cond(incoming, insert_condition, side="s")
         target.write_initial(with_insert_audit(incoming))
-        return target.read()
+        return
 
     existing = target.read()
-    t, s = existing.alias("t"), incoming.alias("s")
-    cond = F.lit(True)
-    for k in keys:
-        cond = cond & F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-
-    matched_keys = t.join(s, cond, "inner").select(
-        *[F.col(f"t.{k}").alias(k) for k in keys]
-    ).distinct()
-    new_rows = incoming.join(existing.select(*keys).distinct(), on=keys, how="left_anti")
+    new_rows = incoming.join(existing.select(*keys), on=keys, how="left_anti")
     if insert_condition:
         new_rows = _filter_merge_cond(new_rows, insert_condition, side="s")
-    new_rows = with_insert_audit(new_rows)
-
     if strategy == "append_only":
-        out = existing.unionByName(new_rows, allowMissingColumns=True)
+        out = existing.unionByName(with_insert_audit(new_rows), allowMissingColumns=True)
         target.overwrite(out)
-        return target.read()
-
-    if strategy != "upsert":
-        raise ValueError(f"unknown merge strategy '{strategy}'")
+        return
 
     # upsert: replace matched target rows with source versions
-    if update_condition:
-        # only matched pairs satisfying the condition are updated
-        upd_pairs = t.join(s, cond & F.expr(update_condition), "inner")
-        upd_keys = upd_pairs.select(*[F.col(f"t.{k}").alias(k) for k in keys]).distinct()
+    if update_condition or insert_condition:
+        t, s = existing.alias("t"), incoming.alias("s")
+        matched = _keys_match(keys)
+        if update_condition:
+            # only matched pairs satisfying the condition are updated
+            matched = matched & F.expr(update_condition)
+        kept = t.join(s, matched, "left_anti")
+        written = s.join(t, matched, "left_semi").unionByName(new_rows)
     else:
-        upd_keys = matched_keys
-    updates = incoming.join(upd_keys, on=keys, how="left_semi")
+        # the raw batch has the same key set without the dedup's exchange
+        kept = existing.join(batch.select(*keys), on=keys, how="left_anti")
+        written = incoming
     if audit_cols:
         created = existing.select(*keys, "created_at")
-        updates = (
-            updates.join(created, on=keys, how="left")
-            .withColumn("updated_at", now)
+        written = (
+            written.drop("created_at", "updated_at")
+            .join(created, on=keys, how="left")
             .withColumn("created_at", F.coalesce(F.col("created_at"), now))
+            .withColumn("updated_at", now)
         )
-    kept = existing.join(upd_keys, on=keys, how="left_anti")
-    out = kept.unionByName(updates, allowMissingColumns=True).unionByName(
-        new_rows, allowMissingColumns=True
-    )
-    target.overwrite(out)
-    return target.read()
+    target.overwrite(kept.unionByName(written, allowMissingColumns=True))
+
+
+def _keys_match(keys: list[str]) -> Column:
+    return F.expr(" AND ".join(f"t.`{k}` = s.`{k}`" for k in keys))
 
 
 def _filter_merge_cond(df: DataFrame, condition: str, side: str) -> DataFrame:

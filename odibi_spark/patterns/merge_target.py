@@ -3,9 +3,12 @@
 The reference performs all merge patterns through Delta MERGE
 (odibi/transformers/scd.py:553-735, merge_transformer.py:406-640).
 Without Delta jars, ``ParquetTarget`` gives the same row semantics via
-read -> transform -> staged-overwrite. The interface is the seam where
-``DeltaTarget`` (partition-pruned, ACID-transactional MERGE) plugs in
-on a real cluster — call sites are identical.
+read -> transform -> staged-overwrite, and is the only parquet rewrite
+path for merges: the patterns' and ``write_sink``'s merge modes. The
+interface is the seam where ``DeltaTarget`` (partition-pruned,
+ACID-transactional MERGE) plugs in on a real cluster — call sites are
+identical. Each instance infers the schema at most once (a Spark job)
+and reads with the known schema after that.
 
 Crash safety (ADVICE r9): ``overwrite`` never truncates the live dir
 in place. The new contents are written to ``{path}__staging`` first,
@@ -34,9 +37,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 class ParquetTarget:
-    def __init__(self, spark: SparkSession, path: str):
+    def __init__(self, spark: SparkSession, path: str, partition_by=None):
         self.spark = spark
         self.path = path
+        self.partition_by = partition_by or []
+        self._schema = None  # set by the first inference or write
 
     def _staging(self) -> str:
         return self.path + "__staging"
@@ -71,7 +76,7 @@ class ParquetTarget:
                 if os.path.exists(leftover):
                     shutil.rmtree(leftover, ignore_errors=True)
             try:
-                self.spark.read.parquet(self.path).schema
+                self._schema = self._schema or self.spark.read.parquet(self.path).schema
                 return True
             except Exception as exc:
                 raise RuntimeError(
@@ -86,14 +91,19 @@ class ParquetTarget:
 
     def read(self) -> DataFrame:
         self._recover()
-        return self.spark.read.parquet(self.path)
+        self._schema = self._schema or self.spark.read.parquet(self.path).schema
+        return self.spark.read.schema(self._schema).parquet(self.path)
+
+    def _write(self, df: DataFrame, path: str) -> None:
+        df.write.mode("overwrite").partitionBy(*self.partition_by).parquet(path)
+        self._schema = df.schema
 
     def overwrite(self, df: DataFrame) -> None:
         # stage the new state beside the live dir (the plan may read
         # from the live dir — staging never truncates its own input),
         # then swap: live -> __old, staging -> live, drop __old
         staging, backup = self._staging(), self._backup()
-        df.write.mode("overwrite").parquet(staging)
+        self._write(df, staging)
         if os.path.exists(backup):
             shutil.rmtree(backup)
         os.rename(self.path, backup)
@@ -101,4 +111,4 @@ class ParquetTarget:
         shutil.rmtree(backup, ignore_errors=True)
 
     def write_initial(self, df: DataFrame) -> None:
-        df.write.mode("overwrite").parquet(self.path)
+        self._write(df, self.path)

@@ -230,7 +230,8 @@ class NodeExecutor:
                     # reference's eager count() pattern at scale). Only for
                     # modes that are guaranteed to execute the plan —
                     # Observation.get blocks if the job never runs (e.g.
-                    # 'ignore' on an existing target, merge emulation).
+                    # 'ignore' on an existing target, or a merge mode, whose
+                    # write may be a Delta MERGE or a staged rewrite).
                     obs = None
                     if w.mode in ("overwrite", "append"):
                         from pyspark.sql import Observation, functions as F

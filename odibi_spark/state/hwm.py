@@ -13,8 +13,10 @@ pipeline.py:1537-1543) — crash between write and commit replays rows
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
+import tempfile
 from abc import ABC, abstractmethod
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -44,12 +46,16 @@ class JsonStateBackend(StateBackend):
         return self._load().get(key)
 
     def set(self, key: str, value: str) -> None:
-        data = self._load()
-        data[key] = value
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(data, f, indent=2, sort_keys=True)
-        os.replace(tmp, self.path)
+        # writers sharing one file (layer-parallel nodes, one state_path)
+        # take turns under the lock, each staging its own temp file
+        with open(self.path + ".lock", "a") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            data = self._load()
+            data[key] = value
+            fd, tmp = tempfile.mkstemp(dir=os.path.dirname(os.path.abspath(self.path)))
+            with os.fdopen(fd, "w") as f:
+                json.dump(data, f, indent=2, sort_keys=True)
+            os.replace(tmp, self.path)
 
 
 class ParquetStateBackend(StateBackend):

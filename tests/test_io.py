@@ -1,5 +1,5 @@
 """IO layer tests: reads (incl. nanos timestamps), write modes,
-merge emulation (reference write semantics: SURVEY §2.1/§2.2)."""
+merge modes (reference write semantics: SURVEY §2.1/§2.2)."""
 
 import os
 
@@ -48,6 +48,13 @@ def test_write_partition_by(spark, tmp_path):
     p = str(tmp_path / "t2")
     write_sink(df, path=p, mode="overwrite", partition_by=["part"])
     assert os.path.isdir(os.path.join(p, "part=x"))
+    # an upsert keeps the layout and is last-write-wins per key (k=2
+    # moves to part=x, which empties part=y)
+    upd = spark.createDataFrame([Row(k=2, part="x"), Row(k=3, part="z")])
+    write_sink(upd, path=p, mode="upsert", keys=["k"], partition_by=["part"])
+    assert sorted(d for d in os.listdir(p) if "=" in d) == ["part=x", "part=z"]
+    got = {r.k: r.part for r in spark.read.parquet(p).collect()}
+    assert got == {1: "x", 2: "x", 3: "z"}
 
 
 def test_upsert_semantics(spark, tmp_path):
@@ -84,6 +91,13 @@ def test_csv_json_roundtrip(spark, tmp_path):
     write_sink(df, path=pj, format="json", mode="overwrite")
     assert read_source(spark, format="csv", path=pc, schema="a INT, b STRING").count() == 1
     assert read_source(spark, format="json", path=pj).count() == 1
+    # merge modes only write parquet (or Delta): a CSV target is refused
+    # before anything is written, and its rows stay readable
+    for mode in ("upsert", "append_once"):
+        with pytest.raises(ValueError, match="'csv'"):
+            write_sink(df, path=pc, format="csv", mode=mode, keys=["a"])
+    got = read_source(spark, format="csv", path=pc, schema="a INT, b STRING")
+    assert [tuple(r) for r in got.collect()] == [(1, "x")]
 
 
 def test_streaming_read_requires_schema(spark):

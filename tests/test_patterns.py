@@ -137,6 +137,60 @@ class TestMerge:
         r1 = out.filter("cid = 1").collect()[0]
         assert r1.created_at is not None and r1.updated_at >= r1.created_at
 
+    @pytest.mark.parametrize("strategy", ["upsert", "append_only"])
+    def test_null_keys_never_match(self, spark, tmp_path, strategy):
+        """A NULL key matches nothing: the target's NULL-key row is kept
+        and the batch's NULL-key row inserted, under both strategies."""
+        p = str(tmp_path / "mn")
+        schema = "cid INT, tier STRING"
+        merge_apply(
+            spark, spark.createDataFrame([(1, "a"), (None, "old")], schema),
+            target_path=p, keys=["cid"], strategy=strategy,
+        )
+        out = merge_apply(
+            spark, spark.createDataFrame([(1, "b"), (None, "new")], schema),
+            target_path=p, keys=["cid"], strategy=strategy,
+        )
+        got = sorted((r.cid is None, r.tier) for r in out.collect())
+        k1 = "b" if strategy == "upsert" else "a"
+        assert got == [(False, k1), (True, "new"), (True, "old")]
+
+    def test_condition_free_merge_job_budget(self, spark, tmp_path):
+        """On an existing target, a condition-free upsert is one schema
+        read plus one anti-join/union write: at most 5 Spark jobs through
+        merge_apply and through write_sink's upsert mode. Inputs are
+        parquet reads, as a pipeline's batches are."""
+        import uuid
+
+        from odibi_spark.io import write_sink
+
+        sc = spark.sparkContext
+
+        def jobs(fn) -> int:
+            group = f"merge-budget-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, group)
+            try:
+                fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        spark.range(10).selectExpr("id AS k", "'a' AS v").write.parquet(
+            str(tmp_path / "base"))
+        spark.range(5, 15).selectExpr("id AS k", "'b' AS v").write.parquet(
+            str(tmp_path / "batch"))
+        base = spark.read.parquet(str(tmp_path / "base"))
+        batch = spark.read.parquet(str(tmp_path / "batch"))
+        want = {k: "a" if k < 5 else "b" for k in range(15)}
+
+        pm, pw = str(tmp_path / "m"), str(tmp_path / "w")
+        merge_apply(spark, base, target_path=pm, keys=["k"])
+        write_sink(base, path=pw, mode="upsert", keys=["k"])
+        assert jobs(lambda: merge_apply(spark, batch, target_path=pm, keys=["k"])) <= 5
+        assert jobs(lambda: write_sink(batch, path=pw, mode="upsert", keys=["k"])) <= 5
+        for p in (pm, pw):
+            assert {r.k: r.v for r in spark.read.parquet(p).collect()} == want
+
 
 class TestDimension:
     def test_sk_stability_and_unknown_member(self, spark, tmp_path, t0, t1):

@@ -246,3 +246,38 @@ class TestAppendOrderingR16:
         replay.append(s2, "b2")
         bands = replay.read_bands()
         assert bands.count() == (s1.count() + s2.count()) * 8
+
+    def test_bands_without_sigs_window_drops_stale_bands(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Crash where the concurrent bands write landed and the sigs
+        write raised. The replay's smaller batch resolves a different
+        adaptive modulus; no band row may stay bucketed under the
+        crashed one."""
+        import odibi_spark.llm.incremental as inc
+
+        # bucket target small enough that the batch size moves the modulus
+        monkeypatch.setattr(inc, "BUCKET_TARGET_BYTES", 100)
+        path = str(tmp_path / "s")
+        crashed = inc.SignatureStore(spark, path)
+
+        def sigs_write_fails(signatures, batch_id):
+            raise OSError("injected: sigs write failed")
+
+        monkeypatch.setattr(crashed, "_write_sigs", sigs_write_fails)
+        with pytest.raises(OSError, match="injected"):
+            crashed.append(self._sigs(spark).localCheckpoint(eager=True), "b1")
+        assert os.path.isdir(os.path.join(path, "bands"))
+        assert not os.path.exists(os.path.join(path, "sigs"))
+
+        replay = inc.SignatureStore(spark, path)
+        s2 = self._sigs(spark, ids=range(1, 6)).localCheckpoint(eager=True)
+        replay.append(s2, "b1")
+        assert replay.n_buckets != crashed.n_buckets
+        n = json.load(open(os.path.join(path, "_store_meta.json")))["n_buckets"]
+        bands = spark.read.parquet(os.path.join(path, "bands"))
+        assert bands.count() == s2.count() * 8
+        stale = bands.filter(
+            F.col("bucket") != F.pmod(F.xxhash64("bh"), F.lit(n)).cast("int")
+        )
+        assert stale.count() == 0

@@ -26,6 +26,41 @@ class TestHWM:
         b.set("k", "2024-01-01 00:00:00")
         assert b.get("k") == "2024-01-01 00:00:00"
 
+    def test_json_backend_thread_race_keeps_every_key(self, tmp_path):
+        """8 threads setting distinct keys on one file: every key
+        survives and no writer raises (a shared tmp file and an
+        unlocked read-modify-write lost keys and failed os.replace)."""
+        import sys
+        import threading
+
+        b = JsonStateBackend(str(tmp_path / "race.json"))
+        errors: list[BaseException] = []
+        start = threading.Barrier(8)
+
+        def writer(i: int) -> None:
+            try:
+                start.wait(timeout=30)
+                for j in range(20):
+                    b.set(f"w{i}_{j}", str(j))
+            except BaseException as ex:  # recorded, asserted below
+                errors.append(ex)
+
+        threads = [threading.Thread(target=writer, args=(i,)) for i in range(8)]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=60)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors
+        for i in range(8):
+            for j in range(20):
+                assert b.get(f"w{i}_{j}") == str(j)
+
     def test_parquet_backend_roundtrip(self, spark, tmp_path):
         b = ParquetStateBackend(spark, str(tmp_path / "state_pq"))
         b.set("hwm", "v1")

@@ -159,12 +159,20 @@ def main() -> None:
         env = dict(os.environ, SPARK_GRAFT_CPUS=str(c))
         print(f"# --- {c} cores ---", file=sys.stderr)
         res_file = f"/tmp/scaling_probe_c{c}.json"
+        # a file left by an earlier run must never stand in for this one
+        if os.path.exists(res_file):
+            os.remove(res_file)
         p = subprocess.run(
             [sys.executable, os.path.abspath(__file__), "--run",
              res_file, out_dir] + PROBE_QUERIES,
             env=env, capture_output=True, text=True,
         )
         sys.stderr.write(p.stderr[-4000:])
+        if p.returncode != 0 or not os.path.exists(res_file):
+            raise SystemExit(
+                f"scaling probe child at {c} cores failed: exit "
+                f"{p.returncode}, result file {res_file}"
+            )
         with open(res_file) as fh:
             results[c] = json.load(fh)
     lo, hi = min(cpus), max(cpus)
