@@ -76,12 +76,17 @@ def dedup_minhash(
     bands: int = 8,
 ) -> EngineContext:
     """Drop near-duplicates: for every verified pair, the higher id is
-    removed (transitive chains collapse toward the lowest id present)."""
+    removed (transitive chains collapse toward the lowest id present).
+
+    The input is materialized once (``localCheckpoint``), so the
+    shingling and the final ``left_anti`` join both read it instead of
+    each re-running the upstream chain."""
+    df = ctx.df.localCheckpoint(eager=True)
     pairs = dedup.minhash_dedup_pairs(
-        ctx.df, id_col, text_col, num_perm=num_perm, bands=bands, threshold=threshold
+        df, id_col, text_col, num_perm=num_perm, bands=bands, threshold=threshold
     )
     losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return ctx.with_df(ctx.df.join(losers, id_col, "left_anti"))
+    return ctx.with_df(df.join(losers, id_col, "left_anti"))
 
 
 @transform("cosine_topk")

@@ -84,7 +84,6 @@ class NodeExecutor:
         t0 = _time.monotonic()
         cfg = self.config
         spark = self.context.spark
-        contract_cached = None
         val_results: list[Any] = []
         try:
             # ---- pre_sql (reference: config.py:4720-4723 — e.g. SET confs)
@@ -137,7 +136,7 @@ class NodeExecutor:
             # one column-pruned aggregate pass (see _check_contracts
             # for why the input is NOT persisted)
             if cfg.contracts:
-                df, contract_cached = self._check_contracts(df, cfg.contracts)
+                df = self._check_contracts(df, cfg.contracts)
 
             # ---- transform chain
             if df is not None:
@@ -293,11 +292,6 @@ class NodeExecutor:
                 validation=val_results,
                 duration_s=round(_time.monotonic() - t0, 3),
             )
-        finally:
-            if contract_cached is not None:
-                # input cache served the contract pass + transform/write;
-                # downstream consumers use the registered OUTPUT frame
-                contract_cached.unpersist()
 
     def _apply_pattern(self, df):
         """Dispatch a warehouse pattern (reference node.py:1580-1624).
@@ -419,8 +413,7 @@ class NodeExecutor:
         (persist = full write + full read) is far more expensive than
         the pruned scan it would save.
 
-        Returns (df, cached_frame_or_None); the caller unpersists any
-        cache after the write (None in the current strategy).
+        Returns ``df`` unchanged.
         """
         import datetime
 
@@ -453,7 +446,7 @@ class NodeExecutor:
                 }[c.metric]
                 aggs.append(expr.alias(f"__c{i}"))
         if not aggs:
-            return df, None
+            return df
 
         row = df.agg(*aggs).collect()[0]
         for i, c in enumerate(contracts):
@@ -489,4 +482,4 @@ class NodeExecutor:
                         _log.warning(msg)
                     else:
                         raise ValueError(msg)
-        return df, None
+        return df

@@ -361,6 +361,36 @@ nodes:
         ids = {r.doc_id for r in out.collect()}
         assert ids == {1, 3}  # near-dup 2 dropped, lowest id kept
 
+    def test_dedup_minhash_runs_its_input_once(self, spark):
+        """The shingling and the final anti-join read one materialized
+        input: an upstream UDF runs once per row, not once per reader."""
+        from pyspark.sql import functions as F
+
+        from odibi_spark.context import Context, EngineContext
+        from odibi_spark.llm.transforms import dedup_minhash
+
+        acc = spark.sparkContext.accumulator(0)
+
+        def bump(t):
+            acc.add(1)
+            return t
+
+        bump_udf = F.udf(bump, "string")
+        base = [
+            "the quick brown fox jumps over the lazy dog again and again",
+            "completely different text about spark partitions and shuffles",
+            "a third document on minhash signatures and banded candidates",
+        ]
+        docs = spark.createDataFrame(
+            [(i, base[i % 3] + f" copy {i // 3}") for i in range(30)],
+            ["doc_id", "raw"],
+        ).select("doc_id", bump_udf("raw").alias("text"))
+        out = dedup_minhash(
+            EngineContext(Context(spark), docs), id_col="doc_id", threshold=0.5
+        ).df
+        assert {r.doc_id for r in out.collect()} == {0, 1, 2}
+        assert acc.value == 30, f"input chain ran {acc.value / 30:.2f}x"
+
 
 def test_embedding_neardup_planted_pairs(spark):
     """Planted near-identical vectors are recalled at threshold 0.95;

@@ -153,9 +153,7 @@ nodes:
         def jobs_for(contracts, group):
             sc.setJobGroup(group, "contract pass")
             try:
-                _, cached = ex._check_contracts(spark.read.parquet(src), contracts)
-                if cached is not None:
-                    cached.unpersist()
+                ex._check_contracts(spark.read.parquet(src), contracts)
                 return len(sc.statusTracker().getJobIdsForGroup(group))
             finally:
                 sc.setJobGroup("", "")
@@ -205,8 +203,8 @@ nodes:
         read_schema = agg_plan.split("ReadSchema:")[1].splitlines()[0]
         assert "at" in read_schema and "wide1" not in read_schema, read_schema
         # and the executor path returns the ORIGINAL frame, uncached
-        out, cached = ex._check_contracts(df, cfg.contracts)
-        assert cached is None and out is df
+        out = ex._check_contracts(df, cfg.contracts)
+        assert out is df
         assert not out.storageLevel.useMemory and not out.storageLevel.useDisk
 
 
@@ -689,3 +687,49 @@ class TestSimulationReadValidation:
             ReadConfig(format="simulation", path="x", simulation=ok)
         with _pytest.raises(ValueError, match="requires format"):
             ReadConfig(format="parquet", path="x", simulation=ok)
+
+
+class TestNodeCacheLifetime:
+    """``cache: true`` keeps the registered output cached after the
+    node; without it the node leaves nothing persisted."""
+
+    def _node(self, spark, tmp_path, tests, write, **extra):
+        from odibi_spark.context import Context
+        from odibi_spark.plans.config import NodeConfig
+        from odibi_spark.plans.node import NodeExecutor
+
+        src = str(tmp_path / "src")
+        spark.range(40).write.mode("overwrite").parquet(src)
+        if write:
+            extra["write"] = {"path": str(tmp_path / "out"), "mode": "overwrite"}
+        cfg = NodeConfig(
+            name="n",
+            read={"format": "parquet", "path": src},
+            transform=[{"sql": "SELECT id FROM df"}],
+            validation={"tests": tests, "quarantine_path": str(tmp_path / "q")},
+            **extra,
+        )
+        ctx = Context(spark)
+        return NodeExecutor(cfg, ctx).execute(), ctx
+
+    @pytest.mark.parametrize(
+        "quarantine,write", [(False, True), (True, True), (True, False)]
+    )
+    def test_cache_lifetime(self, spark, tmp_path, quarantine, write):
+        sc = spark.sparkContext
+        tests = [{"name": "id_nn", "type": "not_null", "column": "id",
+                  "quarantine": quarantine},
+                 {"name": "id_unique", "type": "unique", "column": "id"}]
+        before = set(sc._jsc.getPersistentRDDs().keys())
+        r, ctx = self._node(spark, tmp_path, tests, write)
+        assert r.status == "success", r.error
+        assert not ctx.get("n").storageLevel.useMemory
+        assert set(sc._jsc.getPersistentRDDs().keys()) == before
+
+        r, ctx = self._node(spark, tmp_path, tests, write, cache=True)
+        assert r.status == "success", r.error
+        out = ctx.get("n")
+        assert out.storageLevel.useMemory and out.storageLevel.useDisk
+        assert out.count() == 40
+        out.unpersist()
+        assert set(sc._jsc.getPersistentRDDs().keys()) == before
