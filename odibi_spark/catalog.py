@@ -6,11 +6,22 @@ _system_catalog/).
 
 On a cluster these become Delta tables with MERGE upserts; here the
 parquet key-value/append forms keep identical schemas.
+
+The tables hold O(runs x nodes) rows, so on a local root the per-run
+bookkeeping stays on the driver and launches no Spark job: appends are
+pyarrow files (``io/append.atomic_append``), the schema snapshot's
+read-latest and the ``meta_daily_stats`` fold read with
+``io/append.read_rows``, and the fold commits a pyarrow table through
+``ParquetTarget``'s staged swap. Roots with a URI scheme read and
+append through Spark. The query accessors (``runs()``, ``metrics()``,
+...) and maintenance stay Spark DataFrames.
 """
 
 from __future__ import annotations
 
+import fcntl
 import json
+import os
 import time
 import uuid
 
@@ -33,7 +44,10 @@ METRIC_SCHEMA = (
     "run_id string, pipeline string, node string, metric string, "
     "value double, recorded_at double"
 )
-DAILY_STATS_GRAIN = ["date", "pipeline"]
+DAILY_STATS_SCHEMA = (
+    "date string, pipeline string, runs bigint, successes bigint, "
+    "failures bigint, total_rows bigint, total_duration_s double"
+)
 # deployed pipeline/node definitions (reference: odibi/catalog.py:872
 # meta_pipelines, :888 meta_nodes — version_hash keys staleness)
 PIPELINE_SCHEMA = (
@@ -54,6 +68,25 @@ SCHEMA_SNAPSHOT_SCHEMA = (
     "node string, run_id string, columns_added string, "
     "columns_removed string, columns_type_changed string"
 )
+
+
+def _table_row(
+    table_path: str, pipeline: str, node: str, df: DataFrame, format: str,
+) -> tuple:
+    schema_json = json.dumps(
+        {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    )
+    return (table_path, pipeline, node, format, schema_json, time.time())
+
+
+def _metric_rows(
+    run_id: str, pipeline: str, node: str, metrics: dict[str, float],
+    recorded_at: float,
+) -> list[tuple]:
+    return [
+        (run_id, pipeline, node, k, float(v), recorded_at)
+        for k, v in metrics.items()
+    ]
 
 
 class Catalog:
@@ -96,12 +129,8 @@ class Catalog:
         self, *, table_path: str, pipeline: str, node: str, df: DataFrame,
         format: str = "parquet",
     ) -> None:
-        schema_json = json.dumps(
-            {f.name: f.dataType.simpleString() for f in df.schema.fields}
-        )
         self._append(
-            "tables",
-            [(table_path, pipeline, node, format, schema_json, time.time())],
+            "tables", [_table_row(table_path, pipeline, node, df, format)],
             TABLE_SCHEMA,
         )
 
@@ -113,11 +142,8 @@ class Catalog:
         one catalog table serves every metric family (row counts,
         durations, validation failure counts) without schema churn,
         the reference's meta_metrics posture (odibi/catalog.py:844)."""
-        now = time.time()
         self._append(
-            "metrics",
-            [(run_id, pipeline, node, k, float(v), now)
-             for k, v in metrics.items()],
+            "metrics", _metric_rows(run_id, pipeline, node, metrics, time.time()),
             METRIC_SCHEMA,
         )
 
@@ -131,39 +157,52 @@ class Catalog:
     ) -> DataFrame:
         """Fold ONE run into the ``meta_daily_stats`` derived rollup
         (reference: odibi/catalog.py:1085, PK (date, pipeline_name),
-        upserted by derived_updater on pipeline completion). Built on
-        the incremental-aggregation pattern with merge_sum, so each
-        run contributes a single pre-aggregated row and history is
-        never rescanned — O(days x pipelines) table, O(1) per run."""
-        from odibi_spark.patterns.aggregation import aggregate_incremental
+        upserted by derived_updater on pipeline completion) with
+        merge_sum semantics: the run's measures are added to its
+        (date, pipeline) row, or start a new row.
+
+        The table is O(days x pipelines) rows, so the fold runs on the
+        driver: read with ``read_rows``, add in Python, commit the
+        result as a pyarrow table through ``ParquetTarget``'s staged
+        swap. Read -> fold -> swap holds an ``fcntl.flock`` on
+        ``meta_daily_stats.lock``, so concurrent folds (layer-parallel
+        schedulers, replays of different runs) take turns instead of
+        losing updates. Returns the table read with its known schema
+        (no inference job)."""
+        import pyarrow as pa
+
+        from odibi_spark.io.append import parse_ddl, read_rows
+        from odibi_spark.patterns.merge_target import ParquetTarget
 
         ok = all(r.status == "success" for r in results.values())
-        batch = self.spark.createDataFrame(
-            [(
-                time.strftime("%Y-%m-%d", time.gmtime(started_at)),
-                pipeline,
-                1,
-                1 if ok else 0,
-                0 if ok else 1,
-                int(sum(r.rows_written or 0 for r in results.values())),
-                float(round(finished_at - started_at, 3)),
-            )],
-            "date string, pipeline string, runs bigint, successes bigint, "
-            "failures bigint, total_rows bigint, total_duration_s double",
-        )
-        return aggregate_incremental(
-            self.spark, batch,
-            target_path=f"{self.root}/meta_daily_stats",
-            grain=DAILY_STATS_GRAIN,
-            measures={
-                "runs": "sum(runs)",
-                "successes": "sum(successes)",
-                "failures": "sum(failures)",
-                "total_rows": "sum(total_rows)",
-                "total_duration_s": "sum(total_duration_s)",
-            },
-            strategy="merge_sum",
-        )
+        date = time.strftime("%Y-%m-%d", time.gmtime(started_at))
+        run = {
+            "runs": 1,
+            "successes": 1 if ok else 0,
+            "failures": 0 if ok else 1,
+            "total_rows": int(sum(r.rows_written or 0 for r in results.values())),
+            "total_duration_s": float(round(finished_at - started_at, 3)),
+        }
+        path = self._table_path("daily_stats")
+        target = ParquetTarget(self.spark, path)
+        os.makedirs(self.root, exist_ok=True)
+        with open(path + ".lock", "a") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            live = target.live()
+            rows = read_rows(self.spark, path, DAILY_STATS_SCHEMA) if live else []
+            for row in rows:
+                if (row["date"], row["pipeline"]) == (date, pipeline):
+                    for m, v in run.items():
+                        row[m] += v
+                    break
+            else:
+                rows.append({"date": date, "pipeline": pipeline, **run})
+            table = pa.Table.from_pylist(rows, schema=parse_ddl(DAILY_STATS_SCHEMA))
+            if live:
+                target.overwrite(table)
+            else:
+                target.write_initial(table)
+        return self.spark.read.schema(DAILY_STATS_SCHEMA).parquet(path)
 
     def deploy(self, config) -> str:
         """Record a pipeline's definition in the catalog (reference CLI
@@ -225,31 +264,36 @@ class Catalog:
         first writers of the SAME table can race a version number;
         the snapshot log still records both schemas (the reference's
         Delta-MERGE backend is the upgrade path, same posture as
-        ``_append``)."""
+        ``_append``). The read-latest runs on the driver
+        (``read_rows``)."""
         import hashlib
+
+        from odibi_spark.io.append import read_rows
 
         cols = {f.name: f.dataType.simpleString() for f in df.schema.fields}
         canon = json.dumps(cols, sort_keys=True)
         schema_hash = hashlib.md5(canon.encode()).hexdigest()
-        prev = None
-        if self._exists("schema_snapshots"):
-            rows = (
-                self.schema_snapshots(table_path)
-                .orderBy("schema_version", ascending=False)
-                .limit(1)
-                .collect()
-            )
-            prev = rows[0] if rows else None
-        if prev is not None and prev.schema_hash == schema_hash:
-            return {"changed": False, "version": int(prev.schema_version)}
+        prev = max(
+            (
+                r for r in read_rows(
+                    self.spark, self._table_path("schema_snapshots"),
+                    SCHEMA_SNAPSHOT_SCHEMA,
+                )
+                if r["table_path"] == table_path
+            ),
+            key=lambda r: r["schema_version"],
+            default=None,
+        )
+        if prev is not None and prev["schema_hash"] == schema_hash:
+            return {"changed": False, "version": int(prev["schema_version"])}
         if prev is not None:
-            prev_cols = json.loads(prev.columns_json)
+            prev_cols = json.loads(prev["columns_json"])
             added = sorted(set(cols) - set(prev_cols))
             removed = sorted(set(prev_cols) - set(cols))
             changed = sorted(
                 c for c in cols if c in prev_cols and cols[c] != prev_cols[c]
             )
-            version = int(prev.schema_version) + 1
+            version = int(prev["schema_version"]) + 1
         else:
             added, removed, changed = sorted(cols), [], []
             version = 1
@@ -265,7 +309,7 @@ class Catalog:
         return {
             "changed": True,
             "version": version,
-            "previous_version": int(prev.schema_version) if prev else None,
+            "previous_version": int(prev["schema_version"]) if prev else None,
             "columns_added": added,
             "columns_removed": removed,
             "columns_type_changed": changed,
@@ -695,7 +739,11 @@ class Catalog:
 
 def run_pipeline_with_catalog(pipeline, *, catalog: Catalog, parallel: bool = False):
     """Run a Pipeline and record per-node results + lineage metadata
-    (reference post-run: catalog sync + lineage emit, SURVEY §3.1.6)."""
+    (reference post-run: catalog sync + lineage emit, SURVEY §3.1.6).
+
+    The bookkeeping after ``pipeline.run`` writes one file per catalog
+    table per run (all nodes' rows in one append), and on a local root
+    launches no Spark job (see the module docstring)."""
     run_id = str(uuid.uuid4())
     t0 = time.time()
     results = pipeline.run(parallel=parallel)
@@ -707,6 +755,8 @@ def run_pipeline_with_catalog(pipeline, *, catalog: Catalog, parallel: bool = Fa
     )
     # per-node observability metrics: rows/duration plus one row per
     # validation test's failure count and pass flag
+    metric_rows: list[tuple] = []
+    recorded_at = time.time()
     for node_name, r in results.items():
         metrics: dict[str, float] = {
             "rows_written": float(r.rows_written or 0),
@@ -715,9 +765,9 @@ def run_pipeline_with_catalog(pipeline, *, catalog: Catalog, parallel: bool = Fa
         for v in r.validation or []:
             metrics[f"validation.{v.name}.failed_rows"] = float(v.failed_rows)
             metrics[f"validation.{v.name}.passed"] = 1.0 if v.passed else 0.0
-        catalog.record_metrics(
-            run_id=run_id, pipeline=name, node=node_name, metrics=metrics,
-        )
+        metric_rows += _metric_rows(run_id, name, node_name, metrics, recorded_at)
+    if metric_rows:
+        catalog._append("metrics", metric_rows, METRIC_SCHEMA)
     # exactly-once derived fold (r13, reference derived_updater.py
     # claim lifecycle): a replayed/retried run_id must not double-
     # count into the meta_daily_stats rollup — the guard's first
@@ -728,15 +778,26 @@ def run_pipeline_with_catalog(pipeline, *, catalog: Catalog, parallel: bool = Fa
             pipeline=name, results=results, started_at=t0, finished_at=t1,
         ),
     )
-    for node in pipeline.config.nodes:
-        if node.write and node.write.path and results[node.name].status == "success":
-            # r14: registration + versioned schema snapshot in one
-            # sync — meta_schema_snapshots gains a drift row whenever
-            # a run changes a table's shape (reference track_schema
-            # per catalogued write)
-            catalog.sync_table(
-                table_path=node.write.path, pipeline=pipeline.config.name,
-                node=node.name, df=pipeline.context.get(node.name),
-                format=node.write.format, run_id=run_id,
-            )
+    # table registration + versioned schema snapshot per written node
+    # (sync_table's two steps, with the registrations in one append) —
+    # meta_schema_snapshots gains a drift row whenever a run changes a
+    # table's shape (reference track_schema per catalogued write)
+    written = [
+        (node, pipeline.context.get(node.name))
+        for node in pipeline.config.nodes
+        if node.write and node.write.path and results[node.name].status == "success"
+    ]
+    if written:
+        catalog._append(
+            "tables",
+            [
+                _table_row(node.write.path, name, node.name, df, node.write.format)
+                for node, df in written
+            ],
+            TABLE_SCHEMA,
+        )
+    for node, df in written:
+        catalog.snapshot_schema(
+            node.write.path, df, pipeline=name, node=node.name, run_id=run_id,
+        )
     return run_id, results

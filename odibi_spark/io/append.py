@@ -1,4 +1,5 @@
-"""Concurrency-safe parquet appends for small metadata tables.
+"""Concurrency-safe parquet appends, and driver-side reads, for small
+metadata tables.
 
 Spark's ``mode("append")`` stages output under a SHARED
 ``_temporary/<jobId>`` directory: two drivers appending to the same
@@ -18,6 +19,12 @@ keep using Spark writers. On object stores without atomic rename the
 upgrade path is a Delta table with MERGE/append commits — documented
 at the call sites; paths with a URI scheme fall back to a plain Spark
 append (single-writer semantics, as before).
+
+Reads of the same tables happen on the driver too: ``read_rows`` loads
+a local table with ``pyarrow.dataset`` (hidden ``.``/``_`` files
+skipped, as Spark's listing does), so catalog lookups and folds and the
+parquet HWM state launch no Spark job. Paths with a URI scheme fall
+back to a Spark read with the given schema.
 """
 
 from __future__ import annotations
@@ -53,6 +60,29 @@ def parse_ddl(ddl_schema: str) -> pa.Schema:
                 f"got '{typ}' for '{name}'"
             ) from None
     return pa.schema(fields)
+
+
+def read_rows(spark, path: str, ddl_schema: str) -> list[dict]:
+    """Every row of the small parquet table at ``path`` as dicts, read
+    with ``ddl_schema`` (a column missing from older files reads as
+    None); ``[]`` when the table does not exist. Local paths are read
+    on the driver with ``pyarrow.dataset``; URIs through Spark."""
+    if not _is_local(path):
+        from pyspark.errors import AnalysisException
+
+        try:
+            rows = spark.read.schema(ddl_schema).parquet(path).collect()
+        except AnalysisException as ex:
+            if "PATH_NOT_FOUND" in str(ex):
+                return []
+            raise
+        return [r.asDict() for r in rows]
+    import pyarrow.dataset as ds
+
+    if not os.path.isdir(path):
+        return []
+    dataset = ds.dataset(path, schema=parse_ddl(ddl_schema), format="parquet")
+    return dataset.to_table().to_pylist()
 
 
 def atomic_append(spark, path: str, rows: list[tuple], ddl_schema: str) -> str:

@@ -8,7 +8,9 @@ path for merges: the patterns' and ``write_sink``'s merge modes. The
 interface is the seam where ``DeltaTarget`` (partition-pruned,
 ACID-transactional MERGE) plugs in on a real cluster — call sites are
 identical. Each instance infers the schema at most once (a Spark job)
-and reads with the known schema after that.
+and reads with the known schema after that. A driver-sized state (the
+catalog's rollups) can be staged as a ``pyarrow.Table`` instead of a
+DataFrame; it goes through the same swap.
 
 Crash safety (ADVICE r9): ``overwrite`` never truncates the live dir
 in place. The new contents are written to ``{path}__staging`` first,
@@ -33,7 +35,10 @@ from __future__ import annotations
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 
 class ParquetTarget:
@@ -66,7 +71,10 @@ class ParquetTarget:
             live = True
         return live
 
-    def exists(self) -> bool:
+    def live(self) -> bool:
+        """Whether a live dir exists, after recovering an interrupted
+        swap and dropping stale leftovers. Reads no data, so it
+        launches no Spark job; ``exists`` also checks the dir reads."""
         live = self._recover()
         if live:
             # stale swap leftovers: __old after a committed swap,
@@ -75,6 +83,12 @@ class ParquetTarget:
             for leftover in (self._backup(), self._staging()):
                 if os.path.exists(leftover):
                     shutil.rmtree(leftover, ignore_errors=True)
+        elif os.path.exists(self._staging()):
+            shutil.rmtree(self._staging(), ignore_errors=True)
+        return live
+
+    def exists(self) -> bool:
+        if self.live():
             try:
                 self._schema = self._schema or self.spark.read.parquet(self.path).schema
                 return True
@@ -85,8 +99,6 @@ class ParquetTarget:
                     "restore or delete it explicitly rather than letting "
                     "a merge silently reinitialize over history"
                 ) from exc
-        if os.path.exists(self._staging()):
-            shutil.rmtree(self._staging(), ignore_errors=True)
         return False
 
     def read(self) -> DataFrame:
@@ -94,11 +106,21 @@ class ParquetTarget:
         self._schema = self._schema or self.spark.read.parquet(self.path).schema
         return self.spark.read.schema(self._schema).parquet(self.path)
 
-    def _write(self, df: DataFrame, path: str) -> None:
+    def _write(self, df: DataFrame | pa.Table, path: str) -> None:
+        if isinstance(df, pa.Table):
+            # a driver-sized table (catalog rollups): one file written
+            # by pyarrow, no Spark job
+            shutil.rmtree(path, ignore_errors=True)
+            os.makedirs(path)
+            tmp = os.path.join(path, ".part-00000.parquet.tmp")
+            pq.write_table(df, tmp)
+            os.replace(tmp, os.path.join(path, "part-00000.parquet"))
+            self._schema = from_arrow_schema(df.schema)
+            return
         df.write.mode("overwrite").partitionBy(*self.partition_by).parquet(path)
         self._schema = df.schema
 
-    def overwrite(self, df: DataFrame) -> None:
+    def overwrite(self, df: DataFrame | pa.Table) -> None:
         # stage the new state beside the live dir (the plan may read
         # from the live dir — staging never truncates its own input),
         # then swap: live -> __old, staging -> live, drop __old
@@ -110,5 +132,5 @@ class ParquetTarget:
         os.rename(staging, self.path)
         shutil.rmtree(backup, ignore_errors=True)
 
-    def write_initial(self, df: DataFrame) -> None:
+    def write_initial(self, df: DataFrame | pa.Table) -> None:
         self._write(df, self.path)

@@ -131,6 +131,7 @@ class NodeExecutor:
             hwm_state = hwm_key = None
             if cfg.incremental:
                 df, hwm_state, hwm_key = self._apply_incremental(df)
+                hwm_rows = df  # the rows read: the HWM source below
 
             # ---- input contracts (circuit breakers, pre-transform):
             # one column-pruned aggregate pass (see _check_contracts
@@ -196,12 +197,17 @@ class NodeExecutor:
             if cfg.cache:
                 df = df.cache()
 
-            # ---- capture HWM before the write (committed only after)
+            # ---- capture HWM before the write (committed only after).
+            # It is the max of the rows READ after the HWM filter, not of
+            # the output: a row a transform drops or validation
+            # quarantines is never re-read, and the column-pruned max
+            # over the batch scan re-runs no transform, pattern or
+            # lookup join.
             new_hwm = None
             if hwm_state is not None:
                 from odibi_spark.state.hwm import capture_hwm
 
-                new_hwm = capture_hwm(df, cfg.incremental.column)
+                new_hwm = capture_hwm(hwm_rows, cfg.incremental.column)
 
             # ---- write phase
             rows_written = None

@@ -9,6 +9,12 @@ reference: the new HWM is computed from the batch but committed only
 AFTER the write succeeds (pipeline buffering, reference
 pipeline.py:1537-1543) — crash between write and commit replays rows
 (at-least-once) rather than losing them.
+
+The new HWM is the maximum of the rows the node READ, after the HWM
+filter — not of its transformed, pattern or validated output. Rows a
+transform drops or validation quarantines are therefore not re-read
+on every later run, and the capture is one column-pruned top-1 job
+over the batch scan.
 """
 
 from __future__ import annotations
@@ -58,6 +64,9 @@ class JsonStateBackend(StateBackend):
             os.replace(tmp, self.path)
 
 
+_STATE_SCHEMA = "key string, value string, seq bigint"
+
+
 class ParquetStateBackend(StateBackend):
     """Key-value parquet table (Delta ``meta_state`` analogue).
 
@@ -66,29 +75,23 @@ class ParquetStateBackend(StateBackend):
     table — so concurrent writers of DIFFERENT keys both land, and
     same-key races resolve last-seq-wins (the same outcome a retried
     Delta MERGE gives the reference, odibi/state/__init__.py:43-107).
-    Readers resolve the latest seq per key; files from the pre-append
-    overwrite layout read as seq 0. ``Catalog.optimize()`` bin-packs
-    the accreted files; on an object store without atomic rename the
-    upgrade path is the Delta MERGE backend."""
+    Readers resolve the latest seq per key on the driver
+    (``io/append.read_rows``, no Spark job on a local path); files from
+    the pre-append overwrite layout read as seq 0. ``Catalog.optimize()``
+    bin-packs the accreted files; on an object store without atomic
+    rename the upgrade path is the Delta MERGE backend."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
 
     def _read(self) -> dict[str, str]:
-        if not os.path.exists(self.path):
-            return {}
-        try:
-            rows = (
-                self.spark.read.option("mergeSchema", "true")
-                .parquet(self.path)
-                .collect()
-            )
-        except Exception:
-            return {}
+        from odibi_spark.io.append import read_rows
+
+        rows = read_rows(self.spark, self.path, _STATE_SCHEMA)
         data: dict[str, str] = {}
-        for r in sorted(rows, key=lambda r: getattr(r, "seq", None) or 0):
-            data[r.key] = r.value
+        for r in sorted(rows, key=lambda r: r["seq"] or 0):
+            data[r["key"]] = r["value"]
         return data
 
     def get(self, key: str) -> str | None:
@@ -100,9 +103,7 @@ class ParquetStateBackend(StateBackend):
         from odibi_spark.io.append import atomic_append
 
         atomic_append(
-            self.spark, self.path,
-            [(key, value, time.time_ns())],
-            "key string, value string, seq bigint",
+            self.spark, self.path, [(key, value, time.time_ns())], _STATE_SCHEMA,
         )
 
 
@@ -153,9 +154,19 @@ def rolling_window_filter(df: DataFrame, *, column: str, lookback: str) -> DataF
 def capture_hwm(df: DataFrame, column: str) -> str | None:
     """Max of the batch's HWM column (reference node.py:3379+
     ``_get_column_max``) — commit via ``StateBackend.set`` only after
-    the downstream write succeeds."""
-    row = df.agg(F.max(column).alias("m")).collect()[0]
-    return None if row.m is None else str(row.m)
+    the downstream write succeeds. Pass the rows read, as
+    ``incremental_filter`` returned them: the optimizer prunes the scan
+    to the one column, and the result is the max of exactly the rows
+    the batch consumed. Taken as the top row of a descending order
+    (nulls last): one Spark job, where a global ``max`` aggregate runs
+    a shuffle map stage and a result stage as two."""
+    rows = (
+        df.select(F.col(column).alias("m"))
+        .orderBy(F.desc_nulls_last("m"))
+        .limit(1)
+        .collect()
+    )
+    return None if not rows or rows[0].m is None else str(rows[0].m)
 
 
 class DeltaStateBackend(StateBackend):

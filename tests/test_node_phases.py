@@ -48,6 +48,139 @@ class TestIncrementalNode:
         assert r3["sink"].status == "success"
         assert spark.read.parquet(out).count() == 3
 
+    def test_quarantined_newest_row_is_not_reread(self, spark, tmp_path):
+        """The HWM is the max of the rows READ: a newest row that a
+        quarantined test removes from the output still advances it, so
+        reruns with no new landing data quarantine it once, not once
+        per run."""
+        import datetime
+
+        ts = datetime.datetime.fromisoformat
+        src, out = str(tmp_path / "src"), str(tmp_path / "out")
+        spark.createDataFrame([
+            Row(id=1, v=1, at=ts("2024-01-01 00:00:00")),
+            Row(id=2, v=2, at=ts("2024-01-02 00:00:00")),
+            Row(id=3, v=99, at=ts("2024-01-03 00:00:00")),
+        ]).write.parquet(src)
+        y = f"""
+name: inc_q
+nodes:
+  - name: sink
+    read: {{format: parquet, path: "{src}"}}
+    incremental: {{mode: stateful, column: at}}
+    state_path: "{tmp_path}/state.json"
+    validation:
+      tests:
+        - {{name: v_small, type: range, column: v, max: 10, quarantine: true}}
+      quarantine_path: "{tmp_path}/quarantine"
+    write: {{path: "{out}", mode: append}}
+"""
+        for _ in range(3):
+            r = Pipeline.from_yaml(y, spark).run()
+            assert r["sink"].status == "success", r["sink"].error
+            assert spark.read.parquet(str(tmp_path / "quarantine")).count() == 1
+            assert spark.read.parquet(out).count() == 2
+
+    def test_transform_dropping_newest_row_advances_hwm(self, spark, tmp_path):
+        """A transform that filters out the newest row no longer holds
+        the HWM below it: the committed HWM is the newest row read, and
+        the next run's incremental read selects nothing old."""
+        import datetime
+
+        from odibi_spark.state import JsonStateBackend
+
+        ts = datetime.datetime.fromisoformat
+        src, out = str(tmp_path / "src"), str(tmp_path / "out")
+        state = str(tmp_path / "state.json")
+        spark.createDataFrame([
+            Row(id=1, at=ts("2024-01-01 00:00:00")),
+            Row(id=2, at=ts("2024-01-02 00:00:00")),
+        ]).write.parquet(src)
+        y = f"""
+name: inc_t
+nodes:
+  - name: sink
+    read: {{format: parquet, path: "{src}"}}
+    incremental: {{mode: stateful, column: at}}
+    state_path: "{state}"
+    transform:
+      - sql: "SELECT * FROM df WHERE id <> 2"
+    write: {{path: "{out}", mode: append}}
+"""
+        r = Pipeline.from_yaml(y, spark).run()
+        assert r["sink"].status == "success", r["sink"].error
+        assert JsonStateBackend(state).get("sink:at") == str(ts("2024-01-02 00:00:00"))
+        # a later batch: only the new row is read and written
+        spark.createDataFrame([Row(id=3, at=ts("2024-01-03 00:00:00"))]).write.mode(
+            "append").parquet(src)
+        r = Pipeline.from_yaml(y, spark).run()
+        assert r["sink"].status == "success", r["sink"].error
+        assert r["sink"].rows_written == 1
+        assert JsonStateBackend(state).get("sink:at") == str(ts("2024-01-03 00:00:00"))
+
+    def test_hwm_capture_job_budget_skips_lookup_join(self, spark, tmp_path, monkeypatch):
+        """HWM capture on a fact node with a dimension lookup is one
+        column-pruned max over the batch read: one Spark job, and the
+        lookup join is not in the plan it runs."""
+        import datetime
+        import uuid
+
+        import odibi_spark.state.hwm as hwm
+
+        ts = datetime.datetime.fromisoformat
+        sc = spark.sparkContext
+        captured: list[tuple[int, str]] = []
+        original = hwm.capture_hwm
+
+        def counted(df, column):
+            group = f"hwm-budget-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, group)
+            try:
+                out = original(df, column)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            captured.append((len(sc.statusTracker().getJobIdsForGroup(group)), plan))
+            return out
+
+        monkeypatch.setattr(hwm, "capture_hwm", counted)
+        spark.createDataFrame([Row(k=1, sk=10), Row(k=2, sk=20)]).write.parquet(
+            str(tmp_path / "dim"))
+        sales = str(tmp_path / "sales")
+        spark.createDataFrame([
+            Row(oid=1, k=1, amt=5.0, at=ts("2024-01-01 00:00:00")),
+            Row(oid=2, k=2, amt=6.0, at=ts("2024-01-02 00:00:00")),
+        ]).write.parquet(sales)
+        y = f"""
+name: fact_hwm
+nodes:
+  - name: dim
+    read: {{path: "{tmp_path}/dim"}}
+  - name: fact
+    depends_on: [dim]
+    read: {{format: parquet, path: "{sales}"}}
+    incremental: {{column: at}}
+    state_path: "{tmp_path}/state.json"
+    pattern:
+      type: fact
+      grain: [oid]
+      lookups:
+        - {{dimension: dim, fact_keys: [k], dim_keys: [k], surrogate_key: sk, output_col: dim_sk}}
+    write: {{path: "{tmp_path}/fact_out", mode: upsert, keys: [oid]}}
+"""
+        for batch in range(2):
+            if batch:
+                spark.createDataFrame([
+                    Row(oid=3, k=1, amt=7.0, at=ts("2024-01-03 00:00:00")),
+                ]).write.mode("append").parquet(sales)
+            r = Pipeline.from_yaml(y, spark).run()
+            assert r["fact"].status == "success", r["fact"].error
+        assert len(captured) == 2
+        for jobs, plan in captured:
+            assert jobs <= 1
+            assert "Join" not in plan
+        assert spark.read.parquet(str(tmp_path / "fact_out")).count() == 3
+
 
 class TestContracts:
     def test_schema_contract_blocks(self, spark, tmp_path):

@@ -238,6 +238,67 @@ nodes:
         assert s.total_rows == 6
         assert s.total_duration_s > 0
 
+    def test_catalog_bookkeeping_launches_no_spark_job(self, spark, tmp_path):
+        """On a local root, everything run_pipeline_with_catalog does
+        after pipeline.run (runs, metrics, table registrations, schema
+        snapshots, the daily-stats fold) runs on the driver: 0 Spark
+        jobs on a first run and on a run that folds into existing
+        tables. Metrics and registrations land as one file per run."""
+        import os
+        import uuid
+
+        import pandas as pd
+
+        from odibi_spark.catalog import Catalog, run_pipeline_with_catalog
+
+        pd.DataFrame({"k": [1, 2, 3], "v": [1.0, -2.0, 3.0]}).to_parquet(
+            tmp_path / "in.parquet"
+        )
+        yaml_text = f"""
+name: budget
+nodes:
+  - name: a
+    read: {{path: "{tmp_path}/in.parquet"}}
+    validation:
+      tests:
+        - {{name: v_nonneg, type: custom_sql, condition: "v >= 0", threshold: 0.5}}
+    write: {{path: "{tmp_path}/out_a", mode: overwrite}}
+  - name: b
+    read: {{path: "{tmp_path}/in.parquet"}}
+    write: {{path: "{tmp_path}/out_b", mode: overwrite}}
+"""
+        sc = spark.sparkContext
+        cat = Catalog(spark, str(tmp_path / "_system"))
+        for _ in range(2):
+            pipe = Pipeline.from_yaml(yaml_text, spark)
+            group = f"catalog-budget-{uuid.uuid4().hex}"
+            run = pipe.run
+
+            def run_then_mark(parallel=False, run=run, group=group):
+                results = run(parallel=parallel)
+                sc.setJobGroup(group, group)
+                return results
+
+            pipe.run = run_then_mark
+            try:
+                _, results = run_pipeline_with_catalog(pipe, catalog=cat)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert all(r.status == "success" for r in results.values())
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+
+        def files(name):
+            d = tmp_path / "_system" / f"meta_{name}"
+            return [f for f in os.listdir(d) if f.endswith(".parquet")]
+
+        assert len(files("metrics")) == 2 and len(files("tables")) == 2
+        assert cat.metrics().count() == 2 * (4 + 2)
+        assert {r.node for r in cat.tables().collect()} == {"a", "b"}
+        assert cat.tables().count() == 4
+        assert cat.schema_snapshots().count() == 2  # one version per table
+        s = cat.daily_stats().collect()
+        assert len(s) == 1 and s[0].runs == 2 and s[0].total_rows == 12
+
 
 class TestPipelineHealth:
     def test_health_snapshot_from_runs(self, spark, tmp_path):

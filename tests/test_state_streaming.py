@@ -117,6 +117,15 @@ class TestHWM:
         # one of the two values, never a crash or a missing key
         assert b.get("k") in {"x", "y"}
 
+    def test_parquet_backend_uri_path_goes_through_spark(self, spark, tmp_path):
+        """A path with a URI scheme is read (and appended) through Spark,
+        not pyarrow: an absent table reads as empty, then values land."""
+        b = ParquetStateBackend(spark, f"file://{tmp_path}/state_uri")
+        assert b.get("hwm") is None
+        b.set("hwm", "v1")
+        b.set("hwm", "v2")
+        assert b.get("hwm") == "v2"
+
     def test_parquet_backend_reads_pre_append_layout(self, spark, tmp_path):
         """Stores written by the old overwrite layout (no seq column)
         still read, and a new set() supersedes them."""

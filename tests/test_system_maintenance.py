@@ -147,6 +147,44 @@ class TestConcurrentWriters:
             (p, f"{p}-{i}") for p in ("p1", "p2") for i in range(6)
         }
 
+    def test_concurrent_daily_stats_folds_lose_no_update(self, spark, tmp_path):
+        """Four threads fold a run into the SAME (date, pipeline) row of
+        an existing meta_daily_stats at once: read -> fold -> swap is
+        serialized by the table's lock, so every fold lands and none
+        reads a table another thread is swapping away."""
+        import threading
+
+        root = str(tmp_path / "_ds")
+        now = time.time()
+        Catalog(spark, root).update_daily_stats(
+            pipeline="p", results={"a": R()}, started_at=now - 60,
+            finished_at=now - 30,
+        )
+        barrier = threading.Barrier(4)
+        errors: list[Exception] = []
+
+        def fold() -> None:
+            try:
+                barrier.wait()
+                Catalog(spark, root).update_daily_stats(
+                    pipeline="p", results={"a": R()}, started_at=now - 60,
+                    finished_at=now - 30,
+                )
+            except Exception as ex:  # pragma: no cover - failure path
+                errors.append(ex)
+
+        threads = [threading.Thread(target=fold) for _ in range(4)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
+        rows = Catalog(spark, root).daily_stats().collect()
+        assert len(rows) == 1
+        assert rows[0].runs == 5 and rows[0].successes == 5
+        assert rows[0].total_rows == 50
+
 
 class TestRebuild:
     def test_rebuild_matches_incremental_fold(self, spark, tmp_path):
