@@ -4,12 +4,15 @@ member seeding.
 
 - surrogate keys (reference :252-295): existing members keep their SK;
   new members get ``max(existing SK) + row_number()`` — a window over
-  ONLY the new members, so the big existing dimension is read for one
-  max() aggregate and one join.
+  ONLY the new members. The max comes from the target's parquet footer
+  statistics (``ParquetTarget.max_of``, no Spark job on a local
+  target), so the existing dimension is read once, by the one join
+  that matches the batch against it.
 - unknown member (reference :578+): SK -1 row seeded on first build so
   fact FK lookups never produce nulls.
 - scd: "0" (insert-only), "1" (overwrite attributes in place),
-  "2" (delegates to scd2_apply).
+  "2" (the scd2 pattern's one-pass apply, which also assigns the SKs
+  from its join of the batch against the current slice).
 """
 
 from __future__ import annotations
@@ -18,7 +21,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from odibi_spark.patterns.merge_target import ParquetTarget
-from odibi_spark.patterns.scd2 import scd2_apply
+
+# ``scd2_apply`` stays importable from here, as before (perfbench's
+# tracer wraps ``dimension.scd2_apply``); the scd "2" path calls the
+# pattern's shared body, which also assigns the surrogate keys
+from odibi_spark.patterns.scd2 import _scd2_apply, scd2_apply  # noqa: F401
 
 
 def build_dimension(
@@ -35,12 +42,10 @@ def build_dimension(
 ) -> DataFrame:
     if scd == "2":
         assert track_cols and effective_time_col, "SCD2 needs track_cols + effective_time_col"
-        out = scd2_apply(
-            spark, _with_new_sks(spark, batch, target_path, natural_keys, surrogate_key),
-            target_path=target_path, keys=natural_keys, track_cols=track_cols,
-            effective_time_col=effective_time_col,
+        return _scd2_apply(
+            spark, batch, surrogate_key, target_path=target_path, keys=natural_keys,
+            track_cols=track_cols, effective_time_col=effective_time_col,
         )
-        return out
 
     target = ParquetTarget(spark, target_path)
     if not target.exists():
@@ -57,7 +62,7 @@ def build_dimension(
     existing = target.read()
     incoming = batch.dropDuplicates(natural_keys)
     new_members = incoming.join(existing.select(*natural_keys), natural_keys, "left_anti")
-    max_sk = existing.agg(F.max(surrogate_key)).collect()[0][0] or 0
+    max_sk = target.max_of(surrogate_key) or 0
     w = Window.orderBy(*natural_keys)
     new_with_sk = new_members.withColumn(
         surrogate_key, (F.row_number().over(w) + F.lit(max_sk)).cast("long")
@@ -92,29 +97,3 @@ def _unknown_member(
             row[f.name] = None
     return spark.createDataFrame([row], dim.schema)
 
-
-def _with_new_sks(
-    spark: SparkSession,
-    batch: DataFrame,
-    target_path: str,
-    natural_keys: list[str],
-    surrogate_key: str,
-) -> DataFrame:
-    """Assign SKs for the SCD2 path: reuse current SK for known keys,
-    allocate max+row_number for new keys."""
-    target = ParquetTarget(spark, target_path)
-    if not target.exists():
-        w = Window.orderBy(*natural_keys)
-        return batch.withColumn(surrogate_key, F.row_number().over(w).cast("long"))
-    existing = target.read()
-    sk_map = (
-        existing.groupBy(*natural_keys).agg(F.max(surrogate_key).alias(surrogate_key))
-    )
-    known = batch.join(sk_map, natural_keys, "inner")
-    new = batch.join(sk_map.select(*natural_keys), natural_keys, "left_anti")
-    max_sk = existing.agg(F.max(surrogate_key)).collect()[0][0] or 0
-    w = Window.orderBy(*natural_keys)
-    new_sk = new.withColumn(
-        surrogate_key, (F.row_number().over(w) + F.lit(max_sk)).cast("long")
-    )
-    return known.unionByName(new_sk)

@@ -7,10 +7,15 @@ read -> transform -> staged-overwrite, and is the only parquet rewrite
 path for merges: the patterns' and ``write_sink``'s merge modes. The
 interface is the seam where ``DeltaTarget`` (partition-pruned,
 ACID-transactional MERGE) plugs in on a real cluster — call sites are
-identical. Each instance infers the schema at most once (a Spark job)
-and reads with the known schema after that. A driver-sized state (the
-catalog's rollups) can be staged as a ``pyarrow.Table`` instead of a
-DataFrame; it goes through the same swap.
+identical. Each instance learns the schema at most once and reads
+with the known schema after that. On a local unpartitioned target the
+schema is read on the driver from the footer of the first data file,
+where Spark's writer stores it, and ``max_of`` folds a column's max
+from the row-group statistics, so neither launches a Spark job; URI
+paths, partitioned directories and files without that metadata fall
+back to Spark inference and a Spark aggregate. A driver-sized state
+(the catalog's rollups) can be staged as a ``pyarrow.Table`` instead of
+a DataFrame; it goes through the same swap.
 
 Crash safety (ADVICE r9): ``overwrite`` never truncates the live dir
 in place. The new contents are written to ``{path}__staging`` first,
@@ -32,13 +37,18 @@ fresh read.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
+
+# footer key under which Spark's writer stores the frame's schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 class ParquetTarget:
@@ -87,10 +97,59 @@ class ParquetTarget:
             shutil.rmtree(self._staging(), ignore_errors=True)
         return live
 
+    def _data_files(self) -> list[str] | None:
+        """The live dir's data files in the order Spark's listing sorts
+        them, or None where only Spark's listing will do: a URI path, a
+        partitioned (or otherwise nested) directory, summary metadata,
+        or no live dir (Spark raises the error a reader expects)."""
+        from odibi_spark.io.append import _is_local  # io imports this module
+
+        if not _is_local(self.path) or self.partition_by or not os.path.isdir(self.path):
+            return None
+        names = sorted(os.listdir(self.path))
+        for name in names:
+            if name in ("_metadata", "_common_metadata") or os.path.isdir(
+                os.path.join(self.path, name)
+            ):
+                return None
+        return [os.path.join(self.path, n) for n in names if not n.startswith(("_", "."))]
+
+    def _footer_schema(self) -> StructType | None:
+        """The schema Spark's writer stored in the footer of the first
+        data file (the file non-merging inference reads), read on the
+        driver, so no job runs; the reader makes it nullable as inference
+        does. None when the file carries no Spark schema (a
+        pyarrow-written file) or ``_data_files`` is None."""
+        files = self._data_files()
+        if not files:
+            return None
+        stored = (pq.read_metadata(files[0]).metadata or {}).get(SPARK_SCHEMA_KEY)
+        if stored is None:
+            return None
+        return StructType.fromJson(json.loads(stored))
+
+    def _infer_schema(self) -> StructType:
+        return self._footer_schema() or self.spark.read.parquet(self.path).schema
+
+    def max_of(self, column: str):
+        """Max of an integer column. On a local unpartitioned target it
+        is folded from the footers' row-group statistics on the driver;
+        a URI path, a partitioned target or a non-empty row group
+        without min/max statistics takes a Spark aggregate instead."""
+        files = self._data_files()
+        maxima = [_UNKNOWN] if files is None else []
+        for path in files or []:
+            meta = pq.read_metadata(path)
+            maxima += [_row_group_max(meta.row_group(i), column)
+                       for i in range(meta.num_row_groups)]
+        if any(m is _UNKNOWN for m in maxima):
+            return self.read().agg(F.max(column)).collect()[0][0]
+        return max((m for m in maxima if m is not None), default=None)
+
     def exists(self) -> bool:
         if self.live():
             try:
-                self._schema = self._schema or self.spark.read.parquet(self.path).schema
+                self._schema = self._schema or self._infer_schema()
                 return True
             except Exception as exc:
                 raise RuntimeError(
@@ -103,7 +162,7 @@ class ParquetTarget:
 
     def read(self) -> DataFrame:
         self._recover()
-        self._schema = self._schema or self.spark.read.parquet(self.path).schema
+        self._schema = self._schema or self._infer_schema()
         return self.spark.read.schema(self._schema).parquet(self.path)
 
     def _write(self, df: DataFrame | pa.Table, path: str) -> None:
@@ -134,3 +193,26 @@ class ParquetTarget:
 
     def write_initial(self, df: DataFrame | pa.Table) -> None:
         self._write(df, self.path)
+
+
+_UNKNOWN = object()
+
+
+def _row_group_max(rg: pq.RowGroupMetaData, column: str):
+    """One row group's max of an integer column from its statistics:
+    None when it holds no non-NULL value, ``_UNKNOWN`` when the
+    statistics cannot tell (absent, or not an integer column)."""
+    if rg.num_rows == 0:
+        return None
+    for j in range(rg.num_columns):
+        chunk = rg.column(j)
+        if chunk.path_in_schema != column:
+            continue
+        stats = chunk.statistics
+        if stats is None or chunk.physical_type not in ("INT32", "INT64"):
+            return _UNKNOWN
+        if stats.has_min_max:
+            return stats.max
+        return None if stats.null_count == rg.num_rows else _UNKNOWN
+    return _UNKNOWN
+

@@ -20,6 +20,20 @@ def ts(s):
     return datetime.datetime.fromisoformat(s)
 
 
+def spark_jobs(spark, fn) -> int:
+    """Spark jobs launched by ``fn()``, counted under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture()
 def t0(spark):
     return spark.createDataFrame(
@@ -92,6 +106,50 @@ class TestSCD2:
         # same batch replayed: nothing changes
         assert out.count() == 3 and out.filter("is_current").count() == 3
 
+    @pytest.mark.parametrize("soft_delete", [False, True])
+    def test_repeated_batch_rows(self, spark, tmp_path, t0, soft_delete):
+        """A batch may hold a key more than once (at-least-once landing):
+        a repeated row is one change, and a key's current row is closed
+        once when one of its rows changes it, else kept once."""
+        p = str(tmp_path / "dim_rep")
+        kw = dict(target_path=p, keys=["cid"], track_cols=["tier"],
+                  effective_time_col="updated_at", soft_delete=soft_delete)
+        first = t0.unionByName(t0.filter("cid = 1"))
+        assert scd2_apply(spark, first, **kw).filter("cid = 1").count() == 1
+        at = ts("2024-02-01 00:00:00")
+        batch = spark.createDataFrame(
+            [
+                Row(cid=1, tier="Platinum", city="NYC", updated_at=at),  # change, twice
+                Row(cid=1, tier="Platinum", city="NYC", updated_at=at),
+                Row(cid=2, tier="Silver", city="LA", updated_at=at),     # unchanged, twice
+                Row(cid=2, tier="Silver", city="LA", updated_at=at),
+                Row(cid=3, tier="Bronze", city="SF", updated_at=at),     # unchanged + change
+                Row(cid=3, tier="Copper", city="SF", updated_at=at),
+                Row(cid=4, tier="Gold", city="CHI", updated_at=at),      # new, twice
+                Row(cid=4, tier="Gold", city="CHI", updated_at=at),
+            ]
+        )
+        rows = scd2_apply(spark, batch, **kw).collect()
+        got = sorted((r.cid, r.tier, r.is_current, r.valid_to) for r in rows)
+        assert got == [
+            (1, "Gold", False, at), (1, "Platinum", True, None),
+            (2, "Silver", True, None),
+            (3, "Bronze", False, at), (3, "Copper", True, None),
+            (4, "Gold", True, None),
+        ]
+
+    def test_null_key_is_a_key(self, spark, tmp_path):
+        """The join matches keys null-safely, so a NULL natural key is
+        tracked like any other: kept while unchanged, closed on a change."""
+        schema = "cid INT, tier STRING, at TIMESTAMP"
+        at0, at1 = ts("2024-01-01 00:00:00"), ts("2024-02-01 00:00:00")
+        kw = dict(target_path=str(tmp_path / "dim_null"), keys=["cid"],
+                  track_cols=["tier"], effective_time_col="at")
+        scd2_apply(spark, spark.createDataFrame([(None, "A", at0), (1, "A", at0)], schema), **kw)
+        out = scd2_apply(spark, spark.createDataFrame([(None, "B", at1), (1, "A", at1)], schema), **kw)
+        got = sorted((r.cid or 0, r.tier, r.is_current, r.valid_to) for r in out.collect())
+        assert got == [(0, "A", False, at1), (0, "B", True, None), (1, "A", True, None)]
+
 
 class TestMerge:
     def test_upsert_with_condition(self, spark, tmp_path, t0, t1):
@@ -160,20 +218,7 @@ class TestMerge:
         read plus one anti-join/union write: at most 5 Spark jobs through
         merge_apply and through write_sink's upsert mode. Inputs are
         parquet reads, as a pipeline's batches are."""
-        import uuid
-
         from odibi_spark.io import write_sink
-
-        sc = spark.sparkContext
-
-        def jobs(fn) -> int:
-            group = f"merge-budget-{uuid.uuid4().hex}"
-            sc.setJobGroup(group, group)
-            try:
-                fn()
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-            return len(sc.statusTracker().getJobIdsForGroup(group))
 
         spark.range(10).selectExpr("id AS k", "'a' AS v").write.parquet(
             str(tmp_path / "base"))
@@ -186,8 +231,8 @@ class TestMerge:
         pm, pw = str(tmp_path / "m"), str(tmp_path / "w")
         merge_apply(spark, base, target_path=pm, keys=["k"])
         write_sink(base, path=pw, mode="upsert", keys=["k"])
-        assert jobs(lambda: merge_apply(spark, batch, target_path=pm, keys=["k"])) <= 5
-        assert jobs(lambda: write_sink(batch, path=pw, mode="upsert", keys=["k"])) <= 5
+        assert spark_jobs(spark, lambda: merge_apply(spark, batch, target_path=pm, keys=["k"])) <= 5
+        assert spark_jobs(spark, lambda: write_sink(batch, path=pw, mode="upsert", keys=["k"])) <= 5
         for p in (pm, pw):
             assert {r.k: r.v for r in spark.read.parquet(p).collect()} == want
 
@@ -210,6 +255,36 @@ class TestDimension:
             assert sk1[cid] == sk0[cid]  # SK stability across loads
         assert sk1[4] == max(v for k, v in sk0.items() if k is not None) + 1
         assert {r.tier for r in d1.filter("cid = 1").collect()} == {"Platinum"}
+
+    def test_scd2_dimension_job_budget(self, spark, tmp_path):
+        """An SCD2 dimension batch against an existing target reads the
+        target once, in one join: schema and max SK come from the
+        footers, so the batch is at most 6 Spark jobs (the two-read SK
+        map plus scd2 pass took 14). A changed key keeps its SK and new
+        keys continue from the max."""
+        import datetime
+
+        at0, at1 = datetime.datetime(2024, 1, 1), datetime.datetime(2024, 2, 1)
+        schema = "cid LONG, tier STRING, at TIMESTAMP"
+        spark.createDataFrame(
+            [(i, f"t{i % 3}", at0) for i in range(20)], schema
+        ).write.parquet(str(tmp_path / "b0"))
+        spark.createDataFrame(
+            [(i, "changed" if i % 2 else f"t{i % 3}", at1) for i in range(10, 30)], schema
+        ).write.parquet(str(tmp_path / "b1"))
+        kw = dict(target_path=str(tmp_path / "dim"), natural_keys=["cid"],
+                  surrogate_key="sk", scd="2", track_cols=["tier"],
+                  effective_time_col="at")
+        build_dimension(spark, spark.read.parquet(str(tmp_path / "b0")), **kw)
+        batch = spark.read.parquet(str(tmp_path / "b1"))
+        assert spark_jobs(spark, lambda: build_dimension(spark, batch, **kw)) <= 6
+        rows = spark.read.parquet(kw["target_path"]).collect()
+        sks = {}
+        for r in rows:
+            sks.setdefault(r.cid, set()).add(r.sk)
+        assert sks == {cid: {cid + 1} for cid in range(30)}
+        closed = sorted(r.cid for r in rows if not r.is_current)
+        assert closed == list(range(11, 20, 2))
 
 
 class TestFact:
@@ -660,6 +735,100 @@ class TestCmsIncremental:
         assert sorted(map(tuple, out.collect())) == sorted(
             map(tuple, one_shot.collect())
         )
+
+
+class TestParquetTargetFooterMetadata:
+    """Schema and max-SK read on the driver from parquet footers, with
+    Spark as the fallback where the footers cannot answer."""
+
+    def test_footer_schema_matches_spark_reader(self, spark, tmp_path):
+        import datetime
+        import decimal
+
+        from odibi_spark.patterns.merge_target import ParquetTarget
+
+        schema = (
+            "ts TIMESTAMP, ntz TIMESTAMP_NTZ, d DATE, amt DECIMAL(38,10), "
+            "raw BINARY, items ARRAY<STRUCT<a: INT, b: STRING>>, "
+            "attrs MAP<STRING, DOUBLE>, id BIGINT NOT NULL, "
+            "tag STRUCT<x: INT NOT NULL> NOT NULL"
+        )
+        row = (
+            datetime.datetime(2024, 1, 2, 3, 4, 5), datetime.datetime(2024, 1, 2),
+            datetime.date(2024, 1, 2), decimal.Decimal("1.5"), b"\x00\x01",
+            [(1, "a")], {"k": 1.0}, 7, (3,),
+        )
+        p = str(tmp_path / "rich")
+        spark.createDataFrame([row], schema).write.parquet(p)
+        want = spark.read.parquet(p).schema
+        t = ParquetTarget(spark, p)
+        assert spark_jobs(spark, lambda: (t.exists(), t.read())) == 0
+        assert t.read().schema == want
+        assert t.read().collect()[0].id == 7
+
+    def test_exists_and_read_launch_no_job(self, spark, tmp_path):
+        from odibi_spark.patterns.merge_target import ParquetTarget
+
+        p = str(tmp_path / "t")
+        spark.range(20).selectExpr("id", "id % 3 AS g").repartition(3).write.parquet(p)
+        t = ParquetTarget(spark, p)
+        assert spark_jobs(spark, lambda: (t.exists(), t.read())) == 0
+        assert t.read().count() == 20
+
+    def test_inference_without_spark_footer_or_when_partitioned(self, spark, tmp_path):
+        import os
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from odibi_spark.patterns.merge_target import ParquetTarget
+
+        p = str(tmp_path / "arrow")
+        os.makedirs(p)
+        pq.write_table(pa.table({"k": [1, 2], "v": ["a", "b"]}),
+                       os.path.join(p, "part-0.parquet"))
+        t = ParquetTarget(spark, p)
+        assert t._footer_schema() is None
+        assert spark_jobs(spark, t.exists) >= 1
+        assert t.read().schema == spark.read.parquet(p).schema
+
+        pp = str(tmp_path / "parted")
+        t = ParquetTarget(spark, pp, partition_by=["g"])
+        t.write_initial(spark.range(6).selectExpr("id", "id % 2 AS g"))
+        fresh = ParquetTarget(spark, pp, partition_by=["g"])
+        assert fresh._footer_schema() is None
+        assert fresh.exists() and fresh.read().count() == 6
+
+    def test_footer_max_matches_spark_max(self, spark, tmp_path):
+        from odibi_spark.patterns.merge_target import ParquetTarget
+
+        p = str(tmp_path / "m")
+        spark.createDataFrame([(3,), (11,), (None,)], "sk BIGINT").write.parquet(p)
+        spark.createDataFrame([], "sk BIGINT").write.mode("append").parquet(p)
+        spark.createDataFrame([(None,), (None,)], "sk BIGINT").coalesce(1).write.mode(
+            "append").parquet(p)
+        spark.createDataFrame([(7,), (-1,)], "sk BIGINT").write.mode("append").parquet(p)
+        t = ParquetTarget(spark, p)
+        got = []
+        assert spark_jobs(spark, lambda: got.append(t.max_of("sk"))) == 0
+        assert got == [11] == [spark.read.parquet(p).agg(F.max("sk")).first()[0]]
+
+    def test_footer_max_falls_back_without_statistics(self, spark, tmp_path):
+        import os
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from odibi_spark.patterns.merge_target import ParquetTarget
+
+        p = str(tmp_path / "nostats")
+        os.makedirs(p)
+        pq.write_table(pa.table({"sk": pa.array([4, 9, 2], pa.int64())}),
+                       os.path.join(p, "part-0.parquet"), write_statistics=False)
+        t = ParquetTarget(spark, p)
+        got = []
+        assert spark_jobs(spark, lambda: got.append(t.max_of("sk"))) >= 1
+        assert got == [9]
 
 
 class TestParquetTargetCrashSafety:

@@ -13,6 +13,7 @@ from hypothesis import strategies as st
 from pyspark.sql import Row
 
 from odibi_spark.operators.temporal_join import asof_join_frames
+from odibi_spark.patterns.dimension import build_dimension
 from odibi_spark.patterns.scd2 import scd2_apply
 
 BASE = datetime.datetime(2024, 1, 1)
@@ -99,11 +100,20 @@ def scd2_batches(draw):
     keys = list(range(draw(st.integers(1, 6))))
     n_batches = draw(st.integers(1, 4))
     batches = []
+    current: dict[int, str] = {}
     for b in range(n_batches):
         batch = []
         for k in keys:
             if draw(st.booleans()):
-                batch.append((k, draw(st.sampled_from(["A", "B", "C"])), b))
+                v = draw(st.sampled_from(["A", "B", "C"]))
+                batch.append((k, v, b))
+                # at-least-once landing: the same row again, or the key's
+                # current value next to its change
+                if draw(st.booleans()):
+                    batch.append((k, v, b))
+                if k in current and draw(st.booleans()):
+                    batch.append((k, current[k], b))
+                current[k] = v
         if batch:
             batches.append(batch)
     return batches
@@ -112,12 +122,19 @@ def scd2_batches(draw):
 @given(scd2_batches())
 @settings(**SETTINGS)
 def test_scd2_invariants_over_random_batches(spark, tmp_path_factory, batches):
-    """After any batch sequence: <= 1 current row per key; every closed
-    row has valid_to == some later version's valid_from for that key."""
+    """After any batch sequence, including keys repeated within a batch:
+    <= 1 current row per key; one version per change; every closed row
+    has valid_to == some later version's valid_from for that key.
+    Both through scd2_apply and through build_dimension(scd="2"), whose
+    surrogate keys are one per natural key, kept across batches, unique
+    across keys, and previous max + 1..n for new keys in key order."""
     import uuid
 
-    p = str(tmp_path_factory.mktemp("scd2prop") / f"dim_{uuid.uuid4().hex[:8]}")
-    dim = None
+    root = tmp_path_factory.mktemp("scd2prop")
+    p = str(root / f"dim_{uuid.uuid4().hex[:8]}")
+    p_sk = str(root / f"skdim_{uuid.uuid4().hex[:8]}")
+    dim = sk_dim = None
+    sk_of: dict[int, int] = {}
     for b, batch in enumerate(batches):
         df = spark.createDataFrame(
             [(k, v, BASE + datetime.timedelta(days=b)) for k, v, _ in batch],
@@ -127,9 +144,38 @@ def test_scd2_invariants_over_random_batches(spark, tmp_path_factory, batches):
             spark, df, target_path=p, keys=["k"], track_cols=["v"],
             effective_time_col="at",
         )
+        sk_dim = build_dimension(
+            spark, df, target_path=p_sk, natural_keys=["k"], surrogate_key="sk",
+            scd="2", track_cols=["v"], effective_time_col="at",
+        )
+        sks: dict[int, set] = {}
+        for r in sk_dim.collect():
+            sks.setdefault(r.k, set()).add(r.sk)
+        assert all(len(s) == 1 for s in sks.values()), f"batch {b}: {sks}"
+        now = {k: s.pop() for k, s in sks.items()}
+        assert len(set(now.values())) == len(now), f"batch {b}: SKs shared by keys"
+        assert all(now[k] == sk for k, sk in sk_of.items()), f"batch {b}: SK moved"
+        new_keys = sorted(set(now) - set(sk_of))
+        first = max(sk_of.values(), default=0) + 1
+        assert [now[k] for k in new_keys] == list(range(first, first + len(new_keys)))
+        sk_of = now
     if dim is None:
         return
-    rows = dim.collect()
+    # one version per change: a repeated row or a key's unchanged value
+    # next to its change adds none
+    want, now_v = [], {}
+    for b, batch in enumerate(batches):
+        for k in dict.fromkeys(k for k, _, _ in batch):
+            for v in {v for kk, v, _ in batch if kk == k} - {now_v.get(k)}:
+                want.append((k, v, BASE + datetime.timedelta(days=b)))
+                now_v[k] = v
+    for out in (dim, sk_dim):
+        rows = out.collect()
+        _assert_scd2_invariants(rows)
+        assert sorted((r.k, r.v, r.valid_from) for r in rows) == sorted(want)
+
+
+def _assert_scd2_invariants(rows) -> None:
     by_key: dict[int, list] = {}
     for r in rows:
         by_key.setdefault(r.k, []).append(r)
