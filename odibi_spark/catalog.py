@@ -11,14 +11,16 @@ The tables hold O(runs x nodes) rows, so on a local root the per-run
 bookkeeping stays on the driver and launches no Spark job: appends are
 pyarrow files (``io/append.atomic_append``), the schema snapshot's
 read-latest and the ``meta_daily_stats`` fold read with
-``io/append.read_rows``, and the fold commits a pyarrow table through
-``ParquetTarget``'s staged swap. Roots with a URI scheme read and
-append through Spark. The query accessors (``runs()``, ``metrics()``,
-...) and maintenance stay Spark DataFrames.
+``io/append.read_rows``, and the fold commits a pyarrow table as one
+``ParquetTarget`` version. Roots with a URI scheme read and append
+through Spark. The query accessors (``runs()``, ``metrics()``, ...) and
+maintenance stay Spark DataFrames. Every meta-table rewrite is a
+``ParquetTarget`` commit made under the table's ``meta_<name>.lock``.
 """
 
 from __future__ import annotations
 
+import contextlib
 import fcntl
 import json
 import os
@@ -26,6 +28,9 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from odibi_spark.io.append import _is_local
+from odibi_spark.patterns.merge_target import ParquetTarget
 
 
 RUN_SCHEMA = (
@@ -163,16 +168,15 @@ class Catalog:
 
         The table is O(days x pipelines) rows, so the fold runs on the
         driver: read with ``read_rows``, add in Python, commit the
-        result as a pyarrow table through ``ParquetTarget``'s staged
-        swap. Read -> fold -> swap holds an ``fcntl.flock`` on
-        ``meta_daily_stats.lock``, so concurrent folds (layer-parallel
-        schedulers, replays of different runs) take turns instead of
+        result as a pyarrow table in one ``ParquetTarget`` version.
+        Read -> fold -> commit holds the table's lock, so concurrent
+        folds (layer-parallel schedulers, replays of different runs),
+        ``cleanup`` and ``rebuild_daily_stats`` take turns instead of
         losing updates. Returns the table read with its known schema
         (no inference job)."""
         import pyarrow as pa
 
         from odibi_spark.io.append import parse_ddl, read_rows
-        from odibi_spark.patterns.merge_target import ParquetTarget
 
         ok = all(r.status == "success" for r in results.values())
         date = time.strftime("%Y-%m-%d", time.gmtime(started_at))
@@ -185,11 +189,8 @@ class Catalog:
         }
         path = self._table_path("daily_stats")
         target = ParquetTarget(self.spark, path)
-        os.makedirs(self.root, exist_ok=True)
-        with open(path + ".lock", "a") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            live = target.live()
-            rows = read_rows(self.spark, path, DAILY_STATS_SCHEMA) if live else []
+        with self._lock("daily_stats"):
+            rows = read_rows(self.spark, path, DAILY_STATS_SCHEMA) if target.live() else []
             for row in rows:
                 if (row["date"], row["pipeline"]) == (date, pipeline):
                     for m, v in run.items():
@@ -197,11 +198,7 @@ class Catalog:
                     break
             else:
                 rows.append({"date": date, "pipeline": pipeline, **run})
-            table = pa.Table.from_pylist(rows, schema=parse_ddl(DAILY_STATS_SCHEMA))
-            if live:
-                target.overwrite(table)
-            else:
-                target.write_initial(table)
+            target.overwrite(pa.Table.from_pylist(rows, schema=parse_ddl(DAILY_STATS_SCHEMA)))
         return self.spark.read.schema(DAILY_STATS_SCHEMA).parquet(path)
 
     def deploy(self, config) -> str:
@@ -495,30 +492,19 @@ class Catalog:
         return f"{self.root}/meta_{name}"
 
     def _exists(self, name: str) -> bool:
-        from odibi_spark.io.compact import _fs_for
+        return ParquetTarget(self.spark, self._table_path(name)).live()
 
-        fs, jpath, _ = _fs_for(self.spark, self._table_path(name))
-        return fs.exists(jpath)
-
-    def _rewrite(self, name: str, df: DataFrame) -> int:
-        """Replace table ``name``'s contents with ``df`` through the
-        compaction module's rename-before-delete swap (crash-safe: a
-        failed rename aborts with originals intact; a crash mid-delete
-        is finished by the next maintenance run)."""
-        from odibi_spark.io.compact import (
-            list_data_files,
-            resume_pending_deletes,
-            swap_data_files,
-        )
-
-        path = self._table_path(name)
-        resume_pending_deletes(self.spark, path)
-        old = [f for f, _ in list_data_files(self.spark, path)]
-        tmp = path + "__retention_tmp"
-        # catalog tables are O(runs) small — one output file keeps the
-        # directory listing cheap for every later catalog query
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        return swap_data_files(self.spark, path, tmp, old)
+    @contextlib.contextmanager
+    def _lock(self, name: str):
+        """Hold ``meta_<name>.lock`` (``fcntl.flock``: threads and
+        processes take turns) on a local root."""
+        if not _is_local(self.root):
+            yield
+            return
+        os.makedirs(self.root, exist_ok=True)
+        with open(self._table_path(name) + ".lock", "a") as fh:
+            fcntl.flock(fh, fcntl.LOCK_EX)
+            yield
 
     def cleanup(
         self,
@@ -548,36 +534,38 @@ class Catalog:
                 days = retention_days[name]
             else:
                 days = retention_days
-            if not self._exists(name):
-                continue
-            df = self.spark.read.parquet(self._table_path(name))
-            if kind == "epoch":
-                expired_pred = F.col(col) < F.lit(ref - days * 86400.0)
-            else:  # date_str yyyy-mm-dd compares lexicographically
-                cutoff = time.strftime(
-                    "%Y-%m-%d", time.gmtime(ref - days * 86400.0)
-                )
-                expired_pred = F.col(col) < F.lit(cutoff)
-            if name == "tables":
-                # the newest row per table_path IS the registry (and
-                # schema_history's latest version) — exempt it so a
-                # table that simply hasn't been written within the
-                # window keeps its current-state entry
-                w = Window.partitionBy("table_path").orderBy(
-                    F.col(col).desc_nulls_last()
-                )
-                df = df.withColumn("__rk", F.row_number().over(w))
-                expired_pred = expired_pred & (F.col("__rk") > 1)
-            expired = df.filter(expired_pred).count()
-            kept = df.filter(~expired_pred | F.col(col).isNull())
-            if name == "tables":
-                kept = kept.drop("__rk")
-            n_kept = kept.count()
-            entry = {"expired": expired, "kept": n_kept, "deleted": 0}
-            if expired and not dry_run:
-                self._rewrite(name, kept)
-                entry["deleted"] = expired
-            report[name] = entry
+            with self._lock(name):
+                target = ParquetTarget(self.spark, self._table_path(name))
+                if not target.live():
+                    continue
+                df = target.read()
+                if kind == "epoch":
+                    expired_pred = F.col(col) < F.lit(ref - days * 86400.0)
+                else:  # date_str yyyy-mm-dd compares lexicographically
+                    cutoff = time.strftime(
+                        "%Y-%m-%d", time.gmtime(ref - days * 86400.0)
+                    )
+                    expired_pred = F.col(col) < F.lit(cutoff)
+                if name == "tables":
+                    # the newest row per table_path IS the registry (and
+                    # schema_history's latest version) — exempt it so a
+                    # table that simply hasn't been written within the
+                    # window keeps its current-state entry
+                    w = Window.partitionBy("table_path").orderBy(
+                        F.col(col).desc_nulls_last()
+                    )
+                    df = df.withColumn("__rk", F.row_number().over(w))
+                    expired_pred = expired_pred & (F.col("__rk") > 1)
+                expired = df.filter(expired_pred).count()
+                kept = df.filter(~expired_pred | F.col(col).isNull())
+                if name == "tables":
+                    kept = kept.drop("__rk")
+                n_kept = kept.count()
+                entry = {"expired": expired, "kept": n_kept, "deleted": 0}
+                if expired and not dry_run:
+                    target.overwrite(kept.coalesce(1))
+                    entry["deleted"] = expired
+                report[name] = entry
         return report
 
     def rebuild_daily_stats(self) -> DataFrame:
@@ -625,19 +613,14 @@ class Catalog:
                 ).alias("total_duration_s"),
             )
         )
-        if self._exists("daily_stats"):
-            oldest = per_run.agg(F.min("started_at")).first()[0]
+        target = ParquetTarget(self.spark, self._table_path("daily_stats"))
+        with self._lock("daily_stats"):
+            oldest = per_run.agg(F.min("started_at")).first()[0] if target.live() else None
             if oldest is not None:
                 floor_date = time.strftime("%Y-%m-%d", time.gmtime(oldest))
-                preserved = self.daily_stats().filter(
-                    F.col("date") < floor_date
-                )
+                preserved = target.read().filter(F.col("date") < floor_date)
                 rebuilt = preserved.unionByName(rebuilt)
-            self._rewrite("daily_stats", rebuilt)
-        else:
-            rebuilt.coalesce(1).write.mode("overwrite").parquet(
-                self._table_path("daily_stats")
-            )
+            target.overwrite(rebuilt.coalesce(1))
         return self.daily_stats()
 
     def optimize(self, *, target_file_bytes: int = 32 * 1024 * 1024) -> dict:

@@ -426,28 +426,22 @@ def main(argv: list[str] | None = None) -> int:
         if args.zorder_by:
             import math
 
-            from odibi_spark.io.compact import (
-                list_data_files,
-                reject_partitioned_layout,
-                resume_pending_deletes,
-                swap_data_files,
-            )
+            from odibi_spark.io.compact import reject_partitioned_layout
             from odibi_spark.operators.layout import write_zordered
+            from odibi_spark.patterns.merge_target import ParquetTarget
 
             reject_partitioned_layout(spark, args.path)
-            # a crashed compaction's condemned originals must not be
-            # re-read into the rewrite as permanent duplicates
-            resume_pending_deletes(spark, args.path)
+            target = ParquetTarget(spark, args.path)
+            target.live()
             cols = [c.strip() for c in args.zorder_by.split(",") if c.strip()]
-            old = list_data_files(spark, args.path)
-            total = sum(sz for _, sz in old)
+            total = sum(sz for _, sz in target.files)
             n_files = max(1, math.ceil(total / (args.target_mb * 1024 * 1024)))
             df = spark.read.format(args.format).load(args.path)
-            tmp = args.path.rstrip("/") + "__zorder_tmp"
-            write_zordered(df, tmp, cols, n_files=n_files, format=args.format)
-            moved = swap_data_files(
-                spark, args.path, tmp, [f for f, _ in old]
-            )
+            moved = target.commit(
+                lambda staged: write_zordered(
+                    df, staged, cols, n_files=n_files, format=args.format
+                )
+            )["files"]
             print(json.dumps({"zordered_files": moved, "cols": cols}))
         else:
             from odibi_spark.io.compact import compact_small_files

@@ -7,26 +7,17 @@ thousands of KB-sized files that crush scan planning and NameNode/
 object-store listing — needs an explicit bin-packing rewrite. This is
 that tool: size-driven (target bytes per output file, not a guessed
 partition count), rewriting ONLY the under-sized files (files already
-at target size stay untouched, like Delta OPTIMIZE), with a
-rename-before-delete swap whose rename results are checked.
+at target size stay untouched, like Delta OPTIMIZE).
 
-NOT transactional: while the swap runs a concurrent reader can see
-both old and new copies of the rewritten rows (Delta's OPTIMIZE exists
-precisely to make this atomic). The failure mode is bounded though:
-new files are renamed IN before old files are deleted, and any rename
-failure aborts before a single original is removed — crash at any
-point leaves either duplicates or the original table, never missing
-rows. Duplicates are self-healing on rerun: a pending-delete MANIFEST
-(``_compact_pending_deletes.json``, written only after every rename
-has succeeded) records the condemned originals, and the next
-``compact_small_files`` call completes those deletes before doing
-anything else. Only a crash in the tiny window between the last
-rename and the manifest write leaves duplicates that need the next
-compaction pass to rewrite them. Run it in a maintenance window, or
-on Delta use ``delta_ops.maintain`` instead — Delta table paths are
-REFUSED outright (a ``_delta_log`` directory means renaming/deleting
-parquet behind the transaction log would corrupt the table for every
-reader).
+The rewrite is one ``ParquetTarget`` commit: the compacted files are
+staged under ``_staging`` and a version record names them and the
+small files they replace, so a crash at any point leaves either the
+previous table or a published record the next read finishes, and a
+commit that raced the compaction (a merge) makes it raise
+``CommitConflict`` instead of duplicating rows. Delta table paths are
+REFUSED outright (a ``_delta_log`` directory means rewriting parquet
+behind the transaction log would corrupt the table for every reader;
+use ``delta_ops.maintain`` there).
 
 Hive-partitioned directories (data in subdirectories) are rejected:
 compacting them through the table root would rewrite partition values
@@ -39,6 +30,8 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import SparkSession
+
+from odibi_spark.patterns.merge_target import ParquetTarget
 
 
 def _fs_for(spark: SparkSession, path: str):
@@ -87,108 +80,6 @@ def reject_partitioned_layout(spark: SparkSession, path: str) -> None:
             )
 
 
-MANIFEST_NAME = "_compact_pending_deletes.json"
-
-
-def _manifest_jpath(jvm, path: str):
-    return jvm.org.apache.hadoop.fs.Path(path, MANIFEST_NAME)
-
-
-def _write_manifest(spark: SparkSession, path: str, old_files: list[str]) -> None:
-    """Write the pending-delete manifest ATOMICALLY: create under a
-    temp name, then rename into place (atomic on HDFS/posix; ADVICE
-    r6). A crash mid-write leaves only the temp file, never a
-    truncated manifest that would hard-block every later compaction
-    with a JSONDecodeError."""
-    import json
-
-    fs, _, jvm = _fs_for(spark, path)
-    hpath = jvm.org.apache.hadoop.fs.Path
-    tmp = hpath(path, MANIFEST_NAME + ".tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(old_files).encode("utf-8")))
-    finally:
-        out.close()
-    final = _manifest_jpath(jvm, path)
-    if fs.exists(final):  # rename-onto fails on some FS; manifest is
-        fs.delete(final, False)  # only ever rewritten by a retry
-    if not fs.rename(tmp, final):
-        raise RuntimeError(f"manifest rename {tmp} -> {final} failed")
-
-
-def resume_pending_deletes(spark: SparkSession, path: str) -> int:
-    """Complete a crashed swap: if a pending-delete manifest exists,
-    every rename already succeeded — delete any condemned originals
-    still present, then remove the manifest. Returns the number of
-    files deleted (0 when there is nothing to recover). Called
-    automatically at the start of ``compact_small_files``."""
-    import json
-
-    fs, _, jvm = _fs_for(spark, path)
-    mp = _manifest_jpath(jvm, path)
-    if not fs.exists(mp):
-        return 0
-    stream = fs.open(mp)
-    try:
-        raw = bytes(
-            spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-        )
-    finally:
-        stream.close()
-    hpath = jvm.org.apache.hadoop.fs.Path
-    deleted = 0
-    try:
-        pending = json.loads(raw.decode("utf-8"))
-    except ValueError:
-        # Unparseable manifest (pre-atomic-write truncation): the
-        # delete loop never ran, so the worst case is re-runnable
-        # duplicates — the documented pre-manifest behavior. Treat as
-        # absent rather than hard-blocking all future compactions.
-        fs.delete(mp, False)
-        return 0
-    for f in pending:
-        if fs.exists(hpath(f)):
-            fs.delete(hpath(f), False)
-            deleted += 1
-    fs.delete(mp, False)
-    return deleted
-
-
-def swap_data_files(
-    spark: SparkSession, path: str, tmp: str, old_files: list[str]
-) -> int:
-    """Swap the data files under ``tmp`` into ``path``, replacing
-    ``old_files``. Rename-BEFORE-delete, every rename checked: a
-    failed rename (Hadoop FileSystem.rename signals failure by
-    returning false, not raising) aborts before any original file is
-    removed, so no outcome loses rows. After the LAST rename succeeds
-    — and only then — the condemned originals are recorded in a
-    pending-delete manifest, so a crash mid-delete is completed by the
-    next run (``resume_pending_deletes``) instead of leaving permanent
-    duplicates (ADVICE r5). Returns the number of files moved; removes
-    the temp dir."""
-    fs, _, jvm = _fs_for(spark, path)
-    hpath = jvm.org.apache.hadoop.fs.Path
-    moved = 0
-    for f, _sz in list_data_files(spark, tmp):
-        name = f.rsplit("/", 1)[-1]
-        if not fs.rename(hpath(f), hpath(path, name)):
-            raise RuntimeError(
-                f"rename {f} -> {path}/{name} failed; originals left "
-                f"in place, compacted output remains under {tmp}"
-            )
-        moved += 1
-    # manifest AFTER all renames: a manifest's existence certifies the
-    # new files are in place, so replay may safely finish the deletes
-    _write_manifest(spark, path, old_files)
-    for f in old_files:
-        fs.delete(hpath(f), False)
-    fs.delete(_manifest_jpath(jvm, path), False)
-    fs.delete(hpath(tmp), True)
-    return moved
-
-
 def compact_small_files(
     spark: SparkSession,
     path: str,
@@ -209,8 +100,9 @@ def compact_small_files(
     already form no more than the target bin count.
     """
     reject_partitioned_layout(spark, path)
-    resume_pending_deletes(spark, path)
-    files = list_data_files(spark, path)
+    target = ParquetTarget(spark, path)
+    target.live()
+    files = target.files
     small = [(f, sz) for f, sz in files if sz < target_file_bytes]
     small_bytes = sum(sz for _, sz in small)
     n_out = max(1, math.ceil(small_bytes / target_file_bytes))
@@ -226,14 +118,15 @@ def compact_small_files(
     if len(small) < max(min_files_to_compact, n_out + 1):
         return stats
 
-    df = spark.read.format(format).load([f for f, _ in small])
+    df = spark.read.format(format).load([f"{target.path}/{f}" for f, _ in small])
     df = df.repartition(n_out)
     if sort_within_by:
         df = df.sortWithinPartitions(*sort_within_by)
-    tmp = path.rstrip("/") + "__compact_tmp"
-    df.write.mode("overwrite").format(format).save(tmp)
-    moved = swap_data_files(spark, path, tmp, [f for f, _ in small])
+    record = target.commit(
+        lambda staged: df.write.mode("overwrite").format(format).save(staged),
+        remove=[f for f, _ in small],
+    )
     stats.update(
-        {"files_after": len(files) - len(small) + moved, "compacted": True}
+        {"files_after": len(files) - len(small) + record["files"], "compacted": True}
     )
     return stats

@@ -6,7 +6,8 @@ reference's merge modes **upsert** and **append_once**, which the
 reference implements with Delta MERGE (spark_engine.py:1254-1335).
 A parquet target merges through the merge pattern's implementation
 (``patterns.merge.merge_into``, strategies upsert / append_only) and
-commits through ``ParquetTarget``'s staged swap, keeping
+commits one ``ParquetTarget`` version (new files staged under
+``_staging``, then the exclusive ``_log/<n>.json`` record), keeping
 ``partition_by``. With delta-spark importable, ``format='delta'`` runs
 ``DeltaTable.merge`` instead; other formats raise.
 

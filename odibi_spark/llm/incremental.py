@@ -563,7 +563,7 @@ def incremental_dedup_batch(
     callable directly for tests/replays). Returns False when the
     epoch was already committed (idempotent skip), True when folded.
 
-    Exactly-once discipline (the ``cms_incremental`` pointer pattern +
+    Exactly-once discipline (the ``cms_incremental`` batch-id guard +
     this module's store/HWM ordering):
 
     1. epoch guard — foreachBatch ids are monotonic per checkpoint; a

@@ -151,46 +151,13 @@ def aggregate_incremental_sketches(
     return state.select(*grain, *est)
 
 
-def _cms_meta_path(target_path: str) -> str:
-    import os
-
-    return os.path.join(target_path, "_cms_meta.json")
-
-
-def _cms_read_meta(target_path: str) -> dict | None:
-    import json
-
-    try:
-        with open(_cms_meta_path(target_path), encoding="utf-8") as fh:
-            return json.load(fh)
-    except FileNotFoundError:
-        return None
-
-
-def _cms_write_meta(target_path: str, meta: dict) -> None:
-    import json
-    import os
-
-    path = _cms_meta_path(target_path)
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, path)  # atomic pointer commit
-
-
-def _cms_state_dir(target_path: str, version: int) -> str:
-    import os
-
-    return os.path.join(target_path, f"state_v{version}")
-
-
 def cms_state_read(spark: SparkSession, target_path: str) -> DataFrame:
-    """Read the current committed CMS state (the version the meta
-    pointer names). Raises if no fold has ever committed."""
-    meta = _cms_read_meta(target_path)
-    if meta is None or meta.get("version") is None:
+    """Read the current committed CMS state. Raises if no fold has
+    ever committed."""
+    target = ParquetTarget(spark, target_path)
+    if not target.live():
         raise ValueError(f"no committed CMS state at {target_path}")
-    return spark.read.parquet(_cms_state_dir(target_path, meta["version"]))
+    return target.read()
 
 
 def cms_incremental(
@@ -215,59 +182,43 @@ def cms_incremental(
     (pinned by test), so replay order and partitioning never move the
     estimates.
 
-    (width, depth, seed) must stay constant across batches — they are
-    pinned in ``_cms_meta.json`` (written atomically BEFORE the first
-    state commit, the SignatureStore ordering from ADVICE r7 #2) and a
-    mismatch — or state with no meta, which could have been built
-    under anything — raises rather than silently mixing incompatible
-    hash spaces.
+    (width, depth, seed) must stay constant across batches — every
+    fold's version record carries them, and a mismatch — or state with
+    no record, which could have been built under anything — raises
+    rather than silently mixing incompatible hash spaces.
 
-    Exactly-once folding (ADVICE r9): each fold writes a NEW versioned
-    state dir (``state_v{N+1}``) and then atomically advances the meta
-    pointer ``{version, last_batch_id}``. A crash between the state
-    write and the pointer commit leaves the pointer on v{N}; the retry
-    re-reads v{N} and rewrites v{N+1} — no double count. From
-    Structured Streaming ``foreachBatch``, pass the epoch id as
-    ``batch_id``: a micro-batch retry AFTER the pointer committed but
-    before the checkpoint did is detected (``batch_id <=
+    Exactly-once folding: each fold is one ``ParquetTarget`` commit
+    whose record also carries ``last_batch_id``, so the state and the
+    batch id it covers land together or not at all. A crash before the
+    publish leaves the previous version, and the retry re-reads it —
+    no double count. From Structured Streaming ``foreachBatch``, pass
+    the epoch id as ``batch_id``: a micro-batch retry AFTER the commit
+    but before the checkpoint did is detected (``batch_id <=
     last_batch_id``, foreachBatch ids are monotonic) and skipped, so
-    replays are idempotent end to end. A meta pointer naming an
-    unreadable state dir raises (partial state) instead of silently
-    reinitializing over history.
+    replays are idempotent end to end. A record whose state files are
+    gone raises (partial state) instead of silently reinitializing
+    over history.
 
-    Layout: ``{target_path}/_cms_meta.json`` + ``{target_path}/
-    state_v{N}`` (parquet). Read the committed state with
-    :func:`cms_state_read`; query it with
-    :func:`odibi_spark.llm.cms.cms_query`.
+    Layout: a ``ParquetTarget`` at ``target_path`` (parquet files plus
+    ``_log``). Read the committed state with :func:`cms_state_read`;
+    query it with :func:`odibi_spark.llm.cms.cms_query`.
 
     Returns the merged sketch (depth, bucket, cnt).
     """
-    import os
-    import shutil
-
     from odibi_spark.llm import cms
 
     params = {"width": int(width), "depth": int(depth), "seed": int(seed)}
-    meta = _cms_read_meta(target_path)
+    target = ParquetTarget(spark, target_path)
+    has_state = target.exists()
+    meta = (target.record(target.version) or {}).get("meta")
     if meta is None:
-        leftovers = (
-            sorted(
-                d
-                for d in os.listdir(target_path)
-                if d == "state" or d.startswith("state_v")
-            )
-            if os.path.isdir(target_path)
-            else []
-        )
-        if leftovers:
+        if has_state:
             raise ValueError(
                 f"CMS state at {target_path} was built with unknown params "
                 f"(no meta); got {params} — rebuild the state or restore "
-                "the meta"
+                "its log"
             )
-        os.makedirs(target_path, exist_ok=True)
-        meta = {**params, "version": None, "last_batch_id": None}
-        _cms_write_meta(target_path, meta)  # params pin before any state
+        meta = {**params, "last_batch_id": None}
     else:
         stored = {k: meta.get(k) for k in ("width", "depth", "seed")}
         if stored != params:
@@ -275,44 +226,30 @@ def cms_incremental(
                 f"CMS state at {target_path} was built with {stored}; "
                 f"got {params} — rebuild the state or match the params"
             )
+        if not has_state:
+            raise RuntimeError(
+                f"CMS log at {target_path} names version {target.version} "
+                "but its state files are gone — partial state; restore or "
+                "rebuild it rather than letting a fold reinitialize over "
+                "history"
+            )
 
     last = meta.get("last_batch_id")
     if batch_id is not None and last is not None and int(batch_id) <= int(last):
         # foreachBatch replay of an already-folded epoch: skip
-        return cms_state_read(spark, target_path)
+        return target.read()
 
-    agged = cms.cms_build(
+    state = cms.cms_build(
         batch, key_col,
         width=width, depth=depth, weight_col=weight_col, seed=seed,
     )
-    version = meta.get("version")
-    if version is None:
-        new_version, state = 0, agged
-    else:
-        cur = _cms_state_dir(target_path, version)
-        try:
-            existing = spark.read.parquet(cur)
-            existing.schema
-        except Exception as exc:
-            raise RuntimeError(
-                f"CMS meta at {target_path} names version {version} but "
-                f"{cur} is unreadable — partial state; restore or rebuild "
-                "it rather than letting a fold reinitialize over history"
-            ) from exc
-        new_version = version + 1
-        state = cms.cms_merge(existing, agged)
-    new_dir = _cms_state_dir(target_path, new_version)
-    # mode=overwrite: a retried fold rewrites its own uncommitted dir
-    state.write.mode("overwrite").parquet(new_dir)
-    _cms_write_meta(
-        target_path,
-        {
+    if has_state:
+        state = cms.cms_merge(target.read(), state)
+    target.commit(
+        lambda staged: state.write.parquet(staged),
+        meta={
             **params,
-            "version": new_version,
             "last_batch_id": int(batch_id) if batch_id is not None else last,
         },
     )
-    for d in os.listdir(target_path):  # sweep superseded versions
-        if d.startswith("state_v") and d != f"state_v{new_version}":
-            shutil.rmtree(os.path.join(target_path, d), ignore_errors=True)
-    return spark.read.parquet(new_dir)
+    return target.read()

@@ -1,45 +1,46 @@
-"""Target-table abstraction for merge-style patterns.
+"""Target-table abstraction for merge-style patterns, and the one way a
+parquet table's files get replaced.
 
-The reference performs all merge patterns through Delta MERGE
-(odibi/transformers/scd.py:553-735, merge_transformer.py:406-640).
-Without Delta jars, ``ParquetTarget`` gives the same row semantics via
-read -> transform -> staged-overwrite, and is the only parquet rewrite
-path for merges: the patterns' and ``write_sink``'s merge modes. The
-interface is the seam where ``DeltaTarget`` (partition-pruned,
-ACID-transactional MERGE) plugs in on a real cluster — call sites are
-identical. Each instance learns the schema at most once and reads
-with the known schema after that. On a local unpartitioned target the
-schema is read on the driver from the footer of the first data file,
-where Spark's writer stores it, and ``max_of`` folds a column's max
-from the row-group statistics, so neither launches a Spark job; URI
-paths, partitioned directories and files without that metadata fall
-back to Spark inference and a Spark aggregate. A driver-sized state
-(the catalog's rollups) can be staged as a ``pyarrow.Table`` instead of
-a DataFrame; it goes through the same swap.
+The reference runs merges through Delta MERGE (odibi/transformers/
+scd.py:553-735, merge_transformer.py:406-640) and maintenance through
+OPTIMIZE, all on one transaction log. Without Delta jars,
+``ParquetTarget`` gives the same row semantics via read -> transform ->
+``commit``, and every parquet table rewrite is such a commit: the merge
+patterns, ``write_sink``'s merge modes, compaction, ``maintain
+--zorder-by``, the catalog's rewrites and the CMS state. It is the seam
+where ``DeltaTable`` plugs in on a real cluster. Each instance learns
+the schema at most once; on a local unpartitioned target it comes from
+the first data file's footer, and ``max_of`` from row-group statistics,
+so neither launches a Spark job (URI paths, partitioned dirs and files
+without the metadata fall back to Spark).
 
-Crash safety (ADVICE r9): ``overwrite`` never truncates the live dir
-in place. The new contents are written to ``{path}__staging`` first,
-then swapped in via rename with the previous state parked at
-``{path}__old`` until the swap completes. The only unrecoverable-by-
-code window (live dir renamed away, staging not yet renamed in) is
-auto-recovered on the next ``exists()`` by restoring ``__old`` — the
-overwrite then simply never happened and the caller's retry redoes it.
-A live dir that exists but is unreadable as parquet (e.g. a crashed
-direct write from outside this class) raises instead of being treated
-as absent, so a fold can never silently reinitialize over history.
-
-Caveat of the parquet emulation (Delta versioning solves this): a
-DataFrame handle returned BEFORE a later overwrite of the same target
-references swapped-out files. Re-read (or ``spark.catalog.
-refreshByPath``) after every apply; pattern functions always return a
-fresh read.
+A commit (the model is Structured Streaming's ``_spark_metadata`` log):
+a read notes the newest version n (0 without a ``_log``) and the data
+files; the writer stages new files under ``_staging/<n+1>-<id>``
+(``_`` names are invisible to Spark, DuckDB's ``*.parquet`` glob and
+``pyarrow.dataset``); it publishes ``_log/<n+1>.json`` — files added
+and removed, rows, bytes, file count, caller metadata — whole, and only
+if that version is free (a temp file and ``os.link`` on local paths; on
+URIs a Hadoop rename, which HDFS refuses onto an existing name); the
+loser drops its staging and raises ``CommitConflict``. Then it applies
+the record: staged files move in, removed files go. Every read first
+re-applies a published record whose staging is still there (applying
+is idempotent) and sweeps staging no record names once its version is
+taken: staging for the next version may be a writer still running.
+After a commit returns the directory holds exactly the committed files,
+so directory readers need no log. A live dir that is unreadable as
+parquet raises rather than reading as absent, so a fold never silently
+reinitializes over history. A DataFrame read BEFORE a later commit
+references removed files: re-read after every apply.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -49,70 +50,75 @@ from pyspark.sql.types import StructType
 
 # footer key under which Spark's writer stores the frame's schema
 SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+LOG_DIR = "_log"
+STAGING_DIR = "_staging"
+_RECORD_NAME = re.compile(r"(\d+)\.json")
+
+
+class CommitConflict(RuntimeError):
+    """Another writer published the version a commit needed: the table
+    changed after this writer read it. Re-read and redo the work."""
 
 
 class ParquetTarget:
     def __init__(self, spark: SparkSession, path: str, partition_by=None):
+        from odibi_spark.io.append import _is_local  # io imports this module
+
         self.spark = spark
-        self.path = path
+        self.path = path.rstrip("/")
         self.partition_by = partition_by or []
         self._schema = None  # set by the first inference or write
+        self._fs = _LocalFiles() if _is_local(path) else _HadoopFiles(spark, path)
+        # the newest version and the (relative path, bytes) data files
+        # the last read saw; a commit builds on them
+        self.version: int | None = None
+        self.files: list[tuple[str, int]] = []
 
-    def _staging(self) -> str:
-        return self.path + "__staging"
+    def _at(self, *parts: str) -> str:
+        return "/".join((self.path, *parts))
 
-    def _backup(self) -> str:
-        return self.path + "__old"
+    def _latest_version(self) -> int:
+        versions = (
+            int(m.group(1)) for name, _, _ in self._fs.ls(self._at(LOG_DIR))
+            if (m := _RECORD_NAME.fullmatch(name))
+        )
+        return max(versions, default=0)
 
-    def _recover(self) -> bool:
-        """Restore the pre-overwrite state after an interrupted swap
-        (live dir renamed away but the new state never renamed in).
-        Returns whether a live dir exists after recovery. Called from
-        every entry point that reads the live dir, so a caller that
-        goes straight to read() after a crash sees the recovered
-        history instead of FileNotFoundError."""
-        live = os.path.exists(self.path) and bool(os.listdir(self.path))
-        if not live and os.path.exists(self._backup()):
-            # the overwrite never committed; the caller's retry redoes
-            # it against the restored history
-            if os.path.exists(self.path):
-                os.rmdir(self.path)
-            os.replace(self._backup(), self.path)
-            live = True
-        return live
+    def record(self, version: int) -> dict | None:
+        """The published record of ``version``; None when absent."""
+        text = self._fs.read_text(self._at(LOG_DIR, f"{version}.json"))
+        return None if text is None else json.loads(text)
 
     def live(self) -> bool:
-        """Whether a live dir exists, after recovering an interrupted
-        swap and dropping stale leftovers. Reads no data, so it
-        launches no Spark job; ``exists`` also checks the dir reads."""
-        live = self._recover()
-        if live:
-            # stale swap leftovers: __old after a committed swap,
-            # __staging from an overwrite that died before the swap —
-            # both superseded by the healthy live dir
-            for leftover in (self._backup(), self._staging()):
-                if os.path.exists(leftover):
-                    shutil.rmtree(leftover, ignore_errors=True)
-        elif os.path.exists(self._staging()):
-            shutil.rmtree(self._staging(), ignore_errors=True)
-        return live
+        """Finish every published commit, sweep staging no record names,
+        and note the version and data files read (see the module
+        docstring). Returns whether data files exist. Reads no data, so
+        it launches no Spark job; ``exists`` also checks they read."""
+        version = self._latest_version()
+        for name, _, _ in self._fs.ls(self._at(STAGING_DIR)):
+            n = int(name.split("-", 1)[0])
+            if n > version:  # a writer may still publish it
+                continue
+            rec = self.record(n)
+            if rec is not None and rec["staging"] == name:
+                self._apply(rec)
+            else:
+                self._fs.delete(self._at(STAGING_DIR, name))
+        self.version, self.files = version, _list_data(self._fs, self.path)
+        return bool(self.files)
 
     def _data_files(self) -> list[str] | None:
         """The live dir's data files in the order Spark's listing sorts
         them, or None where only Spark's listing will do: a URI path, a
         partitioned (or otherwise nested) directory, summary metadata,
         or no live dir (Spark raises the error a reader expects)."""
-        from odibi_spark.io.append import _is_local  # io imports this module
-
-        if not _is_local(self.path) or self.partition_by or not os.path.isdir(self.path):
+        if not isinstance(self._fs, _LocalFiles) or self.partition_by:
             return None
-        names = sorted(os.listdir(self.path))
-        for name in names:
-            if name in ("_metadata", "_common_metadata") or os.path.isdir(
-                os.path.join(self.path, name)
-            ):
-                return None
-        return [os.path.join(self.path, n) for n in names if not n.startswith(("_", "."))]
+        names = {name for name, _, _ in self._fs.ls(self.path)}
+        files = _list_data(self._fs, self.path)
+        if not names or names & {"_metadata", "_common_metadata"} or any("/" in f for f, _ in files):
+            return None
+        return [f"{self.path}/{f}" for f, _ in files]
 
     def _footer_schema(self) -> StructType | None:
         """The schema Spark's writer stored in the footer of the first
@@ -161,38 +167,222 @@ class ParquetTarget:
         return False
 
     def read(self) -> DataFrame:
-        self._recover()
+        self.live()
         self._schema = self._schema or self._infer_schema()
         return self.spark.read.schema(self._schema).parquet(self.path)
 
+    def commit(self, stage, remove: list[str] | None = None, meta: dict | None = None) -> dict:
+        """Replace data files in one version. ``stage(dir)`` writes the
+        new files under ``dir``; ``remove`` names the data files
+        (relative paths) they replace, every file the last read saw
+        when None. ``meta`` rides in the record (the previous record's
+        when None). Raises ``CommitConflict`` when another writer
+        committed since that read. Returns the record."""
+        if self.version is None:
+            self.live()
+        n = self.version + 1
+        name = f"{n}-{uuid.uuid4().hex}"
+        staged = self._at(STAGING_DIR, name)
+        try:
+            stage(staged)
+            added = _list_data(self._fs, staged)
+            record = {
+                "version": n,
+                "staging": name,
+                "add": [rel for rel, _ in added],
+                "remove": [rel for rel, _ in self.files] if remove is None else list(remove),
+                "rows": self._rows(staged, added),
+                "bytes": sum(size for _, size in added),
+                "files": len(added),
+                "meta": (self.record(self.version) or {}).get("meta", {}) if meta is None else meta,
+            }
+        except Exception:
+            if self._latest_version() >= n:  # the winner swept this staging
+                self._conflict(n, staged)
+            raise
+        self._publish(record)
+        self._apply(record)
+        self.live()  # sweeps staging orphaned at this version
+        return record
+
+    def _publish(self, record: dict) -> None:
+        n = record["version"]
+        if not self._fs.publish(self._at(LOG_DIR, f"{n}.json"), json.dumps(record)):
+            self._conflict(n, self._at(STAGING_DIR, record["staging"]))
+
+    def _conflict(self, n: int, staged: str):
+        self._fs.delete(staged)
+        raise CommitConflict(
+            f"version {n} of {self.path} was committed by another "
+            f"writer after this one read version {n - 1}"
+        )
+
+    def _apply(self, record: dict) -> None:
+        """Move the staged files in, delete the removed ones (and the
+        partition dirs they empty), drop the staging dir. Idempotent."""
+        staged = self._at(STAGING_DIR, record["staging"])
+        for rel in record["add"]:
+            self._fs.move(f"{staged}/{rel}", self._at(rel))
+        for rel in record["remove"]:
+            self._fs.delete(self._at(rel))
+        dirs = {rel.rsplit("/", i)[0] for rel in record["remove"] for i in range(1, rel.count("/") + 1)}
+        for d in sorted(dirs, key=len, reverse=True):
+            self._fs.prune(self._at(d))
+        self._fs.delete(staged)
+
+    def _rows(self, staged: str, added: list[tuple[str, int]]) -> int | None:
+        """Rows in the staged files, from their parquet footers; None
+        where the footers are not read on the driver (URI paths)."""
+        if not isinstance(self._fs, _LocalFiles) or not all(r.endswith(".parquet") for r, _ in added):
+            return None
+        return sum(pq.read_metadata(f"{staged}/{rel}").num_rows for rel, _ in added)
+
     def _write(self, df: DataFrame | pa.Table, path: str) -> None:
+        if isinstance(df, pa.Table) and not isinstance(self._fs, _LocalFiles):
+            df = self.spark.createDataFrame(df.to_pylist(), from_arrow_schema(df.schema))
         if isinstance(df, pa.Table):
             # a driver-sized table (catalog rollups): one file written
             # by pyarrow, no Spark job
-            shutil.rmtree(path, ignore_errors=True)
             os.makedirs(path)
-            tmp = os.path.join(path, ".part-00000.parquet.tmp")
-            pq.write_table(df, tmp)
-            os.replace(tmp, os.path.join(path, "part-00000.parquet"))
+            pq.write_table(df, os.path.join(path, f"part-{uuid.uuid4().hex}.parquet"))
             self._schema = from_arrow_schema(df.schema)
             return
         df.write.mode("overwrite").partitionBy(*self.partition_by).parquet(path)
         self._schema = df.schema
 
     def overwrite(self, df: DataFrame | pa.Table) -> None:
-        # stage the new state beside the live dir (the plan may read
-        # from the live dir — staging never truncates its own input),
-        # then swap: live -> __old, staging -> live, drop __old
-        staging, backup = self._staging(), self._backup()
-        self._write(df, staging)
-        if os.path.exists(backup):
-            shutil.rmtree(backup)
-        os.rename(self.path, backup)
-        os.rename(staging, self.path)
-        shutil.rmtree(backup, ignore_errors=True)
+        # the plan may read from the live dir: staging never touches it
+        self.commit(lambda staged: self._write(df, staged))
 
-    def write_initial(self, df: DataFrame | pa.Table) -> None:
-        self._write(df, self.path)
+    # a first write is the same commit, from version 0 on a new table
+    write_initial = overwrite
+
+
+def _list_data(fs, root: str, prefix: str = "") -> list[tuple[str, int]]:
+    """(path relative to ``root``, bytes) of every data file under
+    ``root``, partition dirs included; ``_``/``.`` names are skipped at
+    every level, as Spark's listing does."""
+    out = []
+    for name, is_dir, size in fs.ls(root):
+        if name.startswith(("_", ".")):
+            continue
+        if is_dir:
+            out += _list_data(fs, f"{root}/{name}", f"{prefix}{name}/")
+        else:
+            out.append((prefix + name, size))
+    return sorted(out)
+
+
+class _LocalFiles:
+    """The file operations a commit needs, on a local path."""
+
+    def ls(self, d: str) -> list[tuple[str, bool, int]]:
+        try:
+            with os.scandir(d) as entries:
+                return [(e.name, e.is_dir(), 0 if e.is_dir() else e.stat().st_size) for e in entries]
+        except FileNotFoundError:
+            return []
+
+    def read_text(self, p: str) -> str | None:
+        try:
+            with open(p, encoding="utf-8") as fh:
+                return fh.read()
+        except FileNotFoundError:
+            return None
+
+    def publish(self, final: str, text: str) -> bool:
+        """Write ``final`` whole, only if it does not exist yet."""
+        d, base = os.path.split(final)
+        os.makedirs(d, exist_ok=True)
+        tmp = os.path.join(d, f".{base}.{uuid.uuid4().hex}.tmp")
+        with open(tmp, "w", encoding="utf-8") as fh:
+            fh.write(text)
+        try:
+            os.link(tmp, final)  # atomic, and fails if final exists
+            return True
+        except FileExistsError:
+            return False
+        finally:
+            os.remove(tmp)
+
+    def move(self, src: str, dst: str) -> None:
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        try:
+            os.replace(src, dst)
+        except FileNotFoundError:
+            if not os.path.exists(dst):  # else an earlier apply moved it
+                raise
+
+    def delete(self, p: str) -> None:
+        if os.path.isdir(p):
+            shutil.rmtree(p, ignore_errors=True)
+            return
+        d, base = os.path.split(p)
+        for f in (p, os.path.join(d, f".{base}.crc")):  # and Hadoop's checksum
+            try:
+                os.remove(f)
+            except FileNotFoundError:
+                pass
+
+    def prune(self, d: str) -> None:
+        try:
+            os.rmdir(d)
+        except OSError:  # not empty, or gone
+            pass
+
+
+class _HadoopFiles:
+    """The same operations through the Hadoop FileSystem API (URIs)."""
+
+    def __init__(self, spark: SparkSession, path: str):
+        self._jvm = spark._jvm
+        self._fs = self._p(path).getFileSystem(spark._jsc.hadoopConfiguration())
+
+    def _p(self, path: str):
+        return self._jvm.org.apache.hadoop.fs.Path(path)
+
+    def ls(self, d: str) -> list[tuple[str, bool, int]]:
+        if not self._fs.exists(self._p(d)):
+            return []
+        return [
+            (st.getPath().getName(), st.isDirectory(), st.getLen())
+            for st in self._fs.listStatus(self._p(d))
+        ]
+
+    def read_text(self, p: str) -> str | None:
+        if not self._fs.exists(self._p(p)):
+            return None
+        stream = self._fs.open(self._p(p))
+        try:
+            return bytes(self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)).decode("utf-8")
+        finally:
+            stream.close()
+
+    def publish(self, final: str, text: str) -> bool:
+        d, base = final.rsplit("/", 1)
+        tmp = self._p(f"{d}/.{base}.{uuid.uuid4().hex}.tmp")
+        out = self._fs.create(tmp, True)
+        try:
+            out.write(bytearray(text.encode("utf-8")))
+        finally:
+            out.close()
+        try:
+            # HDFS's rename fails onto an existing name
+            return not self._fs.exists(self._p(final)) and self._fs.rename(tmp, self._p(final))
+        finally:
+            self._fs.delete(tmp, False)
+
+    def move(self, src: str, dst: str) -> None:
+        self._fs.mkdirs(self._p(dst).getParent())
+        if not self._fs.rename(self._p(src), self._p(dst)) and not self._fs.exists(self._p(dst)):
+            raise OSError(f"rename {src} -> {dst} failed")
+
+    def delete(self, p: str) -> None:
+        self._fs.delete(self._p(p), True)
+
+    def prune(self, d: str) -> None:
+        if self._fs.exists(self._p(d)) and not self._fs.listStatus(self._p(d)):
+            self._fs.delete(self._p(d), False)
 
 
 _UNKNOWN = object()
@@ -215,4 +405,3 @@ def _row_group_max(rg: pq.RowGroupMetaData, column: str):
             return stats.max
         return None if stats.null_count == rg.num_rows else _UNKNOWN
     return _UNKNOWN
-

@@ -121,12 +121,11 @@ class TestTableDiffCli:
         assert out["rows_added"] == 2
         assert len(out["partitions"]) == 3
 
-    def test_cli_drift_verdict_exit_code(self, spark, tmp_path):
+    def test_cli_drift_verdict_exit_code(self, spark, tmp_path, capsys):
+        from odibi_spark.cli import main
+
         _, _, pa, pb = _snapshots(spark, tmp_path)
-        proc = subprocess.run(
-            [sys.executable, "-m", "odibi_spark.cli", "table-diff",
-             pa, pb, "--drift-threshold-pct", "1.0"],
-            capture_output=True, text=True, timeout=300,
-        )
-        assert proc.returncode == 3
-        assert "Row count drift" in json.loads(proc.stdout)["drift"]
+        rc = main(["table-diff", pa, pb, "--drift-threshold-pct", "1.0"])
+        assert rc == 3
+        out = capsys.readouterr().out.strip().splitlines()[-1]
+        assert "Row count drift" in json.loads(out)["drift"]

@@ -267,72 +267,99 @@ class TestCompaction:
         with _pytest.raises(ValueError, match="Delta table"):
             compact_small_files(spark, p, target_file_bytes=1 << 20)
 
-    def test_crash_between_rename_and_delete_recovers(self, spark, tmp_path):
-        """A pending-delete manifest left by a crash mid-delete is
-        completed by the next compact_small_files call: the condemned
-        originals disappear, no rows are lost or duplicated."""
+    def test_crash_between_rename_and_delete_recovers(self, spark, tmp_path, monkeypatch):
+        """A compaction that dies after its compacted files moved in but
+        before the small files it replaces were deleted (duplicates on
+        disk) is finished by the next read: no row lost or doubled."""
+        from odibi_spark.io.compact import compact_small_files, list_data_files
+        from odibi_spark.patterns import merge_target
+
+        p = str(tmp_path / "crashy")
+        spark.range(0, 1_000).repartition(4).write.parquet(p)
+
+        def crash(fs, path):
+            raise RuntimeError("crash mid-delete")
+
+        monkeypatch.setattr(merge_target._LocalFiles, "delete", crash)
+        with pytest.raises(RuntimeError, match="mid-delete"):
+            compact_small_files(spark, p, target_file_bytes=1 << 20)
+        monkeypatch.undo()
+        assert len(list_data_files(spark, p)) == 5  # 4 originals + 1 compacted
+        assert merge_target.ParquetTarget(spark, p).read().count() == 1_000
+        assert len(list_data_files(spark, p)) == 1
+        # nothing left to finish: the next compaction is a no-op
+        assert not compact_small_files(spark, p, target_file_bytes=1 << 20)["compacted"]
+        assert spark.read.parquet(p).count() == 1_000
+
+    def test_torn_record_is_ignored(self, spark, tmp_path):
+        """A version record cut off mid-write (only its temp file exists)
+        is not a version: compaction proceeds from the table as it is
+        and publishes version 1 itself."""
         import json
+        import os
 
-        from odibi_spark.io.compact import (
-            MANIFEST_NAME,
-            compact_small_files,
-            list_data_files,
-            resume_pending_deletes,
-        )
-
-        p = tmp_path / "crashy"
-        spark.range(0, 1_000).repartition(4).write.parquet(str(p))
-        files = list_data_files(spark, str(p))
-        # simulate the post-rename crash state: new data renamed in
-        # (here: an extra copy of one file's rows), manifest written,
-        # delete loop never ran
-        victim = files[0][0]
-        spark.read.parquet(victim).coalesce(1).write.mode("append").parquet(str(p))
-        (p / MANIFEST_NAME).write_text(json.dumps([victim]))
-
-        deleted = resume_pending_deletes(spark, str(p))
-        assert deleted == 1
-        assert not (p / MANIFEST_NAME).exists()
-        assert spark.read.parquet(str(p)).count() == 1_000
-        # and the auto-recovery path inside compact_small_files is a
-        # no-op when no manifest exists
-        assert resume_pending_deletes(spark, str(p)) == 0
-        compact_small_files(spark, str(p), target_file_bytes=1)
-
-    def test_truncated_manifest_treated_as_absent(self, spark, tmp_path):
-        """ADVICE r6: a manifest truncated by a crash mid-write (only
-        possible on pre-atomic-write stores) must not hard-block
-        compaction with a JSONDecodeError — the delete loop never ran,
-        so treating it as absent just leaves re-runnable duplicates."""
-        from odibi_spark.io.compact import (
-            MANIFEST_NAME,
-            compact_small_files,
-            resume_pending_deletes,
-        )
+        from odibi_spark.io.compact import compact_small_files
 
         p = tmp_path / "trunc"
         spark.range(0, 200).repartition(4).write.parquet(str(p))
-        (p / MANIFEST_NAME).write_text('["file:/somewhere/part-0')  # cut off
-        assert resume_pending_deletes(spark, str(p)) == 0
-        assert not (p / MANIFEST_NAME).exists()
+        os.makedirs(p / "_log")
+        (p / "_log" / ".1.json.dead.tmp").write_text('{"version": 1, "add": ["part-0')
+        stats = compact_small_files(spark, str(p), target_file_bytes=1 << 20)
+        assert stats["compacted"]
+        assert json.loads((p / "_log" / "1.json").read_text())["rows"] == 200
         assert spark.read.parquet(str(p)).count() == 200
-        compact_small_files(spark, str(p), target_file_bytes=1 << 20)
-        assert spark.read.parquet(str(p)).count() == 200
 
-    def test_manifest_write_is_atomic(self, spark, tmp_path):
-        """_write_manifest goes through temp+rename: after it returns,
-        the manifest parses and no temp file lingers."""
-        import json
+    def test_failed_move_keeps_originals(self, spark, tmp_path, monkeypatch):
+        """A move that fails while the record is applied aborts before a
+        single original is deleted; the next read retries the move and
+        lands on the committed version."""
+        import os
 
-        from odibi_spark.io.compact import MANIFEST_NAME, _write_manifest
+        from odibi_spark.io.compact import compact_small_files, list_data_files
+        from odibi_spark.patterns import merge_target
 
-        p = tmp_path / "atomic"
-        spark.range(0, 10).coalesce(1).write.parquet(str(p))
-        _write_manifest(spark, str(p), ["file:/a", "file:/b"])
-        assert json.loads((p / MANIFEST_NAME).read_text()) == [
-            "file:/a", "file:/b"
-        ]
-        assert not (p / (MANIFEST_NAME + ".tmp")).exists()
+        p = str(tmp_path / "atomic")
+        spark.range(0, 200).repartition(4).write.parquet(p)
+        originals = {f for f, _ in list_data_files(spark, p)}
+
+        def fail(fs, src, dst):
+            raise OSError("rename failed")
+
+        monkeypatch.setattr(merge_target._LocalFiles, "move", fail)
+        with pytest.raises(OSError, match="rename failed"):
+            compact_small_files(spark, p, target_file_bytes=1 << 20)
+        monkeypatch.undo()
+        assert {f for f, _ in list_data_files(spark, p)} == originals
+        assert len(os.listdir(os.path.join(p, "_staging"))) == 1
+        assert merge_target.ParquetTarget(spark, p).read().count() == 200
+        assert len(list_data_files(spark, p)) == 1
+
+    def test_compaction_racing_a_merge_conflicts(self, spark, tmp_path, monkeypatch):
+        """A merge that commits between the compaction's staged write and
+        its commit makes the compaction raise a conflict; the table then
+        holds exactly the merge's rows, none twice."""
+        from pyspark.sql.readwriter import DataFrameWriter
+
+        from odibi_spark.io.compact import compact_small_files
+        from odibi_spark.patterns.merge import merge_apply
+        from odibi_spark.patterns.merge_target import CommitConflict
+
+        p = str(tmp_path / "raced")
+        spark.range(0, 40).selectExpr("id", "'v0' AS v").repartition(4).write.parquet(p)
+        batch = spark.range(30, 50).selectExpr("id", "'v1' AS v")
+        real_save = DataFrameWriter.save
+
+        def save_then_merge(writer, *args, **kwargs):
+            real_save(writer, *args, **kwargs)
+            merge_apply(spark, batch, target_path=p, keys=["id"])
+
+        monkeypatch.setattr(DataFrameWriter, "save", save_then_merge)
+        with pytest.raises(CommitConflict):
+            compact_small_files(spark, p, target_file_bytes=1 << 20)
+        monkeypatch.undo()
+        got = sorted((r.id, r.v) for r in spark.read.parquet(p).collect())
+        want = [(i, "v0") for i in range(30)] + [(i, "v1") for i in range(30, 50)]
+        assert got == want
 
     def test_noop_when_already_compact(self, spark, tmp_path):
         from odibi_spark.io.compact import compact_small_files

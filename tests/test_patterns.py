@@ -34,6 +34,14 @@ def spark_jobs(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+class _Crash(Exception):
+    """Stands in for the process dying at an injected step."""
+
+
+def _crash(*args, **kwargs):
+    raise _Crash()
+
+
 @pytest.fixture()
 def t0(spark):
     return spark.createDataFrame(
@@ -617,7 +625,10 @@ class TestCmsIncremental:
             )
 
     def test_missing_meta_is_untrusted(self, spark, tmp_path):
+        """State files with no version record (its params unknown) are
+        refused, not folded into."""
         import os
+        import shutil
 
         import pytest
 
@@ -628,19 +639,21 @@ class TestCmsIncremental:
             spark, self._batch(spark, ["a"]),
             target_path=path, key_col="tok", width=16, depth=2, seed=4,
         )
-        os.remove(os.path.join(path, "_cms_meta.json"))
+        shutil.rmtree(os.path.join(path, "_log"))
         with pytest.raises(ValueError, match="no meta"):
             cms_incremental(
                 spark, self._batch(spark, ["b"]),
                 target_path=path, key_col="tok", width=16, depth=2, seed=4,
             )
 
-    def test_batch_id_replay_is_idempotent(self, spark, tmp_path):
-        """foreachBatch retry semantics (ADVICE r9): re-folding an
-        already-committed batch_id must be a no-op, not a silent
-        double count."""
+    def test_batch_id_replay_is_idempotent(self, spark, tmp_path, monkeypatch):
+        """foreachBatch retry semantics: re-folding an already-committed
+        batch_id must be a no-op, not a silent double count — also when
+        the first attempt died after publishing its record but before
+        applying it (the retry finishes the apply, then skips)."""
         from odibi_spark.llm import cms
         from odibi_spark.patterns.aggregation import cms_incremental
+        from odibi_spark.patterns.merge_target import ParquetTarget
 
         path = str(tmp_path / "cms_state")
         b1, b2 = ["a", "a", "b"], ["b", "c", "c", "c"]
@@ -649,17 +662,21 @@ class TestCmsIncremental:
             target_path=path, key_col="tok", width=16, depth=2, seed=4,
             batch_id=0,
         )
-        cms_incremental(
-            spark, self._batch(spark, b2),
-            target_path=path, key_col="tok", width=16, depth=2, seed=4,
-            batch_id=1,
-        )
-        # replay batch 1 (checkpoint never committed -> retry)
-        replayed = cms_incremental(
-            spark, self._batch(spark, b2),
-            target_path=path, key_col="tok", width=16, depth=2, seed=4,
-            batch_id=1,
-        )
+        with monkeypatch.context() as m:
+            m.setattr(ParquetTarget, "_apply", _crash)
+            with pytest.raises(_Crash):
+                cms_incremental(
+                    spark, self._batch(spark, b2),
+                    target_path=path, key_col="tok", width=16, depth=2,
+                    seed=4, batch_id=1,
+                )
+        # replay batch 1 (checkpoint never committed -> retry), twice
+        for _ in range(2):
+            replayed = cms_incremental(
+                spark, self._batch(spark, b2),
+                target_path=path, key_col="tok", width=16, depth=2, seed=4,
+                batch_id=1,
+            )
         one_shot = cms.cms_build(
             self._batch(spark, b1 + b2), "tok", width=16, depth=2, seed=4
         )
@@ -667,63 +684,27 @@ class TestCmsIncremental:
             map(tuple, one_shot.collect())
         )
 
-    def test_partial_state_raises_not_reinitializes(self, spark, tmp_path):
-        """Meta pointer naming an unreadable state dir = interrupted
-        write; the next fold must raise, never silently restart the
-        history from scratch (ADVICE r9)."""
-        import json
-        import os
-        import shutil
-
-        import pytest
-
-        from odibi_spark.patterns.aggregation import cms_incremental
-
-        path = str(tmp_path / "cms_state")
-        cms_incremental(
-            spark, self._batch(spark, ["a", "b"]),
-            target_path=path, key_col="tok", width=16, depth=2, seed=4,
-        )
-        with open(os.path.join(path, "_cms_meta.json")) as fh:
-            version = json.load(fh)["version"]
-        shutil.rmtree(os.path.join(path, f"state_v{version}"))
-        with pytest.raises(RuntimeError, match="partial state"):
-            cms_incremental(
-                spark, self._batch(spark, ["c"]),
-                target_path=path, key_col="tok", width=16, depth=2, seed=4,
-            )
-
-    def test_crash_between_state_write_and_meta_commit_is_safe(
-        self, spark, tmp_path
-    ):
-        """Versioned-state property: a state dir written WITHOUT the
-        meta pointer advancing (crash window) is simply rewritten by
-        the retry — the committed history never double-counts."""
-        import json
-        import os
-
+    def test_maintenance_rewrite_keeps_the_params(self, spark, tmp_path):
+        """``maintain --zorder-by`` on the state dir is a commit without
+        metadata: its record keeps the fold's params and batch id, so
+        the next fold still checks them and still counts exactly."""
+        from odibi_spark.cli import main
         from odibi_spark.llm import cms
         from odibi_spark.patterns.aggregation import cms_incremental
 
         path = str(tmp_path / "cms_state")
-        b1, b2 = ["a", "a"], ["b", "b", "b"]
+        b1, b2 = ["a", "b", "c", "d"] * 3, ["a", "e"]
         cms_incremental(
             spark, self._batch(spark, b1),
             target_path=path, key_col="tok", width=16, depth=2, seed=4,
             batch_id=0,
         )
-        # simulate the crash: batch 2's state_v1 got written but the
-        # meta pointer still names v0 / batch 0
-        orphan = cms.cms_build(
-            self._batch(spark, b2), "tok", width=16, depth=2, seed=4
-        )
-        orphan.write.mode("overwrite").parquet(
-            os.path.join(path, "state_v1")
-        )
-        with open(os.path.join(path, "_cms_meta.json")) as fh:
-            assert json.load(fh)["version"] == 0
-        # retry of batch 1 folds from the COMMITTED v0, overwriting the
-        # orphan — result equals the clean one-shot
+        assert main(["maintain", path, "--zorder-by", "depth,bucket"]) == 0
+        with pytest.raises(ValueError, match="built with"):
+            cms_incremental(
+                spark, self._batch(spark, b2),
+                target_path=path, key_col="tok", width=32, depth=2, seed=4,
+            )
         out = cms_incremental(
             spark, self._batch(spark, b2),
             target_path=path, key_col="tok", width=16, depth=2, seed=4,
@@ -735,6 +716,76 @@ class TestCmsIncremental:
         assert sorted(map(tuple, out.collect())) == sorted(
             map(tuple, one_shot.collect())
         )
+
+    def test_partial_state_raises_not_reinitializes(self, spark, tmp_path):
+        """A version record whose state files are gone = partial state;
+        the next fold must raise, never silently restart the history
+        from scratch."""
+        import os
+
+        import pytest
+
+        from odibi_spark.patterns.aggregation import cms_incremental
+
+        path = str(tmp_path / "cms_state")
+        cms_incremental(
+            spark, self._batch(spark, ["a", "b"]),
+            target_path=path, key_col="tok", width=16, depth=2, seed=4,
+        )
+        for name in os.listdir(path):
+            if not name.startswith(("_", ".")):
+                os.remove(os.path.join(path, name))
+        with pytest.raises(RuntimeError, match="partial state"):
+            cms_incremental(
+                spark, self._batch(spark, ["c"]),
+                target_path=path, key_col="tok", width=16, depth=2, seed=4,
+            )
+
+    def test_crash_between_state_write_and_meta_commit_is_safe(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A fold that dies after staging its state but before
+        publishing the record leaves the committed state and batch id
+        as they were; the retry folds from them — no double count —
+        and sweeps the orphaned staging."""
+        import os
+
+        from odibi_spark.llm import cms
+        from odibi_spark.patterns.aggregation import cms_incremental, cms_state_read
+        from odibi_spark.patterns.merge_target import ParquetTarget
+
+        path = str(tmp_path / "cms_state")
+        b1, b2 = ["a", "a"], ["b", "b", "b"]
+        cms_incremental(
+            spark, self._batch(spark, b1),
+            target_path=path, key_col="tok", width=16, depth=2, seed=4,
+            batch_id=0,
+        )
+        with monkeypatch.context() as m:
+            m.setattr(ParquetTarget, "_publish", _crash)
+            with pytest.raises(_Crash):
+                cms_incremental(
+                    spark, self._batch(spark, b2),
+                    target_path=path, key_col="tok", width=16, depth=2,
+                    seed=4, batch_id=1,
+                )
+        assert os.listdir(os.path.join(path, "_staging"))  # the orphan
+        first = cms.cms_build(self._batch(spark, b1), "tok", width=16, depth=2, seed=4)
+        assert sorted(map(tuple, cms_state_read(spark, path).collect())) == sorted(
+            map(tuple, first.collect())
+        )
+        out = cms_incremental(
+            spark, self._batch(spark, b2),
+            target_path=path, key_col="tok", width=16, depth=2, seed=4,
+            batch_id=1,
+        )
+        one_shot = cms.cms_build(
+            self._batch(spark, b1 + b2), "tok", width=16, depth=2, seed=4
+        )
+        assert sorted(map(tuple, out.collect())) == sorted(
+            map(tuple, one_shot.collect())
+        )
+        assert not os.listdir(os.path.join(path, "_staging"))
 
 
 class TestParquetTargetFooterMetadata:
@@ -832,38 +883,83 @@ class TestParquetTargetFooterMetadata:
 
 
 class TestParquetTargetCrashSafety:
-    """Staged-swap overwrite (ADVICE r9): no crash window may leave a
-    state the next fold silently reinitializes over."""
+    """The commit protocol: each crash is injected by raising at the
+    step, and no crash may leave a state the next fold silently
+    reinitializes over or double counts."""
 
     def _target(self, spark, tmp_path):
         from odibi_spark.patterns.merge_target import ParquetTarget
 
         return ParquetTarget(spark, str(tmp_path / "tgt"))
 
-    def test_interrupted_swap_auto_recovers_backup(self, spark, tmp_path):
+    def _rows(self, spark, n, tag):
+        return spark.range(n).selectExpr("id AS k", f"'{tag}' AS v")
+
+    def test_crash_before_publish_keeps_previous_version(self, spark, tmp_path, monkeypatch):
         import os
 
-        from pyspark.sql import Row
+        from odibi_spark.patterns.merge_target import ParquetTarget
 
         t = self._target(spark, tmp_path)
-        t.write_initial(spark.createDataFrame([Row(k=1, v="old")]))
-        # simulate: overwrite renamed live -> __old then died
-        os.rename(t.path, t.path + "__old")
-        assert t.exists()  # restores __old as the live dir
-        assert [r.v for r in t.read().collect()] == ["old"]
+        t.write_initial(self._rows(spark, 3, "old"))
+        monkeypatch.setattr(ParquetTarget, "_publish", _crash)
+        with pytest.raises(_Crash):
+            self._target(spark, tmp_path).overwrite(self._rows(spark, 5, "new"))
+        monkeypatch.undo()
+        staging = os.path.join(t.path, "_staging")
+        assert len(os.listdir(staging)) == 1  # staged, never published
+        fresh = self._target(spark, tmp_path)
+        assert sorted(r.v for r in fresh.read().collect()) == ["old"] * 3
+        assert fresh.version == 1
+        # the retry takes version 2 and sweeps the orphan staged for it
+        fresh.overwrite(self._rows(spark, 5, "new"))
+        assert os.listdir(staging) == []
+        assert sorted(r.v for r in fresh.read().collect()) == ["new"] * 5
 
-    def test_read_straight_after_crash_recovers(self, spark, tmp_path):
-        """ADVICE r10: a caller that skips exists() and goes straight
-        to read() after an interrupted swap must see the recovered
-        pre-overwrite state, not FileNotFoundError."""
+    def test_crash_after_publish_rolls_forward(self, spark, tmp_path, monkeypatch):
         import os
 
-        from pyspark.sql import Row
+        from odibi_spark.patterns.merge_target import ParquetTarget
 
         t = self._target(spark, tmp_path)
-        t.write_initial(spark.createDataFrame([Row(k=1, v="old")]))
-        os.rename(t.path, t.path + "__old")
-        assert [r.v for r in t.read().collect()] == ["old"]
+        t.write_initial(self._rows(spark, 3, "old"))
+        monkeypatch.setattr(ParquetTarget, "_apply", _crash)
+        with pytest.raises(_Crash):
+            self._target(spark, tmp_path).overwrite(self._rows(spark, 7, "new"))
+        monkeypatch.undo()
+        record = t.record(2)
+        assert record["rows"] == 7 and record["files"] == len(record["add"])
+        assert t.exists()  # rolls forward
+        assert sorted(r.v for r in t.read().collect()) == ["new"] * 7
+        assert os.listdir(os.path.join(t.path, "_staging")) == []
+
+    def test_read_straight_after_crash_recovers(self, spark, tmp_path, monkeypatch):
+        """A caller that skips exists() and goes straight to read() after
+        a crash in the middle of the apply (one file moved, the rest
+        still staged, nothing removed) reads the committed version,
+        with no row lost or doubled."""
+        from odibi_spark.patterns import merge_target
+
+        t = self._target(spark, tmp_path)
+        t.write_initial(self._rows(spark, 4, "old"))
+        moves = []
+        real_move = merge_target._LocalFiles.move
+
+        def move_once(fs, src, dst):
+            if moves:
+                raise _Crash()
+            moves.append(src)
+            real_move(fs, src, dst)
+
+        monkeypatch.setattr(merge_target._LocalFiles, "move", move_once)
+        with pytest.raises(_Crash):
+            self._target(spark, tmp_path).overwrite(
+                self._rows(spark, 40, "new").repartition(4)
+            )
+        monkeypatch.undo()
+        got = self._target(spark, tmp_path).read()
+        assert sorted(r.k for r in got.collect()) == list(range(40))
+        assert {r.v for r in got.collect()} == {"new"}
 
     def test_unreadable_live_dir_raises(self, spark, tmp_path):
         import os
@@ -878,28 +974,184 @@ class TestParquetTargetCrashSafety:
             t.exists()
 
     def test_stale_staging_is_cleaned(self, spark, tmp_path):
+        """Staging that no record names is swept once its version is
+        taken; staging for the next version is left to its writer."""
         import os
 
-        from pyspark.sql import Row
-
         t = self._target(spark, tmp_path)
-        t.write_initial(spark.createDataFrame([Row(k=1, v="live")]))
-        spark.createDataFrame([Row(k=2, v="staged")]).write.parquet(
-            t.path + "__staging"
-        )
+        t.write_initial(self._rows(spark, 1, "live"))
+        staging = os.path.join(t.path, "_staging")
+        self._rows(spark, 1, "lost").write.parquet(os.path.join(staging, "1-lost"))
+        self._rows(spark, 1, "running").write.parquet(os.path.join(staging, "2-running"))
         assert t.exists()
-        assert not os.path.exists(t.path + "__staging")
+        assert os.listdir(staging) == ["2-running"]
         assert [r.v for r in t.read().collect()] == ["live"]
+        t.overwrite(self._rows(spark, 1, "next"))
+        assert os.listdir(staging) == [] and t.exists()
+        assert [r.v for r in t.read().collect()] == ["next"]
 
     def test_overwrite_roundtrip(self, spark, tmp_path):
         import os
 
-        from pyspark.sql import Row
+        t = self._target(spark, tmp_path)
+        t.write_initial(self._rows(spark, 1, "old"))
+        assert t.exists()
+        old_files = {rel for rel, _ in t.files}
+        t.overwrite(self._rows(spark, 2, "new"))
+        assert [r.v for r in t.read().collect()] == ["new", "new"]
+        record = t.record(2)
+        assert set(record["remove"]) == old_files
+        assert {rel for rel, _ in t.files} == set(record["add"])
+        assert (record["rows"], record["files"]) == (2, len(record["add"]))
+        assert record["bytes"] == sum(size for _, size in t.files)
+        assert sorted(os.listdir(os.path.join(t.path, "_log"))) == ["1.json", "2.json"]
+        assert os.listdir(os.path.join(t.path, "_staging")) == []
+
+    def test_half_written_temp_record_is_not_a_version(self, spark, tmp_path):
+        import os
 
         t = self._target(spark, tmp_path)
-        t.write_initial(spark.createDataFrame([Row(k=1, v="old")]))
-        assert t.exists()
-        t.overwrite(spark.createDataFrame([Row(k=1, v="new")]))
-        assert [r.v for r in t.read().collect()] == ["new"]
-        assert not os.path.exists(t.path + "__old")
-        assert not os.path.exists(t.path + "__staging")
+        t.write_initial(self._rows(spark, 1, "old"))
+        with open(os.path.join(t.path, "_log", ".2.json.dead.tmp"), "w") as fh:
+            fh.write('{"version": 2, "staging": "2-de')  # cut off
+        assert t.live() and t.version == 1
+        t.overwrite(self._rows(spark, 2, "new"))
+        assert t.record(2)["rows"] == 2
+        assert [r.v for r in t.read().collect()] == ["new", "new"]
+
+    def test_record_publish_is_exclusive(self, spark, tmp_path):
+        """Two writers that read the same version: the second publish
+        of that version fails, its writer raises and drops its staging,
+        and the first writer's rows stay."""
+        import os
+
+        from odibi_spark.patterns.merge_target import CommitConflict
+
+        t = self._target(spark, tmp_path)
+        t.write_initial(self._rows(spark, 1, "old"))
+        a, b = self._target(spark, tmp_path), self._target(spark, tmp_path)
+        assert a.exists() and b.exists()
+        a.overwrite(self._rows(spark, 2, "a"))
+        with pytest.raises(CommitConflict):
+            b.overwrite(self._rows(spark, 3, "b"))
+        assert os.listdir(os.path.join(t.path, "_staging")) == []
+        assert [r.v for r in t.read().collect()] == ["a", "a"]
+
+    def test_concurrent_overwrites_one_wins(self, spark, tmp_path, monkeypatch):
+        """Two threads overwrite one target, lined up by a barrier after
+        their staged writes: exactly one returns, the other raises a
+        conflict, and the table is the winner's rows with no staging
+        left."""
+        import os
+        import threading
+
+        from odibi_spark.patterns import merge_target
+
+        t = self._target(spark, tmp_path)
+        t.write_initial(self._rows(spark, 10, "seed"))
+        barrier = threading.Barrier(2, timeout=120)
+        real_write = merge_target.ParquetTarget._write
+
+        def write_then_wait(target, df, path):
+            real_write(target, df, path)
+            barrier.wait()
+
+        monkeypatch.setattr(merge_target.ParquetTarget, "_write", write_then_wait)
+        outcome: dict[str, object] = {}
+
+        def writer(tag, n):
+            try:
+                self._target(spark, tmp_path).overwrite(self._rows(spark, n, tag))
+                outcome[tag] = "ok"
+            except Exception as ex:
+                outcome[tag] = ex
+
+        threads = [
+            threading.Thread(target=writer, args=args)
+            for args in (("a", 100), ("b", 25))
+        ]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=180)
+        monkeypatch.undo()
+        assert not any(th.is_alive() for th in threads)
+        winners = [tag for tag, out in outcome.items() if out == "ok"]
+        losers = [out for out in outcome.values() if out != "ok"]
+        assert len(winners) == 1 and len(losers) == 1, outcome
+        assert isinstance(losers[0], merge_target.CommitConflict)
+        rows = [(r.k, r.v) for r in self._target(spark, tmp_path).read().collect()]
+        n = {"a": 100, "b": 25}[winners[0]]
+        assert sorted(rows) == [(k, winners[0]) for k in range(n)]
+        assert os.listdir(os.path.join(t.path, "_staging")) == []
+
+    def test_read_modify_write_under_contention_loses_no_update(self, spark, tmp_path):
+        """Eight threads (more than the cores) each add one row by
+        read -> append -> commit, retrying on a conflict: every row
+        lands exactly once, one version per writer."""
+        import os
+        import sys
+        import threading
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from odibi_spark.patterns.merge_target import CommitConflict, ParquetTarget
+
+        path = str(tmp_path / "contended")
+        ParquetTarget(spark, path).write_initial(pa.table({"tag": ["seed"]}))
+        errors: list[Exception] = []
+
+        def add(tag):
+            try:
+                for _ in range(500):
+                    t = ParquetTarget(spark, path)
+                    try:
+                        t.live()
+                        old = pa.concat_tables(
+                            pq.read_table(f"{path}/{rel}") for rel, _ in t.files
+                        )
+                        t.overwrite(pa.concat_tables([old, pa.table({"tag": [tag]})]))
+                        return
+                    except (CommitConflict, FileNotFoundError, pa.ArrowInvalid):
+                        # a concurrent apply changed the files under this
+                        # read; the version check refuses its commit
+                        continue
+                raise AssertionError(f"{tag} never committed")
+            except Exception as ex:  # pragma: no cover - failure path
+                errors.append(ex)
+
+        tags = [f"w{i}" for i in range(8)]
+        threads = [threading.Thread(target=add, args=(tag,)) for tag in tags]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            for th in threads:
+                th.start()
+            for th in threads:
+                th.join(timeout=120)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(th.is_alive() for th in threads) and not errors, errors
+        final = ParquetTarget(spark, path)
+        assert final.live() and final.version == 1 + len(tags)
+        got = pa.concat_tables(pq.read_table(f"{path}/{rel}") for rel, _ in final.files)
+        assert sorted(got.column("tag").to_pylist()) == sorted(["seed", *tags])
+        assert os.listdir(os.path.join(path, "_staging")) == []
+
+    def test_uri_path_commits_through_hadoop(self, spark, tmp_path):
+        """A ``file://`` URI takes the Hadoop FileSystem route: the same
+        protocol, with the record published by rename."""
+        import os
+
+        from odibi_spark.patterns.merge_target import ParquetTarget
+
+        uri = f"file://{tmp_path}/uri_tgt"
+        t = ParquetTarget(spark, uri)
+        assert not t.exists()
+        t.write_initial(self._rows(spark, 2, "old"))
+        t.overwrite(self._rows(spark, 3, "new"))
+        assert [r.v for r in ParquetTarget(spark, uri).read().collect()] == ["new"] * 3
+        assert t.record(2)["remove"] == t.record(1)["add"]
+        log = os.listdir(tmp_path / "uri_tgt" / "_log")
+        assert sorted(n for n in log if not n.startswith(".")) == ["1.json", "2.json"]

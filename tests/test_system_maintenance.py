@@ -186,6 +186,77 @@ class TestConcurrentWriters:
         assert rows[0].total_rows == 50
 
 
+    def test_fold_during_rebuild_loses_no_run(self, spark, tmp_path, monkeypatch):
+        """A daily-stats fold injected between a rebuild's read and its
+        commit waits for the rebuild (both hold the table's lock), so
+        the table keeps one row per (date, pipeline) and counts every
+        run: the two recorded ones the rebuild read, plus the folded
+        one."""
+        import threading
+
+        from pyspark.sql.readwriter import DataFrameWriter
+
+        root = str(tmp_path / "_race")
+        now = time.time()
+        cat = Catalog(spark, root)
+        for run_id in ("r1", "r2"):
+            cat.record_run(
+                run_id=run_id, pipeline="p", results={"a": R()},
+                started_at=now - 60, finished_at=now - 30,
+            )
+        cat.update_daily_stats(
+            pipeline="p", results={"a": R()}, started_at=now - 60,
+            finished_at=now - 30,
+        )
+        errors: list[Exception] = []
+
+        def fold() -> None:
+            try:
+                Catalog(spark, root).update_daily_stats(
+                    pipeline="p", results={"a": R()}, started_at=now - 60,
+                    finished_at=now - 30,
+                )
+            except Exception as ex:  # pragma: no cover - failure path
+                errors.append(ex)
+
+        folder = threading.Thread(target=fold)
+        real_parquet = DataFrameWriter.parquet
+
+        def write_then_fold(writer, path, *args, **kwargs):
+            real_parquet(writer, path, *args, **kwargs)
+            if "meta_daily_stats" in path and not folder.is_alive():
+                folder.start()
+                folder.join(timeout=1)  # blocks on the lock while it is held
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", write_then_fold)
+        cat.rebuild_daily_stats()
+        folder.join(timeout=120)
+        monkeypatch.undo()
+        assert not folder.is_alive() and not errors, errors
+        rows = cat.daily_stats().collect()
+        assert len(rows) == 1
+        assert rows[0].runs == 3 and rows[0].successes == 3
+
+
+    def test_daily_stats_on_a_uri_root(self, spark, tmp_path):
+        """A catalog root given as a URI folds into the URI's table
+        (through Spark): a rebuilt row is kept and each fold counts."""
+        root = f"file://{tmp_path}/_uri"
+        now = time.time()
+        cat = Catalog(spark, root)
+        cat.record_run(
+            run_id="r1", pipeline="p", results={"a": R()},
+            started_at=now - 60, finished_at=now - 30,
+        )
+        assert cat.rebuild_daily_stats().first().runs == 1
+        cat.update_daily_stats(
+            pipeline="p", results={"a": R()}, started_at=now - 60,
+            finished_at=now - 30,
+        )
+        rows = cat.daily_stats().collect()
+        assert len(rows) == 1 and rows[0].runs == 2
+
+
 class TestRebuild:
     def test_rebuild_matches_incremental_fold(self, spark, tmp_path):
         """A drifted (here: deleted) daily_stats table rebuilt from
