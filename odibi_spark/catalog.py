@@ -199,7 +199,8 @@ class Catalog:
             else:
                 rows.append({"date": date, "pipeline": pipeline, **run})
             target.overwrite(pa.Table.from_pylist(rows, schema=parse_ddl(DAILY_STATS_SCHEMA)))
-        return self.spark.read.schema(DAILY_STATS_SCHEMA).parquet(path)
+            # listed under the lock: the next writer's commit waits for it
+            return self.spark.read.schema(DAILY_STATS_SCHEMA).parquet(path)
 
     def deploy(self, config) -> str:
         """Record a pipeline's definition in the catalog (reference CLI
@@ -621,7 +622,7 @@ class Catalog:
                 preserved = target.read().filter(F.col("date") < floor_date)
                 rebuilt = preserved.unionByName(rebuilt)
             target.overwrite(rebuilt.coalesce(1))
-        return self.daily_stats()
+            return self.daily_stats()
 
     def optimize(self, *, target_file_bytes: int = 32 * 1024 * 1024) -> dict:
         """Compact every meta table's small files (reference:
