@@ -15,7 +15,8 @@ read-latest and the ``meta_daily_stats`` fold read with
 ``ParquetTarget`` version. Roots with a URI scheme read and append
 through Spark. The query accessors (``runs()``, ``metrics()``, ...) and
 maintenance stay Spark DataFrames. Every meta-table rewrite is a
-``ParquetTarget`` commit made under the table's ``meta_<name>.lock``.
+``ParquetTarget`` commit; ``meta_daily_stats``'s writers (the fold,
+``cleanup`` and ``rebuild_daily_stats``) take turns on its lock file.
 """
 
 from __future__ import annotations
@@ -535,7 +536,8 @@ class Catalog:
                 days = retention_days[name]
             else:
                 days = retention_days
-            with self._lock(name):
+            # daily_stats has a second writer, the fold
+            with self._lock(name) if name == "daily_stats" else contextlib.nullcontext():
                 target = ParquetTarget(self.spark, self._table_path(name))
                 if not target.live():
                     continue

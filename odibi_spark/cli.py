@@ -430,8 +430,8 @@ def main(argv: list[str] | None = None) -> int:
             from odibi_spark.operators.layout import write_zordered
             from odibi_spark.patterns.merge_target import ParquetTarget
 
-            reject_partitioned_layout(spark, args.path)
             target = ParquetTarget(spark, args.path)
+            reject_partitioned_layout(target)
             target.live()
             cols = [c.strip() for c in args.zorder_by.split(",") if c.strip()]
             total = sum(sz for _, sz in target.files)

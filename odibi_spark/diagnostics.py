@@ -29,11 +29,11 @@ driver.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from odibi_spark.patterns.merge_target import ParquetTarget
 from odibi_spark.patterns.snapshot_cdc import snapshot_diff
 
 
@@ -63,17 +63,12 @@ class TableDiffResult:
         return dict(self.__dict__)
 
 
-def _scan_files(path: str) -> tuple[int, int]:
+def _scan_files(spark: SparkSession, path: str) -> tuple[int, int]:
     """(file_count, total_bytes) of the data files under a snapshot
     path — the open-format stand-in for numFilesAdded/numBytesAdded."""
-    n, size = 0, 0
-    for root, _dirs, files in os.walk(path):
-        for fname in files:
-            if fname.startswith(("_", ".")):
-                continue
-            n += 1
-            size += os.path.getsize(os.path.join(root, fname))
-    return n, size
+    target = ParquetTarget(spark, path)
+    target.live()
+    return len(target.files), sum(size for _, size in target.files)
 
 
 def frame_diff(
@@ -183,8 +178,8 @@ def table_snapshot_diff(
     df_a = spark.read.format(format).load(path_a)
     df_b = spark.read.format(format).load(path_b)
     rows_a, rows_b = df_a.count(), df_b.count()
-    files_a, size_a = _scan_files(path_a)
-    files_b, size_b = _scan_files(path_b)
+    files_a, size_a = _scan_files(spark, path_a)
+    files_b, size_b = _scan_files(spark, path_b)
     ta = {f.name: f.dataType.simpleString() for f in df_a.schema.fields}
     tb = {f.name: f.dataType.simpleString() for f in df_b.schema.fields}
     res = TableDiffResult(

@@ -31,50 +31,23 @@ import math
 
 from pyspark.sql import SparkSession
 
-from odibi_spark.patterns.merge_target import ParquetTarget
+from odibi_spark.patterns.merge_target import ParquetTarget, hidden
 
 
-def _fs_for(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath, jvm
-
-
-def list_data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """(path, bytes) of every data file directly under ``path``
-    (Hadoop FS API — works on local paths, HDFS, and object stores)."""
-    fs, jpath, _ = _fs_for(spark, path)
-    out = []
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if st.isFile() and not name.startswith((".", "_")):
-            out.append((st.getPath().toString(), int(st.getLen())))
-    return out
-
-
-def reject_partitioned_layout(spark: SparkSession, path: str) -> None:
-    """Raise if ``path`` is a Delta table or holds data in
-    subdirectories (hive-partitioned layout).
-
-    The Delta check must come FIRST and must not hide behind the
-    '_'-prefix skip (ADVICE r5): ``_delta_log`` is exactly the
-    underscore-prefixed directory the data-file listing ignores, and
-    renaming/deleting parquet behind a transaction log corrupts the
-    table for every reader — use ``delta_ops.maintain`` there. A
-    hive-partitioned root-level rewrite would fold partition values
-    into the data files and leave the table unreadable."""
-    fs, jpath, jvm = _fs_for(spark, path)
-    delta_log = jvm.org.apache.hadoop.fs.Path(path, "_delta_log")
-    if fs.exists(delta_log):
+def reject_partitioned_layout(target: ParquetTarget) -> None:
+    """Raise if ``target`` is a Delta table (``_delta_log``, which the
+    data-file listing skips: rewriting parquet behind a transaction log
+    corrupts the table) or holds data in subdirectories (a root-level
+    rewrite would fold partition values into the data files)."""
+    if target._fs.exists(target._at("_delta_log")):
         raise ValueError(
-            f"'{path}' is a Delta table (_delta_log present) — plain-"
+            f"'{target.path}' is a Delta table (_delta_log present) — plain-"
             "parquet compaction would corrupt it; use delta_ops.maintain"
         )
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if st.isDirectory() and not name.startswith((".", "_")):
+    for name, is_dir, _ in target._fs.ls(target.path):
+        if is_dir and not hidden(name):
             raise ValueError(
-                f"'{path}' contains subdirectory '{name}' — layout "
+                f"'{target.path}' contains subdirectory '{name}' — layout "
                 "maintenance works on leaf data directories; run it on "
                 "each partition directory instead"
             )
@@ -99,8 +72,8 @@ def compact_small_files(
     fewer than ``min_files_to_compact`` small files exist or they
     already form no more than the target bin count.
     """
-    reject_partitioned_layout(spark, path)
     target = ParquetTarget(spark, path)
+    reject_partitioned_layout(target)
     target.live()
     files = target.files
     small = [(f, sz) for f, sz in files if sz < target_file_bytes]

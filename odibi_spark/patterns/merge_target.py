@@ -27,6 +27,9 @@ the record: staged files move in, removed files go. Every read first
 re-applies a published record whose staging is still there (applying
 is idempotent) and sweeps staging no record names once its version is
 taken: staging for the next version may be a writer still running.
+A commit builds on the version its writer's first read noted, so data
+read before another writer's commit conflicts. Records are never
+deleted, so no stale writer can reuse a version number.
 After a commit returns the directory holds exactly the committed files,
 so directory readers need no log. A live dir that is unreadable as
 parquet raises rather than reading as absent, so a fold never silently
@@ -38,7 +41,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
 import uuid
 
@@ -52,7 +54,6 @@ from pyspark.sql.types import StructType
 SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 LOG_DIR = "_log"
 STAGING_DIR = "_staging"
-_RECORD_NAME = re.compile(r"(\d+)\.json")
 
 
 class CommitConflict(RuntimeError):
@@ -78,11 +79,18 @@ class ParquetTarget:
         return "/".join((self.path, *parts))
 
     def _latest_version(self) -> int:
-        versions = (
-            int(m.group(1)) for name, _, _ in self._fs.ls(self._at(LOG_DIR))
-            if (m := _RECORD_NAME.fullmatch(name))
-        )
-        return max(versions, default=0)
+        """The newest version, by galloping search in O(log n) probes:
+        versions run densely from 1 (each writer read the one before)."""
+        def taken(n: int) -> bool:
+            return self._fs.exists(self._at(LOG_DIR, f"{n}.json"))
+
+        lo, hi = 0, 1  # taken(lo) (version 0 always is), not taken(hi)
+        while taken(hi):
+            lo, hi = hi, 2 * hi
+        while hi - lo > 1:
+            mid = (lo + hi) // 2
+            lo, hi = (mid, hi) if taken(mid) else (lo, mid)
+        return lo
 
     def record(self, version: int) -> dict | None:
         """The published record of ``version``; None when absent."""
@@ -93,7 +101,9 @@ class ParquetTarget:
         """Finish every published commit, sweep staging no record names,
         and note the version and data files read (see the module
         docstring). Returns whether data files exist. Reads no data, so
-        it launches no Spark job; ``exists`` also checks they read."""
+        it launches no Spark job; ``exists`` also checks they read. A
+        later look keeps the version the first one noted (until a
+        commit), so a commit on data read before it conflicts."""
         version = self._latest_version()
         for name, _, _ in self._fs.ls(self._at(STAGING_DIR)):
             n = int(name.split("-", 1)[0])
@@ -104,8 +114,10 @@ class ParquetTarget:
                 self._apply(rec)
             else:
                 self._fs.delete(self._at(STAGING_DIR, name))
-        self.version, self.files = version, _list_data(self._fs, self.path)
-        return bool(self.files)
+        files = _list_data(self._fs, self.path)
+        if self.version in (None, version):
+            self.version, self.files = version, files
+        return bool(files)
 
     def _data_files(self) -> list[str] | None:
         """The live dir's data files in the order Spark's listing sorts
@@ -202,6 +214,7 @@ class ParquetTarget:
             raise
         self._publish(record)
         self._apply(record)
+        self.version = None
         self.live()  # sweeps staging orphaned at this version
         return record
 
@@ -212,6 +225,7 @@ class ParquetTarget:
 
     def _conflict(self, n: int, staged: str):
         self._fs.delete(staged)
+        self.version = None  # a retry re-reads
         raise CommitConflict(
             f"version {n} of {self.path} was committed by another "
             f"writer after this one read version {n - 1}"
@@ -258,13 +272,19 @@ class ParquetTarget:
     write_initial = overwrite
 
 
+def hidden(name: str) -> bool:
+    """Whether Spark's listing skips ``name``: ``.`` names, and ``_``
+    names but partition dirs (``_load_date=2024-01-01`` is data)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
 def _list_data(fs, root: str, prefix: str = "") -> list[tuple[str, int]]:
     """(path relative to ``root``, bytes) of every data file under
-    ``root``, partition dirs included; ``_``/``.`` names are skipped at
-    every level, as Spark's listing does."""
+    ``root``, partition dirs included; names Spark's listing skips are
+    skipped at every level."""
     out = []
     for name, is_dir, size in fs.ls(root):
-        if name.startswith(("_", ".")):
+        if hidden(name):
             continue
         if is_dir:
             out += _list_data(fs, f"{root}/{name}", f"{prefix}{name}/")
@@ -282,6 +302,9 @@ class _LocalFiles:
                 return [(e.name, e.is_dir(), 0 if e.is_dir() else e.stat().st_size) for e in entries]
         except FileNotFoundError:
             return []
+
+    def exists(self, p: str) -> bool:
+        return os.path.exists(p)
 
     def read_text(self, p: str) -> str | None:
         try:
@@ -348,6 +371,9 @@ class _HadoopFiles:
             (st.getPath().getName(), st.isDirectory(), st.getLen())
             for st in self._fs.listStatus(self._p(d))
         ]
+
+    def exists(self, p: str) -> bool:
+        return bool(self._fs.exists(self._p(p)))
 
     def read_text(self, p: str) -> str | None:
         if not self._fs.exists(self._p(p)):

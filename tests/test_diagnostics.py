@@ -40,6 +40,28 @@ class TestTableSnapshotDiff:
         assert res.schema_added == [] and res.schema_removed == []
         assert res.rows_added is None  # shallow: no row diff ran
 
+    def test_file_counts_skip_the_commit_log(self, spark, tmp_path):
+        """A table written by commits keeps its ``_log`` records beside
+        the data: the file and byte deltas count data files only."""
+        import os
+
+        from odibi_spark.patterns.merge_target import ParquetTarget
+
+        _, b, _, pb = _snapshots(spark, tmp_path)
+        pm = str(tmp_path / "committed")
+        t = ParquetTarget(spark, pm)
+        t.write_initial(b.coalesce(1))
+        t.overwrite(b.coalesce(1))
+        assert len(os.listdir(os.path.join(pm, "_log"))) == 2
+        res = table_snapshot_diff(spark, pb, pm)
+
+        def data_bytes(p):
+            return sum(os.path.getsize(os.path.join(p, f))
+                       for f in os.listdir(p) if f.endswith(".parquet"))
+
+        assert res.files_change == 0
+        assert res.size_change_bytes == data_bytes(pm) - data_bytes(pb)
+
     def test_deep_key_diff(self, spark, tmp_path):
         _, _, pa, pb = _snapshots(spark, tmp_path)
         res = table_snapshot_diff(spark, pa, pb, keys=["id"], deep=True)

@@ -57,6 +57,27 @@ def test_write_partition_by(spark, tmp_path):
     assert got == {1: "x", 2: "x", 3: "z"}
 
 
+def test_upsert_partitioned_by_underscore_column(spark, tmp_path):
+    """A partition column named with a leading ``_`` makes dirs such as
+    ``_load_date=d1``: Spark reads them as data, so each commit's record
+    adds and removes the files under them, and compaction refuses the
+    root as partitioned."""
+    from odibi_spark.io.compact import compact_small_files
+    from odibi_spark.patterns.merge_target import ParquetTarget
+
+    p = str(tmp_path / "t2u")
+    base = spark.createDataFrame([("d1", 1), ("d1", 2)], ["_load_date", "k"])
+    write_sink(base, path=p, mode="upsert", keys=["k"], partition_by=["_load_date"])
+    upd = spark.createDataFrame([("d2", 2), ("d2", 3)], ["_load_date", "k"])
+    write_sink(upd, path=p, mode="upsert", keys=["k"], partition_by=["_load_date"])
+    got = {r.k: r._load_date for r in spark.read.parquet(p).collect()}
+    assert got == {1: "d1", 2: "d2", 3: "d2"}
+    t = ParquetTarget(spark, p, partition_by=["_load_date"])
+    assert t.record(1)["add"] and t.record(2)["add"] and t.record(2)["remove"]
+    with pytest.raises(ValueError, match="subdirectory"):
+        compact_small_files(spark, p)
+
+
 def test_upsert_semantics(spark, tmp_path):
     p = str(tmp_path / "t3")
     base = spark.createDataFrame([Row(k=1, v="a"), Row(k=2, v="b")])

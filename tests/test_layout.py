@@ -9,6 +9,24 @@ from pyspark.sql import functions as F
 from odibi_spark.io import read_table
 
 
+def _data_files(spark, path):
+    """(relative path, bytes) of a table's data files, as a read sees
+    them (a published commit is finished first)."""
+    from odibi_spark.patterns.merge_target import ParquetTarget
+
+    t = ParquetTarget(spark, path)
+    t.live()
+    return t.files
+
+
+def _on_disk(path):
+    """The parquet files directly under ``path`` as they lie on disk,
+    without finishing any commit."""
+    import os
+
+    return {f for f in os.listdir(path) if f.endswith(".parquet")}
+
+
 class TestMortonMath:
     def test_interleave_bits_known_values(self, spark):
         from odibi_spark.operators.layout import interleave_bits
@@ -234,12 +252,12 @@ class TestDataSkipping:
 
 class TestCompaction:
     def test_compacts_many_small_files(self, spark, tmp_path):
-        from odibi_spark.io.compact import compact_small_files, list_data_files
+        from odibi_spark.io.compact import compact_small_files
 
         p = str(tmp_path / "frag")
         df = spark.range(0, 10_000).selectExpr("id", "id % 7 AS k")
         df.repartition(20).write.parquet(p)
-        before = list_data_files(spark, p)
+        before = _data_files(spark, p)
         assert len(before) == 20
         total = sum(sz for _, sz in before)
         stats = compact_small_files(
@@ -271,7 +289,7 @@ class TestCompaction:
         """A compaction that dies after its compacted files moved in but
         before the small files it replaces were deleted (duplicates on
         disk) is finished by the next read: no row lost or doubled."""
-        from odibi_spark.io.compact import compact_small_files, list_data_files
+        from odibi_spark.io.compact import compact_small_files
         from odibi_spark.patterns import merge_target
 
         p = str(tmp_path / "crashy")
@@ -284,9 +302,9 @@ class TestCompaction:
         with pytest.raises(RuntimeError, match="mid-delete"):
             compact_small_files(spark, p, target_file_bytes=1 << 20)
         monkeypatch.undo()
-        assert len(list_data_files(spark, p)) == 5  # 4 originals + 1 compacted
+        assert len(_on_disk(p)) == 5  # 4 originals + 1 compacted
         assert merge_target.ParquetTarget(spark, p).read().count() == 1_000
-        assert len(list_data_files(spark, p)) == 1
+        assert len(_on_disk(p)) == 1
         # nothing left to finish: the next compaction is a no-op
         assert not compact_small_files(spark, p, target_file_bytes=1 << 20)["compacted"]
         assert spark.read.parquet(p).count() == 1_000
@@ -315,12 +333,12 @@ class TestCompaction:
         lands on the committed version."""
         import os
 
-        from odibi_spark.io.compact import compact_small_files, list_data_files
+        from odibi_spark.io.compact import compact_small_files
         from odibi_spark.patterns import merge_target
 
         p = str(tmp_path / "atomic")
         spark.range(0, 200).repartition(4).write.parquet(p)
-        originals = {f for f, _ in list_data_files(spark, p)}
+        originals = _on_disk(p)
 
         def fail(fs, src, dst):
             raise OSError("rename failed")
@@ -329,10 +347,10 @@ class TestCompaction:
         with pytest.raises(OSError, match="rename failed"):
             compact_small_files(spark, p, target_file_bytes=1 << 20)
         monkeypatch.undo()
-        assert {f for f, _ in list_data_files(spark, p)} == originals
+        assert _on_disk(p) == originals
         assert len(os.listdir(os.path.join(p, "_staging"))) == 1
         assert merge_target.ParquetTarget(spark, p).read().count() == 200
-        assert len(list_data_files(spark, p)) == 1
+        assert len(_on_disk(p)) == 1
 
     def test_compaction_racing_a_merge_conflicts(self, spark, tmp_path, monkeypatch):
         """A merge that commits between the compaction's staged write and
@@ -409,20 +427,20 @@ class TestCompactionSafety:
     def test_leaves_large_files_untouched(self, spark, tmp_path):
         """Delta-OPTIMIZE semantics: only under-sized files rewrite;
         files already at target size keep their identity."""
-        from odibi_spark.io.compact import compact_small_files, list_data_files
+        from odibi_spark.io.compact import compact_small_files
 
         p = str(tmp_path / "mix")
         # one 'large' file + many small ones
         spark.range(0, 50_000).selectExpr("id").coalesce(1).write.parquet(p)
         big_before = {
-            f for f, sz in list_data_files(spark, p) if sz > 50_000
+            f for f, sz in _data_files(spark, p) if sz > 50_000
         }
         spark.range(50_000, 51_000).selectExpr("id").repartition(
             10
         ).write.mode("append").parquet(p)
         stats = compact_small_files(spark, p, target_file_bytes=100_000)
         assert stats["compacted"]
-        after = dict(list_data_files(spark, p))
+        after = dict(_data_files(spark, p))
         # the large file survived by NAME (never rewritten)
         assert big_before <= set(after)
         assert spark.read.parquet(p).count() == 51_000
@@ -457,7 +475,6 @@ class TestAutoOptimizeParquet:
         """auto_optimize on a parquet write runs the open compaction
         (the reference's Delta-only knob, open-format impl)."""
         from odibi_spark.io import write_sink
-        from odibi_spark.io.compact import list_data_files
 
         p = str(tmp_path / "ao")
         for _ in range(6):
@@ -465,12 +482,12 @@ class TestAutoOptimizeParquet:
                 spark.range(0, 2000).selectExpr("id").repartition(4),
                 path=p, mode="append",
             )
-        assert len(list_data_files(spark, p)) == 24
+        assert len(_data_files(spark, p)) == 24
         write_sink(
             spark.range(0, 2000).selectExpr("id").repartition(4),
             path=p, mode="append", auto_optimize=True,
         )
-        assert len(list_data_files(spark, p)) < 28
+        assert len(_data_files(spark, p)) < 28
         assert spark.read.parquet(p).count() == 14_000
 
 
@@ -506,7 +523,6 @@ class TestAutoOptimizeGuards:
         """auto_optimize must not tax overwrites, must not crash on
         partitioned layouts, and must not undo a fresh Morton layout."""
         from odibi_spark.io import write_sink
-        from odibi_spark.io.compact import list_data_files
 
         # overwrite: file count stays exactly what coalesce set
         p1 = str(tmp_path / "ow")
@@ -514,7 +530,7 @@ class TestAutoOptimizeGuards:
             spark.range(1000).selectExpr("id").repartition(4),
             path=p1, mode="overwrite", auto_optimize=True,
         )
-        assert len(list_data_files(spark, p1)) == 4
+        assert len(_data_files(spark, p1)) == 4
         # partitioned append: succeeds (no reject_partitioned crash)
         p2 = str(tmp_path / "pt")
         write_sink(
@@ -529,4 +545,4 @@ class TestAutoOptimizeGuards:
             path=p3, zorder_by=["a", "b"], coalesce_partitions=3,
             auto_optimize=True,
         )
-        assert len(list_data_files(spark, p3)) == 3
+        assert len(_data_files(spark, p3)) == 3

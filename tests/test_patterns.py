@@ -1139,6 +1139,52 @@ class TestParquetTargetCrashSafety:
         assert sorted(got.column("tag").to_pylist()) == sorted(["seed", *tags])
         assert os.listdir(os.path.join(path, "_staging")) == []
 
+    def test_commit_built_on_an_older_read_conflicts(self, spark, tmp_path):
+        """Another writer commits between this writer's read and a later
+        look (a URI target's ``max_of`` re-reads through Spark): the
+        look keeps the version the read noted, so the commit conflicts
+        instead of publishing over the other writer's rows."""
+        from odibi_spark.patterns.merge_target import CommitConflict, ParquetTarget
+
+        uri = f"file://{tmp_path}/pinned"
+        ParquetTarget(spark, uri).write_initial(self._rows(spark, 3, "old"))
+        t = ParquetTarget(spark, uri)
+        assert t.read().count() == 3
+        ParquetTarget(spark, uri).overwrite(self._rows(spark, 5, "other"))
+        assert t.max_of("k") == 4
+        with pytest.raises(CommitConflict):
+            t.overwrite(self._rows(spark, 2, "mine"))
+        got = ParquetTarget(spark, uri).read().collect()
+        assert sorted(r.v for r in got) == ["other"] * 5
+        # the conflict drops the note: a retry re-reads and commits
+        t.read()
+        t.overwrite(self._rows(spark, 2, "mine"))
+        assert t.version == 3
+
+    def test_version_lookup_does_not_list_the_log(self, spark, tmp_path, monkeypatch):
+        """The newest of 1000 versions is found in O(log n) probes, so
+        a read costs the same however long the log has grown."""
+        import os
+
+        from odibi_spark.patterns import merge_target
+
+        t = self._target(spark, tmp_path)
+        t.write_initial(self._rows(spark, 1, "v"))
+        for n in range(2, 1001):
+            with open(os.path.join(t.path, "_log", f"{n}.json"), "w") as fh:
+                fh.write("{}")
+        probes = []
+        real_exists = merge_target._LocalFiles.exists
+
+        def counted(fs, p):
+            probes.append(p)
+            return real_exists(fs, p)
+
+        monkeypatch.setattr(merge_target._LocalFiles, "exists", counted)
+        fresh = self._target(spark, tmp_path)
+        assert fresh.live() and fresh.version == 1000
+        assert len(probes) <= 2 * 11
+
     def test_uri_path_commits_through_hadoop(self, spark, tmp_path):
         """A ``file://`` URI takes the Hadoop FileSystem route: the same
         protocol, with the record published by rename."""
