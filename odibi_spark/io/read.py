@@ -7,16 +7,32 @@ pushes it into the scan — reference :672-674), and custom-format
 plugin registration (reference: odibi/engine/base.py:16-28).
 
 Scale note: every reader returns a lazy DataFrame; filters/projections
-supplied here reach the parquet scan as PushedFilters/ReadSchema.
+supplied here reach the parquet scan as PushedFilters/ReadSchema. A
+parquet read on a local flat directory can be planned on the driver
+from the files' footers (``parquet_footers``: Spark's schema from its
+own footer converter, per-file column statistics); given that plan
+(``PlannedRead``) the read infers nothing and opens only the files
+named, so a steady incremental batch costs no metadata job. The
+footers are re-read on every plan: O(files in the directory) small
+driver reads, no data scan.
 """
 
 from __future__ import annotations
 
-import glob
+import json
 import os
 from collections.abc import Callable
+from dataclasses import dataclass
+from typing import Any
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
+
+from odibi_spark.io.append import _is_local
+from odibi_spark.patterns.merge_target import hidden
 
 # Custom format plugins: name -> reader(spark, path, options) -> DataFrame
 _CUSTOM_READERS: dict[str, Callable[..., DataFrame]] = {}
@@ -39,38 +55,215 @@ def list_formats() -> list[str]:
     return sorted(set(_BUILTIN_FORMATS) | set(_CUSTOM_READERS))
 
 
+# footer key under which Spark's writer stores the frame's schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def parquet_files(path: str) -> list[str] | None:
+    """The data files of a local flat parquet directory, sorted, named
+    by Spark's listing rule (``merge_target.hidden``); None where only
+    Spark's listing will do: a URI path, no directory, a partitioned or
+    otherwise nested directory, or summary metadata (``_metadata``,
+    ``_common_metadata``, which Spark's inference reads first)."""
+    if not _is_local(path):
+        return None
+    try:
+        with os.scandir(path) as it:
+            entries = list(it)
+    except OSError:  # absent, or a file
+        return None
+    files = []
+    for e in entries:
+        if e.name in ("_metadata", "_common_metadata"):
+            return None
+        if hidden(e.name):
+            continue
+        if e.is_dir():
+            return None
+        files.append(e.path)
+    return sorted(files)
+
+
+def jvm_class(spark: SparkSession, name: str) -> JavaClass:
+    """The JVM class ``name`` (fully qualified) in one py4j lookup; the
+    ``spark._jvm.org.apache...`` path costs one per package segment."""
+    return JavaClass(name, spark.sparkContext._gateway._gateway_client)
+
+
+def footer_schema(spark: SparkSession, file: str) -> StructType:
+    """The schema Spark's inference gives a parquet file, read from its
+    footer on the driver by Spark's own code
+    (``ParquetFileFormat.readSchemaFromFooter`` with the session's
+    ``ParquetToSparkSchemaConverter``), made nullable as inference does.
+    No job runs."""
+    parquet = "org.apache.spark.sql.execution.datasources.parquet."
+    p = jvm_class(spark, "org.apache.hadoop.fs.Path")(file)
+    meta = jvm_class(spark, parquet + "ParquetFooterReader").readFooter(
+        jvm_class(spark, "org.apache.parquet.hadoop.util.HadoopInputFile").fromPath(
+            p, spark._jsc.hadoopConfiguration()),
+        jvm_class(spark, "org.apache.parquet.format.converter.ParquetMetadataConverter").SKIP_ROW_GROUPS,
+    )
+    converter = jvm_class(spark, parquet + "ParquetToSparkSchemaConverter")(
+        spark._jsparkSession.sessionState().conf())
+    footer = jvm_class(spark, "org.apache.parquet.hadoop.Footer")(p, meta)
+    schema = jvm_class(spark, parquet + "ParquetFileFormat").readSchemaFromFooter(footer, converter)
+    return StructType.fromJson(json.loads(schema.asNullable().json()))
+
+
+#: statistics that cannot tell
+_UNKNOWN = object()
+
+
+def column_stats(meta: pq.FileMetaData, column: str):
+    """(min, max, NULL count) of a top-level INT32/INT64 column over a
+    file's non-empty row groups, from their statistics, as stored (the
+    physical values); min and max are None when no value is non-NULL,
+    the count None when a row group does not record it. ``_UNKNOWN``
+    when the statistics cannot tell min and max."""
+    lo = hi = None
+    nulls = 0
+    for r in range(meta.num_row_groups):
+        rg = meta.row_group(r)
+        if rg.num_rows == 0:
+            continue
+        chunks = [rg.column(j) for j in range(rg.num_columns) if rg.column(j).path_in_schema == column]
+        if len(chunks) != 1 or chunks[0].physical_type not in ("INT32", "INT64"):
+            return _UNKNOWN
+        st = chunks[0].statistics
+        if st is None:
+            return _UNKNOWN
+        if st.has_min_max:
+            lo = st.min_raw if lo is None else min(lo, st.min_raw)
+            hi = st.max_raw if hi is None else max(hi, st.max_raw)
+        elif not (st.has_null_count and st.null_count == rg.num_rows):
+            return _UNKNOWN
+        nulls = nulls + st.null_count if nulls is not None and st.has_null_count else None
+    return lo, hi, nulls
+
+
+@dataclass(frozen=True)
+class FileStats:
+    """One data file's HWM column statistics, in the units Spark compares
+    the column in (epoch microseconds, epoch days or the integer); min
+    and max are None when it holds no non-NULL value, ``_UNKNOWN`` when
+    the statistics cannot tell (the file is then always opened)."""
+
+    path: str
+    min: Any
+    max: Any
+    nulls: int | None
+
+
+@dataclass(frozen=True)
+class Footers:
+    schema: StructType
+    files: list[FileStats]
+
+
+@dataclass(frozen=True)
+class PlannedRead:
+    """A parquet read planned on the driver: Spark's schema of the
+    directory, and the files to open (None: the whole directory)."""
+
+    schema: StructType
+    files: list[str] | None = None
+
+
+def _stat_scale(col: pq.ColumnSchema) -> int | None:
+    """Factor from stored values to Spark's comparison units: 1 for
+    signed integers, dates and microsecond timestamps, 1000 for
+    millisecond timestamps; None for anything else (unsigned, nanos)."""
+    logical = json.loads(col.logical_type.to_json()) if col.logical_type.type != "NONE" else {}
+    kind = logical.get("Type")
+    if kind == "Timestamp":
+        return {"milliseconds": 1000, "microseconds": 1}.get(logical.get("timeUnit"))
+    if kind in (None, "Date") or (kind == "Int" and logical.get("isSigned")):
+        ok = ("NONE", "DATE", "INT_8", "INT_16", "INT_32", "INT_64")
+        return 1 if col.converted_type in ok else None
+    return None
+
+
+def parquet_footers(spark: SparkSession, path: str, column: str) -> Footers | None:
+    """Schema and per-file ``column`` statistics of a parquet directory,
+    read from the footers on the driver; None unless they give exactly
+    Spark's answer: a flat local directory (``parquet_files``) whose
+    every data file reads as parquet with one identical schema and no
+    legacy-calendar datetimes, and a top-level integer, date or
+    timestamp (ms/µs) ``column`` stored as INT32/INT64."""
+    files = parquet_files(path)
+    if not files:
+        return None
+    try:
+        metas = [pq.read_metadata(f) for f in files]
+    except (OSError, pa.ArrowException):  # not parquet: Spark raises the reader's error
+        return None
+    first = metas[0]
+    spark_schema = (first.metadata or {}).get(SPARK_SCHEMA_KEY)
+    for m in metas:
+        kv = m.metadata or {}
+        if (not m.schema.equals(first.schema) or kv.get(SPARK_SCHEMA_KEY) != spark_schema
+                or any(k.startswith(b"org.apache.spark.legacy") for k in kv)):
+            return None
+    leaves = [first.schema.column(i) for i in range(len(first.schema))]
+    col = next((c for c in leaves if c.path == column), None)
+    if (col is None or col.physical_type not in ("INT32", "INT64") or col.max_repetition_level
+            or any("nanoseconds" in c.logical_type.to_json() for c in leaves)):
+        return None
+    scale = _stat_scale(col)
+    if scale is None:
+        return None
+    schema = footer_schema(spark, files[0])
+    if column not in schema.names:
+        return None
+    stats = []
+    for f, m in zip(files, metas):
+        st = column_stats(m, column)
+        if st is _UNKNOWN:
+            stats.append(FileStats(f, _UNKNOWN, _UNKNOWN, None))
+        else:
+            lo, hi, nulls = st
+            stats.append(FileStats(f, None if lo is None else lo * scale,
+                                   None if hi is None else hi * scale, nulls))
+    return Footers(schema, stats)
+
+
 def _nanos_timestamp_columns(path: str) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS), which Spark's vectorized
     reader rejects outright. Footer inspection is a driver-side metadata
     read (no data scan), so it's O(1) regardless of table size."""
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:
+    files = parquet_files(path) if os.path.isdir(path) else [path]
+    if not files:
         return []
-    target = path
-    if os.path.isdir(path):
-        files = glob.glob(os.path.join(path, "*.parquet"))
-        if not files:
-            return []
-        target = files[0]
     try:
-        schema = pq.read_schema(target)
+        schema = pq.read_schema(files[0])
     except Exception:
         return []
     return [f.name for f in schema if str(f.type) == "timestamp[ns]"]
 
 
-def read_parquet(spark: SparkSession, path: str, **options: str) -> DataFrame:
+def read_parquet(
+    spark: SparkSession, path: str, planned: PlannedRead | None = None, **options: str
+) -> DataFrame:
     """Parquet read that tolerates TIMESTAMP(NANOS) columns.
 
     Spark has no nanosecond timestamp type; ``nanosAsLong`` reads them
     as epoch-nanos LONG, which we truncate to microseconds — the same
     truncation DuckDB/pyarrow apply — restoring TimestampType.
+
+    ``planned`` (from the footers) gives the schema, so nothing is
+    inferred, and the files to open; none gives an empty frame.
     """
     ns_cols = _nanos_timestamp_columns(path)
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.options(**options).parquet(path)
+    if planned is None:
+        df = spark.read.options(**options).parquet(path)
+    elif planned.files == []:
+        jschema = jvm_class(spark, "org.apache.spark.sql.types.DataType").fromJson(planned.schema.json())
+        rows = jvm_class(spark, "java.util.ArrayList")()
+        df = DataFrame(spark._jsparkSession.createDataFrame(rows, jschema), spark)
+    else:
+        df = spark.read.options(**options).schema(planned.schema).parquet(*(planned.files or [path]))
     dtypes = dict(df.dtypes)
     for c in ns_cols:
         # Only convert when nanosAsLong actually kicked in (INT64 nanos).
@@ -172,12 +365,15 @@ def read_source(
     filter: str | None = None,
     columns: list[str] | None = None,
     streaming: bool = False,
+    planned: PlannedRead | None = None,
 ) -> DataFrame:
     """Declarative read (reference: spark_engine.py:856-888 batch,
     :830-855 streaming; read-time filter :672-674).
 
     ``filter``/``columns`` are applied immediately after load so they
     are part of the scan plan (predicate pushdown + column pruning).
+    ``planned`` is a parquet read planned from the footers (see
+    ``read_parquet``).
     """
     fmt = format.lower()
     opts = {k: str(v) for k, v in (options or {}).items()}
@@ -210,7 +406,7 @@ def read_source(
     elif table:
         df = spark.read.table(table)
     elif fmt == "parquet":
-        df = read_parquet(spark, path, **opts)
+        df = read_parquet(spark, path, planned, **opts)
     elif fmt == "csv":
         # bool header normalization (reference: spark_engine.py:866)
         opts.setdefault("header", "true")

@@ -10,9 +10,10 @@ patterns, ``write_sink``'s merge modes, compaction, ``maintain
 --zorder-by``, the catalog's rewrites and the CMS state. It is the seam
 where ``DeltaTable`` plugs in on a real cluster. Each instance learns
 the schema at most once; on a local unpartitioned target it comes from
-the first data file's footer, and ``max_of`` from row-group statistics,
-so neither launches a Spark job (URI paths, partitioned dirs and files
-without the metadata fall back to Spark).
+the first data file's footer through Spark's own converter
+(``io.read.footer_schema``), and ``max_of`` from row-group statistics,
+so neither launches a Spark job (URI paths, partitioned dirs and
+row groups without statistics fall back to Spark).
 
 A commit (the model is Structured Streaming's ``_spark_metadata`` log):
 a read notes the newest version n (0 without a ``_log``) and the data
@@ -50,8 +51,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
-# footer key under which Spark's writer stores the frame's schema
-SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 LOG_DIR = "_log"
 STAGING_DIR = "_staging"
 
@@ -120,31 +119,20 @@ class ParquetTarget:
         return bool(files)
 
     def _data_files(self) -> list[str] | None:
-        """The live dir's data files in the order Spark's listing sorts
-        them, or None where only Spark's listing will do: a URI path, a
-        partitioned (or otherwise nested) directory, summary metadata,
-        or no live dir (Spark raises the error a reader expects)."""
-        if not isinstance(self._fs, _LocalFiles) or self.partition_by:
-            return None
-        names = {name for name, _, _ in self._fs.ls(self.path)}
-        files = _list_data(self._fs, self.path)
-        if not names or names & {"_metadata", "_common_metadata"} or any("/" in f for f, _ in files):
-            return None
-        return [f"{self.path}/{f}" for f, _ in files]
+        """The live dir's data files, or None where only Spark's listing
+        will do (``io.read.parquet_files``; a partitioned target)."""
+        from odibi_spark.io.read import parquet_files  # io imports this module
+
+        return None if self.partition_by else parquet_files(self.path)
 
     def _footer_schema(self) -> StructType | None:
-        """The schema Spark's writer stored in the footer of the first
-        data file (the file non-merging inference reads), read on the
-        driver, so no job runs; the reader makes it nullable as inference
-        does. None when the file carries no Spark schema (a
-        pyarrow-written file) or ``_data_files`` is None."""
+        """Spark's inferred schema, read on the driver from the first
+        data file's footer (``io.read.footer_schema``), so no job runs.
+        None when ``_data_files`` is None or empty."""
+        from odibi_spark.io.read import footer_schema
+
         files = self._data_files()
-        if not files:
-            return None
-        stored = (pq.read_metadata(files[0]).metadata or {}).get(SPARK_SCHEMA_KEY)
-        if stored is None:
-            return None
-        return StructType.fromJson(json.loads(stored))
+        return footer_schema(self.spark, files[0]) if files else None
 
     def _infer_schema(self) -> StructType:
         return self._footer_schema() or self.spark.read.parquet(self.path).schema
@@ -154,15 +142,13 @@ class ParquetTarget:
         is folded from the footers' row-group statistics on the driver;
         a URI path, a partitioned target or a non-empty row group
         without min/max statistics takes a Spark aggregate instead."""
+        from odibi_spark.io.read import _UNKNOWN, column_stats
+
         files = self._data_files()
-        maxima = [_UNKNOWN] if files is None else []
-        for path in files or []:
-            meta = pq.read_metadata(path)
-            maxima += [_row_group_max(meta.row_group(i), column)
-                       for i in range(meta.num_row_groups)]
-        if any(m is _UNKNOWN for m in maxima):
+        stats = [_UNKNOWN] if files is None else [column_stats(pq.read_metadata(f), column) for f in files]
+        if any(st is _UNKNOWN for st in stats):
             return self.read().agg(F.max(column)).collect()[0][0]
-        return max((m for m in maxima if m is not None), default=None)
+        return max((hi for _, hi, _ in stats if hi is not None), default=None)
 
     def exists(self) -> bool:
         if self.live():
@@ -409,25 +395,3 @@ class _HadoopFiles:
     def prune(self, d: str) -> None:
         if self._fs.exists(self._p(d)) and not self._fs.listStatus(self._p(d)):
             self._fs.delete(self._p(d), False)
-
-
-_UNKNOWN = object()
-
-
-def _row_group_max(rg: pq.RowGroupMetaData, column: str):
-    """One row group's max of an integer column from its statistics:
-    None when it holds no non-NULL value, ``_UNKNOWN`` when the
-    statistics cannot tell (absent, or not an integer column)."""
-    if rg.num_rows == 0:
-        return None
-    for j in range(rg.num_columns):
-        chunk = rg.column(j)
-        if chunk.path_in_schema != column:
-            continue
-        stats = chunk.statistics
-        if stats is None or chunk.physical_type not in ("INT32", "INT64"):
-            return _UNKNOWN
-        if stats.has_min_max:
-            return stats.max
-        return None if stats.null_count == rg.num_rows else _UNKNOWN
-    return _UNKNOWN

@@ -92,6 +92,7 @@ class NodeExecutor:
 
             # ---- read phase (optional for generating patterns)
             df = None
+            plan = None  # a stateful HWM batch planned from the footers
             if cfg.read:
                 if cfg.read.format.lower() == "simulation":
                     from odibi_spark.sources.simulation import generate
@@ -112,6 +113,7 @@ class NodeExecutor:
                         cfg.read.connection, cfg.read.path,
                         cfg.read.table, cfg.read.options,
                     )
+                    plan = self._footer_plan(r_path, r_table, r_options)
                     df = read_source(
                         spark,
                         format=cfg.read.format,
@@ -122,6 +124,7 @@ class NodeExecutor:
                         filter=cfg.read.filter,
                         columns=cfg.read.columns,
                         streaming=cfg.read.streaming,
+                        planned=plan.read if plan else None,
                     )
             elif cfg.depends_on:
                 df = self.context.get(cfg.depends_on[0])
@@ -130,7 +133,7 @@ class NodeExecutor:
             # full load on first run (no target), else HWM/rolling filter
             hwm_state = hwm_key = None
             if cfg.incremental:
-                df, hwm_state, hwm_key = self._apply_incremental(df)
+                df, hwm_state, hwm_key = self._apply_incremental(df, plan)
                 hwm_rows = df  # the rows read: the HWM source below
 
             # ---- input contracts (circuit breakers, pre-transform):
@@ -200,11 +203,13 @@ class NodeExecutor:
             # ---- capture HWM before the write (committed only after).
             # It is the max of the rows READ after the HWM filter, not of
             # the output: a row a transform drops or validation
-            # quarantines is never re-read, and the column-pruned max
-            # over the batch scan re-runs no transform, pattern or
-            # lookup join.
+            # quarantines is never re-read. The footer plan knows it from
+            # the statistics; else the column-pruned max over the batch
+            # scan re-runs no transform, pattern or lookup join.
             new_hwm = None
-            if hwm_state is not None:
+            if plan is not None and plan.hwm_known:
+                new_hwm = plan.hwm
+            elif hwm_state is not None:
                 from odibi_spark.state.hwm import capture_hwm
 
                 new_hwm = capture_hwm(hwm_rows, cfg.incremental.column)
@@ -364,22 +369,15 @@ class NodeExecutor:
             write_sink(quarantined, path=quarantine_path, mode="append")
         return clean
 
-    def _apply_incremental(self, df):
-        """Returns (filtered_df, state_backend|None, state_key|None)."""
+    def _hwm_state(self):
+        """(state backend, state key, target exists) of a stateful
+        incremental node."""
         import os
 
-        from odibi_spark.state.hwm import (
-            JsonStateBackend,
-            incremental_filter,
-            rolling_window_filter,
-        )
+        from odibi_spark.state.hwm import JsonStateBackend
 
         inc = self.config.incremental
-        if inc.mode == "rolling":
-            assert inc.lookback, "rolling incremental requires 'lookback'"
-            return rolling_window_filter(df, column=inc.column, lookback=inc.lookback), None, None
-        state_path = self.config.state_path or "_odibi_state.json"
-        state = JsonStateBackend(state_path)
+        state = JsonStateBackend(self.config.state_path or "_odibi_state.json")
         key = inc.state_key or f"{self.config.name}:{inc.column}"
         target_exists = True
         if self.config.write and self.config.write.path:
@@ -392,6 +390,43 @@ class NodeExecutor:
                 target_exists = True
             else:
                 target_exists = os.path.exists(resolved)
+        return state, key, target_exists
+
+    def _footer_plan(self, path, table, options):
+        """The batch planned from the source's parquet footers
+        (``state.hwm.plan_from_footers``), or None: only a plain parquet
+        path read of a stateful node without ``fallback_column`` or
+        ``first_run_filter`` is planned, so the footers answer for the
+        same rows the filter would keep."""
+        cfg, inc = self.config, self.config.incremental
+        if not (
+            inc and inc.mode == "stateful" and not inc.fallback_column
+            and not inc.first_run_filter and cfg.read.format.lower() == "parquet"
+            and path and not table and not options and not cfg.read.streaming
+            and not (cfg.read.filter or cfg.read.columns or cfg.read.schema_ddl)
+        ):
+            return None
+        from odibi_spark.io.read import _CUSTOM_READERS
+        from odibi_spark.state.hwm import plan_from_footers
+
+        if "parquet" in _CUSTOM_READERS:
+            return None
+        state, key, target_exists = self._hwm_state()
+        hwm = state.get(key) if target_exists else None
+        return plan_from_footers(
+            self.context.spark, path, column=inc.column, hwm=hwm,
+            watermark_lag=inc.watermark_lag,
+        )
+
+    def _apply_incremental(self, df, plan=None):
+        """Returns (filtered_df, state_backend|None, state_key|None)."""
+        from odibi_spark.state.hwm import incremental_filter, rolling_window_filter
+
+        inc = self.config.incremental
+        if inc.mode == "rolling":
+            assert inc.lookback, "rolling incremental requires 'lookback'"
+            return rolling_window_filter(df, column=inc.column, lookback=inc.lookback), None, None
+        state, key, target_exists = self._hwm_state()
         first_run = state.get(key) is None or not target_exists
         if first_run and inc.first_run_filter:
             # bootstrap override: bounded first load instead of the
@@ -401,6 +436,7 @@ class NodeExecutor:
             df, column=inc.column, state=state, state_key=key,
             fallback_column=inc.fallback_column,
             watermark_lag=inc.watermark_lag, target_exists=target_exists,
+            covered=plan is not None and plan.covered,
         )
         return out, state, key
 

@@ -13,19 +13,33 @@ pipeline.py:1537-1543) — crash between write and commit replays rows
 The new HWM is the maximum of the rows the node READ, after the HWM
 filter — not of its transformed, pattern or validated output. Rows a
 transform drops or validation quarantines are therefore not re-read
-on every later run, and the capture is one column-pruned top-1 job
-over the batch scan.
+on every later run.
+
+A node reading a local flat parquet directory plans the batch from the
+files' footers (``plan_from_footers``, the model is Structured
+Streaming's file source): it opens only the files whose max passes the
+cutoff, drops the predicate when every opened file's minimum already
+passes it, and takes the new HWM from the same statistics, so neither
+the read nor the capture launches a Spark job. Everywhere else the HWM
+is ``capture_hwm``'s one column-pruned top-1 job over the batch scan.
+Timestamp HWMs are stored in the session zone (``format_hwm``), the
+zone the filter's cast parses them back in.
 """
 
 from __future__ import annotations
 
+import datetime
 import fcntl
 import json
 import os
+import re
 import tempfile
 from abc import ABC, abstractmethod
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
+
+from odibi_spark.io.read import _UNKNOWN, PlannedRead, _replace_ntz, jvm_class, parquet_footers
 
 
 class StateBackend(ABC):
@@ -116,22 +130,29 @@ def incremental_filter(
     fallback_column: str | None = None,
     watermark_lag: str | None = None,
     target_exists: bool = True,
+    covered: bool = False,
 ) -> DataFrame:
     """Stateful HWM filter (reference node.py:1075-1108):
     ``WHERE col > last_hwm [- watermark_lag]``; first run (no state or
-    no target) -> full load (smart read, reference :1032-1040)."""
+    no target) -> full load (smart read, reference :1032-1040).
+    ``covered``: the footers proved every row of ``df`` passes the
+    cutoff (``FooterPlan.covered``), so the predicate is left out."""
     hwm = state.get(state_key)
-    if hwm is None or not target_exists:
+    if hwm is None or not target_exists or covered:
         return df
     col = (
         F.coalesce(F.col(column), F.col(fallback_column))
         if fallback_column
         else F.col(column)
     )
+    return df.filter(col > _cutoff(hwm, df.schema[column].dataType, column, watermark_lag))
+
+
+def _cutoff(hwm: str, dtype: T.DataType, column: str, watermark_lag: str | None) -> Column:
+    """``hwm [- watermark_lag]`` as a literal of the column's type."""
     # Cast the stored (string) HWM to the column's OWN type: an
     # unconditional timestamp cast turns a numeric HWM ('12345') into
     # NULL, and `col > NULL` silently reads zero new rows.
-    dtype = df.schema[column].dataType
     cutoff = F.lit(hwm).cast(dtype)
     if watermark_lag:
         if not isinstance(dtype, (T.TimestampType, T.TimestampNTZType, T.DateType)):
@@ -140,7 +161,7 @@ def incremental_filter(
                 f"'{column}' is {dtype.simpleString()}"
             )
         cutoff = cutoff - F.expr(f"INTERVAL {watermark_lag}")
-    return df.filter(col > cutoff)
+    return cutoff
 
 
 def rolling_window_filter(df: DataFrame, *, column: str, lookback: str) -> DataFrame:
@@ -158,15 +179,144 @@ def capture_hwm(df: DataFrame, column: str) -> str | None:
     ``incremental_filter`` returned them: the optimizer prunes the scan
     to the one column, and the result is the max of exactly the rows
     the batch consumed. Taken as the top row of a descending order
-    (nulls last): one Spark job, where a global ``max`` aggregate runs
-    a shuffle map stage and a result stage as two."""
-    rows = (
-        df.select(F.col(column).alias("m"))
-        .orderBy(F.desc_nulls_last("m"))
-        .limit(1)
-        .collect()
+    (nulls last): one column-pruned top-1 job, where a global ``max``
+    aggregate runs a shuffle map stage and a result stage as two. A
+    TIMESTAMP is collected as epoch microseconds, not as a datetime
+    (which PySpark renders in the driver process's zone), and stored
+    by ``format_hwm``."""
+    dtype = df.schema[column].dataType
+    m = F.unix_micros(F.col(column)) if isinstance(dtype, T.TimestampType) else F.col(column)
+    rows = df.select(m.alias("m")).orderBy(F.desc_nulls_last("m")).limit(1).collect()
+    if not rows or rows[0].m is None:
+        return None
+    return format_hwm(df.sparkSession, rows[0].m, dtype)
+
+
+def format_hwm(spark: SparkSession, value, dtype: T.DataType) -> str:
+    """The stored string of an HWM: a TIMESTAMP ``value`` is epoch
+    microseconds, rendered as wall-clock time in the session zone (the
+    zone ``incremental_filter``'s cast parses it back in, by the
+    session's own zone rules); any other value is ``str``'d."""
+    if not isinstance(dtype, T.TimestampType):
+        return str(value)
+    zone = jvm_class(spark, "org.apache.spark.sql.catalyst.util.DateTimeUtils").getZoneId(
+        spark.conf.get("spark.sql.session.timeZone"))
+    secs, micros = divmod(value, 1_000_000)
+    instant = jvm_class(spark, "java.time.Instant").ofEpochSecond(secs)
+    offset = zone.getRules().getOffset(instant).getTotalSeconds()
+    return str(_EPOCH + datetime.timedelta(seconds=secs + offset, microseconds=micros))
+
+
+_EPOCH = datetime.datetime(1970, 1, 1)
+
+
+@dataclass(frozen=True)
+class FooterPlan:
+    """A stateful HWM batch planned from parquet footers."""
+
+    #: the schema and the files to open (None: the whole directory)
+    read: PlannedRead
+    #: every opened file's non-NULL values pass the cutoff and it holds
+    #: no NULL, so ``col > cutoff`` keeps every row: the filter is left out
+    covered: bool
+    #: the batch's new HWM (None: no non-NULL value read, keep the old one)
+    hwm: str | None
+    #: False when a file without statistics was opened: ``capture_hwm``
+    #: takes the HWM instead
+    hwm_known: bool
+
+
+def plan_from_footers(
+    spark: SparkSession,
+    path: str,
+    *,
+    column: str,
+    hwm: str | None,
+    watermark_lag: str | None = None,
+) -> FooterPlan | None:
+    """Plan a stateful batch over the parquet directory ``path`` from its
+    footers, or None where they cannot give Spark's answer
+    (``io.read.parquet_footers``; a timestamp column outside a UTC
+    session). ``hwm`` is the stored HWM, None on a full load. A file is
+    opened when its max passes ``hwm [- watermark_lag]`` or it has no
+    statistics; all of them selected reads the directory as a whole."""
+    footers = parquet_footers(spark, path, column)
+    if footers is None:
+        return None
+    dtype, _ = _replace_ntz(footers.schema[column].dataType)
+    if isinstance(dtype, T.TimestampType) and spark.conf.get("spark.sql.session.timeZone") != "UTC":
+        return None
+    if hwm is None:
+        cut = None
+    else:
+        cut = _raw_cutoff(spark, hwm, dtype, column, watermark_lag)
+        if cut is None:  # `col > NULL` reads nothing; leave that to Spark
+            return None
+    chosen = [f for f in footers.files if f.max is _UNKNOWN or cut is None or (f.max is not None and f.max > cut)]
+    covered = all(
+        f.max is not _UNKNOWN and f.nulls == 0 and (cut is None or f.min > cut)
+        for f in chosen
     )
-    return None if not rows or rows[0].m is None else str(rows[0].m)
+    hwm_known = all(f.max is not _UNKNOWN for f in chosen)
+    top = max((f.max for f in chosen if f.max is not None), default=None) if hwm_known else None
+    if top is not None and isinstance(dtype, T.DateType):
+        top = _EPOCH.date() + datetime.timedelta(days=top)
+    files = None if len(chosen) == len(footers.files) else [f.path for f in chosen]
+    return FooterPlan(
+        read=PlannedRead(footers.schema, files),
+        covered=covered,
+        hwm=None if top is None else format_hwm(spark, top, dtype),
+        hwm_known=hwm_known,
+    )
+
+
+def _raw_cutoff(spark: SparkSession, hwm: str, dtype: T.DataType, column: str,
+                watermark_lag: str | None):
+    """``hwm [- watermark_lag]`` by Spark's cast rules, in the units the
+    footer statistics compare in (epoch microseconds, epoch days or the
+    integer); None when the cast gives NULL. A string exactly as
+    ``format_hwm`` writes it is parsed here; anything else, and a lag,
+    is evaluated by Spark over a one-row local relation, which the
+    optimizer folds without a job."""
+    if not watermark_lag:
+        parsed = _parse_stored(hwm, dtype)
+        if parsed is not None:
+            return parsed
+    cutoff = _cutoff(hwm, dtype, column, watermark_lag)
+    if isinstance(dtype, T.TimestampType):
+        cutoff = F.unix_micros(cutoff)
+    elif isinstance(dtype, T.DateType):
+        cutoff = F.unix_date(cutoff)
+    row = jvm_class(spark, "org.apache.spark.sql.RowFactory").create(
+        spark.sparkContext._gateway.new_array(jvm_class(spark, "java.lang.Object"), 0))
+    one = jvm_class(spark, "java.util.ArrayList")()
+    one.add(row)
+    frame = DataFrame(spark._jsparkSession.createDataFrame(
+        one, jvm_class(spark, "org.apache.spark.sql.types.StructType")()), spark)
+    return frame.select(cutoff.alias("v")).collect()[0].v
+
+
+_INT_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32, T.LongType: 64}
+
+
+def _parse_stored(hwm: str, dtype: T.DataType):
+    """The raw value of ``hwm`` when it is exactly a string
+    ``format_hwm`` writes for ``dtype`` (a timestamp in a UTC session),
+    where Python's parse equals Spark's cast; None otherwise."""
+    try:
+        if isinstance(dtype, T.TimestampType):
+            if re.fullmatch(r"\d{4}-\d\d-\d\d \d\d:\d\d:\d\d(\.\d{6})?", hwm):
+                return (datetime.datetime.fromisoformat(hwm) - _EPOCH) // datetime.timedelta(microseconds=1)
+        elif isinstance(dtype, T.DateType):
+            if re.fullmatch(r"\d{4}-\d\d-\d\d", hwm):
+                return (datetime.date.fromisoformat(hwm) - _EPOCH.date()).days
+        elif type(dtype) in _INT_BITS and re.fullmatch(r"-?\d+", hwm):
+            bits = _INT_BITS[type(dtype)]
+            value = int(hwm)
+            return value if -(2 ** (bits - 1)) <= value < 2 ** (bits - 1) else None
+    except ValueError:  # e.g. 2024-02-30: Spark's cast decides
+        return None
+    return None
 
 
 class DeltaStateBackend(StateBackend):
