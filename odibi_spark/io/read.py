@@ -19,6 +19,7 @@ driver reads, no data scan.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 from collections.abc import Callable
@@ -163,10 +164,11 @@ class Footers:
 @dataclass(frozen=True)
 class PlannedRead:
     """A parquet read planned on the driver: Spark's schema of the
-    directory, and the files to open (None: the whole directory)."""
+    directory, and the files to open, named from the listing the plan
+    was built from (the directory is not listed again)."""
 
     schema: StructType
-    files: list[str] | None = None
+    files: list[str]
 
 
 def _stat_scale(col: pq.ColumnSchema) -> int | None:
@@ -230,8 +232,15 @@ def parquet_footers(spark: SparkSession, path: str, column: str) -> Footers | No
 def _nanos_timestamp_columns(path: str) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS), which Spark's vectorized
     reader rejects outright. Footer inspection is a driver-side metadata
-    read (no data scan), so it's O(1) regardless of table size."""
-    files = parquet_files(path) if os.path.isdir(path) else [path]
+    read (no data scan), so it's O(1) regardless of table size. A
+    directory ``parquet_files`` leaves to Spark (summary metadata, a
+    subdirectory) is judged by its first top-level ``*.parquet`` file."""
+    if os.path.isdir(path):
+        files = parquet_files(path)
+        if files is None:
+            files = sorted(glob.glob(os.path.join(glob.escape(path), "*.parquet")))
+    else:
+        files = [path]
     if not files:
         return []
     try:
@@ -251,19 +260,20 @@ def read_parquet(
     truncation DuckDB/pyarrow apply — restoring TimestampType.
 
     ``planned`` (from the footers) gives the schema, so nothing is
-    inferred, and the files to open; none gives an empty frame.
+    inferred, and the files to open; none gives an empty frame. A
+    planned read has no TIMESTAMP(NANOS) column (``parquet_footers``).
     """
-    ns_cols = _nanos_timestamp_columns(path)
+    ns_cols = [] if planned else _nanos_timestamp_columns(path)
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if planned is None:
         df = spark.read.options(**options).parquet(path)
-    elif planned.files == []:
+    elif not planned.files:
         jschema = jvm_class(spark, "org.apache.spark.sql.types.DataType").fromJson(planned.schema.json())
         rows = jvm_class(spark, "java.util.ArrayList")()
         df = DataFrame(spark._jsparkSession.createDataFrame(rows, jschema), spark)
     else:
-        df = spark.read.options(**options).schema(planned.schema).parquet(*(planned.files or [path]))
+        df = spark.read.options(**options).schema(planned.schema).parquet(*planned.files)
     dtypes = dict(df.dtypes)
     for c in ns_cols:
         # Only convert when nanosAsLong actually kicked in (INT64 nanos).

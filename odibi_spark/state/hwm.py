@@ -22,8 +22,9 @@ cutoff, drops the predicate when every opened file's minimum already
 passes it, and takes the new HWM from the same statistics, so neither
 the read nor the capture launches a Spark job. Everywhere else the HWM
 is ``capture_hwm``'s one column-pruned top-1 job over the batch scan.
-Timestamp HWMs are stored in the session zone (``format_hwm``), the
-zone the filter's cast parses them back in.
+Timestamp HWMs are stored as Spark renders them in the session zone,
+the zone the filter's cast parses them back in; the footer plan runs
+only in a UTC session and writes the same string (``format_hwm``).
 """
 
 from __future__ import annotations
@@ -32,7 +33,6 @@ import datetime
 import fcntl
 import json
 import os
-import re
 import tempfile
 from abc import ABC, abstractmethod
 from dataclasses import dataclass
@@ -181,30 +181,33 @@ def capture_hwm(df: DataFrame, column: str) -> str | None:
     the batch consumed. Taken as the top row of a descending order
     (nulls last): one column-pruned top-1 job, where a global ``max``
     aggregate runs a shuffle map stage and a result stage as two. A
-    TIMESTAMP is collected as epoch microseconds, not as a datetime
-    (which PySpark renders in the driver process's zone), and stored
-    by ``format_hwm``."""
-    dtype = df.schema[column].dataType
-    m = F.unix_micros(F.col(column)) if isinstance(dtype, T.TimestampType) else F.col(column)
-    rows = df.select(m.alias("m")).orderBy(F.desc_nulls_last("m")).limit(1).collect()
+    TIMESTAMP is cast to its string by Spark, in the session zone (the
+    zone ``incremental_filter``'s cast parses it back in), not
+    collected as a datetime, which PySpark renders in the driver
+    process's zone."""
+    top = df.select(F.col(column).alias("m")).orderBy(F.desc_nulls_last("m")).limit(1)
+    if isinstance(df.schema[column].dataType, T.TimestampType):
+        top = top.select(F.col("m").cast("string").alias("m"))
+    rows = top.collect()
     if not rows or rows[0].m is None:
         return None
-    return format_hwm(df.sparkSession, rows[0].m, dtype)
+    return str(rows[0].m)
 
 
-def format_hwm(spark: SparkSession, value, dtype: T.DataType) -> str:
-    """The stored string of an HWM: a TIMESTAMP ``value`` is epoch
-    microseconds, rendered as wall-clock time in the session zone (the
-    zone ``incremental_filter``'s cast parses it back in, by the
-    session's own zone rules); any other value is ``str``'d."""
-    if not isinstance(dtype, T.TimestampType):
-        return str(value)
-    zone = jvm_class(spark, "org.apache.spark.sql.catalyst.util.DateTimeUtils").getZoneId(
-        spark.conf.get("spark.sql.session.timeZone"))
-    secs, micros = divmod(value, 1_000_000)
-    instant = jvm_class(spark, "java.time.Instant").ofEpochSecond(secs)
-    offset = zone.getRules().getOffset(instant).getTotalSeconds()
-    return str(_EPOCH + datetime.timedelta(seconds=secs + offset, microseconds=micros))
+def format_hwm(value: int, dtype: T.DataType) -> str:
+    """The stored string of an HWM taken from footer statistics, as
+    ``capture_hwm`` stores the same value: a TIMESTAMP ``value`` is
+    epoch microseconds, written as UTC wall-clock time the way Spark
+    casts a timestamp to string in a UTC session (fraction trimmed of
+    trailing zeros); a DATE is epoch days; an integer is ``str``'d.
+    OverflowError beyond Python's years 1-9999."""
+    if isinstance(dtype, T.TimestampType):
+        at = _EPOCH + datetime.timedelta(microseconds=value)
+        text = at.isoformat(sep=" ")
+        return text.rstrip("0") if at.microsecond else text
+    if isinstance(dtype, T.DateType):
+        return str(_EPOCH.date() + datetime.timedelta(days=value))
+    return str(value)
 
 
 _EPOCH = datetime.datetime(1970, 1, 1)
@@ -214,7 +217,8 @@ _EPOCH = datetime.datetime(1970, 1, 1)
 class FooterPlan:
     """A stateful HWM batch planned from parquet footers."""
 
-    #: the schema and the files to open (None: the whole directory)
+    #: the schema and the files to open, named from the one listing the
+    #: footers were read from
     read: PlannedRead
     #: every opened file's non-NULL values pass the cutoff and it holds
     #: no NULL, so ``col > cutoff`` keeps every row: the filter is left out
@@ -239,7 +243,10 @@ def plan_from_footers(
     (``io.read.parquet_footers``; a timestamp column outside a UTC
     session). ``hwm`` is the stored HWM, None on a full load. A file is
     opened when its max passes ``hwm [- watermark_lag]`` or it has no
-    statistics; all of them selected reads the directory as a whole."""
+    statistics. The files are always named, even when all are opened:
+    a file landing after the listing is left to the next batch, whose
+    footers then see it, so the rows read and the new HWM describe the
+    same files."""
     footers = parquet_footers(spark, path, column)
     if footers is None:
         return None
@@ -259,13 +266,14 @@ def plan_from_footers(
     )
     hwm_known = all(f.max is not _UNKNOWN for f in chosen)
     top = max((f.max for f in chosen if f.max is not None), default=None) if hwm_known else None
-    if top is not None and isinstance(dtype, T.DateType):
-        top = _EPOCH.date() + datetime.timedelta(days=top)
-    files = None if len(chosen) == len(footers.files) else [f.path for f in chosen]
+    try:
+        text = None if top is None else format_hwm(top, dtype)
+    except OverflowError:  # beyond Python's datetime: Spark formats it
+        return None
     return FooterPlan(
-        read=PlannedRead(footers.schema, files),
+        read=PlannedRead(footers.schema, [f.path for f in chosen]),
         covered=covered,
-        hwm=None if top is None else format_hwm(spark, top, dtype),
+        hwm=text,
         hwm_known=hwm_known,
     )
 
@@ -274,14 +282,9 @@ def _raw_cutoff(spark: SparkSession, hwm: str, dtype: T.DataType, column: str,
                 watermark_lag: str | None):
     """``hwm [- watermark_lag]`` by Spark's cast rules, in the units the
     footer statistics compare in (epoch microseconds, epoch days or the
-    integer); None when the cast gives NULL. A string exactly as
-    ``format_hwm`` writes it is parsed here; anything else, and a lag,
-    is evaluated by Spark over a one-row local relation, which the
-    optimizer folds without a job."""
-    if not watermark_lag:
-        parsed = _parse_stored(hwm, dtype)
-        if parsed is not None:
-            return parsed
+    integer); None when the cast gives NULL. Spark evaluates it over a
+    one-row local relation, which the optimizer folds: no job runs and
+    no class is generated."""
     cutoff = _cutoff(hwm, dtype, column, watermark_lag)
     if isinstance(dtype, T.TimestampType):
         cutoff = F.unix_micros(cutoff)
@@ -294,29 +297,6 @@ def _raw_cutoff(spark: SparkSession, hwm: str, dtype: T.DataType, column: str,
     frame = DataFrame(spark._jsparkSession.createDataFrame(
         one, jvm_class(spark, "org.apache.spark.sql.types.StructType")()), spark)
     return frame.select(cutoff.alias("v")).collect()[0].v
-
-
-_INT_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32, T.LongType: 64}
-
-
-def _parse_stored(hwm: str, dtype: T.DataType):
-    """The raw value of ``hwm`` when it is exactly a string
-    ``format_hwm`` writes for ``dtype`` (a timestamp in a UTC session),
-    where Python's parse equals Spark's cast; None otherwise."""
-    try:
-        if isinstance(dtype, T.TimestampType):
-            if re.fullmatch(r"\d{4}-\d\d-\d\d \d\d:\d\d:\d\d(\.\d{6})?", hwm):
-                return (datetime.datetime.fromisoformat(hwm) - _EPOCH) // datetime.timedelta(microseconds=1)
-        elif isinstance(dtype, T.DateType):
-            if re.fullmatch(r"\d{4}-\d\d-\d\d", hwm):
-                return (datetime.date.fromisoformat(hwm) - _EPOCH.date()).days
-        elif type(dtype) in _INT_BITS and re.fullmatch(r"-?\d+", hwm):
-            bits = _INT_BITS[type(dtype)]
-            value = int(hwm)
-            return value if -(2 ** (bits - 1)) <= value < 2 ** (bits - 1) else None
-    except ValueError:  # e.g. 2024-02-30: Spark's cast decides
-        return None
-    return None
 
 
 class DeltaStateBackend(StateBackend):

@@ -81,7 +81,7 @@ def _stored(spark, kind: str, v) -> str:
     if kind == "date":
         return str(BASE.date() + datetime.timedelta(days=v))
     micros = (v * 60 + int((BASE - datetime.datetime(1970, 1, 1)).total_seconds())) * 1_000_000
-    return format_hwm(spark, micros, T.TimestampType())
+    return format_hwm(micros, T.TimestampType())
 
 
 def _both_paths(spark, d: str, stored: str | None, lag: str | None = None):
@@ -144,10 +144,56 @@ def test_cases_pin_selection_and_predicate(spark, tmp_path):
     assert above.hwm == "2024-01-01 00:30:00"
     straddle = plan_from_footers(spark, d, column="v", hwm=_stored(spark, "ts", 4))
     assert len(straddle.read.files) == 2 and not straddle.covered
-    # a non-canonical stored string takes Spark's cast, with the same answer
+    # a non-canonical stored string is cast by Spark to the same cutoff
     spark_cast = plan_from_footers(spark, d, column="v", hwm="2024-01-01T00:05:00")
     assert spark_cast == above
-    assert plan_from_footers(spark, d, column="v", hwm=None).read.files is None
+    # a full load names every listed file
+    full = plan_from_footers(spark, d, column="v", hwm=None)
+    assert sorted(full.read.files) == sorted(os.path.join(d, f) for f in os.listdir(d))
+
+
+@pytest.mark.parametrize("at", [
+    "2024-01-01 03:00:00", "2024-01-01 03:00:00.5", "2024-01-01 03:00:00.000001",
+    "2024-02-29 23:59:59.999999", "1969-12-31 23:59:59.9", "0999-12-31 00:00:00.12",
+    "9999-12-31 23:59:59",
+])
+def test_format_hwm_writes_the_string_capture_hwm_stores(spark, at):
+    """The footer plan's HWM string for a timestamp or date is the one
+    ``capture_hwm`` has Spark write for the same value (UTC session)."""
+    df = spark.sql(f"SELECT TIMESTAMP'{at}' AS v, DATE(TIMESTAMP'{at}') AS d")
+    r = df.selectExpr("unix_micros(v) AS m", "unix_date(d) AS days").collect()[0]
+    assert format_hwm(r.m, T.TimestampType()) == capture_hwm(df, "v") == at
+    assert format_hwm(r.days, T.DateType()) == capture_hwm(df, "d") == at[:10]
+
+
+def test_file_landing_after_the_plan_waits_for_the_next_batch(spark, tmp_path, monkeypatch):
+    """A file landing between the footer listing and the read is not
+    read by that batch, whose HWM comes from the listed files, but by
+    the next one: each row is written once, on a full load and on a
+    steady batch alike (a late file below the cutoff is never read)."""
+    src, out, state = (str(tmp_path / n) for n in ("src", "out", "state.json"))
+    y = _pipeline(src, out, state, spark_path=False)
+    real = hwm.plan_from_footers
+
+    def run_landing(files):
+        def then_land(*args, **kwargs):
+            plan = real(*args, **kwargs)
+            _land(src, "ts", files)
+            return plan
+
+        monkeypatch.setattr(hwm, "plan_from_footers", then_land)
+        assert Pipeline.from_yaml(y, spark).run()["sink"].status == "success"
+        monkeypatch.setattr(hwm, "plan_from_footers", real)
+
+    _land(src, "ts", [[1, 2, 3]])
+    run_landing([[4, 5]])
+    assert JsonStateBackend(state).get("sink:v") == "2024-01-01 00:03:00"
+    run_landing([[0, 1], [6]])
+    assert JsonStateBackend(state).get("sink:v") == "2024-01-01 00:05:00"
+    assert Pipeline.from_yaml(y, spark).run()["sink"].status == "success"
+    assert JsonStateBackend(state).get("sink:v") == "2024-01-01 00:06:00"
+    minutes = sorted(r.v.minute for r in spark.read.parquet(out).collect())
+    assert minutes == [1, 2, 3, 4, 5, 6]
 
 
 def test_fallbacks(spark, tmp_path):
@@ -176,7 +222,7 @@ def test_fallbacks(spark, tmp_path):
     _land(bare, "int", [[1, 2], [5, 6]], write_statistics=False)
     want, got, plan = _both_paths(spark, bare, "2")
     assert got == want and want[1] == "6"
-    assert plan.read.files is None and not plan.covered and not plan.hwm_known
+    assert len(plan.read.files) == 2 and not plan.covered and not plan.hwm_known
     # a column the footers cannot compare: a decimal
     dec = str(tmp_path / "dec")
     os.makedirs(dec)

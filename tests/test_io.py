@@ -25,6 +25,24 @@ def test_read_table_nanos_timestamp(spark):
     assert [r.ts for r in got] == [w[0] for w in want]
 
 
+@pytest.mark.parametrize("beside", ["_common_metadata", "subdir"])
+def test_nanos_timestamp_beside_summary_metadata_or_a_subdirectory(spark, tmp_path, beside):
+    """A directory Spark must list itself still has its TIMESTAMP(NANOS)
+    column found, read as a timestamp truncated to microseconds."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pa.table({"at": pa.array([1_704_067_200_123_456_789], pa.timestamp("ns"))})
+    pq.write_table(t, tmp_path / "part-0.parquet", version="2.6")
+    if beside == "_common_metadata":
+        pq.write_metadata(t.schema, tmp_path / "_common_metadata", version="2.6")
+    else:
+        (tmp_path / "extra").mkdir()
+    df = read_source(spark, format="parquet", path=str(tmp_path))
+    assert dict(df.dtypes)["at"] == "timestamp"
+    assert df.select(F.unix_micros("at").alias("m")).collect()[0].m == 1_704_067_200_123_456
+
+
 def test_read_source_filter_pushdown(spark):
     df = read_source(
         spark, format="parquet", path=f"{SF}/lineitem.parquet",
