@@ -28,23 +28,22 @@ def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     simple, deterministic stand-in for model-based quality classifiers.
     """
     t = F.col(text_col)
-    words = F.split(F.trim(t), " ")
-    n_words = F.size(words)
-    stop_hits = F.size(F.filter(words, lambda w: w.isin("the", "a")))
-    return (
-        df.withColumn("n_chars_obs", F.length(t))
-        .withColumn("n_words", n_words)
-        .withColumn(
-            "avg_word_len",
-            (F.length(t) - (n_words - F.lit(1))) / n_words,
-        )
-        .withColumn("stopword_ratio", stop_hits / n_words)
-        .withColumn(
-            "quality_score",
-            F.expr("ln(1 + size(split(trim({t}), ' ')))".format(t=text_col))
-            * (F.lit(1.0) - stop_hits / n_words),
-        )
+    # project the word array and the stopword count ONCE: the filter
+    # lambda is interpreted and HOFs don't CSE, so inlining them would
+    # split and filter the text once per output column
+    out = df.withColumn("__w", F.split(F.trim(t), " "))
+    out = out.withColumn(
+        "__stop", F.size(F.filter("__w", lambda w: w.isin("the", "a")))
     )
+    n_words = F.size("__w")
+    stop_ratio = F.col("__stop") / n_words
+    return out.withColumns({
+        "n_chars_obs": F.length(t),
+        "n_words": n_words,
+        "avg_word_len": (F.length(t) - (n_words - F.lit(1))) / n_words,
+        "stopword_ratio": stop_ratio,
+        "quality_score": F.ln(F.lit(1) + n_words) * (F.lit(1.0) - stop_ratio),
+    }).drop("__w", "__stop")
 
 
 def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -97,7 +96,7 @@ def repetition_signals(
     appendix A1.1): documents dominated by repeated lines or a single
     frequent n-gram are low-quality boilerplate.
 
-    Adds per-document:
+    Adds per row:
     - ``dup_line_fraction``: occurrences belonging to lines that appear
       >= 2 times in the doc / total lines
     - ``dup_line_char_fraction``: characters inside those repeated
@@ -106,78 +105,74 @@ def repetition_signals(
       most frequent word ``ngram``-gram (count x gram length) / doc
       characters; 0.0 when the doc has fewer than ``ngram`` words
 
-    Plan shape (scales linearly): explode lines / n-grams -> two
-    groupBys keyed by (doc, line|gram) then doc — both shuffles move
-    one row per distinct line/gram, all aggregation is map-side
-    partial first, everything whole-stage codegen (no Python, no HOF
-    interpretation in the hot path). Joined back on ``id_col``; at
-    100 TB each branch is a co-partitioned aggregate of the same scan.
+    Each row is scored from its own text: rows sharing an ``id_col``
+    value are not pooled, a NULL id is scored like any other, and NULL
+    text gets 0.0. Output columns: ``id_col``, the other input
+    columns, then the three signals.
+
+    Plan shape: one row-local projection, no explode, shuffle or join,
+    so the upstream plan runs once. ``array_sort`` makes equal lines
+    (n-grams) adjacent and one ``aggregate`` per array folds their runs
+    into the long sums (long max) that per-value counts would give, so
+    the divisions are exact. All JVM-side, no Python.
     """
     t = F.col(text_col)
+    one = F.lit(1).cast("long")
 
-    # line_delim is a Java regex (split semantics); pass r"\. " for
-    # sentence-level segmentation of single-line corpora
-    lines = df.select(
-        F.col(id_col), F.explode(F.split(t, line_delim)).alias("line")
-    )
-    per_line = lines.groupBy(id_col, "line").agg(
-        F.count(F.lit(1)).alias("cnt"), F.length("line").alias("line_chars")
-    )
-    line_stats = per_line.groupBy(id_col).agg(
-        (
-            F.sum(F.when(F.col("cnt") >= 2, F.col("cnt")).otherwise(F.lit(0)))
-            / F.sum("cnt")
-        ).alias("dup_line_fraction"),
-        (
-            F.sum(
-                F.when(
-                    F.col("cnt") >= 2, F.col("cnt") * F.col("line_chars")
-                ).otherwise(F.lit(0))
-            )
-            / F.greatest(F.sum(F.col("cnt") * F.col("line_chars")), F.lit(1))
-        ).alias("dup_line_char_fraction"),
-    )
+    def fold_runs(arr, **fields):
+        # each field folds (value, run, x): run counts the copies of x
+        # seen so far in the sorted array (prev is NULL only at start)
+        def merge(acc, x):
+            run = F.when(x.eqNullSafe(acc["prev"]), acc["run"] + one).otherwise(one)
+            return F.struct(x.alias("prev"), run.alias("run"), *[
+                f(acc[k], run, x).alias(k) for k, f in fields.items()])
+        start = [F.lit(None).cast("string").alias("prev")] + [
+            F.lit(0).cast("long").alias(k) for k in ["run", *fields]]
+        return F.aggregate(F.array_sort(arr), F.struct(*start), merge)
 
-    # project the word array ONCE before the gram lambda: interpreted
-    # HOFs don't CSE, so an inlined split() would re-split the text per
-    # gram index — O(words^2) string work (same trap word_shingles
-    # documents; measured ~5x slower end-to-end at sf0.1)
-    words = df.select(
-        F.col(id_col),
-        F.length(t).alias("doc_chars"),
-        F.split(F.trim(t), " ").alias("__w"),
-    )
-    grams = words.select(
-        F.col(id_col),
-        "doc_chars",
-        F.explode(
-            # CASE guard: sequence(1, 0) is DESCENDING [1,0], not empty,
-            # so short docs must yield array() explicitly
-            F.expr(
-                f"CASE WHEN size(__w) >= {ngram} THEN "
-                f"transform(sequence(1, size(__w) - {ngram - 1}), "
-                f"i -> concat_ws(' ', slice(__w, i, {ngram}))) "
-                f"ELSE array() END"
-            )
-        ).alias("gram"),
-    )
-    top_gram = (
-        grams.groupBy(id_col, "doc_chars", "gram")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .groupBy(id_col)
-        .agg(
-            (
-                F.max(F.col("cnt") * F.length("gram"))
-                / F.greatest(F.first("doc_chars"), F.lit(1))
-            ).alias("top_ngram_char_fraction")
-        )
-    )
+    def dup(run):
+        # a run reaching 2 adds both copies, each later copy adds one
+        return F.when(run == 2, 2).when(run > 2, 1).otherwise(0).cast("long")
 
-    out = df.join(line_stats, id_col, "left").join(top_gram, id_col, "left")
-    return out.fillna(
-        {"dup_line_fraction": 0.0, "dup_line_char_fraction": 0.0,
-         "top_ngram_char_fraction": 0.0}
+    # project both arrays ONCE before the lambdas: interpreted HOFs
+    # don't CSE, so an inlined split() would re-split the text per gram
+    # index — O(words^2) string work (same trap word_shingles documents;
+    # measured ~5x slower end-to-end at sf0.1). line_delim is a Java
+    # regex (split semantics, limit -1 so trailing empty lines count);
+    # pass r"\. " for sentence-level segmentation of single-line corpora
+    out = df.withColumns({
+        "__l": F.split(t, line_delim), "__w": F.split(F.trim(t), " "),
+    })
+    # CASE guard: sequence(1, 0) is DESCENDING [1,0], not empty, so
+    # short docs must yield array() explicitly
+    grams = F.expr(
+        f"CASE WHEN size(__w) >= {ngram} THEN "
+        f"transform(sequence(1, size(__w) - {ngram - 1}), "
+        f"i -> concat_ws(' ', slice(__w, i, {ngram}))) "
+        f"ELSE array() END"
     )
+    out = out.withColumns({
+        "__lines": fold_runs(
+            "__l",
+            dup=lambda v, run, x: v + dup(run),
+            dup_chars=lambda v, run, x: v + dup(run) * F.length(x),
+            chars=lambda v, run, x: v + F.length(x),
+        ),
+        "__top": fold_runs(
+            grams, top=lambda v, run, x: F.greatest(v, run * F.length(x))
+        )["top"],
+    })
+    lines = F.col("__lines")
+    signals = {
+        "dup_line_fraction": lines["dup"] / F.size("__l"),
+        "dup_line_char_fraction": lines["dup_chars"]
+        / F.greatest(lines["chars"], F.lit(1)),
+        "top_ngram_char_fraction": F.col("__top")
+        / F.greatest(F.length(t), F.lit(1)),
+    }
+    rest = [c for c in df.columns if c != id_col]
+    return out.select(id_col, *rest, *[
+        F.coalesce(v, F.lit(0.0)).alias(k) for k, v in signals.items()])
 
 
 # Stopwords from the published Gopher rule (Rae et al. 2021, A1.1):

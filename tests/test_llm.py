@@ -497,6 +497,147 @@ class TestRepetitionSignals:
         plan = repetition_signals(df)._jdf.queryExecution().executedPlan().toString()
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
+    @staticmethod
+    def _reference(doc, ngram, delim):
+        """The three signals of one document by counting, in Python."""
+        import re
+        from collections import Counter
+
+        if doc is None:
+            return (0.0, 0.0, 0.0)
+        lines = Counter(re.split(delim, doc))
+        dup = sum(n for n in lines.values() if n >= 2)
+        dup_chars = sum(n * len(x) for x, n in lines.items() if n >= 2)
+        chars = sum(n * len(x) for x, n in lines.items())
+        words = doc.strip(" ").split(" ")
+        grams = Counter(
+            " ".join(words[i:i + ngram]) for i in range(len(words) - ngram + 1)
+        )
+        top = max((n * len(g) for g, n in grams.items()), default=0)
+        return (
+            dup / sum(lines.values()),
+            dup_chars / max(chars, 1),
+            top / max(len(doc), 1),
+        )
+
+    def test_matches_counter_reference(self, spark):
+        """Property: every row's signals equal an independent Counter-
+        based count of its own text, for ngram 1-3 and both delimiters
+        (Java's split with limit -1 and re.split agree on these)."""
+        from hypothesis import HealthCheck, example, given, settings
+        from hypothesis import strategies as st
+
+        from odibi_spark.llm.text import repetition_signals
+
+        piece = st.sampled_from(
+            ["a", "b", "ab", "é", "日本", " ", "  ", "\n", "\n\n", ". ", "."]
+        )
+        doc = st.one_of(
+            st.none(), st.just(""), st.lists(piece, max_size=14).map("".join)
+        )
+
+        @given(
+            docs=st.lists(doc, min_size=1, max_size=8),
+            ngram=st.integers(1, 3),
+            delim=st.sampled_from(["\n", r"\. "]),
+        )
+        @example(
+            docs=[None, "", "a", " a  a ", "x\nx\n", "\nb\n\nb", "é. é. é"],
+            ngram=3, delim="\n",
+        )
+        @example(docs=["a. a. b. ", ". . ", "日本 日本"], ngram=2, delim=r"\. ")
+        @settings(max_examples=15, deadline=None,
+                  suppress_health_check=[HealthCheck.too_slow])
+        def check(docs, ngram, delim):
+            df = spark.createDataFrame(
+                list(enumerate(docs)), "doc_id long, text string"
+            )
+            out = repetition_signals(df, ngram=ngram, line_delim=delim)
+            got = {
+                r.doc_id: (r.dup_line_fraction, r.dup_line_char_fraction,
+                           r.top_ngram_char_fraction)
+                for r in out.collect()
+            }
+            want = {
+                i: self._reference(d, ngram, delim) for i, d in enumerate(docs)
+            }
+            assert got == want
+
+        check()
+
+    def test_one_job_without_exchange_or_join(self, spark):
+        """Row-local: on a materialized input the signals are one
+        projection, launched as one job with no shuffle and no join."""
+        import uuid
+
+        from pyspark.sql import Row
+
+        from odibi_spark.llm.text import repetition_signals
+
+        df = spark.createDataFrame([
+            Row(doc_id=i, text=f"x y x\nline {i}\nline {i}") for i in range(20)
+        ]).localCheckpoint()
+        out = repetition_signals(df)
+        sc = spark.sparkContext
+        group = f"repetition-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = out.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        assert len(rows) == 20
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan and "Join" not in plan, plan
+
+    def test_curation_chain_runs_python_udf_once(self, spark):
+        """The row-local stages of the benchmark's curation chain
+        (clean_unicode .. gopher_quality) read their upstream once, so
+        clean_unicode's Arrow NFC UDF appears once in the plan; a
+        join-back puts one copy of it under every branch."""
+        import odibi_spark.operators  # noqa: F401  registers transforms
+        from pyspark.sql import Row
+
+        from odibi_spark import Context, EngineContext, get_registry
+
+        df = spark.createDataFrame([
+            Row(doc_id=1, text="caf\u00c3\u00a9 line\nline"),
+            Row(doc_id=2, text="plain text"),
+        ])
+        ctx = EngineContext(Context(spark), df)
+        for name, params in [
+            ("clean_unicode", {}),
+            ("text_stats", {}),
+            ("repetition_signals", {"id_col": "doc_id"}),
+            ("gopher_quality", {}),
+        ]:
+            ctx = get_registry().apply(name, ctx, params)
+        plan = ctx.df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython [") == 1, plan
+
+    def test_rows_keep_their_own_signals(self, spark):
+        """Rows sharing an id are not pooled and a NULL id is scored
+        like any other row; the id column comes first, then the input's
+        other columns, then the three signals."""
+        from odibi_spark.llm.text import repetition_signals
+
+        df = spark.createDataFrame(
+            [("a\na", "x", 1), ("b\nc", "y", 1), ("d\nd\ne", "z", None)],
+            "text string, tag string, doc_id long",
+        )
+        out = repetition_signals(df)
+        assert out.columns == [
+            "doc_id", "text", "tag", "dup_line_fraction",
+            "dup_line_char_fraction", "top_ngram_char_fraction",
+        ]
+        got = {r.tag: (r.doc_id, r.dup_line_fraction, r.dup_line_char_fraction)
+               for r in out.collect()}
+        assert got == {
+            "x": (1, 1.0, 1.0),
+            "y": (1, 0.0, 0.0),
+            "z": (None, 2 / 3, 2 / 3),
+        }
+
 
 class TestCuration:
     """Decontamination + deterministic sampling (llm/curation.py)."""
