@@ -13,9 +13,8 @@ reference-scale path recommends):
 
 - ``{path}/codes`` — (nbr_id, cell, pq_codes) parquet partitioned by
   (batch_id, cell): replaying a crashed batch dynamically overwrites
-  its own partitions (the SignatureStore exactly-once idiom), and a
-  probe reads only the cell directories its queries route to (static
-  partition pruning).
+  its own partitions, and a probe reads only the cell directories its
+  queries route to (static partition pruning).
 - ``{path}/_index_meta.json`` — pins the FULL index identity:
   geometry (nlist/m/k/dim/iters) AND the trained parameters
   (coarse centroids + PQ codebooks, a few KB of floats). An append or
@@ -41,7 +40,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from odibi_spark.llm import similarity
 
@@ -334,11 +333,13 @@ def run_incremental_ann(
     )
     # ONE job computes the delta's row count and its HWM together
     # (previously count() + capture_hwm ran two scans of the delta;
-    # r15 job-count trim — same values, max() stringified exactly as
-    # capture_hwm does)
-    row = delta.agg(
-        F.count(F.lit(1)).alias("n"), F.max(id_col).alias("m")
-    ).collect()[0]
+    # r15 job-count trim). A TIMESTAMP max is cast to string by Spark,
+    # in the session zone, as capture_hwm does: collected as a datetime
+    # it would render in the driver process's zone
+    m = F.max(id_col)
+    if isinstance(delta.schema[id_col].dataType, T.TimestampType):
+        m = m.cast("string")
+    row = delta.agg(F.count(F.lit(1)).alias("n"), m.alias("m")).collect()[0]
     n = int(row["n"])
     if n:
         store.append(delta, id_col, vec_col, batch_id=batch_id)

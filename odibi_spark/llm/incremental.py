@@ -24,9 +24,9 @@ next to the corpus) and, per batch, only:
    two-batch replay provably equal to a one-shot pass (the declared
    ``dedup_incremental_docs`` workload hash-checks exactly that
    against a one-shot DuckDB oracle);
-5. appends the delta's signatures to the store partitioned by
-   batch id with dynamic partition overwrite, so a crashed-and-
-   replayed batch overwrites its own partition instead of duplicating
+5. appends the delta's signatures and band keys to the store as one
+   commit partitioned by batch id; a crashed-and-replayed batch's
+   commit replaces its own earlier files instead of duplicating
    signatures (exactly-once store maintenance, at-least-once safe);
 6. commits the new HWM only AFTER the store append succeeds
    (reference pipeline.py:1537-1543 commit discipline).
@@ -39,13 +39,12 @@ what makes replay order-insensitive.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from odibi_spark.llm import dedup
+from odibi_spark.patterns.merge_target import ParquetTarget, _list_data
 from odibi_spark.state.hwm import StateBackend, capture_hwm, incremental_filter
 
 
@@ -69,8 +68,8 @@ def _with_bucket(banded: DataFrame, n_buckets: int) -> DataFrame:
 #: under-sized buckets for wide band keys (the portable hasher's bh
 #: is rows_per_band rendered decimals, ~3x an xxhash64 key — VERDICT
 #: r15 #8). Clamped to [8, 4096]; the resolved modulus AND the sizing
-#: inputs are pinned in ``_store_meta.json`` like every other layout
-#: property, so probes and later appends adopt them.
+#: inputs are pinned in the commit record's meta like every other
+#: layout property, so probes and later appends adopt them.
 BUCKET_TARGET_BYTES = 20_000_000
 
 
@@ -99,8 +98,7 @@ class SignatureStore:
     with the same layout on a real cluster). Two sub-tables:
 
     - ``{path}/sigs``  — (id, h0..h{num_perm-1}) partitioned by
-      ingestion batch: replaying a batch dynamically overwrites its
-      own partition, so the store never double-counts a crashed run;
+      ingestion batch;
     - ``{path}/bands`` — (id, band, bh) partitioned by
       (batch_id, bucket) where bucket = xxhash64(bh) mod n_buckets.
       Band keys are computed ONCE at append time (VERDICT r5 task 6):
@@ -108,11 +106,19 @@ class SignatureStore:
       partition pruning reads only matching bucket directories and the
       store is never re-hashed or scanned wholesale.
 
-    ``_store_meta.json`` pins the band geometry (bands/rows_per_band/
-    hasher/n_buckets); a probe or append with different parameters
-    raises instead of silently joining incompatible band keys.
-    (Layout v2 — the r5 single-table layout has no migration path;
-    rebuild the store by replaying batches.)
+    The store is one ``ParquetTarget`` (``patterns.merge_target``) and
+    one append is one commit: both sub-tables are staged, then one
+    ``_log/<n>.json`` record publishes them, so signatures and band
+    keys land together or not at all. A replayed batch's record removes
+    the files of its earlier attempt, so the store never double-counts
+    a crashed run, and two appends that read the same version conflict
+    (``CommitConflict``). The record's ``meta`` pins the band geometry
+    (bands/rows_per_band/hasher/n_buckets, and the sizing inputs of an
+    adaptive modulus); a probe with different parameters raises
+    instead of silently joining incompatible band keys. A store with
+    data files but no record meta (one written before appends were
+    commits, with its geometry in a side file) raises too: its
+    geometry is unknown, so rebuild it by replaying batches.
     """
 
     def __init__(
@@ -132,17 +138,32 @@ class SignatureStore:
         self.hasher = hasher
         # None = adaptive: resolved at first append from the batch's
         # signature count (see _adaptive_buckets), then pinned in the
-        # meta; an int pins the layout explicitly as before
+        # record's meta; an int pins the layout explicitly
         self.n_buckets = None if n_buckets is None else int(n_buckets)
+        self._target = ParquetTarget(spark, path)
         self._sigs = os.path.join(path, "sigs")
         self._bands = os.path.join(path, "bands")
-        self._meta = os.path.join(path, "_store_meta.json")
         # estimated band-row width backing an adaptive n_buckets
         # resolution (recorded in the meta for auditability)
         self._row_bytes: int | None = None
 
+    def _live(self) -> dict | None:
+        """Roll a published append forward (``ParquetTarget.live``) and
+        return the committed meta; None while the store holds no data."""
+        if not self._target.live():
+            return None
+        meta = (self._target.record(self._target.version) or {}).get("meta")
+        if not meta:
+            raise ValueError(
+                f"signature store {self.path} has data files but no "
+                "commit record pinning its band geometry (a store "
+                "written before appends were commits): rebuild it by "
+                "replaying batches"
+            )
+        return meta
+
     def exists(self) -> bool:
-        return os.path.exists(self._sigs)
+        return self._live() is not None
 
     def _config(self) -> dict:
         cfg = {
@@ -155,6 +176,10 @@ class SignatureStore:
             cfg["band_row_bytes"] = self._row_bytes
             cfg["bucket_target_bytes"] = BUCKET_TARGET_BYTES
         return cfg
+
+    def _adopt(self, meta: dict) -> None:
+        self.bands, self.rows_per_band = meta["bands"], meta["rows_per_band"]
+        self.hasher, self.n_buckets = meta["hasher"], meta["n_buckets"]
 
     def _est_row_bytes(self, signatures: DataFrame) -> int:
         from pyspark.sql import types as T
@@ -171,21 +196,17 @@ class SignatureStore:
     def check_config(
         self, *, bands: int, rows_per_band: int, hasher: str
     ) -> None:
-        """Raise when probe parameters disagree with the persisted band
+        """Raise when probe parameters disagree with the committed band
         geometry — mismatched bands would silently produce join keys
-        that never match the stored ones."""
+        that never match the stored ones. Otherwise ADOPT the committed
+        layout: n_buckets is a store property, not a probe argument,
+        and probing with another modulus would prune to the wrong
+        partitions and silently miss dups."""
+        have = self._live()
+        if have is None:
+            return  # nothing committed: the first append pins the geometry
         want = {"bands": int(bands), "rows_per_band": int(rows_per_band),
                 "hasher": hasher}
-        if not os.path.exists(self._meta):
-            # meta not yet durable (crash before the first append's
-            # meta write): nothing to verify against — adopt the probe
-            # geometry rather than false-raising on constructor
-            # defaults during replay
-            self.bands, self.rows_per_band = want["bands"], want["rows_per_band"]
-            self.hasher = hasher
-            return
-        with open(self._meta) as fh:
-            have = json.load(fh)
         mismatch = {
             k: (v, have.get(k)) for k, v in want.items() if have.get(k) != v
         }
@@ -194,11 +215,7 @@ class SignatureStore:
                 f"signature store {self.path} was written with a different "
                 f"band geometry: {mismatch} (want, stored)"
             )
-        # n_buckets is a store-layout property, not a probe argument:
-        # ADOPT the persisted value — probing with a different modulus
-        # would prune to the wrong partitions and silently miss dups
-        if "n_buckets" in have:
-            self.n_buckets = int(have["n_buckets"])
+        self._adopt(have)
 
     def read(self) -> DataFrame | None:
         if not self.exists():
@@ -208,39 +225,22 @@ class SignatureStore:
     def read_bands(self, buckets: list[int] | None = None) -> DataFrame | None:
         """Banded store rows (id, band, bh); ``buckets`` narrows the
         read to those partition directories (static partition
-        pruning — the probe passes the delta's own bucket set).
-
-        Bands without a meta file are UNTRUSTED (ADVICE r6): their
-        bucket modulus / band geometry may differ from this process's
-        constructor values (pre-fix stores wrote meta after bands), so
-        pruning could read the wrong partitions and silently miss
-        dups. Returning None routes the probe to the recompute-from-
-        signatures fallback, which assumes nothing about stored keys.
-        """
-        if not os.path.exists(self._bands) or not os.path.exists(self._meta):
+        pruning — the probe passes the delta's own bucket set)."""
+        if not self.exists():
             return None
         df = self.spark.read.parquet(self._bands)
         if buckets is not None:
             df = df.filter(F.col("bucket").isin([int(b) for b in buckets]))
         return df.select("id", "band", "bh")
 
-    def _write_meta(self) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        tmp = self._meta + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(self._config(), fh)
-        os.replace(tmp, self._meta)
-
-    def _write_sigs(self, signatures: DataFrame, batch_id: str) -> None:
+    def _write_sigs(self, signatures: DataFrame, batch_id: str, root: str) -> None:
         (
             signatures.withColumn("batch_id", F.lit(str(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self._sigs)
+            .write.partitionBy("batch_id")
+            .parquet(f"{root}/sigs")
         )
 
-    def _write_bands(self, signatures: DataFrame, batch_id: str) -> None:
+    def _write_bands(self, signatures: DataFrame, batch_id: str, root: str) -> None:
         banded = _with_bucket(
             dedup.band_keys(
                 signatures, self.bands, self.rows_per_band, self.hasher
@@ -255,111 +255,54 @@ class SignatureStore:
             # (batch, bucket) directory
             banded.repartition("bucket")
             .withColumn("batch_id", F.lit(str(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "bucket")
-            .parquet(self._bands)
+            .write.partitionBy("batch_id", "bucket")
+            .parquet(f"{root}/bands")
         )
 
     def append(self, signatures: DataFrame, batch_id: str) -> None:
-        """Append one batch. Ordering invariant (ADVICE r6): persisted
-        BANDS never exist without a meta pinning their geometry —
-        read_bands refuses meta-less bands, and every sigs-without-
-        bands / meta-without-data crash window replays into either the
-        recompute fallback or a clean re-stamp (below). r16: the meta
-        is resolved and written FIRST (its adaptive bucket count now
-        comes from a count of the caller's — typically checkpointed —
-        signature frame, not a re-read of freshly written parquet),
-        and the sigs and bands tables are then written as two
-        CONCURRENT jobs (guide §2.6 — independent writes of the same
-        materialized frame; the scheduler back-fills the tail of one
-        write with the other's tasks). Job count per append: 3 -> 2,
-        wall ~= max(sigs, bands) instead of sigs + count + bands."""
-        meta_missing = not os.path.exists(self._meta)
-        had_prior_sigs = os.path.exists(self._sigs)
-        if (meta_missing or not had_prior_sigs) and os.path.exists(self._bands):
-            # bands whose geometry is untrusted: a pre-fix store
-            # crashed between bands and meta, or the concurrent bands
-            # write landed while the sigs write failed (bucketed under
-            # a stamp the replay below may change). Stamping THIS
-            # process's meta would retroactively bless them and
-            # reintroduce the mixed-geometry pruning bug (review
-            # r7). Bands are a derived index over sigs, so rebuild
-            # the WHOLE index from the signature table with this
-            # process's geometry (dropping alone would orphan
-            # earlier batches from every future pruned probe).
-            shutil.rmtree(self._bands)
-        if meta_missing and had_prior_sigs:
-            # crash-replay rebuild (rare): sigs exist with no meta —
-            # keep the r15 serial path: write this batch's sigs,
-            # resolve the layout from the WHOLE store, stamp the meta,
-            # re-band every earlier batch, then band this batch.
-            self._write_sigs(signatures, batch_id)
+        """Append one batch as one commit. The first append resolves
+        the layout into the record's meta (an adaptive modulus from a
+        count of the caller's — typically checkpointed — signature
+        frame); later appends adopt it from there. The stage writes the
+        sigs and bands sub-tables as two CONCURRENT jobs (guide §2.6 —
+        independent writes of the same materialized frame, so the wall
+        cost is max, not sum), and the record removes the live files
+        under the partition dirs it stages, so a replayed batch
+        replaces its earlier attempt."""
+        meta = self._live()
+        if meta is None:
             if self.n_buckets is None:
-                n_sigs = self.spark.read.parquet(self._sigs).count()
-                self.n_buckets = _adaptive_buckets(
-                    n_sigs * self.bands, self._est_row_bytes(signatures)
-                )
-            self._write_meta()
-            stored_other = self.spark.read.parquet(self._sigs).filter(
-                F.col("batch_id") != str(batch_id)
-            )
-            if stored_other.limit(1).count():
-                rebanded = _with_bucket(
-                    dedup.band_keys(
-                        stored_other.drop("batch_id"), self.bands,
-                        self.rows_per_band, self.hasher,
-                    ),
-                    self.n_buckets,
-                ).join(stored_other.select("id", "batch_id"), "id")
-                (
-                    rebanded.repartition("bucket")
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id", "bucket")
-                    .parquet(self._bands)
-                )
-            self._write_bands(signatures, batch_id)
-            return
-        if meta_missing or not had_prior_sigs:
-            # fresh store — or the meta-without-data crash window the
-            # meta-first ordering introduces (meta landed, neither
-            # table did): no persisted rows exist under the old stamp,
-            # so re-stamp with THIS process's geometry rather than
-            # adopting a possibly different crashed one.
-            if self.n_buckets is None:
-                # adaptive layout: at first append the store's
-                # signature count IS this batch's count — and the
-                # caller's frame is typically an eager localCheckpoint,
-                # so this count is a cache read, not a parquet re-scan
                 self.n_buckets = _adaptive_buckets(
                     signatures.count() * self.bands,
                     self._est_row_bytes(signatures),
                 )
-            self._write_meta()
-        elif self.n_buckets is None:
-            # meta durable but this process never read it (direct
-            # append without a prior check_config): adopt the
-            # persisted layout instead of crashing on an unresolved
-            # adaptive modulus
-            with open(self._meta) as fh:
-                persisted = json.load(fh)
-            if persisted.get("n_buckets") is not None:
-                self.n_buckets = int(persisted["n_buckets"])
-            else:
-                self.n_buckets = _adaptive_buckets(
-                    signatures.count() * self.bands,
-                    self._est_row_bytes(signatures),
-                )
-                self._write_meta()
-        # two independent writes of the same (materialized) frame:
-        # submit concurrently so the wall cost is max, not sum
-        from concurrent.futures import ThreadPoolExecutor
+            meta = self._config()
+        else:
+            self._adopt(meta)
+        replaced: list[str] = []
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fs = pool.submit(self._write_sigs, signatures, batch_id)
-            fb = pool.submit(self._write_bands, signatures, batch_id)
-            fs.result()
-            fb.result()
+        def stage(staged: str) -> None:
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                writes = [
+                    pool.submit(write, signatures, batch_id, staged)
+                    for write in (self._write_sigs, self._write_bands)
+                ]
+                for w in writes:
+                    w.result()
+            # match on the staged dir names, not on batch_id: Spark
+            # escapes partition values (batch_id=epoch%3D3)
+            dirs = {
+                tuple(rel.split("/")[:2])
+                for rel, _ in _list_data(self._target._fs, staged)
+            }
+            replaced.extend(
+                rel for rel, _ in self._target.files
+                if tuple(rel.split("/")[:2]) in dirs
+            )
+
+        self._target.commit(stage, remove=replaced, meta=meta)
 
 
 def flag_incremental_dups(
@@ -413,31 +356,13 @@ def flag_incremental_dups(
             bands=bands, rows_per_band=rows_per_band, hasher=hasher
         )
         all_sigs = stored.unionByName(sigs_new)
-        # O(n_buckets) collect: which store partitions can the delta
-        # hit? (An adaptive-layout store whose meta never landed —
-        # crash before first meta write — has no resolved modulus;
-        # read_bands refuses meta-less bands anyway, so skip the
-        # pruning collect and go straight to the recompute fallback.)
-        probe_buckets = None
-        if store.n_buckets is not None:
-            probe_buckets = [
-                r["bucket"]
-                for r in _with_bucket(banded_new, store.n_buckets)
-                .select("bucket").distinct().collect()
-            ]
-        banded_store = (
-            store.read_bands(probe_buckets)
-            if probe_buckets is not None
-            else None
-        )
-        if banded_store is None:
-            # crash window: sigs written, bands not yet — recompute the
-            # band keys from the signature table for THIS probe (the
-            # replayed append then persists them)
-            banded_store = dedup.band_keys(
-                stored, bands, rows_per_band, hasher
-            )
-        banded_all = banded_store.unionByName(banded_new)
+        # O(n_buckets) collect: which store partitions can the delta hit?
+        probe_buckets = [
+            r["bucket"]
+            for r in _with_bucket(banded_new, store.n_buckets)
+            .select("bucket").distinct().collect()
+        ]
+        banded_all = store.read_bands(probe_buckets).unionByName(banded_new)
 
     # candidate (a=earlier, b=new) pairs; the new side is the probe
     cands = (
@@ -494,8 +419,8 @@ def run_incremental_dedup(
     function materializing the delta's document bodies.
 
     Crash between store append and HWM commit replays the batch:
-    the dynamic partition overwrite makes the append idempotent and
-    the flags are recomputed identically, so at-least-once execution
+    the replay's commit replaces the batch's own store files and the
+    flags are recomputed identically, so at-least-once execution
     converges to the exactly-once result.
     """
     delta = incremental_filter(
@@ -573,7 +498,8 @@ def incremental_dedup_batch(
     3. flagged rows land in ``output_path`` partitioned by epoch with
        DYNAMIC partition overwrite — a replayed epoch overwrites its
        own partition, never duplicates;
-    4. signature append (idempotent: partitioned by batch id);
+    4. signature append (idempotent: its commit replaces the batch
+       id's earlier files);
     5. ONLY THEN the HWM and the epoch pointer commit. A crash in any
        earlier window replays 2-4 byte-identically (the HWM is still
        the old one, so the delta recomputes exactly); a crash between

@@ -7,7 +7,8 @@ OPTIMIZE, all on one transaction log. Without Delta jars,
 ``ParquetTarget`` gives the same row semantics via read -> transform ->
 ``commit``, and every parquet table rewrite is such a commit: the merge
 patterns, ``write_sink``'s merge modes, compaction, ``maintain
---zorder-by``, the catalog's rewrites and the CMS state. It is the seam
+--zorder-by``, the catalog's rewrites, the CMS state and the MinHash
+signature store's appends. It is the seam
 where ``DeltaTable`` plugs in on a real cluster. Each instance learns
 the schema at most once; on a local unpartitioned target it comes from
 the first data file's footer through Spark's own converter
@@ -173,9 +174,11 @@ class ParquetTarget:
         """Replace data files in one version. ``stage(dir)`` writes the
         new files under ``dir``; ``remove`` names the data files
         (relative paths) they replace, every file the last read saw
-        when None. ``meta`` rides in the record (the previous record's
-        when None). Raises ``CommitConflict`` when another writer
-        committed since that read. Returns the record."""
+        when None; it is read once ``stage`` returns, so a stage may
+        fill it from the files it wrote. ``meta`` rides in the record
+        (the previous record's when None). Raises ``CommitConflict``
+        when another writer committed since that read. Returns the
+        record."""
         if self.version is None:
             self.live()
         n = self.version + 1

@@ -282,14 +282,17 @@ def _raw_cutoff(spark: SparkSession, hwm: str, dtype: T.DataType, column: str,
                 watermark_lag: str | None):
     """``hwm [- watermark_lag]`` by Spark's cast rules, in the units the
     footer statistics compare in (epoch microseconds, epoch days or the
-    integer); None when the cast gives NULL. Spark evaluates it over a
-    one-row local relation, which the optimizer folds: no job runs and
-    no class is generated."""
+    integer); None when the cast gives NULL. A sub-day lag makes a DATE
+    cutoff a timestamp, which Spark compares a date after by casting
+    the date to its midnight: the dates kept are those after the
+    cutoff's own date. Spark evaluates it over a one-row local
+    relation, which the optimizer folds: no job runs and no class is
+    generated."""
     cutoff = _cutoff(hwm, dtype, column, watermark_lag)
     if isinstance(dtype, T.TimestampType):
         cutoff = F.unix_micros(cutoff)
     elif isinstance(dtype, T.DateType):
-        cutoff = F.unix_date(cutoff)
+        cutoff = F.unix_date(cutoff.cast("date"))
     row = jvm_class(spark, "org.apache.spark.sql.RowFactory").create(
         spark.sparkContext._gateway.new_array(jvm_class(spark, "java.lang.Object"), 0))
     one = jvm_class(spark, "java.util.ArrayList")()

@@ -482,9 +482,9 @@ def streaming_incremental_dedup(
     No HWM filter here: the source checkpoint already makes each
     micro-batch a pure delta. Exactly-once: kept docs write to
     ``target_path/batch_id=<epoch>`` (epoch-keyed overwrite) and the
-    epoch's signatures append to the store partitioned by the same
-    epoch with dynamic partition overwrite — a replayed epoch
-    overwrites both its corpus slice and its signature partition, so
+    epoch's signatures append to the store as one commit partitioned
+    by the same epoch — a replayed epoch overwrites its corpus slice
+    and its commit replaces the epoch's earlier signature files, so
     the replay converges to the same bytes. Within a replay the store
     may transiently hold the epoch's signatures already; candidate
     generation is id-inequality-filtered and distinct, so the

@@ -174,10 +174,11 @@ _R16_ROTATE_IN = _queue[_rotate_room:] + [
 
 # Round 16 (second OPTIMIZATION round): no new workloads; the r16
 # restructures (duplicate_span_signals projection-totals + dup-gram
-# semi-join, binary internal gram/unit keys, the SignatureStore
-# meta-first concurrent append) change the Spark plan of these
-# workloads while leaving results hash-identical (verified at
-# sf0.001+sf0.01 in-session) — guaranteed driver re-check slots:
+# semi-join, binary internal gram/unit keys, the SignatureStore's
+# concurrent sigs/bands append, now one commit per append) change the
+# Spark plan of these workloads while leaving results hash-identical
+# (verified at sf0.001+sf0.01 in-session) — guaranteed driver re-check
+# slots:
 _R16_REBASED: list[str] = [
     "duplicate_ngram_spans",
     "curation_funnel_docs",

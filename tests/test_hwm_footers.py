@@ -124,6 +124,9 @@ def landings(draw):
 @example(case=("ts_ms", [[1, 2], [7, 8], [9, 11]], 5, None))
 @example(case=("ts", [[1, 2], [30, 40]], 30, "1 day"))
 @example(case=("int32", [[], [3, 4]], None, None))
+# a sub-day lag on a DATE column: the cutoff is a timestamp
+@example(case=("date", [[]], 0, "3 minutes"))
+@example(case=("date", [[0, 1], [2]], 1, "3 minutes"))
 def test_footer_plan_equals_spark_path(spark, tmp_path_factory, case):
     kind, files, cut, lag = case
     d = str(tmp_path_factory.mktemp("landing"))

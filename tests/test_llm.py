@@ -2249,6 +2249,9 @@ class TestIncrementalDedup:
     # threshold 0.4: the 32-perm Jaccard estimator has ~0.09 std at
     # p~0.6, so 0.5 would flake on the planted 7/11-similar pair
     KW = dict(threshold=0.4, n=2, num_perm=32, bands=8)
+    # the one-shot flags of DOCS (test_two_batch_replay_equals_one_shot
+    # pins that a two-batch run equals them)
+    ONE_SHOT = {1: False, 2: False, 3: True, 4: False, 5: True}
 
     def _run(self, df, store, state, batch_id, **over):
         from odibi_spark.llm.incremental import run_incremental_dedup
@@ -2333,113 +2336,156 @@ class TestIncrementalDedup:
             spark, str(tmp_path / "nb2" / "sigs"), n_buckets=7
         )
         got = self._run(df2, store3, state2, "b2")
-        # adopted from _store_meta.json (store2 resolved its modulus
-        # adaptively at first append and pinned it there)
+        # adopted from the commit record's meta (store2 resolved its
+        # modulus adaptively at first append and pinned it there)
         assert store2.n_buckets is not None
         assert store3.n_buckets == store2.n_buckets != 7
         for k, v in got.items():
             assert want[k] == v, (k, v, want[k])
 
-    def test_missing_bands_table_falls_back(self, spark, tmp_path):
-        """Crash window between the sigs write and the bands write:
-        the probe must recompute band keys from the signature table
-        instead of crashing, and flags stay identical."""
+    @staticmethod
+    def _read_checked(spark, store):
+        """The ids ``store`` reads, after checking that its band rows
+        cover exactly those ids (8 each) and all sit under the
+        committed modulus."""
+        from collections import Counter
+
+        from pyspark.sql import functions as F
+
+        ids = {r.id for r in store.read().collect()}
+        n = store._live()["n_buckets"]
+        bands = spark.read.parquet(store._bands)
+        assert Counter(r.id for r in bands.select("id").collect()) == {
+            i: 8 for i in ids
+        }
+        stale = bands.filter(
+            F.col("bucket") != F.pmod(F.xxhash64("bh"), F.lit(n)).cast("int")
+        )
+        assert n == 8 and stale.count() == 0
+        return ids
+
+    def _fault_then_replay(self, spark, tmp_path, monkeypatch, owner, name):
+        """Fail the second append at ``owner.name``, then check that
+        the store reads as version 1 or 2, never a mix, with no band row
+        under another modulus, and that the replay (the HWM was not
+        committed) from a fresh store object built with another
+        ``n_buckets`` flags exactly as the one-shot run. Returns the
+        ids read after the fault."""
+        from odibi_spark.llm.incremental import SignatureStore
+
+        df, store, state = self._setup(spark, tmp_path / "f")
+        got = self._run(df.filter("doc_id <= 3"), store, state, "b1")
+
+        def fail(*args, **kwargs):
+            raise OSError(f"injected: {name} failed")
+
+        with monkeypatch.context() as m:
+            m.setattr(owner, name, fail)
+            with pytest.raises(OSError, match="injected"):
+                self._run(df, store, state, "b2")
+        assert state.get("dedup_hwm") == "3"
+        path = str(tmp_path / "f" / "sigs")
+        seen = self._read_checked(spark, SignatureStore(spark, path))
+        replay = SignatureStore(spark, path, n_buckets=7)
+        got.update(self._run(df, replay, state, "b2"))
+        assert got == self.ONE_SHOT
+        assert self._read_checked(spark, replay) == {1, 2, 3, 4, 5}
+        assert replay.read().count() == 5
+        return seen
+
+    def test_missing_bands_table_falls_back(self, spark, tmp_path, monkeypatch):
+        """Fault inside the stage: the bands write raises while the
+        concurrent sigs write lands in staging. Nothing is published,
+        so the store falls back to the previous version whole, and the
+        replay stages both sub-tables again."""
+        from odibi_spark.llm.incremental import SignatureStore
+
+        seen = self._fault_then_replay(
+            spark, tmp_path, monkeypatch, SignatureStore, "_write_bands"
+        )
+        assert seen == {1, 2, 3}
+
+    def test_meta_written_before_bands(self, spark, tmp_path, monkeypatch):
+        """Fault at the publish: the record carrying the geometry is
+        written only after both sub-tables are staged, so when it fails
+        neither the meta nor any band row of the batch is live."""
+        from odibi_spark.patterns.merge_target import ParquetTarget
+
+        seen = self._fault_then_replay(
+            spark, tmp_path, monkeypatch, ParquetTarget, "_publish"
+        )
+        assert seen == {1, 2, 3}
+
+    def test_orphan_bands_rebuilt_not_blessed(self, spark, tmp_path, monkeypatch):
+        """Fault at the apply, after the publish: the next read rolls
+        the published record forward, so sigs and bands land together
+        (no orphan band rows) under the committed modulus, and the
+        replay replaces the batch's files instead of doubling them."""
+        from odibi_spark.patterns.merge_target import ParquetTarget
+
+        seen = self._fault_then_replay(
+            spark, tmp_path, monkeypatch, ParquetTarget, "_apply"
+        )
+        assert seen == {1, 2, 3, 4, 5}
+
+    def test_old_layout_raises_and_racing_appends_conflict(self, spark, tmp_path):
+        """Two appenders that read the same version conflict: the
+        second gets ``CommitConflict`` and leaves no record or row. A
+        store with data files but no record meta (the older layout, its
+        geometry in a side file) raises instead of guessing."""
+        import json as _json
+        import os as _os
         import shutil
 
-        df, store, state = self._setup(spark, tmp_path / "fb")
-        want = self._run(df.filter("doc_id <= 3"), store, state, "b1")
-        want.update(self._run(df, store, state, "b2"))
-
-        df2, store2, state2 = self._setup(spark, tmp_path / "fb2")
-        self._run(df2.filter("doc_id <= 3"), store2, state2, "b1")
-        shutil.rmtree(str(tmp_path / "fb2" / "sigs" / "bands"))
-        got = self._run(df2, store2, state2, "b2")
-        for k, v in got.items():
-            assert want[k] == v, (k, v, want[k])
-
-    def test_meta_written_before_bands(self, spark, tmp_path):
-        """ADVICE r6: _store_meta.json must be durable before any bands
-        row — so a crash can never leave persisted bands whose geometry
-        a replaying process would have to guess at. (Sigs MAY land
-        before the meta — r15 adaptive layout resolves the bucket
-        modulus from the written signature table — because the
-        sigs-without-meta crash window replays into the recompute
-        fallback.) And bands WITHOUT a meta file (pre-fix stores) are
-        untrusted: read_bands returns None, routing the probe to the
-        recompute fallback."""
-        import os as _os
-
-        from odibi_spark.llm.dedup import minhash_signatures
-
-        df, store, state = self._setup(spark, tmp_path / "mw")
-        sigs = minhash_signatures(
-            df, "doc_id", "text", n=2, num_perm=32, seed=42
+        from odibi_spark.llm.incremental import (
+            SignatureStore, flag_incremental_dups,
         )
-        orig_write = sigs.write.__class__.parquet
-        store_path = str(tmp_path / "mw" / "sigs")
+        from odibi_spark.patterns.merge_target import CommitConflict
 
-        # append() writes meta before BANDS: verify by intercepting
-        # every parquet write and asserting meta already exists on
-        # disk whenever a bands path is written
-        seen = []
-
-        def spy(self_, path, **kw):
-            seen.append(
-                (path, _os.path.exists(store_path + "/_store_meta.json"))
-            )
-            return orig_write(self_, path, **kw)
-
-        sigs.write.__class__.parquet = spy
-        try:
-            store.append(sigs, "b1")
-        finally:
-            sigs.write.__class__.parquet = orig_write
-        band_writes = [
-            meta_present for path, meta_present in seen
-            if path.rstrip("/").endswith("bands")
+        df, store, state = self._setup(spark, tmp_path)
+        self._run(df.filter("doc_id <= 3"), store, state, "b1")
+        path = str(tmp_path / "sigs")
+        a, b = SignatureStore(spark, path), SignatureStore(spark, path)
+        _, sigs_a = flag_incremental_dups(df.filter("doc_id = 4"), a, **self.KW)
+        _, sigs_b = flag_incremental_dups(df.filter("doc_id = 5"), b, **self.KW)
+        a.append(sigs_a, "b2")
+        with pytest.raises(CommitConflict):
+            b.append(sigs_b, "b3")
+        assert sorted(_os.listdir(_os.path.join(path, "_log"))) == [
+            "1.json", "2.json",
         ]
-        assert band_writes and all(band_writes)
+        fresh = SignatureStore(spark, path)
+        assert {r.id for r in fresh.read().collect()} == {1, 2, 3, 4}
 
-        # meta deleted (bands present, meta missing): bands untrusted
-        _os.remove(store_path + "/_store_meta.json")
-        assert store.read_bands() is None
-        # and the full probe still flags identically via the fallback
-        got = self._run(df, store, state, "b2")
-        df2, store2, state2 = self._setup(spark, tmp_path / "mw2")
-        want = self._run(df2.filter("doc_id <= 3"), store2, state2, "b1")
-        want.update(self._run(df2, store2, state2, "b2"))
-        for k, v in got.items():
-            assert want[k] == v, (k, v, want[k])
+        shutil.rmtree(_os.path.join(path, "_log"))
+        with open(_os.path.join(path, "_store_meta.json"), "w") as fh:
+            _json.dump({"bands": 8, "rows_per_band": 4,
+                        "hasher": "xxhash64", "n_buckets": 8}, fh)
+        with pytest.raises(ValueError, match="replaying batches"):
+            self._run(df, SignatureStore(spark, path), state, "b3")
 
-    def test_orphan_bands_rebuilt_not_blessed(self, spark, tmp_path):
-        """Review r7: appending to a store whose bands exist WITHOUT
-        meta (pre-fix crash window) must rebuild the whole band index
-        from the signature table — stamping meta around the unknown
-        bands would bless mixed geometry, and merely dropping them
-        would orphan earlier batches from every pruned probe."""
-        import os as _os
+    def test_fresh_store_object_writes_committed_geometry(self, spark, tmp_path):
+        """A store object built with the default geometry that probes a
+        store committed with bands=4 (as the ``dedup_incremental``
+        transform builds one per batch) bands its append under the
+        committed geometry, not its constructor's."""
+        from odibi_spark.llm.incremental import SignatureStore
 
-        df, store, state = self._setup(spark, tmp_path / "ob")
-        want = self._run(df.filter("doc_id <= 3"), store, state, "b1")
-        want.update(self._run(df.filter("doc_id = 4"), store, state, "b2"))
-        want.update(self._run(df, store, state, "b3"))
-
-        df2, store2, state2 = self._setup(spark, tmp_path / "ob2")
-        self._run(df2.filter("doc_id <= 3"), store2, state2, "b1")
-        # simulate the pre-fix crash: bands present, meta missing
-        _os.remove(str(tmp_path / "ob2" / "sigs" / "_store_meta.json"))
-        self._run(df2.filter("doc_id = 4"), store2, state2, "b2")
-        # meta restored by the rebuild; the band index must cover b1
-        # again: doc 5 (dup of doc 3, which arrived in b1) is caught
-        # through the PRUNED banded path, proving b1's bands exist
-        assert _os.path.exists(str(tmp_path / "ob2" / "sigs" / "_store_meta.json"))
-        got = self._run(df2, store2, state2, "b3")
-        for k, v in got.items():
-            assert want[k] == v, (k, v, want[k])
+        df, store, state = self._setup(spark, tmp_path)
+        self._run(df.filter("doc_id <= 3"), store, state, "b1", bands=4)
+        later = SignatureStore(spark, str(tmp_path / "sigs"))
+        self._run(df, later, state, "b2", bands=4)
+        bands = spark.read.parquet(str(tmp_path / "sigs" / "bands"))
+        per_batch = {
+            b: {r.band for r in bands.filter(f"batch_id = '{b}'").collect()}
+            for b in ("b1", "b2")
+        }
+        assert per_batch["b1"] == per_batch["b2"] and len(per_batch["b1"]) == 4
 
     def test_two_batch_replay_equals_one_shot(self, spark, tmp_path):
         df, store, state = self._setup(spark, tmp_path / "a")
         one_shot = self._run(df, store, state, "all")
+        assert one_shot == self.ONE_SHOT
 
         df2, store2, state2 = self._setup(spark, tmp_path / "b")
         got = self._run(df2.filter("doc_id <= 3"), store2, state2, "b1")
@@ -2459,7 +2505,7 @@ class TestIncrementalDedup:
 
     def test_crash_replay_is_idempotent(self, spark, tmp_path):
         """Crash between store append and HWM commit: the batch re-runs
-        in full; dynamic partition overwrite dedups the store, flags
+        in full; its commit replaces the batch's store files, flags
         recompute identically."""
         df, store, state = self._setup(spark, tmp_path)
         self._run(df.filter("doc_id <= 3"), store, state, "b1")

@@ -200,6 +200,35 @@ class TestAnnIndexStore:
         store.append(df, "vec_id", "embedding", batch_id="b1")
         assert store.read_codes().count() == before == 40
 
+    def test_timestamp_hwm_round_trips_off_utc_driver(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A TIMESTAMP id's stored HWM is the session-zone (UTC) wall
+        clock whatever the driver process's zone, so the second batch
+        ingests exactly the rows past it."""
+        import time
+
+        df = _vec_df(spark, _unit_vecs(6, dim=8)).withColumn(
+            "ts", F.timestamp_seconds(F.lit(1704067200) + F.col("vec_id") * 3600)
+        )
+        store = AnnIndexStore(
+            spark, str(tmp_path / "idx"), nlist=2, nprobe=1, m=4, k=4, dim=8
+        )
+        state = JsonStateBackend(str(tmp_path / "state.json"))
+        store.build(df, "vec_id", "embedding")
+        kw = dict(id_col="ts", vec_col="embedding")
+        monkeypatch.setenv("TZ", "Asia/Tokyo")
+        time.tzset()
+        try:
+            b1 = df.filter("vec_id <= 3")
+            n1 = run_incremental_ann(b1, store, state, batch_id="b1", **kw)
+            assert state.get("ann_hwm") == "2024-01-01 03:00:00"
+            n2 = run_incremental_ann(df, store, state, batch_id="b2", **kw)
+        finally:
+            monkeypatch.undo()
+            time.tzset()
+        assert (n1, n2) == (4, 2)
+
     def test_geometry_drift_refused(self, spark, tmp_path):
         df = _vec_df(spark, _unit_vecs(40))
         store = AnnIndexStore(spark, str(tmp_path / "idx"), **self.GEO)
@@ -437,7 +466,7 @@ class TestAdaptiveBandStoreLayout:
         sigs = minhash_signatures(self._df(spark), "doc_id", n=2)
         store.append(sigs, "b1")
         assert store.n_buckets == 8  # tiny batch -> min clamp
-        meta = _json.load(open(tmp_path / "s" / "_store_meta.json"))
+        meta = _json.load(open(tmp_path / "s" / "_log" / "1.json"))["meta"]
         assert meta["n_buckets"] == 8
         # a later adaptive store object adopts the pinned value even
         # though its own first batch would resolve differently
@@ -453,7 +482,7 @@ class TestAdaptiveBandStoreLayout:
 
         store = SignatureStore(spark, str(tmp_path / "e"), n_buckets=16)
         store.append(minhash_signatures(self._df(spark), "doc_id", n=2), "b1")
-        meta = _json.load(open(tmp_path / "e" / "_store_meta.json"))
+        meta = _json.load(open(tmp_path / "e" / "_log" / "1.json"))["meta"]
         assert meta["n_buckets"] == 16
 
     def test_adaptive_clamps(self):

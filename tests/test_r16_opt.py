@@ -128,8 +128,8 @@ class TestBinaryInternalKeys:
 
 
 class TestAppendOrderingR16:
-    """Meta-first + concurrent sigs/bands writes: content and crash
-    windows must match the r15 serial layout."""
+    """One commit per append, with concurrent sigs/bands writes in the
+    stage: content, layout pinning and crash windows."""
 
     def _sigs(self, spark, ids=range(1, 9)):
         from odibi_spark.llm.dedup import minhash_signatures
@@ -141,46 +141,69 @@ class TestAppendOrderingR16:
         )
         return minhash_signatures(df, "doc_id", n=2)
 
+    @staticmethod
+    def _meta(path):
+        """The newest commit record's meta."""
+        log = os.path.join(path, "_log")
+        newest = max(int(f.split(".")[0]) for f in os.listdir(log))
+        return json.load(open(os.path.join(log, f"{newest}.json")))["meta"]
+
     def test_store_content_matches_reads(self, spark, tmp_path):
         from odibi_spark.llm.incremental import SignatureStore
 
         store = SignatureStore(spark, str(tmp_path / "s"))
         sigs = self._sigs(spark).localCheckpoint(eager=True)
         store.append(sigs, "b1")
-        # meta written before/with data, geometry + resolved buckets
-        meta = json.load(open(tmp_path / "s" / "_store_meta.json"))
+        # one record per append, carrying geometry + resolved buckets
+        assert os.listdir(tmp_path / "s" / "_log") == ["1.json"]
+        meta = self._meta(tmp_path / "s")
         assert meta["n_buckets"] == store.n_buckets == 8
         got = {r.id for r in store.read().collect()}
         assert got == {r.id for r in sigs.collect()}
         bands = store.read_bands()
         assert bands.count() == sigs.count() * 8
+        store.append(self._sigs(spark, ids=range(9, 12)), "b2")
+        assert sorted(os.listdir(tmp_path / "s" / "_log")) == [
+            "1.json", "2.json",
+        ]
+        assert self._meta(tmp_path / "s") == meta
 
-    def test_meta_without_data_window_restamps(self, spark, tmp_path):
-        """Crash after the meta write, before either table: a replay
-        with a DIFFERENT geometry must re-stamp the meta rather than
-        write bands under a stale stamp."""
+    def test_meta_without_data_window_restamps(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A first append that fails at the publish leaves no geometry
+        behind: the replay with a DIFFERENT geometry stamps its own
+        rather than adopting the crashed one."""
         from odibi_spark.llm.incremental import SignatureStore
+        from odibi_spark.patterns.merge_target import ParquetTarget
 
         crashed = SignatureStore(
             spark, str(tmp_path / "s"), bands=16, rows_per_band=2,
             n_buckets=99,
         )
-        crashed._write_meta()  # meta landed, no data did
+
+        def publish_fails(self, record):
+            raise OSError("injected: publish failed")
+
+        with monkeypatch.context() as m:
+            m.setattr(ParquetTarget, "_publish", publish_fails)
+            with pytest.raises(OSError, match="injected"):
+                crashed.append(self._sigs(spark).localCheckpoint(eager=True), "b1")
+        assert not crashed.exists()
         replay = SignatureStore(
             spark, str(tmp_path / "s"), bands=8, rows_per_band=4,
         )
         sigs = self._sigs(spark).localCheckpoint(eager=True)
         replay.append(sigs, "b1")
-        meta = json.load(open(tmp_path / "s" / "_store_meta.json"))
+        meta = self._meta(tmp_path / "s")
         assert meta["bands"] == 8 and meta["rows_per_band"] == 4
         assert meta["n_buckets"] == replay.n_buckets == 8
         assert replay.read_bands().count() == sigs.count() * 8
 
     def test_direct_append_adopts_persisted_buckets(self, spark, tmp_path):
         """Second append from a FRESH store object that never called
-        check_config must adopt the pinned bucket modulus (the
-        meta-first ordering makes this reachable; before r16 it would
-        crash on an unresolved adaptive modulus)."""
+        check_config must adopt the pinned bucket modulus instead of
+        resolving its own adaptive one."""
         from odibi_spark.llm.incremental import SignatureStore
 
         first = SignatureStore(spark, str(tmp_path / "s"), n_buckets=16)
@@ -194,8 +217,7 @@ class TestAppendOrderingR16:
             "b2",
         )
         assert second.n_buckets == 16
-        meta = json.load(open(tmp_path / "s" / "_store_meta.json"))
-        assert meta["n_buckets"] == 16
+        assert self._meta(tmp_path / "s")["n_buckets"] == 16
         # all bands of both batches live under the one modulus
         assert {
             d for d in os.listdir(tmp_path / "s" / "bands")
@@ -222,38 +244,45 @@ class TestAppendOrderingR16:
         )
         store = SignatureStore(spark, str(tmp_path / "s"))
         store.append(self._sigs(spark).localCheckpoint(eager=True), "b1")
-        meta = json.load(open(tmp_path / "s" / "_store_meta.json"))
+        meta = self._meta(tmp_path / "s")
         assert meta["band_row_bytes"] == _band_row_bytes(True, "xxhash64", 4)
         assert meta["bucket_target_bytes"] == 20_000_000
 
     def test_sigs_without_meta_rebuild_path_still_serial(
-        self, spark, tmp_path
+        self, spark, tmp_path, monkeypatch
     ):
-        """The r15 crash-replay rebuild (sigs exist, meta missing)
-        keeps working: meta re-resolved from the WHOLE store, earlier
-        batches re-banded."""
+        """Fault inside the stage of a first append: the sigs write
+        lands in staging and the bands write raises. No signature is
+        live without its bands and geometry, so nothing needs a
+        rebuild: the replay commits version 1 with every band row."""
         from odibi_spark.llm.incremental import SignatureStore
 
-        store = SignatureStore(spark, str(tmp_path / "s"))
-        s1 = self._sigs(spark).localCheckpoint(eager=True)
-        store.append(s1, "b1")
-        os.remove(tmp_path / "s" / "_store_meta.json")
-        import shutil
+        path = str(tmp_path / "s")
+        crashed = SignatureStore(spark, path)
 
-        shutil.rmtree(tmp_path / "s" / "bands")
-        replay = SignatureStore(spark, str(tmp_path / "s"))
-        s2 = self._sigs(spark, ids=range(9, 14)).localCheckpoint(eager=True)
-        replay.append(s2, "b2")
-        bands = replay.read_bands()
-        assert bands.count() == (s1.count() + s2.count()) * 8
+        def bands_write_fails(signatures, batch_id, root):
+            raise OSError("injected: bands write failed")
+
+        monkeypatch.setattr(crashed, "_write_bands", bands_write_fails)
+        s1 = self._sigs(spark).localCheckpoint(eager=True)
+        with pytest.raises(OSError, match="injected"):
+            crashed.append(s1, "b1")
+        assert not crashed.exists()
+        assert not os.path.exists(os.path.join(path, "sigs"))
+        assert not os.path.exists(os.path.join(path, "_log"))
+        replay = SignatureStore(spark, path)
+        replay.append(s1, "b1")
+        assert os.listdir(os.path.join(path, "_log")) == ["1.json"]
+        assert replay.read().count() == s1.count()
+        assert replay.read_bands().count() == s1.count() * 8
 
     def test_bands_without_sigs_window_drops_stale_bands(
         self, spark, tmp_path, monkeypatch
     ):
-        """Crash where the concurrent bands write landed and the sigs
-        write raised. The replay's smaller batch resolves a different
-        adaptive modulus; no band row may stay bucketed under the
-        crashed one."""
+        """Fault inside the stage where the concurrent bands write
+        landed in staging and the sigs write raised. The replay's smaller batch
+        resolves a different adaptive modulus; no band row may stay
+        bucketed under the crashed one."""
         import odibi_spark.llm.incremental as inc
 
         # bucket target small enough that the batch size moves the modulus
@@ -261,20 +290,20 @@ class TestAppendOrderingR16:
         path = str(tmp_path / "s")
         crashed = inc.SignatureStore(spark, path)
 
-        def sigs_write_fails(signatures, batch_id):
+        def sigs_write_fails(signatures, batch_id, root):
             raise OSError("injected: sigs write failed")
 
         monkeypatch.setattr(crashed, "_write_sigs", sigs_write_fails)
         with pytest.raises(OSError, match="injected"):
             crashed.append(self._sigs(spark).localCheckpoint(eager=True), "b1")
-        assert os.path.isdir(os.path.join(path, "bands"))
-        assert not os.path.exists(os.path.join(path, "sigs"))
+        assert not crashed.exists()
+        assert not os.path.exists(os.path.join(path, "bands"))
 
         replay = inc.SignatureStore(spark, path)
         s2 = self._sigs(spark, ids=range(1, 6)).localCheckpoint(eager=True)
         replay.append(s2, "b1")
         assert replay.n_buckets != crashed.n_buckets
-        n = json.load(open(os.path.join(path, "_store_meta.json")))["n_buckets"]
+        n = self._meta(path)["n_buckets"]
         bands = spark.read.parquet(os.path.join(path, "bands"))
         assert bands.count() == s2.count() * 8
         stale = bands.filter(
