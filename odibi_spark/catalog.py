@@ -74,6 +74,11 @@ SCHEMA_SNAPSHOT_SCHEMA = (
     "node string, run_id string, columns_added string, "
     "columns_removed string, columns_type_changed string"
 )
+# the meta_<name> tables that optimize() compacts and sync_to() copies
+META_TABLES = (
+    "runs", "metrics", "tables", "daily_stats",
+    "pipelines", "nodes", "schema_snapshots", "state",
+)
 
 
 def _table_row(
@@ -412,9 +417,13 @@ class Catalog:
     def derived_guard(self):
         """Exactly-once claim lifecycle for derived-table folds
         (reference: odibi/derived_updater.py meta_derived_applied_runs
-        guard; open-format twin patterns/derived_guard.py). Rows are
-        queryable via ``derived_guard.claims(spark)`` — the
-        meta-table surface."""
+        guard; open-format twin patterns/derived_guard.py): each claim
+        is a sequence of versioned records under
+        ``meta_derived_applied_runs/claims/``, each state change one
+        exclusive publish of the next version, as a ``ParquetTarget``
+        commit publishes ``_log/<n>.json``. Needs a local root or a
+        ``file:`` URI. Rows are queryable via
+        ``derived_guard.claims(spark)`` — the meta-table surface."""
         from odibi_spark.patterns.derived_guard import DerivedGuard
 
         if not hasattr(self, "_derived_guard"):
@@ -475,7 +484,7 @@ class Catalog:
     # sync, executed here on the open-format catalog) ----------------
 
     #: retention-eligible tables → (age column, kind). Definition
-    #: tables (meta_pipelines/meta_nodes/meta_schemas/meta_state) are
+    #: tables (meta_pipelines/meta_nodes/meta_schema_snapshots/meta_state) are
     #: never retention-deleted: they are current-state, not history.
     #: meta_tables is BOTH: its append log is the schema history (old
     #: rows retention-eligible) but its newest row per table_path is
@@ -634,10 +643,7 @@ class Catalog:
         from odibi_spark.io.compact import compact_small_files
 
         out = {}
-        for name in (
-            "runs", "metrics", "tables", "daily_stats",
-            "pipelines", "nodes", "schemas", "state",
-        ):
+        for name in META_TABLES:
             if self._exists(name):
                 out[name] = compact_small_files(
                     self.spark, self._table_path(name),
@@ -649,18 +655,16 @@ class Catalog:
         """Copy every present meta table to another catalog root
         (reference: system.py:143 `sync` between catalog backends).
         Full-refresh copy: each table is small, and overwrite keeps
-        the target consistent even after source retention deletes."""
+        the target consistent even after source retention deletes.
+        Each copy is one ``ParquetTarget`` commit on the target table,
+        so its log survives and a writer that read it before conflicts."""
         out = {}
-        for name in (
-            "runs", "metrics", "tables", "daily_stats",
-            "pipelines", "nodes", "schemas", "state",
-        ):
-            if not self._exists(name):
+        for name in META_TABLES:
+            source = ParquetTarget(self.spark, self._table_path(name))
+            if not source.live():
                 continue
-            df = self.spark.read.parquet(self._table_path(name))
-            df.coalesce(1).write.mode("overwrite").parquet(
-                f"{target_root.rstrip('/')}/meta_{name}"
-            )
+            df = source.read()
+            ParquetTarget(self.spark, f"{target_root.rstrip('/')}/meta_{name}").overwrite(df.coalesce(1))
             out[name] = df.count()
         return out
 

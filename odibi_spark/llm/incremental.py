@@ -93,6 +93,9 @@ def _adaptive_buckets(band_rows: int, row_bytes: int = 20) -> int:
     )
 
 
+_UNSEEN = object()  # SignatureStore._meta before its first look
+
+
 class SignatureStore:
     """Append-only MinHash signature store on parquet (a Delta table
     with the same layout on a real cluster). Two sub-tables:
@@ -146,10 +149,13 @@ class SignatureStore:
         # estimated band-row width backing an adaptive n_buckets
         # resolution (recorded in the meta for auditability)
         self._row_bytes: int | None = None
+        self._meta: dict | None | object = _UNSEEN  # see _live
 
-    def _live(self) -> dict | None:
-        """Roll a published append forward (``ParquetTarget.live``) and
-        return the committed meta; None while the store holds no data."""
+    def _look(self) -> dict | None:
+        """Roll a published append forward (``ParquetTarget.live``,
+        which walks the whole tree, and pins the version the next append
+        commits on) and return the committed meta; None while the store
+        holds no data."""
         if not self._target.live():
             return None
         meta = (self._target.record(self._target.version) or {}).get("meta")
@@ -162,8 +168,18 @@ class SignatureStore:
             )
         return meta
 
+    def _live(self, look: bool = False) -> dict | None:
+        """The committed meta, from a look on the first call or with
+        ``look``; otherwise what the last look or append saw."""
+        if look or self._meta is _UNSEEN:
+            self._meta = _UNSEEN  # until the look returns
+            self._meta = self._look()
+        return self._meta
+
     def exists(self) -> bool:
-        return self._live() is not None
+        """Whether the store holds data, from a fresh look (a batch's
+        first call)."""
+        return self._live(look=True) is not None
 
     def _config(self) -> dict:
         cfg = {
@@ -218,7 +234,7 @@ class SignatureStore:
         self._adopt(have)
 
     def read(self) -> DataFrame | None:
-        if not self.exists():
+        if self._live() is None:
             return None
         return self.spark.read.parquet(self._sigs).drop("batch_id")
 
@@ -226,7 +242,7 @@ class SignatureStore:
         """Banded store rows (id, band, bh); ``buckets`` narrows the
         read to those partition directories (static partition
         pruning — the probe passes the delta's own bucket set)."""
-        if not self.exists():
+        if self._live() is None:
             return None
         df = self.spark.read.parquet(self._bands)
         if buckets is not None:
@@ -302,7 +318,9 @@ class SignatureStore:
                 if tuple(rel.split("/")[:2]) in dirs
             )
 
+        self._meta = _UNSEEN  # a failed commit leaves the store to look at again
         self._target.commit(stage, remove=replaced, meta=meta)
+        self._meta = meta  # the commit's own re-look saw it
 
 
 def flag_incremental_dups(

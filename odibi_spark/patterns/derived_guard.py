@@ -10,16 +10,27 @@ exactly once even when a pipeline is retried, replayed, or raced by a
 concurrent scheduler: the FIRST claimant of (derived_table, run_id)
 wins, everyone else sees None and skips.
 
-Storage here is one JSON file per claim under ``{root}/claims/`` on
-any POSIX-rename filesystem, with the atomicity carried by the two
-primitives distributed stores also reduce to:
+Each claim is a dense sequence of JSON records under ``{root}/claims/``:
+version 1 is ``<table>__<run>.json``, version n >= 2 is
+``<table>__<run>.json.<n>`` (no key's version 1 ends in a digit, so the
+names cannot collide). Every call reads the newest version n (the
+galloping probe ``merge_target.latest_version``), decides, and
+publishes n+1 whole and only if that version is free — the exclusive
+publish (``merge_target._LocalFiles.publish``: a temp file and
+``os.link``) behind ``ParquetTarget``'s ``_log/<n>.json``, the
+``_spark_metadata`` log model of Structured Streaming:
 
-- CLAIM  = ``open(..., O_CREAT | O_EXCL)`` — exactly one creator wins
-  (the MERGE WHEN NOT MATCHED INSERT twin).
-- TRANSITION = read -> token verify -> ``os.replace`` — the
+- CLAIM = publish version 1 — exactly one creator wins (the MERGE WHEN
+  NOT MATCHED INSERT twin).
+- TRANSITION = read n -> token verify -> publish n+1 — the
   UPDATE ... WHERE claim_token = ? twin; a zombie whose claim was
-  reclaimed fails the token check and raises (fail-fast, never a
-  silent double apply).
+  reclaimed, or whose transition raced another, loses the publish and
+  raises (fail-fast, never a silent double apply).
+- RECLAIM = publish n+1 as a fresh CLAIMED; a lost publish yields None.
+
+No record is rewritten or deleted, so a reader never sees a partial
+record and a claim's history stays on disk. A claim file written in
+place by an older build reads as its version 1.
 
 On a real deployment the same API runs against Delta MERGE (the
 reference's SQL is reproduced in the docstrings of each method); this
@@ -33,9 +44,11 @@ from __future__ import annotations
 import json
 import os
 import time
+import urllib.parse
 import uuid
-import warnings
 from dataclasses import dataclass
+
+from odibi_spark.patterns.merge_target import _LocalFiles, latest_version
 
 VALID_STATUSES = ("CLAIMED", "APPLIED", "FAILED")
 
@@ -57,34 +70,37 @@ class Claim:
 
 class ClaimConflictError(RuntimeError):
     """A token-verified transition found the claim owned by someone
-    else (reclaimed, or never ours). Fail-fast by contract."""
+    else (reclaimed, already transitioned, or never ours). Fail-fast by
+    contract."""
+
+
+def _version(base: str, n: int) -> str:
+    """Version n of the claim whose version 1 is ``base``."""
+    return base if n == 1 else f"{base}.{n}"
 
 
 class DerivedGuard:
     """Guard table for exactly-once derived-table updates."""
 
     def __init__(self, root: str):
+        """``root`` is a local path or a ``file:`` URI; claims need the
+        local exclusive publish, so any other scheme raises."""
+        url = urllib.parse.urlparse(root)
+        if url.scheme not in ("", "file"):
+            raise ValueError(f"DerivedGuard needs a local root, got {root!r}")
         self.root = root
-        self._dir = os.path.join(root, "claims")
+        self._dir = os.path.join(urllib.parse.unquote(url.path) if url.scheme else root, "claims")
         os.makedirs(self._dir, exist_ok=True)
 
     # -- storage helpers ---------------------------------------------------
 
     def _path(self, derived_table: str, run_id: str) -> str:
-        # "__" is the key separator — a raw component containing it
-        # would collide ('a__b','c') with ('a','b__c') and make
-        # apply_once silently skip a genuinely different run. Instead
-        # of rejecting such keys outright (r14 — which also made
-        # their PRE-EXISTING history unreadable via status()/
-        # mark_applied(), ADVICE r15), percent-encode the separator:
-        # components without '%' or '__' keep their exact legacy
-        # filename, and '__'-bearing keys become representable and
-        # collision-free on both read and write paths.
-        # MIGRATION NOTE: claims written by a pre-encoding build whose
-        # components contained '__' used the ambiguous raw filename;
-        # those files stay on disk but are addressed under the new
-        # encoded name — rename '<a>__<b>.json' by hand if that
-        # history must remain queryable.
+        # "__" separates the components, so a "__" inside one is
+        # percent-encoded (with "%" itself): ('a__b', 'c') and
+        # ('a', 'b__c') stay distinct keys, and components without
+        # "%" or "__" keep their plain filename. A claim an older build
+        # wrote for a "__"-bearing key under the raw name is not found
+        # under the encoded one; rename it by hand to keep it.
         parts = []
         for part in (derived_table, run_id):
             if "/" in part or part.startswith("."):
@@ -95,15 +111,19 @@ class DerivedGuard:
         return os.path.join(self._dir, f"{parts[0]}__{parts[1]}.json")
 
     @staticmethod
-    def _read(path: str) -> Claim:
-        with open(path, encoding="utf-8") as f:
-            return Claim(**json.load(f))
+    def _newest(base: str) -> tuple[int, Claim | None]:
+        """The newest version n of the claim whose version 1 is
+        ``base`` (0 when unclaimed) and that version's row."""
+        n = latest_version(lambda v: os.path.exists(_version(base, v)))
+        if n == 0:
+            return 0, None
+        with open(_version(base, n), encoding="utf-8") as f:
+            return n, Claim(**json.load(f))
 
-    def _write_replace(self, path: str, claim: Claim) -> None:
-        tmp = f"{path}.tmp.{claim.claim_token}"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(claim.__dict__, f)
-        os.replace(tmp, path)
+    @staticmethod
+    def _publish(base: str, n: int, claim: Claim) -> bool:
+        """Publish version ``n`` whole; False when another writer took it."""
+        return _LocalFiles().publish(_version(base, n), json.dumps(claim.__dict__))
 
     # -- lifecycle ----------------------------------------------------------
 
@@ -111,20 +131,12 @@ class DerivedGuard:
         """Claim (derived_table, run_id); returns the claim token, or
         None when the key is already claimed/applied/failed by anyone
         (reference _try_claim_spark: MERGE WHEN NOT MATCHED INSERT,
-        then verify our token won). O_CREAT|O_EXCL guarantees exactly
-        one creator across processes on one filesystem."""
-        path = self._path(derived_table, run_id)
+        then verify our token won). The exclusive publish of version 1
+        has exactly one winner across processes on one filesystem."""
         token = str(uuid.uuid4())
-        claim = Claim(
-            derived_table, run_id, token, "CLAIMED", time.time()
-        )
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            return None
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(claim.__dict__, f)
-        return token
+        claim = Claim(derived_table, run_id, token, "CLAIMED", time.time())
+        base = self._path(derived_table, run_id)
+        return token if self._publish(base, 1, claim) else None
 
     def _transition(
         self,
@@ -134,14 +146,12 @@ class DerivedGuard:
         status: str,
         error_message: str | None,
     ) -> None:
-        path = self._path(derived_table, run_id)
-        try:
-            cur = self._read(path)
-        except FileNotFoundError:
+        base = self._path(derived_table, run_id)
+        n, cur = self._newest(base)
+        if cur is None:
             raise ClaimConflictError(
-                f"no claim row for {derived_table}/{run_id} "
-                "(reclaimed or never claimed)"
-            ) from None
+                f"no claim row for {derived_table}/{run_id} (never claimed)"
+            )
         if cur.claim_token != claim_token or cur.status != "CLAIMED":
             raise ClaimConflictError(
                 f"claim {derived_table}/{run_id} is {cur.status} under "
@@ -150,7 +160,11 @@ class DerivedGuard:
         cur.status = status
         cur.applied_at = time.time()
         cur.error_message = error_message
-        self._write_replace(path, cur)
+        if not self._publish(base, n + 1, cur):
+            raise ClaimConflictError(
+                f"claim {derived_table}/{run_id} changed after this "
+                f"transition read version {n} (reclaimed or transitioned)"
+            )
 
     def mark_applied(
         self, derived_table: str, run_id: str, claim_token: str
@@ -158,7 +172,8 @@ class DerivedGuard:
         """CLAIMED -> APPLIED, token-verified (reference
         _mark_applied_spark: UPDATE ... WHERE claim_token = ? AND
         status = 'CLAIMED'). Raises ClaimConflictError when the row is
-        missing, terminal, or owned by another token — fail-fast."""
+        missing, terminal, owned by another token, or changed before
+        the publish — fail-fast."""
         self._transition(derived_table, run_id, claim_token, "APPLIED", None)
 
     def mark_failed(
@@ -175,10 +190,8 @@ class DerivedGuard:
         )
 
     def status(self, derived_table: str, run_id: str) -> Claim | None:
-        try:
-            return self._read(self._path(derived_table, run_id))
-        except FileNotFoundError:
-            return None
+        """The claim's newest version; None when unclaimed."""
+        return self._newest(self._path(derived_table, run_id))[1]
 
     def reclaim_for_rebuild(
         self,
@@ -189,16 +202,11 @@ class DerivedGuard:
         """Re-claim a FAILED or stale-CLAIMED key for a rebuild
         (reference _reclaim_for_rebuild_spark: CAS UPDATE, falling
         back to try_claim when no row exists). APPLIED is terminal —
-        never reclaimed. Returns a fresh token or None.
-
-        Atomicity: the claim file is renamed aside (one renamer wins;
-        losers see FileNotFoundError and return None), the DECISION is
-        made on the renamed content (so a transition that landed just
-        before the rename is honored), and the replacement row links
-        back under O_EXCL semantics — a try_claim that slipped into
-        the window keeps its win and the reclaim yields."""
-        path = self._path(derived_table, run_id)
-        cur = self.status(derived_table, run_id)
+        never reclaimed. Returns a fresh token, or None when the key is
+        not eligible or another writer published the next version
+        first (the decision is then on a stale row)."""
+        base = self._path(derived_table, run_id)
+        n, cur = self._newest(base)
         if cur is None:
             return self.try_claim(derived_table, run_id)
         if cur.status == "APPLIED":
@@ -207,88 +215,8 @@ class DerivedGuard:
         if cur.status == "CLAIMED" and age_min < max_age_minutes:
             return None  # live owner
         token = str(uuid.uuid4())
-        aside = f"{path}.reclaim.{token}"
-        try:
-            os.rename(path, aside)  # atomic take: one winner
-        except FileNotFoundError:
-            return None
-        try:
-            cur = self._read(aside)  # authoritative post-rename state
-            age_min = (time.time() - cur.claimed_at) / 60.0
-            if cur.status == "APPLIED" or (
-                cur.status == "CLAIMED" and age_min < max_age_minutes
-            ):
-                # a transition raced us between pre-check and rename:
-                # put the row back untouched and yield. _link_back
-                # restores via os.replace on conflict (terminal/live
-                # row wins; a usurper that slipped into the rename
-                # window fails its later token check fail-fast), so
-                # the aside file is consumed — nothing left to clean.
-                self._link_back(aside, path, cur)
-                return None
-            fresh = Claim(
-                derived_table, run_id, token, "CLAIMED", time.time()
-            )
-            tmp = f"{path}.tmp.{token}"
-            with open(tmp, "w", encoding="utf-8") as f:
-                json.dump(fresh.__dict__, f)
-            try:
-                os.link(tmp, path)  # no-clobber: a racing try_claim wins
-            except FileExistsError:
-                os.unlink(tmp)
-                return None
-            os.unlink(tmp)
-            return token
-        finally:
-            if os.path.exists(aside):
-                os.unlink(aside)
-
-    @staticmethod
-    def _link_back(aside: str, path: str, cur: Claim) -> None:
-        """Restore the renamed-aside row to ``path``.
-
-        RESIDUAL WINDOW (documented per ADVICE r15): if a usurping
-        try_claim ran its ENTIRE apply_once (fn + mark_applied)
-        inside the rename-aside window, the fn side effects have
-        already executed — exactly-once holds for the AUDIT RECORD
-        (the pre-existing terminal/live row below always wins), not
-        retroactively for fn execution. The window is the few
-        syscalls between reclaim's rename-aside and this restore;
-        callers needing a hard fn-execution guarantee must make fn
-        itself idempotent (the reference's MERGE folds are)."""
-        try:
-            os.link(aside, path)
-            os.unlink(aside)
-        except FileExistsError:
-            # A try_claim slipped into the rename window and created a
-            # fresh row. The aside row predates it and is terminal
-            # (APPLIED) or live-CLAIMED — it must win, or the derived
-            # fold could run twice and the audit record would be lost.
-            # Before clobbering, re-read what the usurper wrote: if it
-            # already completed its whole apply_once (status APPLIED),
-            # fn ran twice — surface that and preserve the usurper's
-            # transition record in a sidecar instead of silently
-            # destroying it.
-            try:
-                usurper = DerivedGuard._read(path)
-            except (OSError, ValueError, TypeError, KeyError):
-                usurper = None
-            if usurper is not None and usurper.status != "CLAIMED":
-                sidecar = f"{path}.usurped.{usurper.claim_token}.json"
-                with open(sidecar, "w", encoding="utf-8") as f:
-                    json.dump(usurper.__dict__, f)
-                warnings.warn(
-                    "DerivedGuard: a racing claimant completed "
-                    f"status={usurper.status!r} for {path} inside the "
-                    "reclaim rename window — fn may have executed "
-                    f"twice; its record is preserved at {sidecar}",
-                    RuntimeWarning,
-                    stacklevel=3,
-                )
-            # Restore the authoritative row: the usurper's later
-            # token-checked transition (if still pending) fails
-            # fail-fast, the documented invariant.
-            os.replace(aside, path)
+        fresh = Claim(derived_table, run_id, token, "CLAIMED", time.time())
+        return token if self._publish(base, n + 1, fresh) else None
 
     # -- composition ---------------------------------------------------------
 
@@ -327,8 +255,8 @@ class DerivedGuard:
         ])
         rows = []
         for name in sorted(os.listdir(self._dir)):
-            if name.endswith(".json"):
-                c = self._read(os.path.join(self._dir, name))
+            if name.endswith(".json"):  # version 1 names the key
+                _, c = self._newest(os.path.join(self._dir, name))
                 rows.append((
                     c.derived_table, c.run_id, c.claim_token, c.status,
                     float(c.claimed_at),

@@ -79,18 +79,7 @@ class ParquetTarget:
         return "/".join((self.path, *parts))
 
     def _latest_version(self) -> int:
-        """The newest version, by galloping search in O(log n) probes:
-        versions run densely from 1 (each writer read the one before)."""
-        def taken(n: int) -> bool:
-            return self._fs.exists(self._at(LOG_DIR, f"{n}.json"))
-
-        lo, hi = 0, 1  # taken(lo) (version 0 always is), not taken(hi)
-        while taken(hi):
-            lo, hi = hi, 2 * hi
-        while hi - lo > 1:
-            mid = (lo + hi) // 2
-            lo, hi = (mid, hi) if taken(mid) else (lo, mid)
-        return lo
+        return latest_version(lambda n: self._fs.exists(self._at(LOG_DIR, f"{n}.json")))
 
     def record(self, version: int) -> dict | None:
         """The published record of ``version``; None when absent."""
@@ -259,6 +248,19 @@ class ParquetTarget:
 
     # a first write is the same commit, from version 0 on a new table
     write_initial = overwrite
+
+
+def latest_version(taken) -> int:
+    """The newest version for which ``taken(n)`` holds, 0 when none does,
+    by galloping search in O(log n) probes: versions run densely from 1
+    (each writer read the one before)."""
+    lo, hi = 0, 1  # taken(lo) (version 0 always is), not taken(hi)
+    while taken(hi):
+        lo, hi = hi, 2 * hi
+    while hi - lo > 1:
+        mid = (lo + hi) // 2
+        lo, hi = (mid, hi) if taken(mid) else (lo, mid)
+    return lo
 
 
 def hidden(name: str) -> bool:

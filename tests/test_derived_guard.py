@@ -1,6 +1,7 @@
 """Exactly-once derived-table claim lifecycle (r13, reference
 odibi/derived_updater.py guard-table protocol)."""
 
+import json
 import multiprocessing
 import os
 import time
@@ -79,13 +80,20 @@ class TestReclaim:
         # age the claim artificially past the threshold
         c = g.status("t", "r")
         c.claimed_at = time.time() - 3600 * 2
-        g._write_replace(g._path("t", "r"), c)
+        _write_v1(g, c.__dict__)
         tok2 = g.reclaim_for_rebuild("t", "r", max_age_minutes=60)
         assert tok2 and tok2 != tok
 
     def test_missing_row_falls_back_to_claim(self, tmp_path):
         g = DerivedGuard(str(tmp_path))
         assert g.reclaim_for_rebuild("t", "never-run") is not None
+
+
+def _write_v1(g, row):
+    """Write ``row`` over the claim's version 1 in place, the way a
+    build that kept one file per claim rewrote it."""
+    with open(g._path(row["derived_table"], row["run_id"]), "w") as f:
+        json.dump(row, f)
 
 
 def _worker(args):
@@ -159,41 +167,8 @@ class TestCatalogIntegration:
 
 
 class TestLinkBackConflictRestoresTerminalRow:
-    """ADVICE r13 (medium): when a transition to APPLIED races the
-    reclaim's rename-aside AND a try_claim slips into the window, the
-    terminal APPLIED row must WIN — restored over the usurper's fresh
-    CLAIMED row — never deleted. The usurper's later token-verified
-    transition then fails fast, preserving exactly-once."""
-
-    def test_applied_row_survives_usurper(self, tmp_path):
-        import os
-
-        from odibi_spark.patterns.derived_guard import (
-            ClaimConflictError, DerivedGuard,
-        )
-
-        g = DerivedGuard(str(tmp_path))
-        tok = g.try_claim("t", "r1")
-        g.mark_applied("t", "r1", tok)
-        path = g._path("t", "r1")
-        aside = f"{path}.reclaim.test"
-        # simulate the race window: the reclaim renamed the row aside,
-        # a concurrent try_claim then created a fresh CLAIMED row
-        os.rename(path, aside)
-        usurper_tok = g.try_claim("t", "r1")
-        assert usurper_tok is not None
-        cur = g.status("t", "r1")
-        # _link_back must restore the terminal row over the usurper
-        g._link_back(aside, path, cur)
-        restored = g.status("t", "r1")
-        assert restored.status == "APPLIED"
-        assert restored.claim_token == tok
-        assert not os.path.exists(aside)  # consumed, not leaked
-        # the usurper's transition fails fast on its stale token
-        import pytest as _pytest
-
-        with _pytest.raises(ClaimConflictError):
-            g.mark_applied("t", "r1", usurper_tok)
+    """Reclaim never displaces a terminal row, and '__' keys stay
+    distinct (the racing cases are in TestInjectedRaces)."""
 
     def test_reclaim_race_full_path(self, tmp_path):
         """End-to-end: FAILED row reclaimed while a transition landed
@@ -218,3 +193,151 @@ class TestLinkBackConflictRestoresTerminalRow:
         assert g.try_claim("a", "b__c") is not None  # distinct key
         # single underscores stay legal and keep the legacy filename
         assert g.try_claim("a_b", "c_d") is not None
+
+
+def _race_at_publish(monkeypatch, race, *, once=True):
+    """Run ``race()`` just before each file step that creates, fills or
+    swaps a claim file (``os.open``, ``os.fdopen``, ``os.link``,
+    ``os.replace``, ``os.rename``), or only before the first with
+    ``once``. The hook is off while ``race`` runs, so its own writes go
+    through."""
+    state = {"busy": False, "ran": 0}
+
+    def wrap(real):
+        def hooked(*args, **kwargs):
+            if not state["busy"] and not (once and state["ran"]):
+                state["busy"] = True
+                try:
+                    race()
+                finally:
+                    state["busy"] = False
+                    state["ran"] += 1
+            return real(*args, **kwargs)
+
+        return hooked
+
+    for name in ("open", "fdopen", "link", "replace", "rename"):
+        monkeypatch.setattr(os, name, wrap(getattr(os, name)))
+    return state
+
+
+class TestInjectedRaces:
+    """Each race is injected in process, at the step that makes a claim
+    write visible: the publish of the next version."""
+
+    def test_zombie_transition_loses_to_reclaim(self, tmp_path, monkeypatch):
+        """A zombie owner read its CLAIMED row; a reclaim publishes the
+        next version before the zombie's write lands. The zombie raises
+        and the reclaimer's claim stands."""
+        g = DerivedGuard(str(tmp_path))
+        zombie = g.try_claim("t", "r")
+        reclaimed = []
+        _race_at_publish(
+            monkeypatch,
+            lambda: reclaimed.append(
+                g.reclaim_for_rebuild("t", "r", max_age_minutes=0)
+            ),
+        )
+        with pytest.raises(ClaimConflictError):
+            g.mark_applied("t", "r", zombie)
+        monkeypatch.undo()
+        assert reclaimed[0] not in (None, zombie)
+        g.mark_applied("t", "r", reclaimed[0])
+        now = g.status("t", "r")
+        assert (now.status, now.claim_token) == ("APPLIED", reclaimed[0])
+
+    def test_status_during_try_claim_never_reads_a_partial_row(
+        self, tmp_path, monkeypatch
+    ):
+        g = DerivedGuard(str(tmp_path))
+        seen = []
+        state = _race_at_publish(
+            monkeypatch, lambda: seen.append(g.status("t", "r")), once=False
+        )
+        token = g.try_claim("t", "r")
+        monkeypatch.undo()
+        assert state["ran"] >= 1 and token is not None
+        for c in seen:  # absent, or the whole claim
+            assert c is None or (c.claim_token, c.status) == (token, "CLAIMED")
+
+    def test_applied_row_survives_racing_reclaim(self, tmp_path, monkeypatch):
+        """A reclaim decided on a stale CLAIMED row; the owner's
+        mark_applied lands before the reclaim's write. The reclaim
+        yields, APPLIED stands, and no try_claim can take the key."""
+        g = DerivedGuard(str(tmp_path))
+        owner = g.try_claim("t", "r")
+        _race_at_publish(monkeypatch, lambda: g.mark_applied("t", "r", owner))
+        assert g.reclaim_for_rebuild("t", "r", max_age_minutes=0) is None
+        monkeypatch.undo()
+        now = g.status("t", "r")
+        assert (now.status, now.claim_token) == ("APPLIED", owner)
+        assert g.try_claim("t", "r") is None
+        assert g.reclaim_for_rebuild("t", "r", max_age_minutes=0) is None
+
+    def test_double_mark_applied_exactly_one_wins(self, tmp_path, monkeypatch):
+        """Two mark_applied calls on one token: the one that publishes
+        first wins, the other raises, and the winner's record is kept
+        as the claim's newest version."""
+        g = DerivedGuard(str(tmp_path))
+        token = g.try_claim("t", "r")
+        won = []
+        _race_at_publish(
+            monkeypatch,
+            lambda: won.append(g.mark_applied("t", "r", token)),
+        )
+        with pytest.raises(ClaimConflictError):
+            g.mark_applied("t", "r", token)
+        monkeypatch.undo()
+        assert won == [None]
+        assert g.status("t", "r").status == "APPLIED"
+        assert sorted(os.listdir(tmp_path / "claims")) == [
+            "t__r.json", "t__r.json.2",
+        ]
+
+    def test_claim_in_older_format_keeps_its_status(self, tmp_path):
+        """A claim file an older build rewrote in place to APPLIED
+        reads as version 1: apply_once skips it, and neither a claim
+        nor a reclaim takes the key."""
+        g = DerivedGuard(str(tmp_path))
+        _write_v1(g, {
+            "derived_table": "meta_daily_stats", "run_id": "run-1",
+            "claim_token": "old", "status": "APPLIED",
+            "claimed_at": 1.0, "applied_at": 2.0, "error_message": None,
+        })
+        calls = []
+        assert g.apply_once(
+            "meta_daily_stats", "run-1", lambda: calls.append(1)
+        ) == (False, None)
+        assert calls == []
+        assert g.status("meta_daily_stats", "run-1").claim_token == "old"
+        assert g.reclaim_for_rebuild("meta_daily_stats", "run-1") is None
+
+
+class TestLocalRoot:
+    def test_file_uri_root_keeps_claims_under_the_root(
+        self, spark, tmp_path, monkeypatch
+    ):
+        from odibi_spark.catalog import Catalog
+
+        cwd = tmp_path / "cwd"
+        cwd.mkdir()
+        monkeypatch.chdir(cwd)
+        cat = Catalog(spark, f"file://{tmp_path}/cat")
+        ran, _ = cat.derived_guard.apply_once(
+            "meta_daily_stats", "run-1", lambda: None
+        )
+        assert ran
+        assert (
+            tmp_path / "cat" / "meta_derived_applied_runs" / "claims"
+            / "meta_daily_stats__run-1.json"
+        ).exists()
+        assert list(cwd.iterdir()) == []
+        # a replay from another directory sees the claim
+        monkeypatch.chdir(tmp_path)
+        assert cat.derived_guard.apply_once(
+            "meta_daily_stats", "run-1", lambda: None
+        ) == (False, None)
+
+    def test_remote_root_raises(self):
+        with pytest.raises(ValueError, match="local root"):
+            DerivedGuard("s3a://bucket/catalog/meta_derived_applied_runs")

@@ -2494,6 +2494,28 @@ class TestIncrementalDedup:
         assert got == one_shot
         assert state2.get("dedup_hwm") == "5"
 
+    def test_one_look_at_the_store_per_batch(self, spark, tmp_path, monkeypatch):
+        """A batch walks the store's tree twice: its first look, which
+        pins the version the append commits on, and the commit's
+        re-look after it applies. The two batches still flag as the
+        one-shot run."""
+        from odibi_spark.patterns.merge_target import ParquetTarget
+
+        df, store, state = self._setup(spark, tmp_path)
+        got = self._run(df.filter("doc_id <= 3"), store, state, "b1")
+        looks = []
+        real = ParquetTarget.live
+
+        def live(target):
+            looks.append(target.path)
+            return real(target)
+
+        monkeypatch.setattr(ParquetTarget, "live", live)
+        got.update(self._run(df, store, state, "b2"))
+        assert looks == [store._target.path] * 2
+        assert got == self.ONE_SHOT
+        assert state.get("dedup_hwm") == "5"
+
     def test_dup_of_dropped_doc_is_caught(self, spark, tmp_path):
         """Doc 5 matches only doc 3, itself dropped as a dup of 1 —
         dropped docs' signatures still gate later arrivals."""

@@ -1,8 +1,9 @@
 """Round-15 ADVICE regression tests: hard_negative_pairs mode gate,
-synth_wav object-dtype guard, derived-guard '__' key encoding and the
-usurper-surfacing link-back."""
+synth_wav object-dtype guard and derived-guard '__' key encoding.
+The races its link-back tests covered are injected against the
+versioned claim records in
+``tests/test_derived_guard.py::TestInjectedRaces``."""
 
-import json
 import os
 import struct
 import warnings
@@ -131,57 +132,3 @@ class TestDerivedGuardKeyEncoding:
             g.try_claim("a/b", "r")
         with pytest.raises(ValueError):
             g.try_claim(".hidden", "r")
-
-
-class TestLinkBackSurfacesUsurper:
-    def test_completed_usurper_preserved_in_sidecar(self, tmp_path):
-        g = DerivedGuard(str(tmp_path))
-        path = g._path("t", "r")
-        aside = path + ".aside"
-        original = {
-            "derived_table": "t", "run_id": "r",
-            "claim_token": "orig", "status": "APPLIED",
-            "claimed_at": 1.0, "applied_at": 2.0,
-            "error_message": None,
-        }
-        usurper = {
-            "derived_table": "t", "run_id": "r",
-            "claim_token": "usurp", "status": "APPLIED",
-            "claimed_at": 3.0, "applied_at": 4.0,
-            "error_message": None,
-        }
-        with open(aside, "w") as f:
-            json.dump(original, f)
-        with open(path, "w") as f:
-            json.dump(usurper, f)
-        with pytest.warns(RuntimeWarning, match="executed"):
-            DerivedGuard._link_back(aside, path, g._read(aside))
-        # original row restored
-        assert g._read(path).claim_token == "orig"
-        # usurper's completed transition preserved, not clobbered
-        sidecar = f"{path}.usurped.usurp.json"
-        assert os.path.exists(sidecar)
-        assert json.load(open(sidecar))["claim_token"] == "usurp"
-
-    def test_live_claimed_usurper_silently_replaced(self, tmp_path):
-        g = DerivedGuard(str(tmp_path))
-        path = g._path("t", "r")
-        aside = path + ".aside"
-        with open(aside, "w") as f:
-            json.dump({
-                "derived_table": "t", "run_id": "r",
-                "claim_token": "orig", "status": "APPLIED",
-                "claimed_at": 1.0, "applied_at": 2.0,
-                "error_message": None,
-            }, f)
-        with open(path, "w") as f:
-            json.dump({
-                "derived_table": "t", "run_id": "r",
-                "claim_token": "usurp", "status": "CLAIMED",
-                "claimed_at": 3.0, "applied_at": None,
-                "error_message": None,
-            }, f)
-        with warnings.catch_warnings():
-            warnings.simplefilter("error")
-            DerivedGuard._link_back(aside, path, g._read(aside))
-        assert g._read(path).claim_token == "orig"

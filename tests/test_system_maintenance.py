@@ -354,6 +354,45 @@ class TestOptimizeAndSync:
         assert dst.runs().count() == 4
         assert dst.daily_stats().count() == 2
 
+    def test_optimize_and_sync_cover_schema_snapshots(self, spark, tmp_path):
+        now = time.time()
+        cat = _seed(spark, str(tmp_path / "_src"), now)
+        for cols in ("a long", "a long, b string"):  # two snapshot files
+            cat.snapshot_schema("t", spark.createDataFrame([], cols))
+        counts = cat.sync_to(str(tmp_path / "_dst"))
+        assert counts["schema_snapshots"] == 2
+        dst = Catalog(spark, str(tmp_path / "_dst"))
+        assert dst.schema_snapshots("t").count() == 2
+        stats = cat.optimize()
+        assert stats["schema_snapshots"]["files_before"] == 2
+        assert cat.schema_snapshots("t").count() == 2
+
+    def test_sync_is_one_commit_on_the_target(self, spark, tmp_path):
+        """The target's daily stats were folded twice (versions 1 and
+        2): a sync publishes version 3 over them, and a writer that read
+        version 2 before the sync conflicts instead of committing over
+        the synced rows."""
+        import pyarrow as pa
+
+        from odibi_spark.catalog import DAILY_STATS_SCHEMA
+        from odibi_spark.io.append import parse_ddl
+        from odibi_spark.patterns.merge_target import (
+            CommitConflict, ParquetTarget,
+        )
+
+        now = time.time()
+        src = _seed(spark, str(tmp_path / "_src"), now)
+        _seed(spark, str(tmp_path / "_dst"), now)
+        path = str(tmp_path / "_dst" / "meta_daily_stats")
+        stale = ParquetTarget(spark, path)
+        stale.live()
+        assert stale.version == 2
+        src.sync_to(str(tmp_path / "_dst"))
+        assert ParquetTarget(spark, path)._latest_version() == 3
+        with pytest.raises(CommitConflict):
+            stale.overwrite(pa.Table.from_pylist([], schema=parse_ddl(DAILY_STATS_SCHEMA)))
+        assert Catalog(spark, str(tmp_path / "_dst")).daily_stats().count() == 2
+
     def test_cli_system_cleanup_and_rebuild(self, spark, tmp_path, capsys):
         from odibi_spark.cli import main
 
