@@ -7,16 +7,15 @@ _system_catalog/).
 On a cluster these become Delta tables with MERGE upserts; here the
 parquet key-value/append forms keep identical schemas.
 
-The tables hold O(runs x nodes) rows, so on a local root the per-run
-bookkeeping stays on the driver and launches no Spark job: appends are
-pyarrow files (``io/append.atomic_append``), the schema snapshot's
-read-latest and the ``meta_daily_stats`` fold read with
-``io/append.read_rows``, and the fold commits a pyarrow table as one
-``ParquetTarget`` version. Roots with a URI scheme read and append
-through Spark. The query accessors (``runs()``, ``metrics()``, ...) and
-maintenance stay Spark DataFrames. Every meta-table rewrite is a
-``ParquetTarget`` commit; ``meta_daily_stats``'s writers (the fold,
-``cleanup`` and ``rebuild_daily_stats``) take turns on its lock file.
+Every meta-table write is one ``ParquetTarget`` commit. The tables hold
+O(runs x nodes) rows, so on a local root the per-run bookkeeping stays
+on the driver and launches no Spark job: appends and the
+``meta_daily_stats`` fold commit pyarrow tables, and the schema
+snapshot's read-latest and the fold read with ``io/append.read_rows``
+(through Spark on a URI root). The query accessors (``runs()``, ...)
+and maintenance stay Spark DataFrames; ``cleanup`` and ``optimize``
+raise ``CommitConflict`` when an append lands during them. The fold,
+``cleanup`` and ``rebuild_daily_stats`` take turns on a lock file.
 """
 
 from __future__ import annotations
@@ -31,7 +30,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from odibi_spark.io.append import _is_local
-from odibi_spark.patterns.merge_target import ParquetTarget
+from odibi_spark.patterns.merge_target import CommitConflict, ParquetTarget
 
 
 RUN_SCHEMA = (
@@ -106,16 +105,13 @@ class Catalog:
         self.root = root.rstrip("/")
 
     def _append(self, name: str, rows: list[tuple], schema: str) -> None:
-        """Concurrent-writer-safe append: one uniquely-named file per
-        call via :func:`odibi_spark.io.append.atomic_append`, so two
-        pipelines recording runs/metrics into the same catalog at once
-        cannot clobber each other's staging (the reference's catalog
-        retries concurrent Delta commits instead —
-        odibi/state/__init__.py:43-107; on an object store without
-        atomic rename, that Delta-MERGE backend is the upgrade path)."""
-        from odibi_spark.io.append import atomic_append
+        """Append ``rows`` in one commit; two pipelines recording into
+        the same catalog at once both land, the loser of the publish
+        staging again (the reference's catalog retries concurrent Delta
+        commits the same way — odibi/state/__init__.py:43-107)."""
+        from odibi_spark.io.append import rows_table
 
-        atomic_append(self.spark, f"{self.root}/meta_{name}", rows, schema)
+        ParquetTarget(self.spark, self._table_path(name)).append(rows_table(rows, schema))
 
     def record_run(
         self,
@@ -263,61 +259,63 @@ class Catalog:
         sorted JSON arrays). An unchanged schema appends nothing.
 
         Returns {"changed", "version"} (+ "previous_version" and the
-        drift lists when changed). Version assignment is
-        read-latest-then-append like the reference's — two concurrent
-        first writers of the SAME table can race a version number;
-        the snapshot log still records both schemas (the reference's
-        Delta-MERGE backend is the upgrade path, same posture as
-        ``_append``). The read-latest runs on the driver
-        (``read_rows``)."""
+        drift lists when changed). The read-latest runs on the driver
+        (``read_rows``), and the row commits on the version that read
+        noted: when another snapshot committed in between, the commit
+        conflicts and the snapshot is read and computed again, so two
+        snapshots never share a version number."""
         import hashlib
 
-        from odibi_spark.io.append import read_rows
+        from odibi_spark.io.append import read_rows, rows_table
 
         cols = {f.name: f.dataType.simpleString() for f in df.schema.fields}
         canon = json.dumps(cols, sort_keys=True)
         schema_hash = hashlib.md5(canon.encode()).hexdigest()
-        prev = max(
-            (
-                r for r in read_rows(
-                    self.spark, self._table_path("schema_snapshots"),
-                    SCHEMA_SNAPSHOT_SCHEMA,
-                )
-                if r["table_path"] == table_path
-            ),
-            key=lambda r: r["schema_version"],
-            default=None,
-        )
-        if prev is not None and prev["schema_hash"] == schema_hash:
-            return {"changed": False, "version": int(prev["schema_version"])}
-        if prev is not None:
-            prev_cols = json.loads(prev["columns_json"])
-            added = sorted(set(cols) - set(prev_cols))
-            removed = sorted(set(prev_cols) - set(cols))
-            changed = sorted(
-                c for c in cols if c in prev_cols and cols[c] != prev_cols[c]
+        path = self._table_path("schema_snapshots")
+        target = ParquetTarget(self.spark, path)
+        while True:
+            target.live()  # notes the version the commit builds on
+            prev = max(
+                (
+                    r for r in read_rows(self.spark, path, SCHEMA_SNAPSHOT_SCHEMA)
+                    if r["table_path"] == table_path
+                ),
+                key=lambda r: r["schema_version"],
+                default=None,
             )
-            version = int(prev["schema_version"]) + 1
-        else:
-            added, removed, changed = sorted(cols), [], []
-            version = 1
-        self._append(
-            "schema_snapshots",
-            [(
-                table_path, version, schema_hash, canon, time.time(),
-                pipeline, node, run_id,
-                json.dumps(added), json.dumps(removed), json.dumps(changed),
-            )],
-            SCHEMA_SNAPSHOT_SCHEMA,
-        )
-        return {
-            "changed": True,
-            "version": version,
-            "previous_version": int(prev["schema_version"]) if prev else None,
-            "columns_added": added,
-            "columns_removed": removed,
-            "columns_type_changed": changed,
-        }
+            if prev is not None and prev["schema_hash"] == schema_hash:
+                return {"changed": False, "version": int(prev["schema_version"])}
+            if prev is not None:
+                prev_cols = json.loads(prev["columns_json"])
+                added = sorted(set(cols) - set(prev_cols))
+                removed = sorted(set(prev_cols) - set(cols))
+                changed = sorted(
+                    c for c in cols if c in prev_cols and cols[c] != prev_cols[c]
+                )
+                version = int(prev["schema_version"]) + 1
+            else:
+                added, removed, changed = sorted(cols), [], []
+                version = 1
+            row = rows_table(
+                [(
+                    table_path, version, schema_hash, canon, time.time(),
+                    pipeline, node, run_id,
+                    json.dumps(added), json.dumps(removed), json.dumps(changed),
+                )],
+                SCHEMA_SNAPSHOT_SCHEMA,
+            )
+            try:
+                target.commit(lambda staged: target._write(row, staged), remove=[])
+            except CommitConflict:  # a snapshot committed after the read
+                continue
+            return {
+                "changed": True,
+                "version": version,
+                "previous_version": int(prev["schema_version"]) if prev else None,
+                "columns_added": added,
+                "columns_removed": removed,
+                "columns_type_changed": changed,
+            }
 
     def sync_table(
         self,
@@ -731,8 +729,8 @@ def run_pipeline_with_catalog(pipeline, *, catalog: Catalog, parallel: bool = Fa
     """Run a Pipeline and record per-node results + lineage metadata
     (reference post-run: catalog sync + lineage emit, SURVEY §3.1.6).
 
-    The bookkeeping after ``pipeline.run`` writes one file per catalog
-    table per run (all nodes' rows in one append), and on a local root
+    The bookkeeping after ``pipeline.run`` commits one version per
+    catalog table per run (all nodes' rows in one append), and on a local root
     launches no Spark job (see the module docstring)."""
     run_id = str(uuid.uuid4())
     t0 = time.time()

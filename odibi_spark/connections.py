@@ -113,8 +113,8 @@ class LocalConnection(Connection):
         import os
 
         for dirpath, dirnames, filenames in os.walk(root):
-            # a directory of part-files is ONE dataset (spark output dir)
-            if any(f.startswith("part-") or f == "_SUCCESS" for f in filenames):
+            # a directory of part-files or a commit log is ONE dataset
+            if any(f.startswith("part-") or f == "_SUCCESS" for f in filenames) or "_log" in dirnames:
                 name = os.path.relpath(dirpath, root)
                 fmt = next(
                     (

@@ -165,6 +165,6 @@ def diagnose_path(path: str) -> dict[str, Any]:
             for e in entries
         ]
         # parquet dataset heuristic
-        if any(e.endswith(".parquet") for e in entries) or "_SUCCESS" in entries:
+        if any(e.endswith(".parquet") for e in entries) or {"_SUCCESS", "_log"} & set(entries):
             out["format"] = "parquet dataset"
     return out

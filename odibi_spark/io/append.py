@@ -1,36 +1,23 @@
-"""Concurrency-safe parquet appends, and driver-side reads, for small
-metadata tables.
+"""Driver-side rows for small metadata tables: the catalog's meta
+tables and the parquet HWM state.
 
-Spark's ``mode("append")`` stages output under a SHARED
-``_temporary/<jobId>`` directory: two drivers appending to the same
-catalog table concurrently can delete each other's staging files
-(FileOutputCommitter is single-writer by design). The reference's
-catalog state retries on concurrent Delta commits
-(odibi/state/__init__.py:43-107); the open-format twin here gets the
-same safety a different way — each append is ONE parquet file written
-driver-side via pyarrow to a unique name and renamed into place
-atomically, so concurrent writers can never observe or destroy each
-other's in-flight work, and readers never see a partial file (names
-starting with '.' are invisible to Spark's file listing).
+Their appends are ``ParquetTarget.append`` commits of a pyarrow table
+built by ``rows_table``: one file staged and one ``_log/<n>.json``
+record published per call, and an append that loses the publish to a
+concurrent one is staged again on the newer version, so every
+appender lands (the reference's catalog state retries concurrent Delta
+commits the same way, odibi/state/__init__.py:43-107). Roots with a
+URI scheme commit through the Hadoop FileSystem API.
 
-This is the right tool ONLY for driver-sized metadata rows (catalog
-runs/metrics/state: O(nodes) rows per call). Distributed data writes
-keep using Spark writers. On object stores without atomic rename the
-upgrade path is a Delta table with MERGE/append commits — documented
-at the call sites; paths with a URI scheme fall back to a plain Spark
-append (single-writer semantics, as before).
-
-Reads of the same tables happen on the driver too: ``read_rows`` loads
-a local table with ``pyarrow.dataset`` (hidden ``.``/``_`` files
-skipped, as Spark's listing does), so catalog lookups and folds and the
-parquet HWM state launch no Spark job. Paths with a URI scheme fall
-back to a Spark read with the given schema.
+``read_rows`` loads a local table with ``pyarrow.dataset`` (hidden
+``.``/``_`` files skipped, as Spark's listing does), so catalog lookups
+and folds and the parquet HWM state launch no Spark job. Paths with a
+URI scheme fall back to a Spark read with the given schema.
 """
 
 from __future__ import annotations
 
 import os
-import uuid
 
 import pyarrow as pa
 
@@ -56,7 +43,7 @@ def parse_ddl(ddl_schema: str) -> pa.Schema:
             fields.append(pa.field(name, _PA_TYPES[typ.lower()]))
         except KeyError:
             raise ValueError(
-                f"atomic append supports flat {sorted(_PA_TYPES)} columns; "
+                f"meta tables support flat {sorted(_PA_TYPES)} columns; "
                 f"got '{typ}' for '{name}'"
             ) from None
     return pa.schema(fields)
@@ -85,29 +72,8 @@ def read_rows(spark, path: str, ddl_schema: str) -> list[dict]:
     return dataset.to_table().to_pylist()
 
 
-def atomic_append(spark, path: str, rows: list[tuple], ddl_schema: str) -> str:
-    """Append ``rows`` to the parquet directory ``path`` as one new
-    uniquely-named file (concurrent-writer safe on any filesystem with
-    atomic rename). Returns the file written. Falls back to a Spark
-    append for non-local URIs."""
-    if not _is_local(path):
-        df = spark.createDataFrame(rows, ddl_schema)
-        df.write.mode("append").parquet(path)
-        return path
-    import pyarrow.parquet as pq
-
+def rows_table(rows: list[tuple], ddl_schema: str) -> pa.Table:
+    """``rows`` (tuples in ``ddl_schema``'s column order) as a pyarrow
+    table of that schema."""
     schema = parse_ddl(ddl_schema)
-    table = pa.Table.from_arrays(
-        [
-            pa.array([r[i] for r in rows], type=f.type)
-            for i, f in enumerate(schema)
-        ],
-        schema=schema,
-    )
-    os.makedirs(path, exist_ok=True)
-    stem = f"part-{uuid.uuid4().hex}"
-    tmp = os.path.join(path, f".{stem}.parquet.tmp")
-    final = os.path.join(path, f"{stem}.parquet")
-    pq.write_table(table, tmp)
-    os.replace(tmp, final)  # atomic: readers see the file whole or not at all
-    return final
+    return pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=schema)

@@ -4,12 +4,12 @@ WriteConfig odibi/config.py:4163-4342).
 Modes: overwrite / append / error / ignore (native), plus the
 reference's merge modes **upsert** and **append_once**, which the
 reference implements with Delta MERGE (spark_engine.py:1254-1335).
-A parquet target merges through the merge pattern's implementation
-(``patterns.merge.merge_into``, strategies upsert / append_only) and
-commits one ``ParquetTarget`` version (new files staged under
-``_staging``, then the exclusive ``_log/<n>.json`` record), keeping
-``partition_by``. With delta-spark importable, ``format='delta'`` runs
-``DeltaTable.merge`` instead; other formats raise.
+On parquet every mode commits one ``ParquetTarget`` version (files
+staged under ``_staging``, then the exclusive ``_log/<n>.json``
+record), keeping ``partition_by``, so a failed plan leaves the previous
+version; merges run ``patterns.merge.merge_into``. With delta-spark
+importable, ``format='delta'`` runs ``DeltaTable.merge`` instead;
+merge modes on other formats raise.
 
 Scale notes:
 - ``partition_by`` drives directory layout -> partition pruning.
@@ -207,7 +207,16 @@ def write_sink(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     if format == "parquet":
-        writer.parquet(path)
+        target = ParquetTarget(spark, path, partition_by)
+        if mode in ("error", "errorifexists", "ignore") and target.live():
+            if mode == "ignore":
+                return
+            raise FileExistsError(f"parquet table '{path}' already exists (mode '{mode}')")
+        # the plan may read from the live dir: staging never touches it
+        target.commit(
+            lambda staged: writer.mode("overwrite").parquet(staged),
+            remove=[] if mode == "append" else None,
+        )
     elif format == "csv":
         writer.option("header", "true").csv(path)
     elif format == "json":

@@ -255,8 +255,11 @@ class DerivedGuard:
         ])
         rows = []
         for name in sorted(os.listdir(self._dir)):
-            if name.endswith(".json"):  # version 1 names the key
-                _, c = self._newest(os.path.join(self._dir, name))
+            base = os.path.join(self._dir, name)
+            c = self._newest(base)[1] if name.endswith(".json") else None
+            # only a key's version 1, which its record names (a stray
+            # .json, such as an older build's sidecar, is skipped)
+            if c is not None and self._path(c.derived_table, c.run_id) == base:
                 rows.append((
                     c.derived_table, c.run_id, c.claim_token, c.status,
                     float(c.claimed_at),

@@ -5,10 +5,11 @@ The reference runs merges through Delta MERGE (odibi/transformers/
 scd.py:553-735, merge_transformer.py:406-640) and maintenance through
 OPTIMIZE, all on one transaction log. Without Delta jars,
 ``ParquetTarget`` gives the same row semantics via read -> transform ->
-``commit``, and every parquet table rewrite is such a commit: the merge
-patterns, ``write_sink``'s merge modes, compaction, ``maintain
---zorder-by``, the catalog's rewrites, the CMS state and the MinHash
-signature store's appends. It is the seam
+``commit``, and every parquet write the library makes is such a
+commit: the merge patterns, ``write_sink`` in every parquet mode (the
+quarantine appends too), compaction, ``maintain --zorder-by``, the
+catalog's appends and rewrites, the parquet HWM state, the CMS state
+and the MinHash signature store's appends. It is the seam
 where ``DeltaTable`` plugs in on a real cluster. Each instance learns
 the schema at most once; on a local unpartitioned target it comes from
 the first data file's footer through Spark's own converter
@@ -187,6 +188,7 @@ class ParquetTarget:
                 "meta": (self.record(self.version) or {}).get("meta", {}) if meta is None else meta,
             }
         except Exception:
+            self._fs.delete(staged)  # a failed stage's partial files
             if self._latest_version() >= n:  # the winner swept this staging
                 self._conflict(n, staged)
             raise
@@ -245,6 +247,18 @@ class ParquetTarget:
     def overwrite(self, df: DataFrame | pa.Table) -> None:
         # the plan may read from the live dir: staging never touches it
         self.commit(lambda staged: self._write(df, staged))
+
+    def append(self, data: DataFrame | pa.Table) -> dict:
+        """Commit ``data``'s rows, removing nothing. A pyarrow table
+        that loses the publish is staged again on the newer version, so
+        concurrent appenders all land; a DataFrame raises
+        ``CommitConflict`` (staging again would re-run its plan)."""
+        while True:
+            try:
+                return self.commit(lambda staged: self._write(data, staged), remove=[])
+            except CommitConflict:
+                if not isinstance(data, pa.Table):
+                    raise
 
     # a first write is the same commit, from version 0 on a new table
     write_initial = overwrite

@@ -84,16 +84,16 @@ _STATE_SCHEMA = "key string, value string, seq bigint"
 class ParquetStateBackend(StateBackend):
     """Key-value parquet table (Delta ``meta_state`` analogue).
 
-    Concurrency: each ``set`` appends ONE uniquely-named file carrying
-    (key, value, seq) — never a read-modify-overwrite of the whole
-    table — so concurrent writers of DIFFERENT keys both land, and
-    same-key races resolve last-seq-wins (the same outcome a retried
-    Delta MERGE gives the reference, odibi/state/__init__.py:43-107).
-    Readers resolve the latest seq per key on the driver
-    (``io/append.read_rows``, no Spark job on a local path); files from
-    the pre-append overwrite layout read as seq 0. ``Catalog.optimize()``
-    bin-packs the accreted files; on an object store without atomic
-    rename the upgrade path is the Delta MERGE backend."""
+    Concurrency: each ``set`` appends ONE (key, value, seq) row as one
+    ``ParquetTarget.append`` commit — never a read-modify-overwrite of
+    the whole table — and an append that loses the publish is staged
+    again on the newer version, so concurrent writers of DIFFERENT keys
+    both land, and same-key races resolve last-seq-wins (the same
+    outcome a retried Delta MERGE gives the reference,
+    odibi/state/__init__.py:43-107). Readers resolve the latest seq per
+    key on the driver (``io/append.read_rows``, no Spark job on a local
+    path); files from the pre-append overwrite layout read as seq 0.
+    ``Catalog.optimize()`` bin-packs the accreted files."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -114,10 +114,11 @@ class ParquetStateBackend(StateBackend):
     def set(self, key: str, value: str) -> None:
         import time
 
-        from odibi_spark.io.append import atomic_append
+        from odibi_spark.io.append import rows_table
+        from odibi_spark.patterns.merge_target import ParquetTarget
 
-        atomic_append(
-            self.spark, self.path, [(key, value, time.time_ns())], _STATE_SCHEMA,
+        ParquetTarget(self.spark, self.path).append(
+            rows_table([(key, value, time.time_ns())], _STATE_SCHEMA)
         )
 
 

@@ -15,7 +15,7 @@ Everything here is driver-side string rendering over O(nodes) metadata;
 the only Spark touch is the optional ``context`` schema/sample peek
 (``limit(n)`` collect, bounded). State writes go through a temp-file +
 ``os.replace`` so concurrent pipelines in one project cannot interleave a
-partial ``.pipelines.json`` (same posture as catalog.py's atomic appends).
+partial ``.pipelines.json`` (readers see the old file or the new one whole).
 """
 
 from __future__ import annotations

@@ -341,3 +341,21 @@ class TestLocalRoot:
     def test_remote_root_raises(self):
         with pytest.raises(ValueError, match="local root"):
             DerivedGuard("s3a://bucket/catalog/meta_derived_applied_runs")
+
+
+class TestClaimsListing:
+    def test_stray_json_sidecar_is_not_a_key(self, spark, tmp_path):
+        """An older build's ``<key>.json.usurped.<token>.json`` sidecar
+        ends in ``.json`` too: only each key's version 1 is a row, also
+        for a key whose run id holds ``.json.``."""
+        g = DerivedGuard(str(tmp_path))
+        tok = g.try_claim("t", "r1")
+        g.mark_applied("t", "r1", tok)
+        assert g.try_claim("t", "a.json.b")
+        base = g._path("t", "r1")
+        with open(base, encoding="utf-8") as f:
+            row = json.load(f)
+        with open(f"{base}.usurped.{tok}.json", "w", encoding="utf-8") as f:
+            json.dump(row, f)
+        got = sorted((r.derived_table, r.run_id, r.status) for r in g.claims(spark).collect())
+        assert got == [("t", "a.json.b", "CLAIMED"), ("t", "r1", "APPLIED")]

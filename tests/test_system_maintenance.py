@@ -109,8 +109,8 @@ class TestConcurrentWriters:
     def test_two_pipelines_record_runs_concurrently(self, spark, tmp_path):
         """Two threads recording runs + metrics into the SAME catalog
         root concurrently: every row must land (VERDICT r7 task 6 —
-        Spark append-mode staging is single-writer; the atomic
-        unique-filename appends are not)."""
+        Spark append-mode staging is single-writer; an append commit
+        that loses the publish stages again on the newer version)."""
         import threading
 
         cat = Catalog(spark, str(tmp_path / "_cc"))
