@@ -19,6 +19,8 @@ import random
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from odibi_spark.llm.text import sql_literal
+
 # Universal-hash modulus for the portable MinHash scheme: 2^31 - 1
 # (Mersenne prime). a*x+b stays under 2^62 — no 64-bit overflow in
 # either Spark or DuckDB.
@@ -175,20 +177,7 @@ def ngram_jaccard_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    a = sets.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    b = sets.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    out = (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    return out
+    return _verified_pairs(pairs, sets, threshold)
 
 
 def _minhash_projection(exploded: DataFrame, hasher: str, seed: int) -> DataFrame:
@@ -203,14 +192,13 @@ def _minhash_projection(exploded: DataFrame, hasher: str, seed: int) -> DataFram
 
 
 def _minhash_aggs(num_perm: int, hasher: str, seed: int) -> list[Column]:
+    # one parsed expression per permutation (SQL text, not a Column
+    # built call by call over py4j)
     if hasher == "xxhash64":
-        return [
-            F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-            for i in range(num_perm)
-        ]
+        return [F.expr(f"min(xxhash64({i}, shingle)) AS h{i}") for i in range(num_perm)]
     consts = minhash_perm_constants(num_perm, seed)
     return [
-        F.min((F.lit(a) * F.col("bx") + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(f"h{i}")
+        F.expr(f"min(({a} * bx + {b}) % {MINHASH_PRIME}) AS h{i}")
         for i, (a, b) in enumerate(consts)
     ]
 
@@ -277,15 +265,15 @@ def band_keys(
     engines) instead of an engine-specific hash."""
     band_cols = []
     for b in range(bands):
-        cols = [F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
+        cols = [f"h{b * rows_per_band + r}" for r in range(rows_per_band)]
         bh = (
-            F.xxhash64(*cols).cast("string")
+            f"CAST(xxhash64({', '.join(cols)}) AS STRING)"
             if hasher == "xxhash64"
-            else F.concat_ws(",", *[c.cast("string") for c in cols])
+            else f"concat_ws(',', {', '.join(f'CAST({c} AS STRING)' for c in cols)})"
         )
-        band_cols.append(F.struct(F.lit(b).alias("band"), bh.alias("bh")))
-    return signatures.select(
-        "id", F.explode(F.array(*band_cols)).alias("bb")
+        band_cols.append(f"named_struct('band', {b}, 'bh', {bh})")
+    return signatures.selectExpr(
+        "id", f"explode(array({', '.join(band_cols)})) AS bb"
     ).select("id", "bb.band", "bb.bh")
 
 
@@ -302,9 +290,24 @@ def lsh_candidate_pairs(
     return (
         banded.alias("a")
         .join(banded.alias("b"), ["band", "bh"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .filter("a.id < b.id")
+        .selectExpr("a.id AS id_a", "b.id AS id_b")
         .distinct()
+    )
+
+
+def _verified_pairs(cands: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard) for each candidate pair whose exact
+    Jaccard over the (id, shingles) sets is at least ``threshold``."""
+    a = sets.selectExpr("id AS id_a", "shingles AS sh_a")
+    b = sets.selectExpr("id AS id_b", "shingles AS sh_b")
+    return (
+        cands.join(a, "id_a")
+        .join(b, "id_b")
+        .withColumn("jaccard", F.expr(
+            "size(array_intersect(sh_a, sh_b)) / size(array_union(sh_a, sh_b))"))
+        .filter(f"jaccard >= {sql_literal(threshold)}")
+        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -340,22 +343,8 @@ def minhash_dedup_pairs(
         # its exchange is reused by both sides of the band self-join
         sigs = signatures_from_sets(sets, num_perm, hasher, seed)
         cands = lsh_candidate_pairs(sigs, bands, rows_per_band, hasher)
-        a = sets.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
-        b = sets.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
-        out = (
-            cands.join(a, "id_a")
-            .join(b, "id_b")
-            .withColumn(
-                "jaccard",
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
         # materialize while the persisted sets are alive
-        out = out.localCheckpoint(eager=True)
-        return out
+        return _verified_pairs(cands, sets, threshold).localCheckpoint(eager=True)
     finally:
         sets.unpersist()
 

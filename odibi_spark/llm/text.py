@@ -7,6 +7,9 @@ no Python in the row path, so throughput is scan-bound at 100 TB.
 
 from __future__ import annotations
 
+import math
+import re
+
 from pyspark.sql import DataFrame, functions as F
 
 # Tiny per-language stopword profiles for the n-gram/stopword heuristic
@@ -20,6 +23,32 @@ STOPWORD_PROFILES: dict[str, list[str]] = {
 }
 
 
+def sql_literal(value: str | int | float) -> str:
+    """Render a Python value as Spark SQL that evaluates to the same
+    value, with the type ``F.lit`` gives it, so a user value can sit
+    inside SQL text (``F.expr``, ``selectExpr``).
+
+    A string is a quoted literal; its backslashes and quotes are
+    ``chr()`` pieces of a ``concat`` (folded to one literal by the
+    optimizer), so no escape is ever parsed and the text means the same
+    under either ``spark.sql.parser.escapedStringLiterals``. Every other
+    character, newlines and non-BMP characters included, stands for
+    itself. A float carries the ``D`` suffix (a bare ``0.5`` is a
+    DECIMAL), and a non-finite one is cast from its name.
+    """
+    if isinstance(value, int):
+        return str(value)
+    if isinstance(value, float):
+        return f"{value!r}D" if math.isfinite(value) else f"CAST('{value!r}' AS DOUBLE)"
+    if isinstance(value, str):
+        pieces = [f"chr({ord(p)})" if p in ("\\", "'") else f"'{p}'"
+                  for p in re.split(r"([\\'])", value) if p]
+        if len(pieces) < 2:
+            return pieces[0] if pieces else "''"
+        return f"concat({', '.join(pieces)})"
+    raise TypeError(f"no SQL literal for {type(value).__name__}: {value!r}")
+
+
 def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Add n_chars, n_words, avg_word_len, stopword_ratio, quality_score.
 
@@ -31,19 +60,17 @@ def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     # project the word array and the stopword count ONCE: the filter
     # lambda is interpreted and HOFs don't CSE, so inlining them would
     # split and filter the text once per output column
-    out = df.withColumn("__w", F.split(F.trim(t), " "))
+    out = df.withColumns({"__t": t, "__w": F.split(F.trim(t), " ")})
     out = out.withColumn(
-        "__stop", F.size(F.filter("__w", lambda w: w.isin("the", "a")))
+        "__stop", F.expr("size(filter(__w, w -> w IN ('the', 'a')))")
     )
-    n_words = F.size("__w")
-    stop_ratio = F.col("__stop") / n_words
     return out.withColumns({
-        "n_chars_obs": F.length(t),
-        "n_words": n_words,
-        "avg_word_len": (F.length(t) - (n_words - F.lit(1))) / n_words,
-        "stopword_ratio": stop_ratio,
-        "quality_score": F.ln(F.lit(1) + n_words) * (F.lit(1.0) - stop_ratio),
-    }).drop("__w", "__stop")
+        "n_chars_obs": F.expr("length(__t)"),
+        "n_words": F.expr("size(__w)"),
+        "avg_word_len": F.expr("(length(__t) - (size(__w) - 1)) / size(__w)"),
+        "stopword_ratio": F.expr("__stop / size(__w)"),
+        "quality_score": F.expr("ln(1 + size(__w)) * (1.0D - __stop / size(__w))"),
+    }).drop("__t", "__w", "__stop")
 
 
 def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -117,22 +144,21 @@ def repetition_signals(
     the divisions are exact. All JVM-side, no Python.
     """
     t = F.col(text_col)
-    one = F.lit(1).cast("long")
+    # runs of equal values, as SQL text over the lambda (acc, x): run
+    # counts the copies of x seen so far in the sorted array (acc.prev
+    # is NULL only at the start) and each field is its next long value
+    run = "CASE WHEN x <=> acc.prev THEN acc.run + 1L ELSE 1L END"
 
-    def fold_runs(arr, **fields):
-        # each field folds (value, run, x): run counts the copies of x
-        # seen so far in the sorted array (prev is NULL only at start)
-        def merge(acc, x):
-            run = F.when(x.eqNullSafe(acc["prev"]), acc["run"] + one).otherwise(one)
-            return F.struct(x.alias("prev"), run.alias("run"), *[
-                f(acc[k], run, x).alias(k) for k, f in fields.items()])
-        start = [F.lit(None).cast("string").alias("prev")] + [
-            F.lit(0).cast("long").alias(k) for k in ["run", *fields]]
-        return F.aggregate(F.array_sort(arr), F.struct(*start), merge)
+    def fold_runs(arr: str, **fields: str) -> str:
+        start = ", ".join(["'prev', CAST(NULL AS STRING)"] + [
+            f"'{k}', 0L" for k in ["run", *fields]])
+        step = ", ".join(["'prev', x", f"'run', {run}"] + [
+            f"'{k}', {e}" for k, e in fields.items()])
+        return (f"aggregate(array_sort({arr}), named_struct({start}), "
+                f"(acc, x) -> named_struct({step}))")
 
-    def dup(run):
-        # a run reaching 2 adds both copies, each later copy adds one
-        return F.when(run == 2, 2).when(run > 2, 1).otherwise(0).cast("long")
+    # a run reaching 2 adds both copies, each later copy adds one
+    dup = f"CAST(CASE WHEN {run} = 2 THEN 2 WHEN {run} > 2 THEN 1 ELSE 0 END AS BIGINT)"
 
     # project both arrays ONCE before the lambdas: interpreted HOFs
     # don't CSE, so an inlined split() would re-split the text per gram
@@ -141,38 +167,34 @@ def repetition_signals(
     # regex (split semantics, limit -1 so trailing empty lines count);
     # pass r"\. " for sentence-level segmentation of single-line corpora
     out = df.withColumns({
-        "__l": F.split(t, line_delim), "__w": F.split(F.trim(t), " "),
+        "__t": t, "__l": F.split(t, line_delim), "__w": F.split(F.trim(t), " "),
     })
     # CASE guard: sequence(1, 0) is DESCENDING [1,0], not empty, so
     # short docs must yield array() explicitly
-    grams = F.expr(
-        f"CASE WHEN size(__w) >= {ngram} THEN "
-        f"transform(sequence(1, size(__w) - {ngram - 1}), "
-        f"i -> concat_ws(' ', slice(__w, i, {ngram}))) "
+    n = sql_literal(ngram)
+    grams = (
+        f"CASE WHEN size(__w) >= {n} THEN "
+        f"transform(sequence(1, size(__w) - {sql_literal(ngram - 1)}), "
+        f"i -> concat_ws(' ', slice(__w, i, {n}))) "
         f"ELSE array() END"
     )
     out = out.withColumns({
-        "__lines": fold_runs(
+        "__lines": F.expr(fold_runs(
             "__l",
-            dup=lambda v, run, x: v + dup(run),
-            dup_chars=lambda v, run, x: v + dup(run) * F.length(x),
-            chars=lambda v, run, x: v + F.length(x),
-        ),
-        "__top": fold_runs(
-            grams, top=lambda v, run, x: F.greatest(v, run * F.length(x))
-        )["top"],
+            dup=f"acc.dup + {dup}",
+            dup_chars=f"acc.dup_chars + {dup} * length(x)",
+            chars="acc.chars + length(x)",
+        )),
+        "__top": F.expr(fold_runs(grams, top=f"greatest(acc.top, {run} * length(x))") + ".top"),
     })
-    lines = F.col("__lines")
     signals = {
-        "dup_line_fraction": lines["dup"] / F.size("__l"),
-        "dup_line_char_fraction": lines["dup_chars"]
-        / F.greatest(lines["chars"], F.lit(1)),
-        "top_ngram_char_fraction": F.col("__top")
-        / F.greatest(F.length(t), F.lit(1)),
+        "dup_line_fraction": "__lines.dup / size(__l)",
+        "dup_line_char_fraction": "__lines.dup_chars / greatest(__lines.chars, 1)",
+        "top_ngram_char_fraction": "__top / greatest(length(__t), 1)",
     }
     rest = [c for c in df.columns if c != id_col]
     return out.select(id_col, *rest, *[
-        F.coalesce(v, F.lit(0.0)).alias(k) for k, v in signals.items()])
+        F.expr(f"coalesce({v}, 0.0D)").alias(k) for k, v in signals.items()])
 
 
 # Stopwords from the published Gopher rule (Rae et al. 2021, A1.1):
@@ -209,50 +231,42 @@ def gopher_quality_flags(
     and composes with any downstream filter pushdown.
     """
     t = F.col(text_col)
-    out = df.withColumn("__w", F.split(F.trim(F.lower(t)), " "))
-    w = F.col("__w")
-    n_words = F.size(w)
-    # sum of word lengths via aggregate() over the SHARED projected
-    # array (interpreted HOFs don't CSE an inlined split)
-    char_sum = F.aggregate(
-        w, F.lit(0), lambda acc, x: acc + F.length(x)
-    )
-    mean_len = char_sum.cast("double") / n_words
-    symbol_hits = F.regexp_count(t, F.lit("#")) + F.regexp_count(
-        t, F.lit(r"\.\.\.")
-    )
-    # Unicode letter class, not [a-z]: the published Gopher rule is
-    # "contains at least one ALPHABETIC character" — \p{L} keeps
-    # non-Latin scripts (ru/zh/ar) from failing the ratio wholesale
-    # (ADVICE r9), and Java regex + RE2 agree on it exactly
-    alpha_words = F.size(F.filter(w, lambda x: x.rlike(r"\p{L}")))
-    stop_hits = F.size(F.filter(w, lambda x: x.isin(*GOPHER_STOPWORDS)))
-    out = (
-        out.withColumn("g_n_words", n_words)
-        .withColumn("g_mean_word_len", mean_len)
-        .withColumn(
-            "g_symbol_ratio", symbol_hits.cast("double") / n_words
-        )
-        .withColumn(
-            "g_alpha_word_ratio", alpha_words.cast("double") / n_words
-        )
-        .withColumn("g_stopword_hits", stop_hits)
-    )
+    out = df.withColumns({"__t": t, "__w": F.split(F.trim(F.lower(t)), " ")})
+    lit = sql_literal
+    stops = ", ".join(map(lit, GOPHER_STOPWORDS))
+    ellipsis, letter = lit(r"\.\.\."), lit(r"\p{L}")
+    # one withColumns per dependency level (each call analyses the
+    # whole plan again). The word-length sum is an aggregate() over the
+    # SHARED projected array (interpreted HOFs don't CSE an inlined
+    # split). Alphabetic is the Unicode letter class, not [a-z]: the
+    # published Gopher rule is "contains at least one ALPHABETIC
+    # character" — \p{L} keeps non-Latin scripts (ru/zh/ar) from
+    # failing the ratio wholesale (ADVICE r9), and Java regex + RE2
+    # agree on it exactly
+    out = out.withColumns({
+        "g_n_words": F.expr("size(__w)"),
+        "g_mean_word_len": F.expr(
+            "CAST(aggregate(__w, 0, (acc, x) -> acc + length(x)) AS DOUBLE) / size(__w)"),
+        "g_symbol_ratio": F.expr(
+            f"CAST(regexp_count(__t, '#') + regexp_count(__t, {ellipsis}) AS DOUBLE)"
+            " / size(__w)"),
+        "g_alpha_word_ratio": F.expr(
+            f"CAST(size(filter(__w, x -> x RLIKE {letter})) AS DOUBLE) / size(__w)"),
+        "g_stopword_hits": F.expr(f"size(filter(__w, x -> x IN ({stops})))"),
+    })
     rules = {
-        "pass_word_count": (F.col("g_n_words") >= min_words)
-        & (F.col("g_n_words") <= max_words),
-        "pass_mean_word_len": (F.col("g_mean_word_len") >= min_mean_word_len)
-        & (F.col("g_mean_word_len") <= max_mean_word_len),
-        "pass_symbol_ratio": F.col("g_symbol_ratio") <= max_symbol_ratio,
-        "pass_alpha_ratio": F.col("g_alpha_word_ratio")
-        >= min_alpha_word_ratio,
-        "pass_stopwords": F.col("g_stopword_hits") >= min_stopword_hits,
+        "pass_word_count": f"g_n_words >= {lit(min_words)} AND g_n_words <= {lit(max_words)}",
+        "pass_mean_word_len": f"g_mean_word_len >= {lit(min_mean_word_len)}"
+        f" AND g_mean_word_len <= {lit(max_mean_word_len)}",
+        "pass_symbol_ratio": f"g_symbol_ratio <= {lit(max_symbol_ratio)}",
+        "pass_alpha_ratio": f"g_alpha_word_ratio >= {lit(min_alpha_word_ratio)}",
+        "pass_stopwords": f"g_stopword_hits >= {lit(min_stopword_hits)}",
     }
-    keep = F.lit(True)
-    for name, cond in rules.items():
-        out = out.withColumn(name, cond)
-        keep = keep & cond
-    return out.withColumn("gopher_keep", keep).drop("__w")
+    keep = " AND ".join(f"({cond})" for cond in rules.values())
+    return out.withColumns({
+        **{name: F.expr(cond) for name, cond in rules.items()},
+        "gopher_keep": F.expr(keep),
+    }).drop("__t", "__w")
 
 
 # PII patterns chosen to behave identically under Java regex (Spark)
@@ -538,18 +552,21 @@ CONTROL_ZW_CLASS: str = (
 )
 
 
-def clean_unicode_expr(col, *, repair_mojibake: bool = True,
+def clean_unicode_expr(ref: str, *, repair_mojibake: bool = True,
                        strip_controls: bool = True):
     """The column-expression (whole-stage-codegen) stages of
-    :func:`clean_unicode`: mojibake repair + control/zero-width strip.
-    Exposed separately so plan-hygiene-sensitive call sites (e.g. the
-    curation funnel's unicode gate) can stay entirely JVM-side."""
+    :func:`clean_unicode`: mojibake repair + control/zero-width strip,
+    over ``ref``, the text as SQL (a plain column name such as
+    ``__src``), parsed as one expression. Exposed separately so
+    plan-hygiene-sensitive call sites (e.g. the curation funnel's
+    unicode gate) can stay entirely JVM-side."""
+    e = ref
     if repair_mojibake:
         for bad, good in MOJIBAKE_REPAIRS:
-            col = F.replace(col, F.lit(bad), F.lit(good))
+            e = f"replace({e}, {sql_literal(bad)}, {sql_literal(good)})"
     if strip_controls:
-        col = F.regexp_replace(col, CONTROL_ZW_CLASS, "")
-    return col
+        e = f"regexp_replace({e}, {sql_literal(CONTROL_ZW_CLASS)}, '')"
+    return F.expr(e)
 
 
 def clean_unicode(
@@ -582,9 +599,8 @@ def clean_unicode(
     (skip stage 3 with ``normalize=None`` for a zero-Python plan).
     """
     out_col = out_col or text_col
-    src = F.col(text_col)
     col = clean_unicode_expr(
-        src, repair_mojibake=repair_mojibake, strip_controls=strip_controls
+        "__src", repair_mojibake=repair_mojibake, strip_controls=strip_controls
     )
     if normalize:
         form = normalize.upper()
@@ -603,11 +619,10 @@ def clean_unicode(
             )
 
         col = _norm(col)
-    # withColumns: both resolve against the ORIGINAL column even when
-    # out_col == text_col (the scrub_pii convention)
-    return df.withColumns(
-        {out_col: col, "unicode_changed": col != src}
-    )
+    # both read __src, the ORIGINAL text, even when out_col == text_col
+    return df.withColumn("__src", F.col(text_col)).withColumns(
+        {out_col: col, "unicode_changed": col != F.col("__src")}
+    ).drop("__src")
 
 
 def lexical_diversity(

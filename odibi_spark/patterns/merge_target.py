@@ -93,7 +93,13 @@ class ParquetTarget:
         docstring). Returns whether data files exist. Reads no data, so
         it launches no Spark job; ``exists`` also checks they read. A
         later look keeps the version the first one noted (until a
-        commit), so a commit on data read before it conflicts."""
+        commit), so a commit on data read before it conflicts. A path
+        that is a file raises ``NotADirectoryError``."""
+        if self._fs.is_file(self.path):
+            raise NotADirectoryError(
+                f"parquet table path '{self.path}' is a file: a table needs "
+                "a directory; remove the file or use another path"
+            )
         version = self._latest_version()
         for name, _, _ in self._fs.ls(self._at(STAGING_DIR)):
             n = int(name.split("-", 1)[0])
@@ -311,6 +317,9 @@ class _LocalFiles:
     def exists(self, p: str) -> bool:
         return os.path.exists(p)
 
+    def is_file(self, p: str) -> bool:
+        return os.path.isfile(p)
+
     def read_text(self, p: str) -> str | None:
         try:
             with open(p, encoding="utf-8") as fh:
@@ -379,6 +388,9 @@ class _HadoopFiles:
 
     def exists(self, p: str) -> bool:
         return bool(self._fs.exists(self._p(p)))
+
+    def is_file(self, p: str) -> bool:
+        return self.exists(p) and bool(self._fs.getFileStatus(self._p(p)).isFile())
 
     def read_text(self, p: str) -> str | None:
         if not self._fs.exists(self._p(p)):

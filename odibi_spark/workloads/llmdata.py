@@ -2893,7 +2893,7 @@ def curation_funnel_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unicode gate (r10): the funnel's FIRST real-world stage — doc
     # needed no mojibake/control repair. Column-expression stages only
     # (clean_unicode_expr), so the gate stays whole-stage codegen.
-    uni_ok = text.clean_unicode_expr(F.col("text")) == F.col("text")
+    uni_ok = text.clean_unicode_expr("text") == F.col("text")
     # classifier gate (r11): fastText-style hashed linear score with
     # the seeded 512-bucket weights — another zero-shuffle codegen map
     from odibi_spark.llm import curation as _cur

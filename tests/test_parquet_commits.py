@@ -4,11 +4,13 @@ appends and the parquet HWM state each publish one ``_log/<n>.json``.
 Faults and races are injected in process."""
 
 import os
+import re
 import time
 from types import SimpleNamespace
 
 import pyarrow as pa
 import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -89,6 +91,26 @@ class TestWriteSinkCommits:
         write_sink(spark.createDataFrame([(2, "b")], KV), path=q, mode="ignore")
         assert _rows(spark, q) == [(2, "b")]
         assert _versions(q) == [1]
+
+    def test_a_file_path_raises_before_any_staging(self, spark, tmp_path):
+        """A table path that is a regular file raises in every mode,
+        naming the path, before the stage runs: no Spark job, the file
+        is untouched and nothing is written beside it."""
+        f = tmp_path / "t.parquet"
+        pq.write_table(pa.table({"k": [1], "v": ["a"]}), f)
+        before = f.read_bytes()
+        df = spark.createDataFrame([(2, "b")], KV)
+        sc = spark.sparkContext
+        sc.setJobGroup("file-path", "write onto a file")
+        try:
+            for mode in ("overwrite", "append", "error", "ignore", "upsert", "append_once"):
+                with pytest.raises(NotADirectoryError, match=re.escape(f"'{f}' is a file: a table needs a directory")):
+                    write_sink(df, path=str(f), mode=mode, keys=["k"])
+            assert sc.statusTracker().getJobIdsForGroup("file-path") == []
+        finally:
+            sc.setJobGroup("", "")
+        assert f.read_bytes() == before
+        assert os.listdir(tmp_path) == ["t.parquet"]
 
     def test_partitioned_append_and_overwrite_are_one_record_each(self, spark, tmp_path):
         p = str(tmp_path / "t")

@@ -6,7 +6,10 @@ count, same as bench.py) once warm and records:
 - wall seconds,
 - every Spark job launched (description, duration, stages, tasks),
 - the driver gap (wall - sum of job durations): planning, collect
-  processing, Python-side loops, py4j chatter.
+  processing, Python-side loops, py4j chatter;
+- the py4j commands the driver sent the JVM (py4j's memory-release
+  commands excepted): a plan built one Column call at a time shows up
+  here before any profiler is run.
 
 Usage: python tools/profile_queries.py <query> [query ...]
        python tools/profile_queries.py --top   # the frozen board's slowest
@@ -34,6 +37,29 @@ TOP = [
     "ivf_pq_topk_embeddings", "ann_incremental_probe_embeddings",
     "table_diff_orders_partitions",
 ]
+
+
+class Py4jCommands:
+    """Counts the commands this process sends the JVM gateway while
+    open, py4j's memory-release commands (``m``) excepted."""
+
+    def __enter__(self):
+        from py4j.clientserver import ClientServerConnection
+
+        self.n, self._send = 0, ClientServerConnection.send_command
+
+        def counting(conn, command):
+            if not command.startswith("m\n"):
+                self.n += 1
+            return self._send(conn, command)
+
+        ClientServerConnection.send_command = counting
+        return self
+
+    def __exit__(self, *exc):
+        from py4j.clientserver import ClientServerConnection
+
+        ClientServerConnection.send_command = self._send
 
 
 def _api(path: str):
@@ -75,9 +101,10 @@ def main() -> None:
         jobs_before = {j["jobId"] for j in _api(f"applications/{app_id}/jobs")}
         spark.sparkContext.setJobDescription(name)
         t0 = time.time()
-        fn(spark, sf_dir).select(
-            F.expr("bit_xor(xxhash64(struct(*)))"), F.count(F.lit(1))
-        ).collect()
+        with Py4jCommands() as py4j:
+            fn(spark, sf_dir).select(
+                F.expr("bit_xor(xxhash64(struct(*)))"), F.count(F.lit(1))
+            ).collect()
         wall = time.time() - t0
         spark.sparkContext.setJobDescription(None)
         jobs = [
@@ -111,11 +138,13 @@ def main() -> None:
             "n_jobs": len(jobs),
             "jobs_sec": round(total_job, 3),
             "driver_gap_sec": round(wall - total_job, 3),
+            "py4j_commands": py4j.n,
             "jobs": detail,
         }
         print(
             f"{name}: wall={wall:.2f}s jobs={len(jobs)} "
-            f"job_time={total_job:.2f}s driver_gap={wall - total_job:.2f}s",
+            f"job_time={total_job:.2f}s driver_gap={wall - total_job:.2f}s "
+            f"py4j_commands={py4j.n}",
             flush=True,
         )
         for d in detail:
