@@ -419,8 +419,8 @@ class Catalog:
         is a sequence of versioned records under
         ``meta_derived_applied_runs/claims/``, each state change one
         exclusive publish of the next version, as a ``ParquetTarget``
-        commit publishes ``_log/<n>.json``. Needs a local root or a
-        ``file:`` URI. Rows are queryable via
+        commit publishes ``_log/<n>.json`` on the same root. Rows are
+        queryable via
         ``derived_guard.claims(spark)`` — the meta-table surface."""
         from odibi_spark.patterns.derived_guard import DerivedGuard
 

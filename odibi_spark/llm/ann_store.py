@@ -1,20 +1,13 @@
-"""Persisted vector-index lifecycle: build once, append deltas, probe
-many times (VERDICT r14 task 2 — the ANN twin of the MinHash
-``SignatureStore`` in :mod:`odibi_spark.llm.incremental`).
-
-Every r14 ANN workload rebuilt its index (SRP planes / IVF centroids /
-PQ codebooks) per invocation. At 100 TB the index is a durable asset:
-trained once, its encoded corpus stored as parquet partitioned by
-coarse cell, new ingestion batches encoded delta-only against the
-PINNED geometry, and queries served by reading only the probed cell
-partitions. This module provides that lifecycle for the IVF-PQ index
-(:func:`odibi_spark.llm.similarity.ivf_pq_topk` — the composition the
-reference-scale path recommends):
+"""Persisted IVF-PQ index (:func:`odibi_spark.llm.similarity.ivf_pq_topk`),
+the ANN twin of the MinHash ``SignatureStore``
+(:mod:`odibi_spark.llm.incremental`): trained once, new batches encoded
+delta-only against the PINNED geometry, and probes reading only the
+cell partitions their queries route to:
 
 - ``{path}/codes`` — (nbr_id, cell, pq_codes) parquet partitioned by
-  (batch_id, cell): replaying a crashed batch dynamically overwrites
-  its own partitions, and a probe reads only the cell directories its
-  queries route to (static partition pruning).
+  (batch_id, cell), a ``ParquetTarget``: each append is one commit
+  replacing its ``batch_id`` partition, so a replayed batch replaces
+  its own files.
 - ``{path}/_index_meta.json`` — pins the FULL index identity:
   geometry (nlist/m/k/dim/iters) AND the trained parameters
   (coarse centroids + PQ codebooks, a few KB of floats). An append or
@@ -43,6 +36,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from odibi_spark.llm import similarity
+from odibi_spark.patterns.merge_target import ParquetTarget
 
 
 class AnnIndexStore:
@@ -206,21 +200,16 @@ class AnnIndexStore:
     ) -> None:
         """Encode ``df`` (the DELTA — callers pair this with an HWM
         filter, see :func:`run_incremental_ann`) under the pinned
-        geometry and append. Dynamic partition overwrite on
-        (batch_id, cell): replaying a crashed batch replaces exactly
-        its own directories, never double-counting."""
+        geometry and append, as one commit replacing the
+        ``batch_id`` partition: replaying a crashed batch replaces
+        exactly its own files, never double-counting."""
         if self.codebooks is None:
             self.check_config()
-        enc = self._encode(df, id_col, vec_col)
-        (
-            # repartition ON cell first: partitionBy from N tasks
-            # otherwise writes N x nlist tiny files per append
-            enc.repartition("cell")
-            .withColumn("batch_id", F.lit(str(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "cell")
-            .parquet(self._codes)
+        # repartition ON cell first: partitionBy from N tasks
+        # otherwise writes N x nlist tiny files per append
+        enc = self._encode(df, id_col, vec_col).repartition("cell").withColumn("batch_id", F.lit(str(batch_id)))
+        ParquetTarget(self.spark, self._codes).replace_partitions(
+            lambda staged: enc.write.partitionBy("batch_id", "cell").parquet(staged)
         )
 
     def read_codes(
@@ -229,7 +218,7 @@ class AnnIndexStore:
         """Stored (nbr_id, cell, pq_codes); ``cells`` narrows the
         read to those partition directories (static partition
         pruning — probes pass their routed cell set)."""
-        if not os.path.exists(self._codes):
+        if not ParquetTarget(self.spark, self._codes).live():
             return None
         df = self.spark.read.parquet(self._codes)
         if cells is not None:
@@ -321,15 +310,15 @@ def run_incremental_ann(
     (``id_col`` > committed mark), encode + append ONLY the delta,
     commit the new mark AFTER the append lands (the
     :func:`run_incremental_dedup` shape — crash between append and
-    commit replays the batch, and the dynamic partition overwrite
+    commit replays the batch, and the append's partition replace
     makes the replay idempotent). Returns the number of delta rows
     appended; first run with no committed mark ingests everything.
     The store must already be built (geometry trained + pinned)."""
     from odibi_spark.state.hwm import incremental_filter
 
     delta = incremental_filter(
-        df, column=id_col, state=state, state_key=state_key,
-        target_exists=store.exists(),
+        df, column=id_col,
+        hwm=state.get(state_key) if store.exists() else None,
     )
     # ONE job computes the delta's row count and its HWM together
     # (previously count() + capture_hwm ran two scans of the delta;

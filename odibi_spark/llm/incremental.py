@@ -44,7 +44,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from odibi_spark.llm import dedup
-from odibi_spark.patterns.merge_target import ParquetTarget, _list_data
+from odibi_spark.patterns.merge_target import ParquetTarget
 from odibi_spark.state.hwm import StateBackend, capture_hwm, incremental_filter
 
 
@@ -282,9 +282,8 @@ class SignatureStore:
         frame); later appends adopt it from there. The stage writes the
         sigs and bands sub-tables as two CONCURRENT jobs (guide §2.6 —
         independent writes of the same materialized frame, so the wall
-        cost is max, not sum), and the record removes the live files
-        under the partition dirs it stages, so a replayed batch
-        replaces its earlier attempt."""
+        cost is max, not sum), and the commit replaces the partitions
+        it stages, so a replayed batch replaces its earlier attempt."""
         meta = self._live()
         if meta is None:
             if self.n_buckets is None:
@@ -295,7 +294,6 @@ class SignatureStore:
             meta = self._config()
         else:
             self._adopt(meta)
-        replaced: list[str] = []
 
         def stage(staged: str) -> None:
             from concurrent.futures import ThreadPoolExecutor
@@ -307,20 +305,10 @@ class SignatureStore:
                 ]
                 for w in writes:
                     w.result()
-            # match on the staged dir names, not on batch_id: Spark
-            # escapes partition values (batch_id=epoch%3D3)
-            dirs = {
-                tuple(rel.split("/")[:2])
-                for rel, _ in _list_data(self._target._fs, staged)
-            }
-            replaced.extend(
-                rel for rel, _ in self._target.files
-                if tuple(rel.split("/")[:2]) in dirs
-            )
 
         self._meta = _UNSEEN  # a failed commit leaves the store to look at again
-        self._target.commit(stage, remove=replaced, meta=meta)
-        self._meta = meta  # the commit's own re-look saw it
+        self._target.replace_partitions(stage, meta=meta)
+        self._meta = meta  # what the commit published
 
 
 def flag_incremental_dups(
@@ -442,8 +430,8 @@ def run_incremental_dedup(
     converges to the exactly-once result.
     """
     delta = incremental_filter(
-        source, column=id_col, state=state, state_key=state_key,
-        target_exists=store.exists(),
+        source, column=id_col,
+        hwm=state.get(state_key) if store.exists() else None,
     )
     # the delta feeds THREE consumers (signature build, HWM capture,
     # and the flagged output the caller executes): persist it so each
@@ -513,9 +501,9 @@ def incremental_dedup_batch(
        replay of an epoch whose commit landed is skipped outright;
     2. HWM filter -> flag against store + self (identical logic to the
        batch path);
-    3. flagged rows land in ``output_path`` partitioned by epoch with
-       DYNAMIC partition overwrite — a replayed epoch overwrites its
-       own partition, never duplicates;
+    3. flagged rows land in ``output_path`` partitioned by epoch, one
+       commit replacing the epoch's partition — a replayed epoch
+       replaces its own files, and an empty replay replaces nothing;
     4. signature append (idempotent: its commit replaces the batch
        id's earlier files);
     5. ONLY THEN the HWM and the epoch pointer commit. A crash in any
@@ -527,8 +515,8 @@ def incremental_dedup_batch(
     if committed is not None and int(epoch_id) <= int(committed):
         return False
     delta = incremental_filter(
-        batch, column=id_col, state=state, state_key=state_key,
-        target_exists=store.exists(),
+        batch, column=id_col,
+        hwm=state.get(state_key) if store.exists() else None,
     ).persist()
     try:
         flagged, sigs_new = flag_incremental_dups(
@@ -546,12 +534,10 @@ def incremental_dedup_batch(
 
         with ThreadPoolExecutor(max_workers=1) as pool:
             hwm_fut = pool.submit(capture_hwm, delta, id_col)
-            (
-                flagged.withColumn("epoch", F.lit(int(epoch_id)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch")
-                .parquet(output_path)
+            ParquetTarget(batch.sparkSession, output_path).replace_partitions(
+                lambda staged: flagged.withColumn("epoch", F.lit(int(epoch_id)))
+                .write.partitionBy("epoch")
+                .parquet(staged)
             )
             new_hwm = hwm_fut.result()
         store.append(sigs_new, f"epoch={int(epoch_id)}")

@@ -16,9 +16,9 @@ version 1 is ``<table>__<run>.json``, version n >= 2 is
 names cannot collide). Every call reads the newest version n (the
 galloping probe ``merge_target.latest_version``), decides, and
 publishes n+1 whole and only if that version is free — the exclusive
-publish (``merge_target._LocalFiles.publish``: a temp file and
-``os.link``) behind ``ParquetTarget``'s ``_log/<n>.json``, the
-``_spark_metadata`` log model of Structured Streaming:
+publish behind ``ParquetTarget``'s ``_log/<n>.json`` (``os.link``
+locally, a Hadoop rename on other URIs), the ``_spark_metadata`` log
+model of Structured Streaming:
 
 - CLAIM = publish version 1 — exactly one creator wins (the MERGE WHEN
   NOT MATCHED INSERT twin).
@@ -48,7 +48,9 @@ import urllib.parse
 import uuid
 from dataclasses import dataclass
 
-from odibi_spark.patterns.merge_target import _LocalFiles, latest_version
+from pyspark.sql import SparkSession
+
+from odibi_spark.patterns.merge_target import _HadoopFiles, _LocalFiles, latest_version
 
 VALID_STATUSES = ("CLAIMED", "APPLIED", "FAILED")
 
@@ -83,14 +85,14 @@ class DerivedGuard:
     """Guard table for exactly-once derived-table updates."""
 
     def __init__(self, root: str):
-        """``root`` is a local path or a ``file:`` URI; claims need the
-        local exclusive publish, so any other scheme raises."""
+        """``root`` is a path or a URI; a URI other than ``file:`` goes
+        through the Hadoop FileSystem of the active Spark session."""
         url = urllib.parse.urlparse(root)
-        if url.scheme not in ("", "file"):
-            raise ValueError(f"DerivedGuard needs a local root, got {root!r}")
-        self.root = root
-        self._dir = os.path.join(urllib.parse.unquote(url.path) if url.scheme else root, "claims")
-        os.makedirs(self._dir, exist_ok=True)
+        local = url.scheme in ("", "file")
+        self._dir = f"{urllib.parse.unquote(url.path) if url.scheme == 'file' else root}/claims"
+        self._fs = _LocalFiles() if local else _HadoopFiles(SparkSession.active(), root)
+        if local:
+            os.makedirs(self._dir, exist_ok=True)
 
     # -- storage helpers ---------------------------------------------------
 
@@ -108,22 +110,19 @@ class DerivedGuard:
             parts.append(
                 part.replace("%", "%25").replace("__", "%5F%5F")
             )
-        return os.path.join(self._dir, f"{parts[0]}__{parts[1]}.json")
+        return f"{self._dir}/{parts[0]}__{parts[1]}.json"
 
-    @staticmethod
-    def _newest(base: str) -> tuple[int, Claim | None]:
+    def _newest(self, base: str) -> tuple[int, Claim | None]:
         """The newest version n of the claim whose version 1 is
         ``base`` (0 when unclaimed) and that version's row."""
-        n = latest_version(lambda v: os.path.exists(_version(base, v)))
+        n = latest_version(lambda v: self._fs.exists(_version(base, v)))
         if n == 0:
             return 0, None
-        with open(_version(base, n), encoding="utf-8") as f:
-            return n, Claim(**json.load(f))
+        return n, Claim(**json.loads(self._fs.read_text(_version(base, n))))
 
-    @staticmethod
-    def _publish(base: str, n: int, claim: Claim) -> bool:
+    def _publish(self, base: str, n: int, claim: Claim) -> bool:
         """Publish version ``n`` whole; False when another writer took it."""
-        return _LocalFiles().publish(_version(base, n), json.dumps(claim.__dict__))
+        return self._fs.publish(_version(base, n), json.dumps(claim.__dict__))
 
     # -- lifecycle ----------------------------------------------------------
 
@@ -254,8 +253,8 @@ class DerivedGuard:
             T.StructField("error_message", T.StringType()),
         ])
         rows = []
-        for name in sorted(os.listdir(self._dir)):
-            base = os.path.join(self._dir, name)
+        for name, _, _ in sorted(self._fs.ls(self._dir)):
+            base = f"{self._dir}/{name}"
             c = self._newest(base)[1] if name.endswith(".json") else None
             # only a key's version 1, which its record names (a stray
             # .json, such as an older build's sidecar, is skipped)

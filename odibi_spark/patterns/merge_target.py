@@ -5,14 +5,14 @@ The reference runs merges through Delta MERGE (odibi/transformers/
 scd.py:553-735, merge_transformer.py:406-640) and maintenance through
 OPTIMIZE, all on one transaction log. Without Delta jars,
 ``ParquetTarget`` gives the same row semantics via read -> transform ->
-``commit``, and every parquet write the library makes is such a
-commit: the merge patterns, ``write_sink`` in every parquet mode (the
-quarantine appends too), compaction, ``maintain --zorder-by``, the
-catalog's appends and rewrites, the parquet HWM state, the CMS state
-and the MinHash signature store's appends. It is the seam
-where ``DeltaTable`` plugs in on a real cluster. Each instance learns
-the schema at most once; on a local unpartitioned target it comes from
-the first data file's footer through Spark's own converter
+``commit``, and every parquet table the library writes is committed
+this way: the merge patterns, ``write_sink`` (quarantines and semantic
+materializations too), compaction, ``maintain --zorder-by``, the
+catalog, the parquet HWM and CMS states, and (``replace_partitions``)
+the signature store, the ANN codes and the streaming dedup outputs.
+It is the seam where ``DeltaTable`` plugs in on a real cluster. Each
+instance learns the schema at most once; on a local unpartitioned
+target it comes from the first data file's footer through Spark's own converter
 (``io.read.footer_schema``), and ``max_of`` from row-group statistics,
 so neither launches a Spark job (URI paths, partitioned dirs and
 row groups without statistics fall back to Spark).
@@ -44,6 +44,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import uuid
 
@@ -87,14 +88,9 @@ class ParquetTarget:
         text = self._fs.read_text(self._at(LOG_DIR, f"{version}.json"))
         return None if text is None else json.loads(text)
 
-    def live(self) -> bool:
-        """Finish every published commit, sweep staging no record names,
-        and note the version and data files read (see the module
-        docstring). Returns whether data files exist. Reads no data, so
-        it launches no Spark job; ``exists`` also checks they read. A
-        later look keeps the version the first one noted (until a
-        commit), so a commit on data read before it conflicts. A path
-        that is a file raises ``NotADirectoryError``."""
+    def _roll(self) -> int:
+        """Finish every published commit, sweep staging no record names
+        and return the newest version (see the module docstring)."""
         if self._fs.is_file(self.path):
             raise NotADirectoryError(
                 f"parquet table path '{self.path}' is a file: a table needs "
@@ -110,6 +106,15 @@ class ParquetTarget:
                 self._apply(rec)
             else:
                 self._fs.delete(self._at(STAGING_DIR, name))
+        return version
+
+    def live(self) -> bool:
+        """``_roll``, then note the version and the data files; returns
+        whether any exist. Launches no Spark job. A later look keeps the
+        version the first one noted (until a commit), so a commit on
+        data read before it conflicts. A file path raises
+        ``NotADirectoryError``."""
+        version = self._roll()
         files = _list_data(self._fs, self.path)
         if self.version in (None, version):
             self.version, self.files = version, files
@@ -171,12 +176,15 @@ class ParquetTarget:
         new files under ``dir``; ``remove`` names the data files
         (relative paths) they replace, every file the last read saw
         when None; it is read once ``stage`` returns, so a stage may
-        fill it from the files it wrote. ``meta`` rides in the record
-        (the previous record's when None). Raises ``CommitConflict``
-        when another writer committed since that read. Returns the
-        record."""
+        fill it from the files it wrote; only a None ``remove`` lists
+        the table. ``meta`` rides in the record (the previous record's
+        when None). Raises ``CommitConflict`` when another writer
+        committed since that read. Returns the record."""
         if self.version is None:
-            self.live()
+            if remove is None:
+                self.live()
+            else:
+                self.version = self._roll()
         n = self.version + 1
         name = f"{n}-{uuid.uuid4().hex}"
         staged = self._at(STAGING_DIR, name)
@@ -201,8 +209,27 @@ class ParquetTarget:
         self._publish(record)
         self._apply(record)
         self.version = None
-        self.live()  # sweeps staging orphaned at this version
+        if remove is None:
+            self.live()  # notes the committed files
         return record
+
+    def replace_partitions(self, stage, meta: dict | None = None) -> dict:
+        """Commit what ``stage(dir)`` writes, removing the live files
+        under each outermost partition dir it wrote and nothing else
+        (Spark's dynamic partition overwrite at that granularity): a
+        replayed batch replaces its own files, a stage writing no rows
+        replaces nothing."""
+        if self.version is None:
+            self.live()
+        replaced: list[str] = []
+
+        def stage_then_match(staged: str) -> None:
+            stage(staged)
+            # the staged dir names, as Spark escaped the values (epoch%3D3)
+            dirs = {_partition_dir(rel) for rel, _ in _list_data(self._fs, staged)} - {None}
+            replaced.extend(rel for rel, _ in self.files if _partition_dir(rel) in dirs)
+
+        return self.commit(stage_then_match, remove=replaced, meta=meta)
 
     def _publish(self, record: dict) -> None:
         n = record["version"]
@@ -287,6 +314,13 @@ def hidden(name: str) -> bool:
     """Whether Spark's listing skips ``name``: ``.`` names, and ``_``
     names but partition dirs (``_load_date=2024-01-01`` is data)."""
     return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _partition_dir(rel: str) -> str | None:
+    """The outermost partition dir of the data file ``rel``: its path
+    up to the first ``name=value`` dir (``sigs/batch_id=1``), or None."""
+    m = re.match(r"([^=]*=[^/]*)/", rel)
+    return m and m.group(1)
 
 
 def _list_data(fs, root: str, prefix: str = "") -> list[tuple[str, int]]:

@@ -93,6 +93,7 @@ class NodeExecutor:
             # ---- read phase (optional for generating patterns)
             df = None
             plan = None  # a stateful HWM batch planned from the footers
+            stored = None  # _hwm_state(), read once a run
             if cfg.read:
                 if cfg.read.format.lower() == "simulation":
                     from odibi_spark.sources.simulation import generate
@@ -113,7 +114,8 @@ class NodeExecutor:
                         cfg.read.connection, cfg.read.path,
                         cfg.read.table, cfg.read.options,
                     )
-                    plan = self._footer_plan(r_path, r_table, r_options)
+                    stored = self._hwm_state() if cfg.incremental and cfg.incremental.mode == "stateful" else None
+                    plan = self._footer_plan(r_path, r_table, r_options, stored)
                     df = read_source(
                         spark,
                         format=cfg.read.format,
@@ -133,7 +135,7 @@ class NodeExecutor:
             # full load on first run (no target), else HWM/rolling filter
             hwm_state = hwm_key = None
             if cfg.incremental:
-                df, hwm_state, hwm_key = self._apply_incremental(df, plan)
+                df, hwm_state, hwm_key = self._apply_incremental(df, plan, stored)
                 hwm_rows = df  # the rows read: the HWM source below
 
             # ---- input contracts (circuit breakers, pre-transform):
@@ -370,37 +372,33 @@ class NodeExecutor:
         return clean
 
     def _hwm_state(self):
-        """(state backend, state key, target exists) of a stateful
-        incremental node."""
+        """(state backend, state key, stored HWM) of a stateful node;
+        the HWM is None on a first run: no stored mark, or no local
+        write path yet (a URI's existence is unknown here: its HWM
+        state is trusted alone, not reloaded in full)."""
         import os
 
+        from odibi_spark.io.append import _is_local
         from odibi_spark.state.hwm import JsonStateBackend
 
-        inc = self.config.incremental
+        inc, w = self.config.incremental, self.config.write
         state = JsonStateBackend(self.config.state_path or "_odibi_state.json")
         key = inc.state_key or f"{self.config.name}:{inc.column}"
-        target_exists = True
-        if self.config.write and self.config.write.path:
-            w = self.config.write
-            resolved, _, _ = self._resolve(w.connection, w.path, None, {})
-            if "://" in resolved or resolved.startswith("dbfs:/"):
-                # remote URI: os.path.exists would always be False, forcing
-                # a full reload (duplicating history under mode=append).
-                # Existence is unknown locally — trust the HWM state alone.
-                target_exists = True
-            else:
-                target_exists = os.path.exists(resolved)
-        return state, key, target_exists
+        if w and w.path:
+            resolved = self._resolve(w.connection, w.path, None, {})[0]
+            if _is_local(resolved) and not os.path.exists(resolved):
+                return state, key, None
+        return state, key, state.get(key)
 
-    def _footer_plan(self, path, table, options):
+    def _footer_plan(self, path, table, options, stored):
         """The batch planned from the source's parquet footers
         (``state.hwm.plan_from_footers``), or None: only a plain parquet
         path read of a stateful node without ``fallback_column`` or
         ``first_run_filter`` is planned, so the footers answer for the
-        same rows the filter would keep."""
+        same rows the filter would keep. ``stored`` is ``_hwm_state()``."""
         cfg, inc = self.config, self.config.incremental
         if not (
-            inc and inc.mode == "stateful" and not inc.fallback_column
+            stored and not inc.fallback_column
             and not inc.first_run_filter and cfg.read.format.lower() == "parquet"
             and path and not table and not options and not cfg.read.streaming
             and not (cfg.read.filter or cfg.read.columns or cfg.read.schema_ddl)
@@ -411,32 +409,28 @@ class NodeExecutor:
 
         if "parquet" in _CUSTOM_READERS:
             return None
-        state, key, target_exists = self._hwm_state()
-        hwm = state.get(key) if target_exists else None
         return plan_from_footers(
-            self.context.spark, path, column=inc.column, hwm=hwm,
+            self.context.spark, path, column=inc.column, hwm=stored[2],
             watermark_lag=inc.watermark_lag,
         )
 
-    def _apply_incremental(self, df, plan=None):
-        """Returns (filtered_df, state_backend|None, state_key|None)."""
+    def _apply_incremental(self, df, plan=None, stored=None):
+        """Returns (filtered_df, state_backend|None, state_key|None);
+        ``stored`` is ``_hwm_state()``, read here when not given."""
         from odibi_spark.state.hwm import incremental_filter, rolling_window_filter
 
         inc = self.config.incremental
         if inc.mode == "rolling":
             assert inc.lookback, "rolling incremental requires 'lookback'"
             return rolling_window_filter(df, column=inc.column, lookback=inc.lookback), None, None
-        state, key, target_exists = self._hwm_state()
-        first_run = state.get(key) is None or not target_exists
-        if first_run and inc.first_run_filter:
+        state, key, hwm = stored or self._hwm_state()
+        if hwm is None and inc.first_run_filter:
             # bootstrap override: bounded first load instead of the
             # full-history scan (reference first_run_query semantics)
             return df.filter(inc.first_run_filter), state, key
         out = incremental_filter(
-            df, column=inc.column, state=state, state_key=key,
-            fallback_column=inc.fallback_column,
-            watermark_lag=inc.watermark_lag, target_exists=target_exists,
-            covered=plan is not None and plan.covered,
+            df, column=inc.column, hwm=hwm, fallback_column=inc.fallback_column,
+            watermark_lag=inc.watermark_lag, covered=plan is not None and plan.covered,
         )
         return out, state, key
 

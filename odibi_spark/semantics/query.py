@@ -15,6 +15,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from odibi_spark.io.write import write_sink
 from odibi_spark.semantics.metrics import SemanticModel
 
 _QUERY_RE = re.compile(
@@ -97,9 +98,9 @@ class SemanticQuery:
         self, spark: SparkSession, query: str, *, path: str, mode: str = "overwrite"
     ) -> DataFrame:
         """Reference materializer (odibi/semantics/materialize.py:37-219):
-        run the semantic query and persist it."""
-        df = self.execute(spark, query)
-        df.write.mode(mode).parquet(path)
+        run the semantic query and persist it as one ``write_sink``
+        commit, so a plan that fails leaves the previous rows."""
+        write_sink(self.execute(spark, query), path=path, mode=mode)
         return spark.read.parquet(path)
 
     def create_view(self, spark: SparkSession, query: str, *, view_name: str) -> None:

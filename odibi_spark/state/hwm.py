@@ -126,26 +126,20 @@ def incremental_filter(
     df: DataFrame,
     *,
     column: str,
-    state: StateBackend,
-    state_key: str,
+    hwm: str | None,
     fallback_column: str | None = None,
     watermark_lag: str | None = None,
-    target_exists: bool = True,
     covered: bool = False,
 ) -> DataFrame:
     """Stateful HWM filter (reference node.py:1075-1108):
-    ``WHERE col > last_hwm [- watermark_lag]``; first run (no state or
-    no target) -> full load (smart read, reference :1032-1040).
+    ``WHERE col > hwm [- watermark_lag]``. ``hwm`` is the stored HWM,
+    read once by the caller; None (no state, or no target yet) is a
+    first run -> full load (smart read, reference :1032-1040).
     ``covered``: the footers proved every row of ``df`` passes the
     cutoff (``FooterPlan.covered``), so the predicate is left out."""
-    hwm = state.get(state_key)
-    if hwm is None or not target_exists or covered:
+    if hwm is None or covered:
         return df
-    col = (
-        F.coalesce(F.col(column), F.col(fallback_column))
-        if fallback_column
-        else F.col(column)
-    )
+    col = F.coalesce(F.col(column), F.col(fallback_column)) if fallback_column else F.col(column)
     return df.filter(col > _cutoff(hwm, df.schema[column].dataType, column, watermark_lag))
 
 

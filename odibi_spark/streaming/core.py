@@ -480,12 +480,10 @@ def streaming_incremental_dedup(
     streaming twin of ``llm.incremental.run_incremental_dedup``.
 
     No HWM filter here: the source checkpoint already makes each
-    micro-batch a pure delta. Exactly-once: kept docs write to
-    ``target_path/batch_id=<epoch>`` (epoch-keyed overwrite) and the
-    epoch's signatures append to the store as one commit partitioned
-    by the same epoch — a replayed epoch overwrites its corpus slice
-    and its commit replaces the epoch's earlier signature files, so
-    the replay converges to the same bytes. Within a replay the store
+    micro-batch a pure delta. Exactly-once: kept docs land in
+    ``target_path/batch_id=<epoch>`` and the epoch's signatures in the
+    store, each one commit replacing the epoch's partition — a replay
+    converges to the same bytes, and a failed plan leaves the corpus. Within a replay the store
     may transiently hold the epoch's signatures already; candidate
     generation is id-inequality-filtered and distinct, so the
     duplicate signature rows cannot change the flags.
@@ -495,6 +493,7 @@ def streaming_incremental_dedup(
     the batch pipeline (backfill and live ingestion share the store).
     """
     from odibi_spark.llm.incremental import SignatureStore, flag_incremental_dups
+    from odibi_spark.patterns.merge_target import ParquetTarget
 
     def dedup_batch(batch: DataFrame, epoch_id: int) -> None:
         if not batch.take(1):
@@ -505,8 +504,8 @@ def streaming_incremental_dedup(
             num_perm=num_perm, bands=bands, threshold=threshold,
         )
         kept = flagged.filter(~F.col("is_dup")).drop("is_dup")
-        kept.write.mode("overwrite").parquet(
-            f"{target_path}/batch_id={epoch_id}"
+        ParquetTarget(batch.sparkSession, target_path).replace_partitions(
+            lambda staged: kept.write.parquet(f"{staged}/batch_id={epoch_id}")
         )
         store.append(sigs_new, str(epoch_id))
 

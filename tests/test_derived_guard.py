@@ -338,9 +338,35 @@ class TestLocalRoot:
             "meta_daily_stats", "run-1", lambda: None
         ) == (False, None)
 
-    def test_remote_root_raises(self):
-        with pytest.raises(ValueError, match="local root"):
-            DerivedGuard("s3a://bucket/catalog/meta_derived_applied_runs")
+    def test_claims_commit_through_hadoop_files(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A root with another scheme takes the Hadoop FileSystem
+        operations a ``ParquetTarget`` takes there; forced on a
+        ``file://`` root, claim -> applied -> ``claims()`` runs through
+        them."""
+        from odibi_spark.patterns import derived_guard
+        from odibi_spark.patterns.merge_target import _HadoopFiles
+
+        root = f"file://{tmp_path}/guard"
+        monkeypatch.setattr(
+            derived_guard, "_LocalFiles", lambda: _HadoopFiles(spark, root)
+        )
+        g = DerivedGuard(root)
+        assert isinstance(g._fs, _HadoopFiles)
+        tok = g.try_claim("t", "r")
+        assert tok and g.try_claim("t", "r") is None
+        g.mark_applied("t", "r", tok)
+        with pytest.raises(ClaimConflictError):
+            g.mark_applied("t", "r", tok)
+        rows = g.claims(spark).collect()
+        assert [(r.derived_table, r.run_id, r.status) for r in rows] == [
+            ("t", "r", "APPLIED")
+        ]
+        assert sorted(
+            n for n in os.listdir(tmp_path / "guard" / "claims")
+            if not n.startswith(".")
+        ) == ["t__r.json", "t__r.json.2"]
 
 
 class TestClaimsListing:

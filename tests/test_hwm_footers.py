@@ -23,7 +23,6 @@ from odibi_spark.io.read import read_parquet
 from odibi_spark.plans import Pipeline
 from odibi_spark.state.hwm import (
     JsonStateBackend,
-    StateBackend,
     capture_hwm,
     format_hwm,
     incremental_filter,
@@ -39,17 +38,6 @@ TYPES = {
     "ts_ms": pa.timestamp("ms"),
     "ts_utc": pa.timestamp("us", tz="UTC"),
 }
-
-
-class _Mem(StateBackend):
-    def __init__(self, value=None):
-        self.data = {} if value is None else {"k": value}
-
-    def get(self, key):
-        return self.data.get(key)
-
-    def set(self, key, value):
-        self.data[key] = value
 
 
 def _arrow(kind: str, values: list) -> pa.Array:
@@ -86,13 +74,12 @@ def _stored(spark, kind: str, v) -> str:
 
 def _both_paths(spark, d: str, stored: str | None, lag: str | None = None):
     """(rows, HWM) by the Spark path and by the footer plan."""
-    spark_df = incremental_filter(read_parquet(spark, d), column="v", state=_Mem(stored),
-                                  state_key="k", watermark_lag=lag)
+    spark_df = incremental_filter(read_parquet(spark, d), column="v", hwm=stored,
+                                  watermark_lag=lag)
     plan = plan_from_footers(spark, d, column="v", hwm=stored, watermark_lag=lag)
     assert plan is not None
     footer_df = incremental_filter(read_parquet(spark, d, plan.read), column="v",
-                                   state=_Mem(stored), state_key="k", watermark_lag=lag,
-                                   covered=plan.covered)
+                                   hwm=stored, watermark_lag=lag, covered=plan.covered)
     assert footer_df.schema == spark_df.schema
     got = sorted(footer_df.collect()), plan.hwm if plan.hwm_known else capture_hwm(footer_df, "v")
     want = sorted(spark_df.collect()), capture_hwm(spark_df, "v")
@@ -342,3 +329,23 @@ nodes:
     assert compiles.getCount() - before == 0
     assert jobs == [0, 0]  # plan_from_footers, read_source; no capture_hwm
     assert spark.read.parquet(str(tmp_path / "dim")).count() == 12
+
+
+def test_a_node_run_reads_the_stored_hwm_once(spark, tmp_path, monkeypatch):
+    """A footer-planned stateful node reads its HWM state once a run:
+    the footer plan and the filter share the value."""
+    src, out, state = (str(tmp_path / n) for n in ("src", "out", "state.json"))
+    y = _pipeline(src, out, state, spark_path=False)
+    _land(src, "int", [[1, 2, 3]])
+    assert Pipeline.from_yaml(y, spark).run()["sink"].status == "success"
+    _land(src, "int", [[4, 5]])
+    gets, real = [], JsonStateBackend.get
+
+    def counted(self, key):
+        gets.append(key)
+        return real(self, key)
+
+    monkeypatch.setattr(JsonStateBackend, "get", counted)
+    assert Pipeline.from_yaml(y, spark).run()["sink"].status == "success"
+    assert gets == ["sink:v"]
+    assert sorted(r.v for r in spark.read.parquet(out).collect()) == [1, 2, 3, 4, 5]

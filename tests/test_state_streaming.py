@@ -143,7 +143,7 @@ class TestHWM:
         batch1 = spark.createDataFrame(
             [Row(id=1, at=ts("2024-01-01 10:00:00")), Row(id=2, at=ts("2024-01-02 10:00:00"))]
         )
-        out1 = incremental_filter(batch1, column="at", state=b, state_key="t")
+        out1 = incremental_filter(batch1, column="at", hwm=b.get("t"))
         assert out1.count() == 2  # first run: full load
         b.set("t", capture_hwm(out1, "at"))
 
@@ -153,7 +153,7 @@ class TestHWM:
                 Row(id=3, at=ts("2024-01-03 10:00:00")),  # new
             ]
         )
-        out2 = incremental_filter(batch2, column="at", state=b, state_key="t")
+        out2 = incremental_filter(batch2, column="at", hwm=b.get("t"))
         assert [r.id for r in out2.collect()] == [3]
 
     def test_watermark_lag_readmits_late_rows(self, spark, tmp_path):
@@ -162,10 +162,10 @@ class TestHWM:
         batch = spark.createDataFrame(
             [Row(id=1, at=ts("2024-01-02 09:30:00"))]  # late arrival
         )
-        strict = incremental_filter(batch, column="at", state=b, state_key="t")
+        strict = incremental_filter(batch, column="at", hwm=b.get("t"))
         assert strict.count() == 0
         lagged = incremental_filter(
-            batch, column="at", state=b, state_key="t", watermark_lag="1 HOUR"
+            batch, column="at", hwm=b.get("t"), watermark_lag="1 HOUR"
         )
         assert lagged.count() == 1
 
@@ -175,11 +175,11 @@ class TestHWM:
         b = JsonStateBackend(str(tmp_path / "s3.json"))
         b.set("t", "2")
         batch = spark.createDataFrame([Row(id=1), Row(id=2), Row(id=3)])
-        out = incremental_filter(batch, column="id", state=b, state_key="t")
+        out = incremental_filter(batch, column="id", hwm=b.get("t"))
         assert [r.id for r in out.collect()] == [3]
         with pytest.raises(ValueError, match="temporal"):
             incremental_filter(
-                batch, column="id", state=b, state_key="t", watermark_lag="1 HOUR"
+                batch, column="id", hwm=b.get("t"), watermark_lag="1 HOUR"
             )
 
     def test_rolling_window(self, spark):
