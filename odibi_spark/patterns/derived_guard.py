@@ -88,11 +88,12 @@ class DerivedGuard:
         """``root`` is a path or a URI; a URI other than ``file:`` goes
         through the Hadoop FileSystem of the active Spark session."""
         url = urllib.parse.urlparse(root)
-        local = url.scheme in ("", "file")
-        self._dir = f"{urllib.parse.unquote(url.path) if url.scheme == 'file' else root}/claims"
-        self._fs = _LocalFiles() if local else _HadoopFiles(SparkSession.active(), root)
-        if local:
+        if url.scheme in ("", "file"):
+            self._dir = f"{urllib.parse.unquote(url.path) if url.scheme else root}/claims"
+            self._fs = _LocalFiles()
             os.makedirs(self._dir, exist_ok=True)
+        else:
+            self._dir, self._fs = f"{root}/claims", _HadoopFiles(SparkSession.active(), root)
 
     # -- storage helpers ---------------------------------------------------
 

@@ -5,7 +5,7 @@ The reference runs merges through Delta MERGE (odibi/transformers/
 scd.py:553-735, merge_transformer.py:406-640) and maintenance through
 OPTIMIZE, all on one transaction log. Without Delta jars,
 ``ParquetTarget`` gives the same row semantics via read -> transform ->
-``commit``, and every parquet table the library writes is committed
+``commit``, and every parquet table the library maintains is committed
 this way: the merge patterns, ``write_sink`` (quarantines and semantic
 materializations too), compaction, ``maintain --zorder-by``, the
 catalog, the parquet HWM and CMS states, and (``replace_partitions``)

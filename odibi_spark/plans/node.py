@@ -93,7 +93,8 @@ class NodeExecutor:
             # ---- read phase (optional for generating patterns)
             df = None
             plan = None  # a stateful HWM batch planned from the footers
-            stored = None  # _hwm_state(), read once a run
+            # a stateful node's _hwm_state(), read once a run
+            stored = self._hwm_state() if cfg.incremental and cfg.incremental.mode == "stateful" else None
             if cfg.read:
                 if cfg.read.format.lower() == "simulation":
                     from odibi_spark.sources.simulation import generate
@@ -114,7 +115,6 @@ class NodeExecutor:
                         cfg.read.connection, cfg.read.path,
                         cfg.read.table, cfg.read.options,
                     )
-                    stored = self._hwm_state() if cfg.incremental and cfg.incremental.mode == "stateful" else None
                     plan = self._footer_plan(r_path, r_table, r_options, stored)
                     df = read_source(
                         spark,

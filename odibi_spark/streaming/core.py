@@ -483,10 +483,11 @@ def streaming_incremental_dedup(
     micro-batch a pure delta. Exactly-once: kept docs land in
     ``target_path/batch_id=<epoch>`` and the epoch's signatures in the
     store, each one commit replacing the epoch's partition — a replay
-    converges to the same bytes, and a failed plan leaves the corpus. Within a replay the store
-    may transiently hold the epoch's signatures already; candidate
-    generation is id-inequality-filtered and distinct, so the
-    duplicate signature rows cannot change the flags.
+    converges to the same bytes, and a failed plan leaves the corpus.
+    Within a replay the store may transiently hold the epoch's
+    signatures already; candidate generation is id-inequality-filtered
+    and distinct, so the duplicate signature rows cannot change the
+    flags.
 
     State growth is one row of ``num_perm`` longs per document ever
     ingested — the signature store IS the streaming state, readable by

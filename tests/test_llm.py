@@ -2495,10 +2495,10 @@ class TestIncrementalDedup:
         assert state2.get("dedup_hwm") == "5"
 
     def test_one_look_at_the_store_per_batch(self, spark, tmp_path, monkeypatch):
-        """A batch walks the store's tree twice: its first look, which
-        pins the version the append commits on, and the commit's
-        re-look after it applies. The two batches still flag as the
-        one-shot run."""
+        """A batch walks the store's tree once: its first look, which
+        pins the version the append commits on and names the files its
+        partitions replace; the commit does not look again after it
+        applies. The two batches still flag as the one-shot run."""
         from odibi_spark.patterns.merge_target import ParquetTarget
 
         df, store, state = self._setup(spark, tmp_path)
@@ -2512,7 +2512,7 @@ class TestIncrementalDedup:
 
         monkeypatch.setattr(ParquetTarget, "live", live)
         got.update(self._run(df, store, state, "b2"))
-        assert looks == [store._target.path] * 2
+        assert looks == [store._target.path]
         assert got == self.ONE_SHOT
         assert state.get("dedup_hwm") == "5"
 

@@ -225,13 +225,14 @@ class TestLiveDedupCorpus:
     def _kept(self, spark, tmp_path):
         return sorted(r.doc_id for r in spark.read.parquet(str(tmp_path / "out")).collect())
 
-    def test_epoch_commit_replay_and_failed_plan(self, spark, tmp_path, spark_writes, monkeypatch):
-        from odibi_spark.llm import incremental
-
-        out, store = str(tmp_path / "out"), str(tmp_path / "store")
+    def _land(self, spark, tmp_path):
         spark.createDataFrame(
             [(i, self.DOCS[i]) for i in (1, 2, 3)], self.SCHEMA
         ).coalesce(1).write.parquet(str(tmp_path / "src"))
+
+    def test_an_epoch_commits_and_its_replay_replaces_it(self, spark, tmp_path, spark_writes):
+        out, store = str(tmp_path / "out"), str(tmp_path / "store")
+        self._land(spark, tmp_path)
         del spark_writes[:]
         self._run(spark, tmp_path)
         first = _newest(out)
@@ -245,7 +246,11 @@ class TestLiveDedupCorpus:
         assert sorted(_newest(out)["remove"]) == sorted(first["add"])
         assert self._kept(spark, tmp_path) == [1, 2]
 
-        # the replayed epoch's plan fails: the corpus keeps its rows
+    def test_a_replay_whose_plan_fails_keeps_the_corpus(self, spark, tmp_path, monkeypatch):
+        from odibi_spark.llm import incremental
+
+        self._land(spark, tmp_path)
+        self._run(spark, tmp_path)
         real = incremental.flag_incremental_dups
 
         def failing(*args, **kwargs):
@@ -256,7 +261,6 @@ class TestLiveDedupCorpus:
         self._replay_last_epoch(tmp_path)
         with pytest.raises(Exception, match="boom"):
             self._run(spark, tmp_path)
-        assert _versions(out) == [1, 2]
         assert self._kept(spark, tmp_path) == [1, 2]
 
 
@@ -270,21 +274,22 @@ class TestMaterialize:
         m.add_metric(Metric(name="revenue", expr="SUM(amount)"))
         return SemanticQuery(m)
 
-    def test_materialize_commits_and_a_failed_plan_keeps_the_rows(
-        self, spark, tmp_path, spark_writes, monkeypatch
-    ):
+    def test_materialize_is_one_commit(self, spark, tmp_path, spark_writes):
+        p = str(tmp_path / "mat")
+        assert self._query(spark).materialize(spark, "revenue", path=p).collect()[0].revenue == 3.0
+        assert _versions(p) == [1]
+        assert _all_staged(spark_writes, p)
+
+    def test_a_failed_plan_keeps_the_rows(self, spark, tmp_path, monkeypatch):
         from odibi_spark.semantics import SemanticQuery
 
         p = str(tmp_path / "mat")
         q = self._query(spark)
-        assert q.materialize(spark, "revenue", path=p).collect()[0].revenue == 3.0
-        assert _versions(p) == [1]
-        assert _all_staged(spark_writes, p)
+        q.materialize(spark, "revenue", path=p)
         monkeypatch.setattr(
             SemanticQuery, "execute",
             lambda self, spark_, query: spark_.range(1).select(F.raise_error(F.lit("boom")).alias("revenue")),
         )
         with pytest.raises(Exception, match="boom"):
             q.materialize(spark, "revenue", path=p)
-        assert _versions(p) == [1]
         assert [r.revenue for r in spark.read.parquet(p).collect()] == [3.0]
